@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** One-shot measurement main backing [[graft.operators.Bpe]]'s
   * "32k-merge production tokenizer in seconds of driver CPU" claim
@@ -29,13 +28,7 @@ object BpeBench {
     val words = sys.env.getOrElse("SPARK_GRAFT_BPE_WORDS", "100000").toInt
     val merges = sys.env.getOrElse("SPARK_GRAFT_BPE_MERGES", "32768").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("graft-bpe-bench", s"local[$cpus]", cpus)
     import spark.implicits._
 
     // deterministic synthetic vocabulary (SplitMix64, seed 42)

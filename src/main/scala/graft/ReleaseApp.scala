@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** CLI entry for the DURABLE release pipeline
   * ([[graft.plans.ReleaseRun]]): raw crawl to digest-verified
@@ -32,13 +31,8 @@ object ReleaseApp {
     val sfDir = args.getOrElse("sf-dir", sys.error("missing --sf-dir"))
     val out = args.getOrElse("out", sys.error("missing --out"))
     val cpus = args.getOrElse("cpus", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-    val spark = SparkSession.builder()
-      .master(args.getOrElse("master", s"local[$cpus]"))
-      .withExtensions(new graft.functions.GraftExtensions)
-      .appName("graft-release-run")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("graft-release-run",
+      args.getOrElse("master", s"local[$cpus]"), cpus)
     try {
       if (args.get("fresh").exists(_.toBoolean)) {
         val fs = org.apache.hadoop.fs.FileSystem.get(

@@ -53,16 +53,8 @@ object TransportorApp {
     }
     val className = args.getOrElse("class", args.getOrElse("plan", "json"))
     val cpus = args.getOrElse("cpus", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-    val spark = SparkSession.builder()
-      .master(args.getOrElse("master", s"local[$cpus]"))
-      .withExtensions(new graft.functions.GraftExtensions)
-      .appName(s"graft-transport-$className")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(s"graft-transport-$className",
+      args.getOrElse("master", s"local[$cpus]"), cpus)
     try {
       // --lineage=only: static impact analysis, no IO touched — the
       // dry-run a migration review wants before anything executes

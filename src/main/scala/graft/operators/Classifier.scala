@@ -64,7 +64,7 @@ object Classifier {
       iters: Int = 3,
       scaleBits: Int = 20,
       lrShift: Int = 3,
-      initWeights: Option[DataFrame] = None): DataFrame = {
+      initWeights: Option[DataFrame] = None): DataFrame = Stage.scope {
     require(dims >= 2, s"dims must be >= 2, got $dims")
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(scaleBits >= 4 && scaleBits <= 30, s"scaleBits out of range: $scaleBits")
@@ -75,17 +75,16 @@ object Classifier {
     // feature table — built from the first cache, so the upstream
     // label sweep still runs exactly once; without this every GD pass
     // re-exchanged the label side across shuffle.partitions.
-    val lab0 = labels
+    val lab0 = Stage("gd labels", Stage.Persist())(labels
       .select(col("doc_id").cast("long").as("doc_id"),
-        col("label").cast("long").as("y"))
-      .persist()
+        col("label").cast("long").as("y")))
     val n = lab0.count()
     require(n > 0, "labels frame is empty")
 
     // The FEATURE table is persisted PRE-PARTITIONED on doc_id (guide
     // §2.4 — operations keyed the same way share one exchange): every
     // pass's margin aggregate (groupBy doc_id), the label join and the
-    // gradient join all cluster on doc_id, so with the cached layout
+    // gradient join all cluster on doc_id, so with the persisted layout
     // already hash-partitioned on it no pass re-shuffles the
     // corpus-sized feature table — the only per-pass exchanges left
     // are the tiny label side and the dims-bounded gradient aggregate.
@@ -100,15 +99,14 @@ object Classifier {
     // with the corpus (sf10: 32).
     val parts = math.max(1L, math.min(
       spark.sparkContext.defaultParallelism.toLong, (n + 8191L) / 8192L)).toInt
-    val f = features
+    val f = Stage("gd features", Stage.Persist())(features
       .select(col("doc_id").cast("long").as("doc_id"),
         col("feat_idx").cast("long").as("feat_idx"),
         col("weight").cast("long").as("x"))
-      .repartition(parts, col("doc_id"))
-      .persist()
-    val lab = lab0.repartition(parts, col("doc_id")).persist()
-    lab.count()
-    lab0.unpersist(blocking = false)
+      .repartition(parts, col("doc_id")))
+    val lab = Stage("gd labels by doc", Stage.Persist(eager = true))(
+      lab0.repartition(parts, col("doc_id")))
+    Stage.free(lab0)
     val divisor = java.math.BigInteger.valueOf(n << lrShift)
 
     val w = Array.fill(dims)(0L)
@@ -142,8 +140,6 @@ object Classifier {
       }
       pass += 1
     }
-    f.unpersist()
-    lab.unpersist()
     wDf()
   }
 

@@ -247,9 +247,8 @@ object Dedup {
     // is a full PNG/WAV/MP4 build + real decoder pass per side
     // (measured: the whole image-dups plan ran the decode twice, once
     // under the BroadcastExchange). (id, hash, block) rows only.
-    val exploded = persistMaterialize(
-      capBuckets(exploded0, Seq("blk_idx", "blk_val"), maxBucketSize),
-      eager = true)
+    val exploded = Stage("hamming blocks", Stage.Persist(eager = true))(
+      capBuckets(exploded0, Seq("blk_idx", "blk_val"), maxBucketSize))
 
     val a = exploded.select(col("id").as("id_a"), col("__h").as("h_a"),
       col("blk_idx"), col("blk_val"))
@@ -478,7 +477,8 @@ object Dedup {
     // batch signature sweep twice; single-consumer path stays lazy.
     val newBands0 = bandExplode(bandDf, idCol, textCol, shingleN, numHashes, bands)
     val newBands =
-      if (pruneIndexToProbe) persistMaterialize(newBands0, eager = true)
+      if (pruneIndexToProbe)
+        Stage("probe bands", Stage.Persist(eager = true))(newBands0)
       else newBands0
     // pruneIndexToProbe: reduce the (corpus-sized) index to the band
     // buckets the batch actually probes BEFORE the bucket-cap window —
@@ -691,23 +691,25 @@ object Dedup {
     * pathological chain and the operator THROWS if unconverged rather
     * than returning a silently incomplete clustering.
     *
-    * Iteration state management: each pass's result is cut loose from
-    * its (otherwise exponentially nesting) logical plan by rebuilding
-    * a fresh frame over the pass's persisted row RDD — RDD lineage
-    * stays intact and linear, so every block is recomputable after
-    * executor loss (unlike `localCheckpoint`, whose truncated lineage
-    * makes lost blocks fatal) and superseded passes are unpersisted
-    * with no "cannot be recomputed" hazard. With `checkpointDir` set,
-    * passes instead write reliable checkpoints (`df.checkpoint()`)
-    * to that directory — the cluster-durability option for long jobs
-    * on preemptible executors; checkpoint files live until the
-    * application ends (or `spark.cleaner.referenceTracking
-    * .cleanCheckpoints=true` reclaims them).
+    * Iteration state management: each pass's result is a
+    * [[Stage.Persist]] cut ([[passCut]]) — cut loose from its
+    * (otherwise exponentially nesting) logical plan, RDD lineage
+    * intact and linear, so every block is recomputable after executor
+    * loss (unlike a [[Stage.Local]] cut, whose truncated lineage makes
+    * lost blocks fatal) and superseded passes are freed
+    * ([[Stage.free]]) with no "cannot be recomputed" hazard. With
+    * `checkpointDir` set, passes instead write reliable checkpoints
+    * (`df.checkpoint()`) to that directory — the cluster-durability
+    * option for long jobs on preemptible executors; checkpoint files
+    * live until the application ends (or
+    * `spark.cleaner.referenceTracking.cleanCheckpoints=true` reclaims
+    * them).
     *
     * The RETURNED frame's backing blocks stay persisted so downstream
-    * consumers (the keep-one-per-cluster join) read it warm; call
-    * [[release]] when done with it — the result stays valid (it
-    * recomputes from lineage), the storage is just dropped.
+    * consumers (the keep-one-per-cluster join) read it warm; they are
+    * freed with the enclosing [[Stage.scope]], or early by
+    * [[Stage.free]] — the result stays valid (it recomputes from
+    * lineage), the storage is just dropped.
     *
     * NOTE: being iterative, this EXECUTES during construction (the
     * result is a materialized scan, not a lazy plan) — budget it
@@ -720,21 +722,17 @@ object Dedup {
       checkpointDir: Option[String] = None): DataFrame = {
     val spark = pairs.sparkSession
     checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    // Plan truncation per pass: persisted-RDD rebuild (see
-    // persistMaterialize) or a reliable checkpoint when configured.
     // `eager` forces computation NOW — only needed when the next
     // consumer would otherwise read the frame twice in one job (the
     // union below); everywhere else the following aggregate action
     // materializes the persisted blocks on first touch with no extra
     // job.
-    def materialize(df: DataFrame, eager: Boolean = false): DataFrame = checkpointDir match {
-      case Some(_) => df.checkpoint() // eager, HDFS-durable, lineage-free
-      case None => persistMaterialize(df, eager)
-    }
+    def cut(name: String, df: DataFrame, eager: Boolean = false): DataFrame =
+      passCut(name, df, eager, checkpointDir)
     // Materialize the normalized pair set ONCE before the two-way
     // union: the upstream pair generation (an LSH self-join + rescore)
     // would otherwise execute twice, once per union branch.
-    val normPairs = materialize(pairs
+    val normPairs = cut("cc pairs", pairs
       .select(col(idA).cast("long").as("src"), col(idB).cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull), eager = true)
     // Static edge set, built once with two fusions baked in:
@@ -745,16 +743,16 @@ object Dedup {
     //  - pre-partitioned by the join key `dst`, so every pass's
     //    edges-join-labels shuffles ONLY the labels side; the edge
     //    layout is computed once and reused from the persisted blocks
-    //    (the materialize rebuild carries outputPartitioning).
-    val edges = materialize({
+    //    (the Persist rebuild carries outputPartitioning).
+    val edges = cut("cc edges", {
       val und = normPairs
         .union(normPairs.select(col("dst").as("src"), col("src").as("dst")))
       und.union(und.select(col("src"), col("src").as("dst")))
         .distinct()
         .repartition(col("dst"))
     })
-    release(normPairs)
-    var labels = materialize(edges.select(col("src").as("id")).distinct()
+    Stage.free(normPairs)
+    var labels = cut("cc labels", edges.select(col("src").as("id")).distinct()
       .withColumn("rep", col("id")))
     // Convergence via the label-sum invariant: every rep is
     // non-increasing, so the exact total (DECIMAL(38,0) — no long
@@ -768,8 +766,8 @@ object Dedup {
     // frame is NULL — doubling as the emptiness probe keeps init at
     // one job instead of an isEmpty take plus the sum.
     if (prevSum == null) {
-      release(labels)
-      release(edges)
+      Stage.free(labels)
+      Stage.free(edges)
       return labels.select("id", "rep")
     }
     var converged = false
@@ -780,7 +778,7 @@ object Dedup {
         // min-over-neighbors aggregate include each node's own label,
         // so `least(rep, min(nrep))` and the join back to labels
         // collapse into this single join + aggregate.
-        val stepped = materialize(edges
+        val stepped = cut("cc step", edges
           .join(labels.select(col("id").as("nid"), col("rep").as("nrep")),
             col("dst") === col("nid"))
           .groupBy("src").agg(min("nrep").as("rep"))
@@ -793,7 +791,7 @@ object Dedup {
         // compute the aggregate once (second stage reads the persisted
         // blocks) — previously it was lazy and the whole neighbor-min
         // pipeline ran twice per pass.
-        val updated = materialize(stepped.as("a")
+        val updated = cut("cc labels", stepped.as("a")
           .join(stepped.select(col("id").as("rid"), col("rep").as("rrep")),
             col("a.rep") === col("rid"), "left")
           .select(col("a.id").as("id"),
@@ -801,14 +799,14 @@ object Dedup {
         val newSum = repSum(updated)
         converged = newSum.compareTo(prevSum) == 0
         prevSum = newSum
-        release(stepped)
-        release(labels) // superseded pass's blocks
+        Stage.free(stepped)
+        Stage.free(labels) // superseded pass's blocks
         labels = updated
         i += 1
       }
     } finally {
-      release(edges)
-      if (!converged) release(labels) // throwing below — don't strand blocks
+      Stage.free(edges)
+      if (!converged) Stage.free(labels) // throwing below — don't strand blocks
     }
     require(converged,
       s"connectedComponents did not converge within $maxIter label-propagation passes " +
@@ -816,40 +814,14 @@ object Dedup {
     labels.select("id", "rep")
   }
 
-  /** Truncate a frame's logical plan behind a persisted InternalRow
-    * RDD. Staying in the UnsafeRow representation (graftshim bridge)
-    * skips the InternalRow↔Row codec a `df.rdd` round-trip would pay;
-    * the per-row copy() is required because the execution RDD reuses
-    * its row buffer. The fromDataset-shaped rebuild carries the
-    * origin's output partitioning/ordering so downstream joins on the
-    * same key reuse the layout instead of re-shuffling. */
-  private[operators] def persistMaterialize(df: DataFrame, eager: Boolean): DataFrame = {
-    val rdd = df.queryExecution.toRdd.map(_.copy())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (eager) rdd.count()
-    org.apache.spark.sql.graftshim.ColumnBridge.dataFrameFromInternalRows(df, rdd)
-  }
-
-  /** Drop the persisted storage behind an RDD-backed frame (e.g. a
-    * [[connectedComponents]] result) once consumers are done with it.
-    * Walks each plan leaf's RDD lineage and unpersists the NEAREST
-    * persisted ancestor on each path (stopping there — deeper
-    * persisted state, like the still-live edge set during iteration,
-    * belongs to other frames). The frame REMAINS usable — its RDD
-    * lineage is intact, so later reads just recompute. No-op for
-    * ordinary lazy plans. */
-  def release(df: DataFrame): Unit = {
-    val seen = scala.collection.mutable.HashSet.empty[Int]
-    def walk(r: org.apache.spark.rdd.RDD[_]): Unit = if (seen.add(r.id)) {
-      if (r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
-        r.unpersist(blocking = false) // stop: deeper persists are not ours
-      else r.dependencies.foreach(d => walk(d.rdd))
-    }
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => walk(lr.rdd)
-      case _ => ()
-    }
-  }
+  /** An iterative pass's cut: a [[Stage.Persist]] stage, or — under
+    * the caller's `checkpointDir` — a reliable checkpoint, which stays
+    * outside [[Stage]] because its files outlive any scope. */
+  private[operators] def passCut(
+      name: String, df: DataFrame, eager: Boolean,
+      checkpointDir: Option[String]): DataFrame =
+    if (checkpointDir.isDefined) df.checkpoint() // eager, durable, lineage-free
+    else Stage(name, Stage.Persist(eager))(df)
 
   /** The dedup ENDGAME, composed end to end: given near-duplicate
     * pairs (from any of the candidate generators here), compute the
@@ -865,10 +837,10 @@ object Dedup {
     * labeling — is materialized into its own persisted blocks and the
     * full components result is released IMMEDIATELY, so dropping the
     * returned frame without action strands at most the tiny drop set
-    * (pass the result to [[release]] to free that too). Set it false
+    * (pass the result to [[Stage.free]] to free that too). Set it false
     * to keep the whole components labeling warm instead (e.g. when
     * the caller reuses the same closure for other joins) — then the
-    * caller owns the release. */
+    * caller (or its [[Stage.scope]]) frees it. */
   def keepOnePerCluster(
       df: DataFrame,
       idCol: String,
@@ -882,8 +854,8 @@ object Dedup {
     val dropIds0 = comp.filter(col("id") =!= col("rep")).select(col("id"))
     val dropIds =
       if (releaseAfter) {
-        val materialized = persistMaterialize(dropIds0, eager = true)
-        release(comp)
+        val materialized = Stage("cc drop ids", Stage.Persist(eager = true))(dropIds0)
+        Stage.free(comp)
         materialized
       } else dropIds0
     df.join(dropIds, df(idCol) === dropIds("id"), "left_anti")
@@ -918,8 +890,8 @@ object Dedup {
     val dropIds0 = scored.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") > 1).select(col("id"))
     val dropIds = {
-      val materialized = persistMaterialize(dropIds0, eager = true)
-      release(comp)
+      val materialized = Stage("cc drop ids", Stage.Persist(eager = true))(dropIds0)
+      Stage.free(comp)
       materialized
     }
     df.join(dropIds, df(idCol) === dropIds("id"), "left_anti")
@@ -1417,7 +1389,7 @@ object Dedup {
   /** One-pass dedup diagnostics bundle: the [[connectedComponents]]
     * labeling computed ONCE and every downstream view derived from
     * it. `components` is the raw (id, rep) labeling (persisted — the
-    * caller calls [[release]] when done), `clusterSizes` one row per
+    * caller calls [[Stage.free]] when done), `clusterSizes` one row per
     * duplicate cluster (rep = the keep-min-id survivor, n_members),
     * `survivors` the corpus minus dropped duplicates (identical to
     * [[keepOnePerCluster]]).

@@ -165,7 +165,7 @@ object FuzzyJoin {
     * The returned (id, entity_id) mapping — |value domain| rows, two
     * longs — is materialized into its own persisted blocks so the
     * much larger components labeling releases immediately (the
-    * [[Dedup.keepOnePerCluster]] discipline); [[Dedup.release]] the
+    * [[Dedup.keepOnePerCluster]] discipline); [[Stage.free]] the
     * result when done. NOTE: like the closure it wraps, this executes
     * during construction — budget it like an action. */
   /** Jaro-Winkler best-match lookup with explicit prefix BLOCKING —
@@ -221,9 +221,10 @@ object FuzzyJoin {
     *
     * Block lifecycle: by default the mapping is materialized into its
     * own persisted blocks (domain-sized — two longs per value) and
-    * everything upstream is released; the CALLER releases the result
-    * ([[Dedup.release]]) after its consuming action, or the blocks
-    * recompute the whole closure on the next read. With
+    * everything upstream is released; the CALLER frees the result
+    * ([[Stage.free]] or its [[Stage.scope]]) after its consuming
+    * action — freed earlier, the next read recomputes the whole
+    * closure. With
     * `checkpointDir` set the mapping is instead written as a reliable
     * checkpoint — lineage-free, ZERO persisted blocks, nothing for
     * the caller to release — the production shape for unbounded
@@ -242,11 +243,8 @@ object FuzzyJoin {
     val mapping = df.select(col(idCol).as("id"))
       .join(comps, Seq("id"), "left")
       .select(col("id").as(idCol), coalesce(col("rep"), col("id")).as("entity_id"))
-    val out = checkpointDir match {
-      case Some(_) => mapping.checkpoint() // eager, durable, lineage-free
-      case None => Dedup.persistMaterialize(mapping, eager = true)
-    }
-    Dedup.release(comps)
+    val out = Dedup.passCut("entity map", mapping, eager = true, checkpointDir)
+    Stage.free(comps)
     out
   }
 

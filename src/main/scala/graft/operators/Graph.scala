@@ -65,9 +65,6 @@ object Graph {
     require(scaleBits >= 10 && scaleBits <= 40, "scaleBits out of range")
     val q = 1L << scaleBits
 
-    def mat(df: DataFrame, eager: Boolean = false): DataFrame =
-      Dedup.persistMaterialize(df, eager)
-
     // One-time edge normalization: per-edge weight + the source's
     // weighted out-degree, pre-partitioned by the per-pass join key.
     val w = weightCol.map(col(_).cast("long")).getOrElse(lit(1L))
@@ -75,18 +72,18 @@ object Graph {
       col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"),
       w.as("w"))
-    val e = mat(rawEdges
+    val e = Stage("pagerank edges", Stage.Persist(eager = true))(rawEdges
       .withColumn("wout", sum(col("w")).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
-      .repartition(col("src")), eager = true)
+      .repartition(col("src")))
 
     val maxWout = e.agg(max(col("wout"))).head().getLong(0)
     require(maxWout.toDouble * q < Long.MaxValue.toDouble * 0.99,
       s"wout=$maxWout overflows at scaleBits=$scaleBits — lower scaleBits")
 
-    val nodes = mat(
+    val nodes = Stage("pagerank nodes", Stage.Persist(eager = true))(
       e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct(), eager = true)
+        .union(e.select(col("dst").as("node"))).distinct())
     val n = nodes.count()
     require(n > 0, "empty graph")
     // Personalized (topic-sensitive) PageRank: a non-empty seed set
@@ -104,10 +101,11 @@ object Graph {
     // node has an out-edge (the common strongly-out-connected case),
     // the dangling mass is identically zero — skip the per-iteration
     // scalar aggregate (one saved job per pass).
-    val srcSet = mat(e.select(col("src").as("node")).distinct(), eager = true)
+    val srcSet = Stage("pagerank sources", Stage.Persist(eager = true))(
+      e.select(col("src").as("node")).distinct())
     val nDangling = n - srcSet.count()
 
-    var ranks = mat(nodes.withColumn("rq", lit(q / n)))
+    var ranks = Stage("pagerank ranks", Stage.Persist())(nodes.withColumn("rq", lit(q / n)))
     try {
       for (_ <- 1 to iterations) {
         val dangling =
@@ -128,21 +126,20 @@ object Graph {
         // the materialize-before-release guard) and measures no
         // better than eager even after the guard (3.59 vs 3.32 s at
         // sf0.1 quiet; 7.4 vs 6.2 at sf1).
-        val next = mat(nodes
+        val next = Stage("pagerank ranks", Stage.Persist(eager = true))(nodes
           .join(contribs, Seq("node"), "left")
           .withColumn("__tp", when(isSeed, lit(teleport)).otherwise(lit(0L)))
           .withColumn("__dg", when(isSeed, lit(perNodeDangling)).otherwise(lit(0L)))
           .select(col("node"),
             expr(s"__tp + ($dampNum * (coalesce(s, 0) + __dg)) div $dampDen")
-              .as("rq")),
-          eager = true)
-        Dedup.release(ranks)
+              .as("rq")))
+        Stage.free(ranks)
         ranks = next
       }
       ranks.select(col("node"), col("rq").as("rank_q"),
         (col("rq").cast("double") / lit(q.toDouble)).as("rank"))
     } finally {
-      Dedup.release(e); Dedup.release(nodes); Dedup.release(srcSet)
+      Stage.free(e); Stage.free(nodes); Stage.free(srcSet)
     }
   }
 

@@ -405,10 +405,9 @@ object Profile {
       hash: org.apache.spark.sql.Column,
       k: Int = 256): DataFrame = {
     require(k >= 2, s"kmv needs k >= 2, got $k")
-    val sk = Dedup.persistMaterialize(
+    val sk = Stage("kmv sketches", Stage.Persist(eager = true))(
       df.groupBy(col(groupCol).cast("string").as("__g"))
-        .agg(graft.functions.KmvAgg.kmvAgg(hash, k).as("sketch")),
-      eager = true)
+        .agg(graft.functions.KmvAgg.kmvAgg(hash, k).as("sketch")))
     val groups = sk.select("__g").collect().map(_.getString(0)).sorted
     val pairRows = for {
       i <- groups.indices; j <- (i + 1) until groups.length
@@ -948,8 +947,8 @@ object Profile {
     def binned(df: DataFrame, cName: String) =
       df.select(floor(col(valueCol) / lit(binWidth)).cast("long").as("bin"))
         .groupBy("bin").agg(count(lit(1)).as(cName))
-    val a = Dedup.persistMaterialize(binned(dfA, "c_a"), eager = true)
-    val b = Dedup.persistMaterialize(binned(dfB, "c_b"), eager = true)
+    val a = Stage("psi bins a", Stage.Persist(eager = true))(binned(dfA, "c_a"))
+    val b = Stage("psi bins b", Stage.Persist(eager = true))(binned(dfB, "c_b"))
     val na = a.agg(sum(col("c_a"))).head().getLong(0)
     val nb = b.agg(sum(col("c_b"))).head().getLong(0)
     require(na > 0 && nb > 0, "psiDrift needs non-empty snapshots on both sides")

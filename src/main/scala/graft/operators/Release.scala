@@ -7,16 +7,17 @@ import graft.functions.TextFunctions
 
 /** The end-to-end RELEASE pipeline — raw crawl to digest-verified
   * training artifact — as ONE parameterized dataflow shared by its
-  * two execution forms:
+  * two execution forms, which differ only in the [[Stage]] policy
+  * their [[Release.Stager]] cuts each stage boundary with:
   *
-  *   - the in-query form (`q_pipeline_release`): stage boundaries cut
-  *     with `localCheckpoint` ([[Release.LocalStager]]) — fast, but
-  *     blocks die with an executor and nothing survives the session;
+  *   - the in-query form (`q_pipeline_release`): [[Stage.Local]] cuts
+  *     ([[Release.LocalStager]]) — fast, but blocks die with an
+  *     executor and nothing survives the session;
   *   - the durable form ([[graft.plans.ReleaseRun]],
-  *     `q_pipeline_release_run`): every stage boundary is a REAL
-  *     parquet table published with an atomic rename, so a crashed
-  *     run resumes from its last completed stage and a finished run
-  *     re-verifies idempotently.
+  *     `q_pipeline_release_run`): [[Stage.Durable]] cuts — every stage
+  *     boundary is a REAL parquet table published with an atomic
+  *     rename, so a crashed run resumes from its last completed stage
+  *     and a finished run re-verifies idempotently.
   *
   * Because both forms call THIS function, they cannot drift — the
   * driver's DuckDB oracle gates them under the same CTE pyramid.
@@ -49,19 +50,18 @@ import graft.functions.TextFunctions
   */
 object Release {
 
-  /** A stage-boundary materializer. `apply` takes the stage name and
-    * a BY-NAME frame builder: a durable stager whose stage table
-    * already exists skips the builder entirely (resume never replays
-    * completed work — including the driver-side loops, k-means /
-    * BPE-training / pointer-doubling, that run inside a builder). */
-  trait Stager {
-    def apply(name: String)(df: => DataFrame): DataFrame
+  /** [[pipeline]]'s stage cutter: `st(name)(df)` is
+    * `Stage(name, policy)(df)`. The frame builder is BY-NAME: a
+    * Durable stage whose table already exists skips it entirely
+    * (resume never replays completed work — including the
+    * driver-side loops, k-means / BPE-training / pointer-doubling,
+    * that run inside a builder). */
+  class Stager(policy: Stage.Policy) {
+    def apply(name: String)(df: => DataFrame): DataFrame = Stage(name, policy)(df)
   }
 
-  /** The in-query materializer: localCheckpoint lineage cuts. */
-  final class LocalStager extends Stager {
-    def apply(name: String)(df: => DataFrame): DataFrame = df.localCheckpoint()
-  }
+  /** The in-query stager: [[Stage.Local]] cuts. */
+  final class LocalStager extends Stager(Stage.Local)
 
   /** Every stage boundary [[pipeline]] materializes, in call order —
     * the durable runner's table names and the resume spec's crash

@@ -130,7 +130,7 @@ object Search {
     val termArr = array(terms.map(lit(_)): _*)
     // project __toks first, explode in the NEXT select: a generator
     // alongside heavy expressions re-evaluates them per element
-    val matched = Dedup.persistMaterialize(
+    val matched = Stage("bm25 term freqs", Stage.Persist(eager = true))(
       base.select(col("doc_id"), col("len"),
           filter(col("__toks"), t => array_contains(termArr, t)).as("__mt"),
           monotonically_increasing_id().as("__mid"))
@@ -138,8 +138,7 @@ object Search {
           col("__mid"))
         .filter(col("__mid") >= 0) // barrier: keeps the inferred
         // size/isnotnull filter from re-tokenizing below the projection
-        .groupBy("doc_id", "len", "term").agg(count(lit(1)).as("tf")),
-      eager = true)
+        .groupBy("doc_id", "len", "term").agg(count(lit(1)).as("tf")))
 
     val dfStats = matched.groupBy("term").agg(count(lit(1)).as("dft"))
     val idf = log(lit(1.0) +
@@ -192,13 +191,12 @@ object Search {
       graft.functions.HashExpressions.shingleStrings(col(textCol), 2))
       .otherwise(array().cast("array<string>"))
     // __mid: the generator-filter pushdown barrier (see invertedIndex)
-    val counts = Dedup.persistMaterialize(
+    val counts = Stage("gram counts", Stage.Persist(eager = true))(
       df.select(concat(toks, bigrams).as("__grams"),
           monotonically_increasing_id().as("__mid"))
         .select(explode(col("__grams")).as("gram"), col("__mid"))
         .filter(col("__mid") >= 0)
-        .groupBy("gram").agg(count(lit(1)).as("c")),
-      eager = true)
+        .groupBy("gram").agg(count(lit(1)).as("c")))
     val isBigram = col("gram").contains(" ")
     val tot = counts.agg(
       sum(when(!isBigram, col("c"))).as("t"),

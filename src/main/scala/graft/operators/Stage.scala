@@ -1,0 +1,179 @@
+package graft.operators
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
+
+/** Control-flow signal: a [[Stage.Durable]] run reached its
+  * `stopAfter` stage. Never escapes [[graft.plans.ReleaseRun.run]]. */
+private[graft] final class ReleaseHalted extends RuntimeException
+
+/** The ONE way the engine cuts a plan: `Stage(name, policy)(df)`
+  * materializes `df` at a named boundary and returns a frame reading
+  * the materialized rows.
+  *
+  *   - [[Local]]: `localCheckpoint` — eager, lineage truncated; a lost
+  *     block fails its readers.
+  *   - [[Persist]]: MEMORY_AND_DISK InternalRow blocks rebuilt into a
+  *     fresh frame — the logical plan is cut, RDD lineage and output
+  *     partitioning are kept, so a lost block recomputes; `eager`
+  *     computes the blocks now instead of in the first consuming job.
+  *   - [[Durable]]: a parquet stage table published with one atomic
+  *     rename; a resumed run skips the builder of every existing stage.
+  *
+  * Every Local/Persist cut registers with the innermost open [[scope]]
+  * (threads started inside it inherit it), which frees them all on
+  * exit. Entry points whose result reads no cut — `ReleaseRun.run`,
+  * `IncrementalRelease.{runDeltas,bootstrap,forget,compactState}` and
+  * each Durable stage — close their own scope. A cut outside any scope
+  * (behind a catalog query's returned frame) lives until its caller
+  * frees it. Durable stages label their jobs `release stage <name>`;
+  * Local/Persist cuts run under the caller's label.
+  */
+object Stage {
+
+  sealed trait Policy
+  case object Local extends Policy
+  final case class Persist(eager: Boolean = false) extends Policy
+
+  /** One open scope's cuts; a thread that outlives its scope cuts
+    * untracked. */
+  private final class Frame {
+    private val cuts = new java.util.concurrent.ConcurrentHashMap[Int, RDD[_]]
+    @volatile private var open = true
+    def add(r: RDD[_]): Unit = if (open) cuts.put(r.id, r)
+    def remove(id: Int): Unit = cuts.remove(id)
+    def close(): Unit = {
+      open = false
+      cuts.values.forEach(r => r.unpersist(blocking = false))
+      cuts.clear()
+    }
+  }
+
+  private val current = new InheritableThreadLocal[Frame]
+
+  private def track(name: String, rdd: RDD[_]): Unit = {
+    rdd.setName(name)
+    Option(current.get()).foreach(_.add(rdd))
+  }
+
+  /** Materialize `df` at the boundary `name` under `policy`. */
+  def apply(name: String, policy: Policy)(df: => DataFrame): DataFrame =
+    policy match {
+      case Local =>
+        val out = df.localCheckpoint()
+        out.queryExecution.logical.foreach {
+          case lr: LogicalRDD => track(name, lr.rdd)
+          case _ => ()
+        }
+        out
+      case Persist(eager) =>
+        val d = df
+        // copy(): the execution RDD reuses its row buffer
+        val rdd = d.queryExecution.toRdd.map(_.copy())
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        track(name, rdd)
+        if (eager) rdd.count()
+        org.apache.spark.sql.graftshim.ColumnBridge.dataFrameFromInternalRows(d, rdd)
+      case d: Durable => d.cut(name, df)
+    }
+
+  /** Run `body`, then free every Local/Persist cut made inside it.
+    * Only wrap a body whose result reads none of its cuts. */
+  def scope[T](body: => T): T = {
+    val outer = current.get()
+    val frame = new Frame
+    current.set(frame)
+    try body
+    finally {
+      current.set(outer)
+      frame.close()
+    }
+  }
+
+  /** Drop the blocks behind `df` now: the NEAREST persisted ancestor
+    * on each plan leaf's RDD lineage (deeper persisted state, like an
+    * iteration's still-live edge set, belongs to other frames). A
+    * Persist cut stays usable — it recomputes from lineage. */
+  def free(df: DataFrame): Unit = {
+    val seen = scala.collection.mutable.HashSet.empty[Int]
+    val f = Option(current.get())
+    def walk(r: RDD[_]): Unit = if (seen.add(r.id)) {
+      if (r.getStorageLevel != StorageLevel.NONE) {
+        r.unpersist(blocking = false)
+        f.foreach(_.remove(r.id))
+      } else r.dependencies.foreach(d => walk(d.rdd))
+    }
+    df.queryExecution.analyzed.foreach {
+      case lr: LogicalRDD => walk(lr.rdd)
+      case _ => ()
+    }
+  }
+
+  /** Every job `body` spawns — including broadcast-exchange child
+    * jobs, which capture the submitting thread's locals — carries
+    * `desc`. */
+  def labeled[T](spark: SparkSession, desc: String)(body: => T): T = {
+    val prev = spark.sparkContext.getLocalProperty("spark.job.description")
+    spark.sparkContext.setJobDescription(desc)
+    try body finally spark.sparkContext.setJobDescription(prev)
+  }
+
+  /** Parquet stage tables under `<outDir>/stages/<name>`: compute →
+    * `<outDir>/_staging/<name>-<uuid>` → ONE rename. A crash mid-write
+    * leaves only staging (overwritten on resume); the final directory
+    * IS the completion marker. `stopAfter` halts the run once the
+    * named stage is published (the resume spec's crash drill). */
+  final class Durable(
+      spark: SparkSession,
+      outDir: String,
+      stopAfter: Option[String] = None) extends Policy {
+
+    /** Stages whose builder RAN this invocation (never resumed ones). */
+    val evaluated = scala.collection.mutable.ArrayBuffer.empty[String]
+    private var halted = false
+    /** True once the `stopAfter` stage materialized. */
+    def haltedNow: Boolean = halted
+
+    private[Stage] def cut(name: String, df: => DataFrame): DataFrame = {
+      if (halted) throw new ReleaseHalted
+      val dir = new Path(s"$outDir/stages/$name")
+      val f = FileSystem.get(new java.net.URI(outDir), spark.sparkContext.hadoopConfiguration)
+      // resume path: sweep any nested loser tree (see below) a crash
+      // left INSIDE the published table, where no _staging sweep
+      // reaches — a resumed read would see duplicate children
+      if (f.exists(dir)) {
+        val loser = (java.util.regex.Pattern.quote(name) + "-[0-9a-fA-F-]{36}").r
+        f.listStatus(dir).foreach { st =>
+          if (st.isDirectory && loser.matches(st.getPath.getName))
+            f.delete(st.getPath, true)
+        }
+      }
+      if (!f.exists(dir)) {
+        evaluated += name
+        val staging = new Path(s"$outDir/_staging/$name-${java.util.UUID.randomUUID()}")
+        // the builder's cuts are freed once the table is written
+        scope(labeled(spark, s"release stage $name") {
+          df.write.mode("overwrite").parquet(staging.toString)
+        })
+        f.mkdirs(dir.getParent)
+        if (f.rename(staging, dir)) {
+          // HDFS rename onto a dir that appeared inside the
+          // exists-to-rename window NESTS src under it and returns
+          // true; stage tables are deterministic, so the nested loser
+          // tree is a pure duplicate of the winner: delete it
+          val nested = new Path(dir, staging.getName)
+          if (f.exists(nested)) f.delete(nested, true)
+        } else {
+          // a concurrent runner won the publish with the same rows
+          require(f.exists(dir), s"ReleaseRun: could not publish stage table $dir")
+          f.delete(staging, true)
+        }
+      }
+      if (stopAfter.contains(name)) halted = true
+      spark.read.parquet(dir.toString)
+    }
+  }
+}

@@ -61,23 +61,11 @@ final class Transportor(
       if (dups.nonEmpty)
         throw new IllegalArgumentException(
           s"table '$key': duplicate target column(s) ${dups.mkString(", ")}")
-      m.columns.foreach {
-        case r: Refer if r.searchSource == SearchSource.Target &&
-            plan.keyFor(r.searchTable).isEmpty && !preSeeded.contains(r.searchTable) =>
+      TransportPlan.targetLookups(m).foreach { t =>
+        if (plan.keyFor(t).isEmpty && !preSeeded.contains(t))
           throw new NoSuchElementException(
-            s"table '$key': refer '${r.target}' looks up target table " +
-              s"'${r.searchTable}' which is neither in the plan nor pre-seeded")
-        case r: Refers if r.searchSource == SearchSource.Target &&
-            plan.keyFor(r.searchTable).isEmpty && !preSeeded.contains(r.searchTable) =>
-          throw new NoSuchElementException(
-            s"table '$key': refers '${r.target}' looks up target table " +
-              s"'${r.searchTable}' which is neither in the plan nor pre-seeded")
-        case r: FuzzyRefer if r.searchSource == SearchSource.Target &&
-            plan.keyFor(r.searchTable).isEmpty && !preSeeded.contains(r.searchTable) =>
-          throw new NoSuchElementException(
-            s"table '$key': fuzzy refer '${r.target}' looks up target table " +
-              s"'${r.searchTable}' which is neither in the plan nor pre-seeded")
-        case _ =>
+            s"table '$key': looks up target table '$t' which is neither " +
+              "in the plan nor pre-seeded")
       }
     }
     Toposort(plan) // cycle check
@@ -210,6 +198,7 @@ final class Transportor(
               s"target-side lookup table '$table' is neither in the plan nor pre-seeded")
         }
     }
+    // a Transportor-lifetime cache, not a Stage cut: reused across refers
     if (preload.contains(table))
       preloaded.getOrElseUpdate(table, df.cache())
     else df

@@ -3,7 +3,8 @@ package graft.plans
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{SimilarityFunctions, TextFunctions}
-import graft.operators.{Chat, Dedup, Packing, Profile, Release, Sampling, Similarity}
+import graft.operators.{Chat, Dedup, Packing, Profile, Release, Sampling, Similarity, Stage}
+import graft.operators.Stage.Local
 import graft.sources.{AnnIndex, DedupIndexStore, Segments}
 
 /** The INCREMENTAL release — "day N+1 = yesterday's state + today's
@@ -111,24 +112,6 @@ object IncrementalRelease {
     * manual auto-numbered appends can never collide. */
   private def segIdOf(batchId: Long): Long = Segments.StreamSegBase + batchId
 
-  /** A/B toggle for the store-probe prune plan shape (the
-    * `BENCH_sf1skew_r17` on/off measurement): the prune is
-    * semantics-preserving by construction (see
-    * [[graft.operators.Dedup.prunedIndexProbe]] — whole buckets kept,
-    * pruned-away buckets are never probed), so results are identical
-    * either way; default ON. Dev-only knob, read once. */
-  private val pruneProbes: Boolean =
-    sys.env.getOrElse("SPARK_GRAFT_PRUNE_PROBE", "true").toBoolean
-
-  /** UI/profiler attribution (guide §1.5): every job `body` spawns —
-    * including broadcast-exchange child jobs, which capture the
-    * submitting thread's locals — carries `desc`. */
-  private def labeled[T](spark: SparkSession, desc: String)(body: => T): T = {
-    val prev = spark.sparkContext.getLocalProperty("spark.job.description")
-    spark.sparkContext.setJobDescription(desc)
-    try body finally spark.sparkContext.setJobDescription(prev)
-  }
-
   /** Run INDEPENDENT state/store writes concurrently (guide §2.6 —
     * overlap independent jobs): each append/build is a small job over
     * an already-materialized frame that leaves most task slots idle,
@@ -138,20 +121,24 @@ object IncrementalRelease {
     * ordering inside the group (the append-then-read barriers in
     * [[runDeltas]] stay sequential). Threads inherit the caller's job
     * description (SparkContext local properties clone at thread
-    * creation); the first failure rethrows after all tasks settle, so
-    * a crash replay sees the same "some subset published" states the
-    * sequential form could leave. */
+    * creation) and [[Stage.scope]]. Failures rethrow after all tasks
+    * settle, so a crash replay sees the same "some subset published"
+    * states the sequential form could leave: the first failure is
+    * thrown and every sibling failure rides on it as suppressed. */
   private[graft] def inParallel(tasks: (() => Unit)*): Unit = {
     if (tasks.sizeIs <= 1) { tasks.foreach(_.apply()); return }
-    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
     val threads = tasks.map { t =>
       new Thread(() =>
-        try t() catch { case e: Throwable => failure.compareAndSet(null, e); () })
+        try t() catch { case e: Throwable => failures.add(e); () })
     }
     threads.foreach(_.start())
     threads.foreach(_.join())
-    val f = failure.get()
-    if (f != null) throw f
+    val first = failures.peek()
+    if (first != null) {
+      failures.forEach(e => if (e ne first) first.addSuppressed(e))
+      throw first
+    }
   }
 
   /** The ten delta tables (everything except the three minhash
@@ -251,7 +238,7 @@ object IncrementalRelease {
       spark: SparkSession,
       runDir: String,
       stateDir: String,
-      cfg: ReleaseConfig = ReleaseConfig()): Unit = {
+      cfg: ReleaseConfig = ReleaseConfig()): Unit = Stage.scope {
     def st(name: String) = spark.read.parquet(s"$runDir/stages/$name")
     val s2 = st("s2_exact").select("doc_id", "source", "text")
     val holdout = st("s4_split").filter(col("split") === "test")
@@ -271,13 +258,13 @@ object IncrementalRelease {
     // ran as ~15 sequential small jobs; now the kmeans training (the
     // long pole) overlaps all of them.
     inParallel(
-      () => labeled(spark, "bootstrap: corpus minhash store") {
+      () => Stage.labeled(spark, "bootstrap: corpus minhash store") {
         DedupIndexStore.buildMinhash(spark, s"$stateDir/corpus_minhash",
           s2, "doc_id", "text", cfg.dedup.shingleN, cfg.dedup.numHashes,
           cfg.dedup.bands)
         ()
       },
-      () => labeled(spark, "bootstrap: holdout minhash store") {
+      () => Stage.labeled(spark, "bootstrap: holdout minhash store") {
         DedupIndexStore.buildMinhash(spark, s"$stateDir/holdout_minhash",
           holdout, "doc_id", "text", cfg.dedup.shingleN, cfg.dedup.numHashes,
           cfg.decontam.bands)
@@ -285,20 +272,20 @@ object IncrementalRelease {
       },
       // the FROZEN semantic model: the same deterministic training the
       // pipeline's stage 5 runs (day-0 holdout embeddings)
-      () => labeled(spark, "bootstrap: ann store") {
+      () => Stage.labeled(spark, "bootstrap: ann store") {
         val cents = Similarity.kmeansCentroidsDistributed(
           testEmb, "vec_id", "embedding",
           nlist = cfg.decontam.semanticNlist, iters = cfg.decontam.semanticIters)
         AnnIndex.buildAndWriteIvf(spark, s"$stateDir/holdout_ann",
           testEmb, "vec_id", "embedding", cents)
       },
-      () => labeled(spark, "bootstrap: conv minhash store") {
+      () => Stage.labeled(spark, "bootstrap: conv minhash store") {
         DedupIndexStore.buildMinhash(spark, s"$stateDir/conv_minhash",
           convs, "doc_id", "text", cfg.dedup.shingleN, cfg.dedup.numHashes,
           cfg.dedup.bands)
         ()
       },
-      () => labeled(spark, "bootstrap: state tables") {
+      () => Stage.labeled(spark, "bootstrap: state tables") {
         inParallel(
           () => app(spark, stateDir, "corpus_texts", s2),
           () => app(spark, stateDir, "holdout_texts", holdout),
@@ -396,7 +383,7 @@ object IncrementalRelease {
       merges: () => Seq[(String, String)],
       stateDir: String,
       cfg: ReleaseConfig = ReleaseConfig(),
-      batchId: Option[Long] = None): Unit = {
+      batchId: Option[Long] = None): Unit = Stage.scope {
     val id = col("doc_id")
     val excl = batchId.map(segIdOf)
     // phase marker (guide §1.5) — sequential driver code, so a plain
@@ -420,7 +407,7 @@ object IncrementalRelease {
     try {
     mark("incr 1: ingest")
     // 1 — ingest gates (the shared expression blocks)
-    val input = batchRaw.select(id, col("source"), col("raw")).localCheckpoint()
+    val input = Stage("incr input", Local)(batchRaw.select(id, col("source"), col("raw")))
 
     // the monotone-id fence: the equality contract is only a theorem
     // when every batch id exceeds every stored id — enforce it against
@@ -440,7 +427,7 @@ object IncrementalRelease {
           "above the watermark, or re-release from scratch.")
 
     val raw = Release.withEncOk(input)
-    val gated = Release.scoredGates(raw, cfg).localCheckpoint()
+    val gated = Stage("incr gated", Local)(Release.scoredGates(raw, cfg))
     val (encRejects, gateRejects) = Release.ingestRejectRows(raw, gated)
     val ingested = Release.ingestedRows(gated)
 
@@ -464,8 +451,8 @@ object IncrementalRelease {
     val withinExactRejects = afterCross.filter(id =!= col("__keep"))
       .select(id, lit("exact").as("stage"),
         concat(lit("dup_of_"), col("__keep").cast("string")).as("reason"))
-    val batchExact = afterCross.filter(id === col("__keep"))
-      .select(id, col("source"), col("text")).localCheckpoint()
+    val batchExact = Stage("incr exact", Local)(afterCross
+      .filter(id === col("__keep")).select(id, col("source"), col("text")))
 
     mark("incr 3: neardup")
     // 3 — near-dup: ONE connected-components pass over the union
@@ -486,34 +473,34 @@ object IncrementalRelease {
     // (guide §2.6; the cross probe is the long pole and the
     // within-batch sweep hides under it)
     val (crossNd, batchNdPairs) = par2(
-      Dedup.dedupAgainstMatches(batchExact, corpusTexts,
-          "doc_id", "text", cfg.dedup.shingleN, cfg.dedup.numHashes,
-          cfg.dedup.bands, cfg.dedup.jaccardThreshold,
-          maxBucketSize = cfg.dedup.maxBucketSize,
-          index = Some(storeBands), pruneIndexToProbe = pruneProbes)
-        .join(ndRepMap, Seq("cid"), "left")
-        .select(col("id"), coalesce(col("rep"), col("cid")).as("rep"))
-        .localCheckpoint(),
-      Dedup.minhashPairs(batchExact, "doc_id", "text",
-          cfg.dedup.shingleN, cfg.dedup.numHashes, cfg.dedup.bands,
-          cfg.dedup.jaccardThreshold,
-          maxBucketSize = cfg.dedup.maxBucketSize)
-        .select("id_a", "id_b")
-        .localCheckpoint())
-    val ndCc = Dedup.connectedComponents(batchNdPairs.unionByName(
-        crossNd.select(col("id").as("id_a"), col("rep").as("id_b"))))
-      .filter(col("id") =!= col("rep"))
-      // batch rows only: day-N rep nodes ride along in the graph, and
-      // under the no-bridge contract each is its own component min
-      // (so the id =!= rep filter already removed it) — the semi-join
-      // makes that structural rather than assumed
-      .join(batchExact.select(id.as("id")), Seq("id"), "left_semi")
-      .localCheckpoint()
+      Stage("incr nd cross", Local)(
+        Dedup.dedupAgainstMatches(batchExact, corpusTexts,
+            "doc_id", "text", cfg.dedup.shingleN, cfg.dedup.numHashes,
+            cfg.dedup.bands, cfg.dedup.jaccardThreshold,
+            maxBucketSize = cfg.dedup.maxBucketSize,
+            index = Some(storeBands), pruneIndexToProbe = true)
+          .join(ndRepMap, Seq("cid"), "left")
+          .select(col("id"), coalesce(col("rep"), col("cid")).as("rep"))),
+      Stage("incr nd pairs", Local)(
+        Dedup.minhashPairs(batchExact, "doc_id", "text",
+            cfg.dedup.shingleN, cfg.dedup.numHashes, cfg.dedup.bands,
+            cfg.dedup.jaccardThreshold,
+            maxBucketSize = cfg.dedup.maxBucketSize)
+          .select("id_a", "id_b")))
+    val ndCc = Stage("incr nd cc", Local)(
+      Dedup.connectedComponents(batchNdPairs.unionByName(
+          crossNd.select(col("id").as("id_a"), col("rep").as("id_b"))))
+        .filter(col("id") =!= col("rep"))
+        // batch rows only: day-N rep nodes ride along in the graph, and
+        // under the no-bridge contract each is its own component min
+        // (so the id =!= rep filter already removed it) — the semi-join
+        // makes that structural rather than assumed
+        .join(batchExact.select(id.as("id")), Seq("id"), "left_semi"))
     val ndRejects = ndCc.select(col("id").as("doc_id"),
       lit("neardup").as("stage"),
       concat(lit("dup_of_"), col("rep").cast("string")).as("reason"))
-    val batchNd = batchExact.join(ndCc.select(col("id").as("doc_id")),
-      Seq("doc_id"), "left_anti").localCheckpoint()
+    val batchNd = Stage("incr nd keep", Local)(batchExact.join(
+      ndCc.select(col("id").as("doc_id")), Seq("doc_id"), "left_anti"))
 
     mark("incr 3b: store appends")
     // the corpus stores grow by the batch's exact survivors NOW —
@@ -530,12 +517,12 @@ object IncrementalRelease {
     // batch-tv-vs-batch-holdout hits surface exactly like the union's
     val split = Sampling.hashSplit(batchNd, "doc_id",
       cfg.split.trainPct, cfg.split.valPct)
-    val batchHold = split.filter(col("split") === "test")
-      .select(id, col("text")).localCheckpoint()
+    val batchHold = Stage("incr holdout", Local)(split.filter(col("split") === "test")
+      .select(id, col("text")))
     val holdoutRejects = batchHold
       .select(id, lit("holdout").as("stage"), lit("test").as("reason"))
-    val batchTv = split.filter(col("split") =!= "test")
-      .select(id, col("source"), col("text")).localCheckpoint()
+    val batchTv = Stage("incr train/val", Local)(
+      split.filter(col("split") =!= "test").select(id, col("source"), col("text")))
     // both must land BEFORE the decontam reads below (append-then-read
     // order) — they are independent of each other, so overlap the two
     // and barrier here
@@ -556,12 +543,13 @@ object IncrementalRelease {
     // concurrently (guide §2.6); the append-then-read order INSIDE
     // the semantic thread is preserved
     val (lexOkIds, semHits) = par2(
-      Dedup.dedupAgainst(batchTv, holdTexts, "doc_id", "text",
-          cfg.dedup.shingleN, cfg.dedup.numHashes, cfg.decontam.bands,
-          cfg.decontam.jaccardThreshold,
-          index = Some(DedupIndexStore.readMinhash(spark, s"$stateDir/holdout_minhash")),
-          pruneIndexToProbe = pruneProbes)
-        .select("doc_id").localCheckpoint(),
+      Stage("incr lex ok", Local)(
+        Dedup.dedupAgainst(batchTv, holdTexts, "doc_id", "text",
+            cfg.dedup.shingleN, cfg.dedup.numHashes, cfg.decontam.bands,
+            cfg.decontam.jaccardThreshold,
+            index = Some(DedupIndexStore.readMinhash(spark, s"$stateDir/holdout_minhash")),
+            pruneIndexToProbe = true)
+          .select("doc_id")),
       {
         val batchTestEmb = embeddings.join(
           batchHold.select(id.as("vec_id")), Seq("vec_id"), "left_semi")
@@ -584,53 +572,52 @@ object IncrementalRelease {
             maxClusterSize = cfg.decontam.semanticMaxCluster,
             index = Some(annCorpus(ann.assigned)))
           .select(col("vec_id").as("doc_id"))
-        batchTvEmb.select(col("vec_id").as("doc_id"))
-          .join(semOkIds, Seq("doc_id"), "left_anti").localCheckpoint()
+        Stage("incr sem hits", Local)(batchTvEmb.select(col("vec_id").as("doc_id"))
+          .join(semOkIds, Seq("doc_id"), "left_anti"))
       })
     val lexRejects = batchTv.select("doc_id")
       .join(lexOkIds, Seq("doc_id"), "left_anti")
       .select(id, lit("decontam").as("stage"), lit("lexical").as("reason"))
     val semRejects = semHits.join(lexOkIds, Seq("doc_id"), "left_semi")
       .select(id, lit("decontam").as("stage"), lit("semantic").as("reason"))
-    val keep = batchTv.join(lexOkIds, Seq("doc_id"), "left_semi")
-      .join(semHits, Seq("doc_id"), "left_anti").localCheckpoint()
+    val keep = Stage("incr keep", Local)(batchTv.join(lexOkIds, Seq("doc_id"), "left_semi")
+      .join(semHits, Seq("doc_id"), "left_anti"))
 
     mark("incr 6: sft")
     // 6 — SFT endgame over the batch survivors; conversation dedup is
     // the same combined-edge CC decomposition as stage 3
-    val turns = Chat.parseToolTurns(
-      transcriptsOf(keep.select("doc_id", "text")), "doc_id", "transcript")
-      .localCheckpoint()
+    val turns = Stage("incr turns", Local)(Chat.parseToolTurns(
+      transcriptsOf(keep.select("doc_id", "text")), "doc_id", "transcript"))
     val (contractRejects, toolRejects, admitted) =
       Release.sftGateRows(turns, cfg.sft.toolNames)
-    val aturns = turns.join(admitted, "doc_id").localCheckpoint()
-    val convs = Release.convoTexts(aturns).localCheckpoint()
+    val aturns = Stage("incr aturns", Local)(turns.join(admitted, "doc_id"))
+    val convs = Stage("incr convs", Local)(Release.convoTexts(aturns))
     val convTexts = segX("conv_texts", "doc_id", "text")
     val convRepMap = segX("conv_reps", "doc_id", "rep")
       .select(col("doc_id").as("cid"), col("rep"))
     // same concurrent pair-generation split as stage 3 (guide §2.6)
     val (crossConv, convPairs) = par2(
-      Dedup.dedupAgainstMatches(convs, convTexts,
-          "doc_id", "text", cfg.dedup.shingleN, cfg.dedup.numHashes,
-          cfg.dedup.bands, cfg.dedup.jaccardThreshold,
-          maxBucketSize = cfg.dedup.maxBucketSize,
-          index = Some(DedupIndexStore.readMinhash(
-            spark, s"$stateDir/conv_minhash", excl)),
-          pruneIndexToProbe = pruneProbes)
-        .join(convRepMap, Seq("cid"), "left")
-        .select(col("id"), coalesce(col("rep"), col("cid")).as("rep"))
-        .localCheckpoint(),
-      Dedup.minhashPairs(convs, "doc_id", "text",
-          cfg.dedup.shingleN, cfg.dedup.numHashes, cfg.dedup.bands,
-          cfg.dedup.jaccardThreshold,
-          maxBucketSize = cfg.dedup.maxBucketSize)
-        .select("id_a", "id_b")
-        .localCheckpoint())
-    val convCc = Dedup.connectedComponents(convPairs.unionByName(
-        crossConv.select(col("id").as("id_a"), col("rep").as("id_b"))))
-      .filter(col("id") =!= col("rep"))
-      .join(convs.select(id.as("id")), Seq("id"), "left_semi")
-      .localCheckpoint()
+      Stage("incr conv cross", Local)(
+        Dedup.dedupAgainstMatches(convs, convTexts,
+            "doc_id", "text", cfg.dedup.shingleN, cfg.dedup.numHashes,
+            cfg.dedup.bands, cfg.dedup.jaccardThreshold,
+            maxBucketSize = cfg.dedup.maxBucketSize,
+            index = Some(DedupIndexStore.readMinhash(
+              spark, s"$stateDir/conv_minhash", excl)),
+            pruneIndexToProbe = true)
+          .join(convRepMap, Seq("cid"), "left")
+          .select(col("id"), coalesce(col("rep"), col("cid")).as("rep"))),
+      Stage("incr conv pairs", Local)(
+        Dedup.minhashPairs(convs, "doc_id", "text",
+            cfg.dedup.shingleN, cfg.dedup.numHashes, cfg.dedup.bands,
+            cfg.dedup.jaccardThreshold,
+            maxBucketSize = cfg.dedup.maxBucketSize)
+          .select("id_a", "id_b")))
+    val convCc = Stage("incr conv cc", Local)(
+      Dedup.connectedComponents(convPairs.unionByName(
+          crossConv.select(col("id").as("id_a"), col("rep").as("id_b"))))
+        .filter(col("id") =!= col("rep"))
+        .join(convs.select(id.as("id")), Seq("id"), "left_semi"))
     val sftDupRejects = convCc.select(col("id").as("doc_id"),
       lit("sft_dedup").as("stage"),
       concat(lit("dup_of_"), col("rep").cast("string")).as("reason"))
@@ -645,13 +632,12 @@ object IncrementalRelease {
       () => appX("conv_texts", convs),
       () => appX("conv_reps", convCc.select(col("id").as("doc_id"), col("rep"))),
       () => {
-        conv0 = Release.convCosted(aturns, merges(),
+        conv0 = Stage("incr conv costed", Local)(Release.convCosted(aturns, merges(),
             cfg.sft.turnOverhead, cfg.sft.groups)
-          .join(sftDupRejects.select("doc_id"), Seq("doc_id"), "left_anti")
-          .localCheckpoint()
+          .join(sftDupRejects.select("doc_id"), Seq("doc_id"), "left_anti"))
         ()
       },
-      () => { tail0 = latestPackState(spark, stateDir, excl).localCheckpoint(); () })
+      () => { tail0 = Stage("incr pack tail", Local)(latestPackState(spark, stateDir, excl)) })
     val conv = conv0
 
     mark("incr 7: pack")
@@ -659,13 +645,13 @@ object IncrementalRelease {
     // per-group tail bins — byte-identical to one from-scratch
     // next-fit over the union in id order
     val tail = tail0
-    val batchPacked = Packing.packBinsByCountFrom(conv, "doc_id", "grp",
-        "n_tokens", cfg.pack.capacity, tail.select("grp", "bin_id", "fill"))
-      .select(col("id").as("doc_id"), col("grp"), col("n_tokens"),
-        col("bin_id"))
-      .join(conv.select("doc_id", "loss_tokens"), "doc_id")
-      .select("doc_id", "grp", "n_tokens", "loss_tokens", "bin_id")
-      .localCheckpoint()
+    val batchPacked = Stage("incr packed", Local)(
+      Packing.packBinsByCountFrom(conv, "doc_id", "grp",
+          "n_tokens", cfg.pack.capacity, tail.select("grp", "bin_id", "fill"))
+        .select(col("id").as("doc_id"), col("grp"), col("n_tokens"),
+          col("bin_id"))
+        .join(conv.select("doc_id", "loss_tokens"), "doc_id")
+        .select("doc_id", "grp", "n_tokens", "loss_tokens", "bin_id"))
     appX("packed", batchPacked)
     // max over an empty tail is NULL (a day 0 that packed nothing
     // still bootstraps an empty pack_state) — resume at batch 0, not
@@ -684,13 +670,12 @@ object IncrementalRelease {
 
     mark("incr 9: ledger/manifest")
     // 9 — ledger + manifest states + watermark + reconcile deltas
-    val ledgerDelta = encRejects.unionByName(gateRejects)
+    val ledgerDelta = Stage("incr ledger", Local)(encRejects.unionByName(gateRejects)
       .unionByName(crossExactRejects).unionByName(withinExactRejects)
       .unionByName(ndRejects)
       .unionByName(holdoutRejects).unionByName(lexRejects)
       .unionByName(semRejects).unionByName(contractRejects)
-      .unionByName(toolRejects).unionByName(sftDupRejects)
-      .localCheckpoint()
+      .unionByName(toolRejects).unionByName(sftDupRejects))
     // four independent table writes (ledger/manifest/watermark/
     // reconcile) over checkpointed frames — the terminal barrier,
     // overlapped like the other append groups
@@ -749,9 +734,8 @@ object IncrementalRelease {
       spark: SparkSession,
       stateDir: String,
       ids: DataFrame,
-      idCol: String = "doc_id"): Unit = {
-    val dead = ids.select(col(idCol).cast("long").as("doc_id"))
-      .distinct().localCheckpoint()
+      idCol: String = "doc_id"): Unit = Stage.scope {
+    val dead = Stage("forget ids", Local)(ids.select(col(idCol).cast("long").as("doc_id")).distinct())
 
     // the compensating reconcile row FIRST (from the pre-tombstone
     // view): every accounted row about to vanish leaves the input
@@ -807,7 +791,7 @@ object IncrementalRelease {
     * [[DedupIndexStore.maintenanceAudit]]'s compaction-due trigger,
     * exactly like the minhash/ANN stores. */
   def compactState(
-      spark: SparkSession, stateDir: String, name: String): Unit = {
+      spark: SparkSession, stateDir: String, name: String): Unit = Stage.scope {
     val dir = s"$stateDir/$name"
     val watermark = Segments.segmentWatermark(spark, dir)
     val root = Segments.resolve(spark, dir)

@@ -1,20 +1,15 @@
 package graft.plans
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.operators.Release
-
-/** Internal control-flow signal: a staged run configured with
-  * `stopAfter` reached its stop point (the crash-simulation hook the
-  * resume spec drives). Never escapes [[ReleaseRun.run]]. */
-private[graft] final class ReleaseHalted extends RuntimeException
+import graft.operators.{Release, ReleaseHalted, Stage}
 
 /** The DURABLE, RESUMABLE form of the release pipeline
   * ([[graft.operators.Release.pipeline]]): every stage boundary is a
-  * real parquet table under `<outDir>/stages/<name>`, published with
-  * one atomic rename, so
+  * [[Stage.Durable]] cut — a real parquet table under
+  * `<outDir>/stages/<name>`, published with one atomic rename — so
   *
   *   - a run that dies (executor loss, OOM, preemption) RESUMES from
-  *     its last completed stage: [[DurableStager]] skips the builder
+  *     its last completed stage: the Durable policy skips the builder
   *     thunk of any stage whose table already exists — including the
   *     driver-side loops (BPE training, k-means, pointer-doubling
   *     connected components) that run inside a thunk;
@@ -25,15 +20,11 @@ private[graft] final class ReleaseHalted extends RuntimeException
   *     real 100 TB release keeps (what survived stage N, and why the
   *     rest left — the ledger's provenance in durable form).
   *
-  * Crash posture per stage: compute → write to
-  * `<outDir>/_staging/<name>-<uuid>` → ONE rename to
-  * `<outDir>/stages/<name>`. A crash mid-write leaves only staging
-  * (ignored and overwritten by the resume); presence of the final
-  * directory IS the completion marker — there is no separate marker
-  * file to race. The terminal artifact goes through the
+  * The terminal artifact goes through the
   * [[graft.sources.ParquetDirIO]] staged write plus the
   * [[graft.operators.Reconcile.assertClean]] digest gate, exactly
-  * like the in-query form.
+  * like the in-query form. A run is one [[Stage.scope]]: it returns a
+  * parquet scan, so no block it cut outlives it.
   *
   * The in-query twin (`q_pipeline_release`) and this runner execute
   * the SAME [[Release.pipeline]] function, and the catalog gates both
@@ -41,85 +32,6 @@ private[graft] final class ReleaseHalted extends RuntimeException
   * `q_pipeline_release_run`) — the two forms are pinned equal.
   */
 object ReleaseRun {
-
-  /** Stage-boundary materializer over parquet stage tables. */
-  final class DurableStager(
-      spark: SparkSession,
-      outDir: String,
-      stopAfter: Option[String] = None) extends Release.Stager {
-
-    /** Stage names whose builder thunk RAN this invocation (resumed
-      * stages never appear — the convergence spec's probe). */
-    val evaluated = scala.collection.mutable.ArrayBuffer.empty[String]
-    private var halted = false
-    /** True once the `stopAfter` stage materialized. */
-    def haltedNow: Boolean = halted
-
-    private def fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(outDir), spark.sparkContext.hadoopConfiguration)
-
-    /** `<name>-<uuid>` — the staging naming pattern; a child of a
-      * PUBLISHED stage table matching it is a nested rename-race
-      * loser (see below) whose delete was interrupted by a crash. */
-    private def sweepNestedLosers(
-        f: org.apache.hadoop.fs.FileSystem,
-        dir: org.apache.hadoop.fs.Path,
-        name: String): Unit = {
-      val loser = (java.util.regex.Pattern.quote(name) +
-        "-[0-9a-fA-F-]{36}").r
-      f.listStatus(dir).foreach { st =>
-        if (st.isDirectory && loser.matches(st.getPath.getName))
-          f.delete(st.getPath, true)
-      }
-    }
-
-    def apply(name: String)(df: => DataFrame): DataFrame = {
-      if (halted) throw new ReleaseHalted
-      val dir = new org.apache.hadoop.fs.Path(s"$outDir/stages/$name")
-      val f = fs
-      // resume path: before trusting an existing stage table, sweep
-      // any nested loser tree a crash left inside it — the nested
-      // delete below is not atomic with the rename, and a crash in
-      // between leaves the duplicate subtree where no _staging sweep
-      // reaches (it lives INSIDE the published table), so a resumed
-      // read would see duplicate/conflicting children
-      if (f.exists(dir)) sweepNestedLosers(f, dir, name)
-      if (!f.exists(dir)) {
-        evaluated += name
-        val staging = new org.apache.hadoop.fs.Path(
-          s"$outDir/_staging/$name-${java.util.UUID.randomUUID()}")
-        // UI attribution (guide §1.5): every job this stage's builder
-        // spawns — including broadcast-exchange child jobs — carries
-        // the stage name
-        val prevDesc = spark.sparkContext
-          .getLocalProperty("spark.job.description")
-        spark.sparkContext.setJobDescription(s"release stage $name")
-        try df.write.mode("overwrite").parquet(staging.toString)
-        finally spark.sparkContext.setJobDescription(prevDesc)
-        f.mkdirs(dir.getParent)
-        if (f.rename(staging, dir)) {
-          // a rename that "succeeded" may still have lost the publish
-          // race: HDFS rename onto a dir that appeared inside the
-          // exists-to-rename window NESTS src under it and returns
-          // true — our staging tree would sit as a non-underscore
-          // child INSIDE the winner's published table, and every
-          // reader of the stage would double-count its rows. Stage
-          // tables are deterministic (same input, same rows), so the
-          // nested loser tree is a pure duplicate: delete it.
-          val nested = new org.apache.hadoop.fs.Path(dir, staging.getName)
-          if (f.exists(nested)) f.delete(nested, true)
-        } else {
-          // a concurrent runner over the same outDir won the publish —
-          // its table carries the same deterministic rows; sweep ours
-          require(f.exists(dir),
-            s"ReleaseRun: could not publish stage table $dir")
-          f.delete(staging, true)
-        }
-      }
-      if (stopAfter.contains(name)) halted = true
-      spark.read.parquet(dir.toString)
-    }
-  }
 
   /** Execute (or resume) a durable release run. Returns the
     * digest-verified artifact as a consumer reads it, or None when
@@ -141,7 +53,7 @@ object ReleaseRun {
       cfg: graft.plans.ReleaseConfig = graft.plans.ReleaseConfig(),
       stopAfter: Option[String] = None): Option[DataFrame] =
     runWithStager(spark, rawInput, embeddings, transcriptsOf, merges,
-      outDir, new DurableStager(spark, outDir, stopAfter), cfg)
+      outDir, new Stage.Durable(spark, outDir, stopAfter), cfg)
 
   /** A resumed run must be resuming THE SAME run: the stage tables
     * freeze the original input, but the live side inputs (the
@@ -214,32 +126,33 @@ object ReleaseRun {
       transcriptsOf: DataFrame => DataFrame,
       merges: () => Seq[(String, String)],
       outDir: String,
-      st: DurableStager,
-      cfg: graft.plans.ReleaseConfig = graft.plans.ReleaseConfig()): Option[DataFrame] = {
-    verifyRunFingerprint(spark, rawInput, embeddings, outDir, cfg)
-    // sweep staging trees a CRASHED run abandoned (subtree untouched
-    // for an hour — a live concurrent runner's in-flight staging is
-    // never touched); without this, repeated crash/resume cycles
-    // accumulate orphan full-stage-size parquet trees indefinitely
-    graft.sources.Segments.sweepStaleChildren(
-      org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(outDir), spark.sparkContext.hadoopConfiguration),
-      new org.apache.hadoop.fs.Path(s"$outDir/_staging"))
-    val parts =
-      try Release.pipeline(spark, rawInput, embeddings, transcriptsOf,
-        merges, st, cfg)
-      catch { case _: ReleaseHalted => return None }
-    // stopAfter on the FINAL stage halts before the terminal write too
-    if (st.haltedNow) return None
-    // terminal: the digest-verified artifact, persisted once for the
-    // write + checksum + read-back triple (its inputs are stage-table
-    // scans, so the persist is parts-sized, never corpus lineage)
-    val out = parts.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val io = new graft.sources.ParquetDirIO(spark, outDir, outDir)
-      io.writeTarget("release", out)
-      graft.operators.Reconcile.assertClean(io, Map("release" -> out))
-      Some(io.readTarget("release"))
-    } finally out.unpersist()
-  }
+      st: Stage.Durable,
+      cfg: graft.plans.ReleaseConfig = graft.plans.ReleaseConfig()): Option[DataFrame] =
+    Stage.scope {
+      verifyRunFingerprint(spark, rawInput, embeddings, outDir, cfg)
+      // sweep staging trees a CRASHED run abandoned (subtree untouched
+      // for an hour — a live concurrent runner's in-flight staging is
+      // never touched); without this, repeated crash/resume cycles
+      // accumulate orphan full-stage-size parquet trees indefinitely
+      graft.sources.Segments.sweepStaleChildren(
+        org.apache.hadoop.fs.FileSystem.get(
+          new java.net.URI(outDir), spark.sparkContext.hadoopConfiguration),
+        new org.apache.hadoop.fs.Path(s"$outDir/_staging"))
+      val parts =
+        try Some(Release.pipeline(spark, rawInput, embeddings, transcriptsOf,
+          merges, new Release.Stager(st), cfg))
+        catch { case _: ReleaseHalted => None }
+      // stopAfter on the FINAL stage halts before the terminal write too
+      parts.filterNot(_ => st.haltedNow).map { p =>
+        // terminal: the digest-verified artifact, persisted once for
+        // the write + checksum + read-back triple (its inputs are
+        // stage-table scans, so the persist is parts-sized, never
+        // corpus lineage)
+        val out = Stage("release artifact", Stage.Persist())(p)
+        val io = new graft.sources.ParquetDirIO(spark, outDir, outDir)
+        io.writeTarget("release", out)
+        graft.operators.Reconcile.assertClean(io, Map("release" -> out))
+        io.readTarget("release")
+      }
+    }
 }

@@ -26,19 +26,9 @@ object Toposort {
     * transported first. Names not filled by the plan (pre-seeded /
     * external target tables) carry no edge. */
   def dependencies(plan: TransportPlan, map: TableMap): Seq[String] = {
-    val refs = map.columns.flatMap {
-      case r: Refer if r.searchSource == SearchSource.Target      => Seq(r.searchTable)
-      case r: Refers if r.searchSource == SearchSource.Target     => Seq(r.searchTable)
-      case r: FuzzyRefer if r.searchSource == SearchSource.Target => Seq(r.searchTable)
-      case _                                                      => Nil
-    }
-    val mids = map.middle.toSeq.flatMap { m =>
-      (if (m.one.referSource == SearchSource.Target) Seq(m.one.referTable) else Nil) ++
-        (if (m.many.referSource == SearchSource.Target) Seq(m.many.referTable) else Nil)
-    }
     // keysFor, not keyFor: a lookup against a multi-alias target table
     // depends on EVERY entry that appends into it.
-    (map.transportAfter.toSeq ++ refs ++ mids)
+    (map.transportAfter.toSeq ++ TransportPlan.targetLookups(map))
       .flatMap(plan.keysFor)
       .distinct
   }

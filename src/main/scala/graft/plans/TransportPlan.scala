@@ -331,4 +331,15 @@ final case class TransportPlan(tables: Seq[(String, TableMap)]) {
 
 object TransportPlan {
   def of(entries: (String, TableMap)*): TransportPlan = TransportPlan(entries.toSeq)
+
+  /** The target-side tables one map reads: `search_source == "target"`
+    * refer / refers / fuzzy refer lookups and middle halves. */
+  def targetLookups(map: TableMap): Seq[String] =
+    map.columns.collect {
+      case r: Refer if r.searchSource == SearchSource.Target => r.searchTable
+      case r: Refers if r.searchSource == SearchSource.Target => r.searchTable
+      case r: FuzzyRefer if r.searchSource == SearchSource.Target => r.searchTable
+    } ++ map.middle.toSeq
+      .flatMap(m => Seq(m.one.referSource -> m.one.referTable, m.many.referSource -> m.many.referTable))
+      .collect { case (SearchSource.Target, t) => t }
 }

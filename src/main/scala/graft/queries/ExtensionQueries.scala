@@ -5,7 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 import graft.multimodal.Multimodal
-import graft.operators.{Classifier, Dedup, Search, Similarity}
+import graft.operators.{Classifier, Dedup, Search, Similarity, Stage}
+import graft.operators.Stage.{Local, Persist}
 
 /** The LLM-training-data-pipeline operators (north-star extensions,
   * SURVEY.md §7.5): dedup, similarity search, text analysis,
@@ -235,8 +236,8 @@ object ExtensionQueries {
     // loop and the terminal scoring join — without the persist it ran
     // twice (train materializes eagerly, so the cache is hot before
     // the scoring plan is consumed)
-    val feats = Search.hashedFeatures(docs, "doc_id", "text", dims = 256, seed = 11L)
-      .persist()
+    val feats = Stage("distill features", Persist())(
+      Search.hashedFeatures(docs, "doc_id", "text", dims = 256, seed = 11L))
     val w = Classifier.trainLogisticFx(
       feats, distillLabels(docs), dims = 256, iters = 3)
     Classifier.scoreFx(docs, "doc_id", feats, w)
@@ -272,9 +273,9 @@ object ExtensionQueries {
     // GATE-LABEL text sweep (langId + quality + length) also feeds two
     // consumers (the training loop and the confusion join), so both
     // expensive sweeps are persisted and run once each
-    val feats = Search.hashedFeatures(docs, "doc_id", "text", dims = 256, seed = 11L)
-      .persist()
-    val labels = distillLabels(docs).persist()
+    val feats = Stage("distill features", Persist())(
+      Search.hashedFeatures(docs, "doc_id", "text", dims = 256, seed = 11L))
+    val labels = Stage("distill labels", Persist())(distillLabels(docs))
     val w = Classifier.trainLogisticFx(
       feats, labels, dims = 256, iters = 3)
     val scored = Classifier.scoreFx(docs, "doc_id", feats, w)
@@ -342,9 +343,9 @@ object ExtensionQueries {
     // sides + the rescore text re-attach) and the final keep-one
     // anti-join, and each lazy re-scan re-ran the lang/quality gate
     // sweep above (guide §5 — one pass per expensive frame)
-    val exact = Dedup.exactByFingerprint(gated, "doc_id", "text")
-      .select("doc_id", "text", "n_tokens")
-      .localCheckpoint()
+    val exact = Stage("clean exact", Local)(
+      Dedup.exactByFingerprint(gated, "doc_id", "text")
+        .select("doc_id", "text", "n_tokens"))
     val pairs = Dedup.minhashPairs(exact, "doc_id", "text",
       shingleN = 3, numHashes = 64, bands = 16, jaccardThreshold = 0.5,
       maxBucketSize = Some(12)).select("id_a", "id_b")
@@ -856,9 +857,8 @@ object ExtensionQueries {
     * production twin ([[qDedupSemanticCapped]]) still runs over the
     * FULL corpus. */
   private val qDedupSemantic: Q = (s, dir) => {
-    val emb = graft.operators.Sampling.hashSample(
-        pq(s, dir, "embeddings"), "vec_id", pct = 25)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val emb = Stage("semantic sample", Persist())(graft.operators.Sampling.hashSample(
+      pq(s, dir, "embeddings"), "vec_id", pct = 25))
     // nlist ∝ corpus (constant expected cell occupancy): a fixed cell
     // count makes the within-cell pair output quadratic in density —
     // the worst growth curve in the r15 catalog (16× at 10× rows);
@@ -3009,11 +3009,11 @@ object ExtensionQueries {
     // BPE costing AND the contract gate (2 subtrees = 2 transcript
     // builds without the cut), and the costed frame is read twice
     // (pack input + the loss re-attach)
-    val turns = Chat.parseTurns(chatTranscripts(s, dir), "doc_id", "transcript")
-      .localCheckpoint()
+    val turns = Stage("chat turns", Local)(
+      Chat.parseTurns(chatTranscripts(s, dir), "doc_id", "transcript"))
     // BPE-costed under the FROZEN release tokenizer (the ws-token
     // unit misjudges a context window by the measured 3.74x)
-    val conv = turns
+    val conv = Stage("chat costed", Local)(turns
       .withColumn("__tok",
         when(col("content").isNull, lit(0L))
           .otherwise(graft.operators.Bpe.tokenCountCol(
@@ -3024,8 +3024,7 @@ object ExtensionQueries {
           .as("loss_tokens"))
       .join(Chat.validateTurns(turns, "doc_id")
         .filter(col("valid")).select("doc_id"), "doc_id")
-      .withColumn("grp", pmod(col("doc_id"), lit(8L)))
-      .localCheckpoint()
+      .withColumn("grp", pmod(col("doc_id"), lit(8L))))
     Packing.packBinsByCount(conv, "doc_id", "grp", "n_tokens", capacity = 512)
       .select(col("id").as("doc_id"), col("grp"), col("n_tokens"), col("bin_id"))
       .join(conv.select("doc_id", "loss_tokens"), "doc_id")
@@ -3337,8 +3336,8 @@ object ExtensionQueries {
     // and a lazy plan re-built the transcripts once per subtree
     // (guide §5; the release pipeline stages the same frame for the
     // same reason)
-    val turns = Chat.parseToolTurns(sftTranscripts(s, dir), "doc_id", "transcript")
-      .localCheckpoint()
+    val turns = Stage("sft turns", Local)(
+      Chat.parseToolTurns(sftTranscripts(s, dir), "doc_id", "transcript"))
     val contractOk = Chat.validateTurns(turns, "doc_id",
         roles = Chat.allowedRoles :+ "tool")
       .filter(col("valid")).select("doc_id")
@@ -3348,11 +3347,10 @@ object ExtensionQueries {
     val aturns = turns.join(admitted, "doc_id")
     // the conversation texts feed the banded self-join (three scans)
     // plus the keep-one anti-join — one aggregate pass, not four
-    val convo = aturns.groupBy("doc_id")
+    val convo = Stage("sft convo", Local)(aturns.groupBy("doc_id")
       .agg(array_join(transform(
         array_sort(collect_list(struct(col("turn_idx"), col("content")))),
-        t => t("content")), " ").as("text"))
-      .localCheckpoint()
+        t => t("content")), " ").as("text")))
     val pairs = Dedup.minhashPairs(convo, "doc_id", "text",
       shingleN = 3, numHashes = 64, bands = 16, jaccardThreshold = 0.5,
       maxBucketSize = Some(12)).select("id_a", "id_b")
@@ -3362,7 +3360,7 @@ object ExtensionQueries {
     // window by the measured 3.74x; q_pack_bins_bpe)
     // BPE costing is the second expensive sweep and the costed frame
     // is read twice (pack input + the loss re-attach) — one pass
-    val conv = aturns
+    val conv = Stage("sft costed", Local)(aturns
       .withColumn("__tok",
         when(col("content").isNull, lit(0L))
           .otherwise(graft.operators.Bpe.tokenCountCol(
@@ -3372,8 +3370,7 @@ object ExtensionQueries {
         sum(when(col("role") === "assistant", col("__tok")).otherwise(0L))
           .as("loss_tokens"))
       .join(kept, "doc_id")
-      .withColumn("grp", pmod(col("doc_id"), lit(8L)))
-      .localCheckpoint()
+      .withColumn("grp", pmod(col("doc_id"), lit(8L))))
     Packing.packBinsByCount(conv, "doc_id", "grp", "n_tokens", capacity = 512)
       .select(col("id").as("doc_id"), col("grp"), col("n_tokens"), col("bin_id"))
       .join(conv.select("doc_id", "loss_tokens"), "doc_id")
@@ -3412,13 +3409,12 @@ object ExtensionQueries {
     // the cuts the transcript build ran once per subtree and each
     // gate aggregate twice (making the scaladoc's "no stage is
     // recomputed per view" true at the plan level, not just intent)
-    val turns = Chat.parseToolTurns(sftTranscripts(s, dir), "doc_id", "transcript")
-      .localCheckpoint()
-    val contract = Chat.validateTurns(turns, "doc_id",
-      roles = Chat.allowedRoles :+ "tool")
-      .localCheckpoint()
-    val tool = Chat.validateToolUse(turns, "doc_id", Seq("search", "calc"))
-      .localCheckpoint()
+    val turns = Stage("sft turns", Local)(
+      Chat.parseToolTurns(sftTranscripts(s, dir), "doc_id", "transcript"))
+    val contract = Stage("sft contract", Local)(Chat.validateTurns(turns, "doc_id",
+      roles = Chat.allowedRoles :+ "tool"))
+    val tool = Stage("sft tool", Local)(
+      Chat.validateToolUse(turns, "doc_id", Seq("search", "calc")))
     val contractRejects = contract.filter(!col("valid"))
       .select(col("doc_id"), lit("contract").as("stage"),
         concat_ws(",",
@@ -3436,12 +3432,11 @@ object ExtensionQueries {
           when(!col("tool_names_ok"), "tool_names")).as("reason"))
     val admitted = contractOkIds
       .join(tool.filter(col("valid")).select("doc_id"), "doc_id")
-    val convo = turns.join(admitted, "doc_id")
+    val convo = Stage("sft convo", Local)(turns.join(admitted, "doc_id")
       .groupBy("doc_id")
       .agg(array_join(transform(
         array_sort(collect_list(struct(col("turn_idx"), col("content")))),
-        t => t("content")), " ").as("text"))
-      .localCheckpoint()
+        t => t("content")), " ").as("text")))
     val pairs = Dedup.minhashPairs(convo, "doc_id", "text",
       shingleN = 3, numHashes = 64, bands = 16, jaccardThreshold = 0.5,
       maxBucketSize = Some(12)).select("id_a", "id_b")
@@ -3549,28 +3544,26 @@ object ExtensionQueries {
       .orderBy("merge_idx").select("left_sym", "right_sym").collect()
       .map(r => (r.getString(0), r.getString(1))).toSeq
 
-  private val qPipelineRelease: Q = (s, dir) => {
+  private val qPipelineRelease: Q = (s, dir) => Stage.scope {
     // the shared nine-stage dataflow ([[graft.operators.Release]]) in
-    // its IN-QUERY form: localCheckpoint stage cuts. The durable twin
+    // its IN-QUERY form: Local stage cuts. The durable twin
     // (q_pipeline_release_run) runs the SAME function with parquet
     // stage tables — both gated by the same CTE-pyramid oracle.
-    val out = graft.operators.Release.pipeline(s,
-        releaseRawInput(s, dir), pq(s, dir, "embeddings"),
-        keep => sftTranscriptsOf(s, keep),
-        () => releaseMerges(s, dir),
-        new graft.operators.Release.LocalStager)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // write the release artifact and digest-verify it with the real
-      // reconciliation gate; the returned frame is the artifact as a
-      // CONSUMER would read it (proven row+checksum-identical)
-      val sfName = new java.io.File(dir).getName
-      val io = new graft.sources.ParquetDirIO(s, dir,
-        s"$twinRoot/release/$sfName")
-      io.writeTarget("release", out)
-      graft.operators.Reconcile.assertClean(io, Map("release" -> out))
-      io.readTarget("release")
-    } finally out.unpersist()
+    val out = Stage("release artifact", Persist())(graft.operators.Release.pipeline(s,
+      releaseRawInput(s, dir), pq(s, dir, "embeddings"),
+      keep => sftTranscriptsOf(s, keep),
+      () => releaseMerges(s, dir),
+      new graft.operators.Release.LocalStager))
+    // write the release artifact and digest-verify it with the real
+    // reconciliation gate; the returned frame is the artifact as a
+    // CONSUMER would read it (proven row+checksum-identical), so the
+    // scope frees every cut above
+    val sfName = new java.io.File(dir).getName
+    val io = new graft.sources.ParquetDirIO(s, dir,
+      s"$twinRoot/release/$sfName")
+    io.writeTarget("release", out)
+    graft.operators.Reconcile.assertClean(io, Map("release" -> out))
+    io.readTarget("release")
   }
 
   /** The DURABLE twin of [[qPipelineRelease]]
@@ -3655,12 +3648,11 @@ object ExtensionQueries {
     // 5× inside the batch's first materialization (measured: 10.2 s of
     // the incremental query's 55.9 s wall, the single biggest job
     // site). The checkpointed frame is just the surviving doc_ids.
-    val ing0 = graft.operators.Release.ingestedRows(
+    val ing0 = Stage("day0 ingested", Local)(graft.operators.Release.ingestedRows(
         graft.operators.Release.scoredGates(
           graft.operators.Release.withEncOk(releaseRawInput(s, dir))))
       .filter(id < 1000000L)
-      .select("doc_id")
-      .localCheckpoint()
+      .select("doc_id"))
     val toks = TextFunctions.tokens(col("text"))
     val rev = array_join(reverse(toks), " ")
     val revTail = array_join(
@@ -3878,13 +3870,12 @@ object ExtensionQueries {
     // cut); the gated frame feeds the conflict census and the clean
     // chain; the BPE-costed clean frame is read twice (pack + the
     // chosen-tokens re-attach)
-    val triples = prefPipelineTriples(s, dir).localCheckpoint()
-    val valid = triples.join(
+    val triples = Stage("pref triples", Local)(prefPipelineTriples(s, dir))
+    val valid = Stage("pref valid", Local)(triples.join(
       Preference.validatePairs(triples, "doc_id", "prompt", "chosen", "rejected")
         .filter(col("valid"))
         .select("doc_id", "prompt_tokens", "chosen_tokens", "rejected_tokens"),
-      "doc_id")
-      .localCheckpoint()
+      "doc_id"))
     val conflicted = Preference.labelConflicts(valid, "chosen", "rejected")
       .filter(col("conflicted")).select("key_lo", "key_hi")
     val fa = TextFunctions.fingerprint(col("chosen"))
@@ -3897,15 +3888,14 @@ object ExtensionQueries {
     def bpeT(c: org.apache.spark.sql.Column) =
       when(c.isNull, lit(0L))
         .otherwise(graft.operators.Bpe.tokenCountCol(c, merges))
-    val clean = valid
+    val clean = Stage("pref costed", Local)(valid
       .withColumn("key_lo", least(fa, fb))
       .withColumn("key_hi", greatest(fa, fb))
       .join(conflicted, Seq("key_lo", "key_hi"), "left_anti")
       .withColumn("n_tokens", bpeT(col("prompt")) + bpeT(col("chosen")) +
         bpeT(col("rejected")) + lit(3L))
       .withColumn("chosen_bpe", bpeT(col("chosen")))
-      .withColumn("grp", pmod(col("doc_id"), lit(8L)))
-      .localCheckpoint()
+      .withColumn("grp", pmod(col("doc_id"), lit(8L))))
     Packing.packBinsByCount(clean, "doc_id", "grp", "n_tokens", capacity = 1024)
       .select(col("id").as("doc_id"), col("grp"), col("n_tokens"), col("bin_id"))
       .join(clean.select(col("doc_id"), col("chosen_bpe").as("chosen_tokens")),

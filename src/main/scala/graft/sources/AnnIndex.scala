@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.Similarity
+import graft.operators.{Similarity, Stage}
 
 /** Persistable IVF-PQ index — "build once offline, query many":
   * three parquet tables under one directory,
@@ -509,10 +509,10 @@ object AnnIndex {
     // the persist each pass re-read and re-anti-joined the store
     // (guide §5: persist an iteratively re-read working frame, drop it
     // when the loop ends)
-    val survivors = minusTombstones(spark, Segments.resolve(spark, dir),
-      corpus.select(col(idCol).as("id"), col(vecCol).as("vec")))
-      .persist()
-    try {
+    Stage.scope {
+      val survivors = Stage("retrain survivors", Stage.Persist())(
+        minusTombstones(spark, Segments.resolve(spark, dir),
+          corpus.select(col(idCol).as("id"), col(vecCol).as("vec"))))
       val sample = Similarity.hashOrderedSample(survivors, "id", "vec", sampleSize)
       require(sample.nonEmpty, "empty retained corpus")
       val centroids = Similarity.refineCentroids(sample, nlist, refineIters)
@@ -532,7 +532,7 @@ object AnnIndex {
         .write.mode("overwrite").parquet(s"$staging/codebooks")
       coded.write.mode("overwrite").parquet(s"$staging/coded/seg=0")
       Segments.publishVersionFenced(spark, dir, staging, watermark)
-    } finally survivors.unpersist(blocking = false)
+    }
     read(spark, dir)
   }
 

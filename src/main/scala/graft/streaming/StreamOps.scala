@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
-import graft.operators.Transportor
+import graft.operators.{Stage, Transportor}
 import graft.plans.TransportPlan
 import graft.sources.{OverlayIO, TableIO}
 
@@ -536,16 +536,16 @@ object StreamOps {
         // survivors feed BOTH the caller's sink and the state publish;
         // persist for the batch's lifetime so the gate/dedup chain
         // runs once, not once per consumer
-        val survivors = ingestBatch(batch.toDF(), corpus, idCol, sourceCol,
-          textCol, Some(idx), lang, minQuality, minTokens, maxTokens,
-          jaccardThreshold)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
+        Stage.scope {
+          val survivors = Stage("ingest survivors", Stage.Persist())(
+            ingestBatch(batch.toDF(), corpus, idCol, sourceCol,
+              textCol, Some(idx), lang, minQuality, minTokens, maxTokens,
+              jaccardThreshold))
           sink(survivors)
           graft.operators.Profile.manifestStates(survivors, sourceCol, textCol, k)
             .coalesce(1)
             .write.mode("overwrite").parquet(s"$statesDir/batch=$batchId")
-        } finally survivors.unpersist()
+        }
       }
       .start()
     unpersistOnTermination(docs.sparkSession, query, idx)
@@ -670,7 +670,8 @@ object StreamOps {
   }
 
   /** Release a DataFrame cached for the lifetime of one streaming
-    * query: unpersist when THAT query terminates (listener removes
+    * query (the one cache kept outside [[graft.operators.Stage]]: it
+    * outlives any scope): unpersist when THAT query terminates (listener removes
     * itself after firing). unpersist is idempotent, so the benign
     * race — a query that dies before the listener registers — costs
     * nothing beyond the cache living until session end, exactly the

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only profiler (guide §1: measure first): run one or more
   * catalog queries exactly as [[graft.Bench]] does (same session
@@ -20,14 +19,7 @@ object ProfileQuery {
     // reflect bench parallelism; pass SPARK_GRAFT_CPUS=32 for the
     // bench_quiet shape
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession("graft-profile-query", s"local[$cpus]", cpus)
 
     final case class JobRec(id: Int, site: String, start: Long,
       var end: Long = 0L, var stages: Int = 0)

@@ -28,10 +28,20 @@ class ContractSpec extends SparkSpec {
     assert((oracled -- queries).isEmpty, s"orphan oracle SQL: ${oracled -- queries}")
   }
 
+  // also: a query built inside a Stage.scope leaves no persisted RDD behind
   test("every query analyzes against sf0.001 (schema-level smoke, no execution)") {
-    SparkEntry.queries.foreach { case (name, fn) =>
+    val sc = spark.sparkContext
+    SparkEntry.queries.foreach { case (name, query) =>
+      val before = sc.getPersistentRDDs.keySet.toSet
+      // the query built inside its own scope; analysis needs no block
+      val fn = (s: org.apache.spark.sql.SparkSession, dir: String) =>
+        graft.operators.Stage.scope(query(s, dir))
       val df = fn(spark, "/root/testdata/sf0.001")
       assert(df.schema.fields.nonEmpty, s"$name: empty schema")
+      val after = sc.getPersistentRDDs.toMap
+      assert(after.keySet == before,
+        s"$name: persisted RDDs changed across its scope: " +
+          s"${(after -- before).values.map(_.name)}")
     }
   }
 

@@ -188,7 +188,7 @@ class ExtensionSpec extends SparkSpec {
     assert(persisted.size <= 1,
       s"iteration state leaked: ${persisted.size} persisted RDDs")
     assert(result.count() == 20)
-    graft.operators.Dedup.release(result)
+    graft.operators.Stage.free(result)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
       "release() must unpersist the result's backing RDD")
     // released frame stays valid — it recomputes from lineage
@@ -208,7 +208,7 @@ class ExtensionSpec extends SparkSpec {
       "auto-release left components state persisted")
     assert(kept.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq ==
       Seq(1L, 4L, 5L))
-    graft.operators.Dedup.release(kept)
+    graft.operators.Stage.free(kept)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
       "release(result) must free the drop set")
     // released frame stays valid — recomputes from lineage
@@ -2369,7 +2369,7 @@ class ExtensionSpec extends SparkSpec {
     val reference = Dedup.keepOnePerCluster(docs, "doc_id", pairs)
       .collect().map(_.getLong(0)).toSet
     assert(survivors == reference)
-    Dedup.release(diag.components)
+    graft.operators.Stage.free(diag.components)
   }
 
   test("dedupDiagnostics works when the caller's id column is literally 'id' " +
@@ -2379,7 +2379,7 @@ class ExtensionSpec extends SparkSpec {
     val diag = Dedup.dedupDiagnostics(ids, "id", pairs)
     assert(diag.survivors.collect().map(_.getLong(0)).toSet ==
       Set(1L, 3L, 4L, 5L))
-    Dedup.release(diag.components)
+    graft.operators.Stage.free(diag.components)
   }
 
   test("RIFF walks guard forward progress: crafted chunk sizes whose " +

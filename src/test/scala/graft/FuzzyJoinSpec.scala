@@ -78,7 +78,7 @@ class FuzzyJoinSpec extends SparkSpec {
     val ents = FuzzyJoin.resolveEntities(d, "id", "s", threshold = 0.3)
     val got = ents.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 20L -> 20L, 30L -> 30L))
-    graft.operators.Dedup.release(ents)
+    graft.operators.Stage.free(ents)
   }
 
   test("similarJoin + bestMatches match quadratic cross brute force") {

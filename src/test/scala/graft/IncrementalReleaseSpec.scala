@@ -150,7 +150,14 @@ class IncrementalReleaseSpec extends SparkSpec {
         () => merges, state, batchId = Some(id))
 
     val ref = freshState()
-    deltas(ref, b1, 0L); deltas(ref, b2, 1L)
+    // a batch is one Stage.scope: it leaves no block it cut behind
+    def persisted = spark.sparkContext.getPersistentRDDs.toMap
+    val before = persisted.keySet
+    deltas(ref, b1, 0L)
+    val leaked = persisted -- before
+    assert(leaked.isEmpty && before.subsetOf(persisted.keySet),
+      s"runDeltas left persisted RDDs: ${leaked.values.map(_.name)}")
+    deltas(ref, b2, 1L)
     val uninterrupted = rows(IncrementalRelease.artifact(spark, ref))
 
     val crashed = freshState()
@@ -178,6 +185,18 @@ class IncrementalReleaseSpec extends SparkSpec {
     assert(rows(IncrementalRelease.artifact(spark, crashed)) == uninterrupted,
       "crash-replayed batches must produce an artifact row-identical " +
         "to an uninterrupted run — no double-appends, no lost deltas")
+  }
+
+  test("inParallel surfaces every failure: the first throws, each " +
+    "sibling failure rides on it as suppressed") {
+    val e = intercept[IllegalStateException] {
+      IncrementalRelease.inParallel(
+        () => throw new IllegalStateException("a"),
+        () => throw new IllegalStateException("b"),
+        () => ())
+    }
+    assert(e.getSuppressed.length == 1)
+    assert(Set(e.getMessage, e.getSuppressed.head.getMessage) == Set("a", "b"))
   }
 
   test("the monotone-id fence refuses a retroactive batch typed " +

@@ -261,7 +261,7 @@ class PlanGuardSpec extends SparkSpec {
     val ents = graft.operators.FuzzyJoin.resolveEntities(
       names, "name_id", "p_name", threshold = 0.25)
     assert(ents.count() > 0)
-    graft.operators.Dedup.release(ents)
+    graft.operators.Stage.free(ents)
     val leaked = sc.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"resolveEntities leaked persisted RDDs: $leaked")
   }

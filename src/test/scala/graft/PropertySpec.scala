@@ -121,7 +121,7 @@ object PropertySpec extends Properties("graft") {
         val resultDf = graft.operators.Dedup.connectedComponents(pairDf, maxIter = 30)
         val got = resultDf.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         // 100 generated runs in one JVM: drop each result's storage
-        graft.operators.Dedup.release(resultDf)
+        graft.operators.Stage.free(resultDf)
         val parent = scala.collection.mutable.Map.empty[Long, Long]
         def find(x: Long): Long = {
           val p = parent.getOrElse(x, x)

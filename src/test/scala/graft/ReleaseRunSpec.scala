@@ -40,7 +40,7 @@ class ReleaseRunSpec extends SparkSpec {
   private def runWith(
       outDir: String,
       stopAfter: Option[String] = None): (Option[DataFrame], Seq[String]) = {
-    val st = new ReleaseRun.DurableStager(spark, outDir, stopAfter)
+    val st = new graft.operators.Stage.Durable(spark, outDir, stopAfter)
     val r = ReleaseRun.runWithStager(spark, rawInput, emb, transcripts _,
       () => merges, outDir, st)
     (r, st.evaluated.toSeq)
@@ -97,7 +97,7 @@ class ReleaseRunSpec extends SparkSpec {
     // corpus — the resume must refuse, not bless the mixture
     val changed = rawInput.filter(org.apache.spark.sql.functions
       .col("doc_id") % 2 === 0)
-    val st = new ReleaseRun.DurableStager(spark, outDir, None)
+    val st = new graft.operators.Stage.Durable(spark, outDir, None)
     val e = intercept[IllegalArgumentException] {
       ReleaseRun.runWithStager(spark, changed, emb, transcripts _,
         () => merges, outDir, st)
@@ -105,7 +105,7 @@ class ReleaseRunSpec extends SparkSpec {
     assert(e.getMessage.contains("refusing to resume"))
     assert(st.evaluated.isEmpty, "the refusal must precede any stage work")
     // a config change refuses the same way
-    val st2 = new ReleaseRun.DurableStager(spark, outDir, None)
+    val st2 = new graft.operators.Stage.Durable(spark, outDir, None)
     intercept[IllegalArgumentException] {
       ReleaseRun.runWithStager(spark, rawInput, emb, transcripts _,
         () => merges, outDir, st2, graft.plans.ReleaseConfig(

@@ -232,6 +232,19 @@ class TransportorSpec extends SparkSpec {
       "a" -> TableMap(None))).validate())
   }
 
+  test("validate(): a middle whose target-side refer_table is unfilled fails before any job") {
+    val materials = df("mid BIGINT, csv STRING", Row(1L, "10,20"))
+    val io = new InMemoryIO(Map("materials" -> materials))
+    val plan = TransportPlan.of(
+      "bridge" -> TableMap(None, middle = Some(Middle(
+        one = MiddleOne(SearchSource.Original, "materials", "mid", "csv", "material_id"),
+        many = MiddleMany(SearchSource.Target, "nowhere", "type_id", "type_id", "type_id")))))
+    val e = intercept[NoSuchElementException](new Transportor(io, plan).validate())
+    assert(e.getMessage.contains("'nowhere'"), e.getMessage)
+    // pre-seeding the table satisfies the lookup
+    new Transportor(io, plan, preSeeded = Set("nowhere")).validate()
+  }
+
   test("passthrough scan (no column specs) keeps the source schema") {
     val base = df("a BIGINT, b STRING", Row(1L, "x"))
     val plan = TransportPlan.of("out" -> TableMap(Some("base")))

@@ -68,19 +68,6 @@ object Multimodal {
     else "application/octet-stream"
   }
 
-  /** Pack a real binary column (actual image/audio blobs) with sniffed
-    * media type — the production twin of [[pack]]. Null payloads sniff
-    * to octet-stream rather than crashing the task. */
-  def packBinary(df: DataFrame, idCol: String, binCol: String): DataFrame = {
-    val sniff = udf((b: Array[Byte]) =>
-      if (b == null) "application/octet-stream" else sniffMediaType(b))
-    df.select(
-      col(idCol).cast("bigint").as("doc_id"),
-      sniff(col(binCol)).as("media_type"),
-      col(binCol).as("payload"),
-      octet_length(col(binCol)).cast("bigint").as("byte_len"))
-  }
-
   /** Deterministic bounded-cost content fingerprint: FNV-1a over an
     * 8×8 grid sample of ARGB pixels — O(1) per image regardless of
     * resolution, so a 100-megapixel payload costs the same as a

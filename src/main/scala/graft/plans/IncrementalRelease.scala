@@ -46,9 +46,9 @@ import graft.sources.{AnnIndex, DedupIndexStore, Segments}
   *
   * REPLAY SAFETY (exactly-once across crash replays): a batch run
   * under an explicit `batchId` publishes EVERY state delta and store
-  * segment idempotently at segment id `StreamSegBase + batchId`
-  * ([[Segments.publishSegment]] / [[DedupIndexStore.appendMinhashAt]]
-  * / [[AnnIndex.appendToIvfAt]]), and every table the batch reads
+  * segment idempotently at segment id `StreamSegBase + batchId` (the
+  * `at` of [[Segments.publishToStore]] / [[DedupIndexStore.appendMinhash]]
+  * / [[AnnIndex.appendToIvf]]), and every table the batch reads
   * BEFORE appending is read with the batch's OWN segment excluded —
   * so a crash at ANY point inside [[runDeltas]] followed by a
   * Structured Streaming checkpoint replay recomputes the identical
@@ -56,10 +56,16 @@ import graft.sources.{AnnIndex, DedupIndexStore, Segments}
   * re-publish lands once or no-ops. No intent markers, no
   * double-append window, no fresh-bootstrap recovery required —
   * the streaming form ([[graft.streaming.StreamOps.releaseStream]])
-  * restarts are safe mid-batch. Without a `batchId` (the manual
-  * batch form) appends auto-number below the streaming floor and
-  * carry no replay contract — don't re-run a crashed manual batch
-  * against the same state dir; bootstrap a fresh one.
+  * restarts are safe mid-batch. [[bootstrap]] publishes every state
+  * table the same way at segment id 0 (the id its first auto-numbered
+  * append would take) and rebuilds the four stores as full-tree
+  * publishes, so re-running a partially failed bootstrap into the
+  * same state dir (before any batch ran) no-ops on the tables that
+  * already landed instead of appending them twice. Without a
+  * `batchId` (the manual batch form) appends auto-number below the
+  * streaming floor and carry no replay contract — don't re-run a
+  * crashed manual batch against the same state dir; bootstrap a
+  * fresh one.
   *
   * EQUALITY CONTRACT (the oracle `q_pipeline_release_incr` pins it):
   * an incremental run's artifact is row-identical to a from-scratch
@@ -141,7 +147,7 @@ object IncrementalRelease {
     }
   }
 
-  /** The ten delta tables (everything except the three minhash
+  /** The eleven delta tables (everything except the three minhash
     * stores and the ANN store, which carry their own layout). */
   private[graft] val StateTables: Seq[String] = Seq(
     "corpus_texts", "holdout_texts", "conv_texts", "nd_reps",
@@ -179,18 +185,11 @@ object IncrementalRelease {
       cols: String*): DataFrame =
     readState(spark, stateDir, name, None, cols)
 
-  /** Append a delta: idempotent explicit-segment publish under a
-    * `batchId` (replay-safe), auto-numbered append without. */
+  /** Append a delta: an idempotent publish at segment id `at`
+    * (replay-safe), an auto-numbered one without. */
   private def app(spark: SparkSession, stateDir: String, name: String,
-      rows: DataFrame, batchId: Option[Long] = None): Unit =
-    batchId match {
-      case Some(b) =>
-        Segments.publishToStore(spark, s"$stateDir/$name", "rows", rows,
-          segIdOf(b))
-        ()
-      case None =>
-        Segments.appendToStore(spark, s"$stateDir/$name", "rows", rows)
-    }
+      rows: DataFrame, at: Option[Long] = None): Unit =
+    Segments.publishToStore(spark, s"$stateDir/$name", "rows", rows, at)
 
   /** The stage-2 exact-keeper probe — the PRODUCTION expression
     * [[runDeltas]] plans (exposed so PlanGuardSpec pins THIS frame,
@@ -233,7 +232,8 @@ object IncrementalRelease {
   /** Bootstrap the standing state from a COMPLETED durable day-0 run
     * ([[ReleaseRun]] — its stage tables are exactly the per-stage
     * corpora the stores index). One-time, day-0-corpus-sized; every
-    * subsequent [[run]] touches history only through the stores. */
+    * subsequent [[run]] touches history only through the stores.
+    * Safe to re-run after a partial failure (REPLAY SAFETY). */
   def bootstrap(
       spark: SparkSession,
       runDir: String,
@@ -252,6 +252,11 @@ object IncrementalRelease {
     val input = st("s0_input")
 
     val convs = Release.convoTexts(aturns)
+    // every state table publishes at segment 0 — the id its first
+    // auto-numbered append would take — so a retried bootstrap no-ops
+    // on each table that already landed (REPLAY SAFETY)
+    def put(name: String, rows: DataFrame): Unit =
+      app(spark, stateDir, name, rows, at = Some(0L))
     // EVERY bootstrap write below targets its own directory and
     // nothing in bootstrap reads the state back — one parallel group
     // (guide §2.6). Before this the 4 store builds + 11 table appends
@@ -287,19 +292,19 @@ object IncrementalRelease {
       },
       () => Stage.labeled(spark, "bootstrap: state tables") {
         inParallel(
-          () => app(spark, stateDir, "corpus_texts", s2),
-          () => app(spark, stateDir, "holdout_texts", holdout),
-          () => app(spark, stateDir, "conv_texts", convs),
-          () => app(spark, stateDir, "nd_reps", parseReps(st("s3_nd_rejects"))),
-          () => app(spark, stateDir, "conv_reps", parseReps(st("s6_dup_rejects"))),
-          () => app(spark, stateDir, "packed", packed),
-          () => app(spark, stateDir, "pack_state",
+          () => put("corpus_texts", s2),
+          () => put("holdout_texts", holdout),
+          () => put("conv_texts", convs),
+          () => put("nd_reps", parseReps(st("s3_nd_rejects"))),
+          () => put("conv_reps", parseReps(st("s6_dup_rejects"))),
+          () => put("packed", packed),
+          () => put("pack_state",
             packTail(packed, batchIdx = 0L)),
-          () => app(spark, stateDir, "ledger", ledger),
-          () => app(spark, stateDir, "manifest_states", Profile.manifestStates(
+          () => put("ledger", ledger),
+          () => put("manifest_states", Profile.manifestStates(
             keep.join(packed.select("doc_id").distinct(), "doc_id"),
             "source", "text")),
-          () => app(spark, stateDir, "id_watermark",
+          () => put("id_watermark",
             input.agg(max(col("doc_id")).as("max_id"))
               .filter(col("max_id").isNotNull)),
           () => {
@@ -311,7 +316,7 @@ object IncrementalRelease {
                 sum(col("doc_id")).as("s")).head()
             def l(row: org.apache.spark.sql.Row, i: Int) =
               if (row.isNullAt(i)) 0L else row.getLong(i)
-            app(spark, stateDir, "reconcile",
+            put("reconcile",
               spark.createDataFrame(java.util.Arrays.asList(
                 org.apache.spark.sql.Row(r.getLong(0), l(r, 1),
                   a.getLong(0), l(a, 1))),
@@ -385,24 +390,19 @@ object IncrementalRelease {
       cfg: ReleaseConfig = ReleaseConfig(),
       batchId: Option[Long] = None): Unit = Stage.scope {
     val id = col("doc_id")
-    val excl = batchId.map(segIdOf)
+    // the batch's own segment id: every publish lands there, every
+    // pre-append read excludes it (REPLAY SAFETY)
+    val ownSeg = batchId.map(segIdOf)
     // phase marker (guide §1.5) — sequential driver code, so a plain
     // set at each boundary attributes every job (incl. broadcast
     // children) to its stage; cleared in the terminal finally
     def mark(d: String): Unit = spark.sparkContext.setJobDescription(d)
     def segX(name: String, cols: String*): DataFrame =
-      readState(spark, stateDir, name, excl, cols)
+      readState(spark, stateDir, name, ownSeg, cols)
     def appX(name: String, rows: DataFrame): Unit =
-      app(spark, stateDir, name, rows, batchId)
-    def appendMh(dir: String, batch: DataFrame): Unit = batchId match {
-      case Some(b) =>
-        DedupIndexStore.appendMinhashAt(spark, dir, batch,
-          "doc_id", "text", segIdOf(b))
-        ()
-      case None =>
-        DedupIndexStore.appendMinhash(spark, dir, batch, "doc_id", "text")
-        ()
-    }
+      app(spark, stateDir, name, rows, ownSeg)
+    def appendMh(dir: String, batch: DataFrame): Unit =
+      DedupIndexStore.appendMinhash(spark, dir, batch, "doc_id", "text", ownSeg)
 
     try {
     mark("incr 1: ingest")
@@ -439,7 +439,7 @@ object IncrementalRelease {
     // shuffles only the matched survivors (batch-bounded), never the
     // corpus-sized index.
     val storeBands = DedupIndexStore.readMinhash(
-      spark, s"$stateDir/corpus_minhash", excl)
+      spark, s"$stateDir/corpus_minhash", ownSeg)
     val fp = ingested.withColumn("__fp", TextFunctions.fingerprint(col("text")))
     val keeperByFp = keeperByFpFrame(storeBands, fp)
     val crossExactRejects = fp.join(keeperByFp, "__fp")
@@ -553,16 +553,8 @@ object IncrementalRelease {
       {
         val batchTestEmb = embeddings.join(
           batchHold.select(id.as("vec_id")), Seq("vec_id"), "left_semi")
-        batchId match {
-          case Some(b) =>
-            AnnIndex.appendToIvfAt(spark, s"$stateDir/holdout_ann",
-              batchTestEmb, "vec_id", "embedding", segIdOf(b))
-            ()
-          case None =>
-            AnnIndex.appendToIvf(spark, s"$stateDir/holdout_ann",
-              batchTestEmb, "vec_id", "embedding")
-            ()
-        }
+        AnnIndex.appendToIvf(spark, s"$stateDir/holdout_ann",
+          batchTestEmb, "vec_id", "embedding", ownSeg)
         val ann = AnnIndex.readIvf(spark, s"$stateDir/holdout_ann")
         val batchTvEmb = embeddings.join(
           batchTv.select(id.as("vec_id")), Seq("vec_id"), "left_semi")
@@ -603,7 +595,7 @@ object IncrementalRelease {
             cfg.dedup.bands, cfg.dedup.jaccardThreshold,
             maxBucketSize = cfg.dedup.maxBucketSize,
             index = Some(DedupIndexStore.readMinhash(
-              spark, s"$stateDir/conv_minhash", excl)),
+              spark, s"$stateDir/conv_minhash", ownSeg)),
             pruneIndexToProbe = true)
           .join(convRepMap, Seq("cid"), "left")
           .select(col("id"), coalesce(col("rep"), col("cid")).as("rep"))),
@@ -637,7 +629,7 @@ object IncrementalRelease {
           .join(sftDupRejects.select("doc_id"), Seq("doc_id"), "left_anti"))
         ()
       },
-      () => { tail0 = Stage("incr pack tail", Local)(latestPackState(spark, stateDir, excl)) })
+      () => { tail0 = Stage("incr pack tail", Local)(latestPackState(spark, stateDir, ownSeg)) })
     val conv = conv0
 
     mark("incr 7: pack")

@@ -187,13 +187,6 @@ object ReleaseConfig {
       spark: org.apache.spark.sql.SparkSession, path: String): ReleaseConfig = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(new org.apache.hadoop.fs.Path(path))
-    val json =
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-        new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-      } finally in.close()
-    parse(json)
+    parse(graft.sources.Segments.readText(fs, new org.apache.hadoop.fs.Path(path)))
   }
 }

@@ -104,13 +104,7 @@ object ReleaseRun {
         require(fs.exists(p), s"ReleaseRun: could not record fingerprint $p")
       } else return
     }
-    val in = fs.open(p)
-    val recorded =
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-        new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8).trim
-      } finally in.close()
+    val recorded = graft.sources.Segments.readText(fs, p).trim
     require(recorded == now,
       s"ReleaseRun: refusing to resume $outDir — the live input/config " +
         s"fingerprint ($now) does not match the run's recorded one " +

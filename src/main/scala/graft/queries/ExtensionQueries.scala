@@ -1080,8 +1080,8 @@ object ExtensionQueries {
     val idxDir = s"$twinRoot/annidx_append/${new java.io.File(dir).getName}"
     graft.sources.AnnIndex.buildAndWriteIvf(
       s, idxDir, base, "vec_id", "embedding", cents)
-    val idx = graft.sources.AnnIndex.appendToIvf(
-      s, idxDir, batch, "vec_id", "embedding")
+    graft.sources.AnnIndex.appendToIvf(s, idxDir, batch, "vec_id", "embedding")
+    val idx = graft.sources.AnnIndex.readIvf(s, idxDir)
     graft.sources.AnnIndex.queryBatchIvf(
       idx, queries, "vec_id", "embedding", k = 5, nprobe = 2)
   }
@@ -1858,9 +1858,9 @@ object ExtensionQueries {
           new java.net.URI(stDir), s.sparkContext.hadoopConfiguration)
         fs.delete(new org.apache.hadoop.fs.Path(stDir), true)
         val stateRows = docs.select(col("doc_id"), col("source"))
-        graft.sources.Segments.appendToStore(s, stDir, "rows",
+        graft.sources.Segments.publishToStore(s, stDir, "rows",
           stateRows.filter(d10 < 5))
-        graft.sources.Segments.appendToStore(s, stDir, "rows",
+        graft.sources.Segments.publishToStore(s, stDir, "rows",
           stateRows.filter(d10 >= 5))
         graft.sources.Segments.deleteIds(s, stDir,
           docs.filter(col("doc_id") % 6 === 0).select("doc_id"), "doc_id")

@@ -108,8 +108,9 @@ object AnnIndex {
       vecCol: String): Loaded = {
     val root = Segments.resolve(spark, dir)
     val idx = read(spark, dir)
-    Segments.appendToStoreAt(spark, dir, root, "coded",
-      Similarity.encodeForIndex(batch, idCol, vecCol, idx.centroids, idx.codebooks))
+    Segments.publishToStore(spark, dir, "coded",
+      Similarity.encodeForIndex(batch, idCol, vecCol, idx.centroids, idx.codebooks),
+      pinnedRoot = Some(root))
     read(spark, dir)
   }
 
@@ -165,7 +166,7 @@ object AnnIndex {
   /** Tombstone DELETE for any of the three index families — the
     * right-to-be-forgotten path: publish the ids as one new segment
     * of a `tombstones` table under the index dir (the
-    * [[Segments.appendSegment]] crash discipline — stage under an underscore
+    * [[Segments.publishSegment]] crash discipline — stage under an underscore
     * dir, one atomic rename; O(deletion), the live index untouched
     * until the rename and never rewritten). Readers ([[read]] /
     * [[readIvf]] / [[readLsh]]) subtract the tombstone set with a
@@ -291,47 +292,32 @@ object AnnIndex {
 
   /** [[append]]'s plain-IVF twin: cell-assign the batch against the
     * index's FROZEN centroids, publish as one new `assigned` segment.
-    * O(batch) — the corpus is never re-assigned. */
+    * O(batch) — the corpus is never re-assigned. `at` is
+    * [[Segments.publishSegment]]'s: `Some(id)` is the idempotent
+    * form — replaying the same (batch, id) publish after a crash is
+    * a no-op, so a foreachBatch-driven release
+    * ([[graft.plans.IncrementalRelease.runDeltas]] under
+    * [[graft.streaming.StreamOps.releaseStream]]) gets exactly-once
+    * ANN appends across crash replays. The rows are model-coupled:
+    * the publish is pinned to the tree whose frozen centroids
+    * assigned them and refuses typed if a retrain flipped the
+    * pointer. Returns true when this call published; [[readIvf]]
+    * loads the grown index. */
   def appendToIvf(
       spark: SparkSession,
       dir: String,
       batch: DataFrame,
       idCol: String,
-      vecCol: String): LoadedIvf = {
-    val root = Segments.resolve(spark, dir)
-    val idx = readIvf(spark, dir)
-    Segments.appendToStoreAt(spark, dir, root, "assigned",
-      batch.select(
-        col(idCol).as("id"),
-        Similarity.assignCellUdf(idx.centroids)(col(vecCol)).as("cell"),
-        col(vecCol).as("vec")))
-    readIvf(spark, dir)
-  }
-
-  /** [[appendToIvf]] at an EXPLICIT segment id — the idempotent
-    * streaming-append form ([[Segments.publishToStoreAt]]): replaying
-    * the same (batch, segId) publish after a checkpoint restart is a
-    * no-op, so a foreachBatch-driven release
-    * ([[graft.plans.IncrementalRelease.runDeltas]] under
-    * [[graft.streaming.StreamOps.releaseStream]]) gets exactly-once
-    * ANN appends across crash replays. Rows stay model-coupled: the
-    * publish is pinned to the tree whose frozen centroids encoded
-    * them and refuses typed if a retrain flipped the pointer.
-    * Returns true when this call published. */
-  def appendToIvfAt(
-      spark: SparkSession,
-      dir: String,
-      batch: DataFrame,
-      idCol: String,
       vecCol: String,
-      segId: Long): Boolean = {
+      at: Option[Long] = None): Boolean = {
     val root = Segments.resolve(spark, dir)
     val idx = readIvf(spark, dir)
-    Segments.publishToStoreAt(spark, dir, root, "assigned",
+    Segments.publishToStore(spark, dir, "assigned",
       batch.select(
         col(idCol).as("id"),
         Similarity.assignCellUdf(idx.centroids)(col(vecCol)).as("cell"),
-        col(vecCol).as("vec")), segId)
+        col(vecCol).as("vec")),
+      at, pinnedRoot = Some(root))
   }
 
   /** Load a plain-IVF index directory: centroids to a driver array
@@ -675,11 +661,12 @@ object AnnIndex {
       vecCol: String): LoadedLsh = {
     val root = Segments.resolve(spark, dir)
     val idx = readLsh(spark, dir)
-    Segments.appendToStoreAt(spark, dir, root, "bucketed",
+    Segments.publishToStore(spark, dir, "bucketed",
       batch.select(
         col(idCol).as("id"),
         graft.functions.SimilarityFunctions.lshBucket(col(vecCol), idx.planes).as("bucket"),
-        col(vecCol).as("vec")))
+        col(vecCol).as("vec")),
+      pinnedRoot = Some(root))
     readLsh(spark, dir)
   }
 

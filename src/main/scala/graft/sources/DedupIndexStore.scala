@@ -91,39 +91,28 @@ object DedupIndexStore {
 
   /** Append a new batch's index rows as one segment, signatured under
     * the index's FROZEN params (re-read from disk — an append can
-    * never band against a drifted model). O(batch). */
+    * never band against a drifted model). O(batch). `at` is
+    * [[Segments.publishSegment]]'s: `None` auto-numbers; `Some(id)`
+    * is the idempotent streaming-append form — replaying the same
+    * (batch, id) publish after a checkpoint restart is a no-op, so a
+    * foreachBatch writer keyed by micro-batch id gets exactly-once
+    * appends. Streaming writers offset their ids by
+    * [[Segments.StreamSegBase]] (see
+    * [[graft.streaming.StreamOps.minhashStoreStream]]) so they can
+    * never collide with the build/append auto-numbered segments.
+    * Returns true when this call published; [[readMinhash]] loads the
+    * grown index. */
   def appendMinhash(
       spark: SparkSession,
       dir: String,
       batch: DataFrame,
       idCol: String,
-      textCol: String): DataFrame = {
-    val (shingleN, numHashes, bands) = minhashParams(spark, dir)
-    Segments.appendToStore(spark, dir, "bands",
-      Dedup.corpusIndex(batch, idCol, textCol, shingleN, numHashes, bands)
-        .withColumn("id", col("id").cast("long")))
-    readMinhash(spark, dir)
-  }
-
-  /** [[appendMinhash]] at an EXPLICIT segment id — the idempotent
-    * streaming-append form ([[Segments.publishSegment]]): replaying
-    * the same (batch, segId) publish after a checkpoint restart is a
-    * no-op, so a foreachBatch writer keyed by micro-batch id gets
-    * exactly-once appends. Streaming writers offset their segment ids
-    * (see [[graft.streaming.StreamOps.minhashStoreStream]]) so they
-    * can never collide with the build/append auto-numbered segments.
-    * Returns true when this call published. */
-  def appendMinhashAt(
-      spark: SparkSession,
-      dir: String,
-      batch: DataFrame,
-      idCol: String,
       textCol: String,
-      segId: Long): Boolean = {
+      at: Option[Long] = None): Boolean = {
     val (shingleN, numHashes, bands) = minhashParams(spark, dir)
     Segments.publishToStore(spark, dir, "bands",
       Dedup.corpusIndex(batch, idCol, textCol, shingleN, numHashes, bands)
-        .withColumn("id", col("id").cast("long")), segId)
+        .withColumn("id", col("id").cast("long")), at)
   }
 
   /** Load the minhash index: union of published segments minus the
@@ -137,7 +126,7 @@ object DedupIndexStore {
   /** [[readMinhash]] with one segment EXCLUDED from the view — the
     * crash-replay read a replayed micro-batch needs: if a prior
     * attempt already published this batch's own segment
-    * (`segId = segBase + batchId`, [[appendMinhashAt]]) before
+    * (`at = StreamSegBase + batchId`, [[appendMinhash]]) before
     * crashing, a replay probing the store must see the index exactly
     * as the first attempt did — WITHOUT the batch's own rows, or
     * every batch doc would collide with itself and the recomputation
@@ -203,34 +192,21 @@ object DedupIndexStore {
       .select("delim").head().getString(0)
 
   /** Append a batch's line provenance as one segment (delimiter
-    * re-read from the index — never caller-supplied). O(batch).
-    * Exactness requires the append-only contract: every document in
-    * exactly one stored segment (re-ingesting an id without deleting
-    * it first would double its df contribution, same as
+    * re-read from the index — never caller-supplied). O(batch); `at`
+    * and the result as in [[appendMinhash]]. Exactness requires the
+    * append-only contract: every document in exactly one stored
+    * segment (re-ingesting an id without deleting it first would
+    * double its df contribution, same as
     * [[graft.operators.Dedup.lineIndexMerge]]). */
   def appendLines(
       spark: SparkSession,
       dir: String,
       batch: DataFrame,
       idCol: String,
-      textCol: String): DataFrame = {
-    Segments.appendToStore(spark, dir, "lines",
-      Dedup.lineProvenance(batch, idCol, textCol, lineParams(spark, dir)))
-    readLines(spark, dir)
-  }
-
-  /** [[appendLines]] at an EXPLICIT segment id — the idempotent
-    * streaming-append form (see [[appendMinhashAt]]). */
-  def appendLinesAt(
-      spark: SparkSession,
-      dir: String,
-      batch: DataFrame,
-      idCol: String,
       textCol: String,
-      segId: Long): Boolean =
+      at: Option[Long] = None): Boolean =
     Segments.publishToStore(spark, dir, "lines",
-      Dedup.lineProvenance(batch, idCol, textCol, lineParams(spark, dir)),
-      segId)
+      Dedup.lineProvenance(batch, idCol, textCol, lineParams(spark, dir)), at)
 
   /** Load the aggregated (line_hash, line_df) view — the exact
     * [[graft.operators.Dedup.lineIndex]] shape

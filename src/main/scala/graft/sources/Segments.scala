@@ -41,10 +41,10 @@ private[graft] object Segments {
 
   val SegDir = "seg=(\\d+)".r
 
-  /** The segment-id floor reserved for STREAMING writers
-    * ([[publishSegment]] callers keyed by micro-batch id):
-    * [[appendSegment]]'s auto-numbering only ever assigns ids BELOW
-    * this, so a manual append can never land inside the streamed
+  /** The segment-id floor reserved for STREAMING writers (explicit
+    * [[publishSegment]] ids keyed by micro-batch id): auto-numbered
+    * publishes only ever assign ids BELOW this, so a manual append
+    * can never land inside the streamed
     * range — where a later micro-batch's publish would mistake the
     * occupied id for its own already-replayed segment and silently
     * drop that batch's rows. */
@@ -58,7 +58,7 @@ private[graft] object Segments {
   // retry at the next id (bounded); same-segment-id replays are the
   // tolerated no-op overlap ([[publishSegment]]). Compaction fences
   // itself against every concurrent publish via [[segmentWatermark]]
-  // + [[swapInFenced]] — a segment published after the compaction
+  // + [[publishVersionFenced]] — a segment published after the compaction
   // snapshot makes the swap refuse with
   // [[ConcurrentStoreWriteException]] rather than silently vanish.
   // Reads are always safe concurrently.
@@ -136,19 +136,23 @@ private[graft] object Segments {
     }
   }
 
+  /** The whole content of a small file (a pointer, a run
+    * fingerprint, a JSON config) as UTF-8 text. */
+  private[graft] def readText(
+      fs: org.apache.hadoop.fs.FileSystem,
+      path: org.apache.hadoop.fs.Path): String = {
+    val in = fs.open(path)
+    try {
+      val buf = new java.io.ByteArrayOutputStream()
+      org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
+      new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
+    } finally in.close()
+  }
+
   private def newStaging(table: String) =
     new org.apache.hadoop.fs.Path(
       s"$table/_append.staging-${java.util.UUID.randomUUID()}")
 
-  /** Write `rows` as the next `seg=N` of a segmented table: stage
-    * under a unique underscore dir readers skip, then one atomic
-    * rename. Auto-numbering considers only segments below
-    * [[StreamSegBase]], so manual appends interleave safely with a
-    * streaming writer's explicitly-numbered segments; two CONCURRENT
-    * auto-numbered appends race to the same id, the loser's rename
-    * fails, and it retries at the next free id (bounded) — both
-    * appends land, neither clobbers (the deleteIds-vs-deleteIds
-    * case). */
   /** A rename that "succeeded" may still have lost a same-id race:
     * HDFS rename onto a directory that appeared inside the
     * exists-precheck-to-rename window NESTS src under it and returns
@@ -179,22 +183,48 @@ private[graft] object Segments {
     Some(back)
   }
 
-  def appendSegment(
-      spark: SparkSession, table: String, rows: DataFrame): Unit = {
+  /** Publish `rows` as one `seg=N` of a segmented table: stage under
+    * a unique underscore dir readers skip, then ONE atomic rename
+    * ([[renameVerified]]). Returns true when this call published.
+    *
+    *   - `at = Some(id)` — the idempotent, replay-safe form: if
+    *     `seg=<id>` is already published the call is a no-op that
+    *     computes nothing, and a same-id publish that lands while we
+    *     stage wins (a same-id publish carries the same rows by
+    *     contract, so our staging just sweeps). A foreachBatch writer
+    *     keyed by the micro-batch id, or a retried bootstrap, can
+    *     therefore be REPLAYED without appending the same rows twice.
+    *   - `at = None` — auto-numbered: the next id above every
+    *     published segment below [[StreamSegBase]], so manual appends
+    *     interleave safely with a streaming writer's explicit ids. Two
+    *     CONCURRENT auto-numbered publishes race to the same id, the
+    *     loser's rename fails, and it retries at the next free id
+    *     (bounded) — both land, neither clobbers (the
+    *     deleteIds-vs-deleteIds case).
+    *
+    * The one failure exit self-cleans and fails loudly with the live
+    * table unchanged: an explicit id that could not be renamed into
+    * place, or an auto-numbered publish that lost the same id twice
+    * (nothing raced us there — an environmental failure) or ran out
+    * of its retry budget. */
+  def publishSegment(
+      spark: SparkSession, table: String, rows: DataFrame,
+      at: Option[Long]): Boolean = {
     val fs = fsFor(spark, table)
+    def segOf(id: Long) = new org.apache.hadoop.fs.Path(s"$table/seg=$id")
+    if (at.exists(id => fs.exists(segOf(id)))) return false // replay no-op
     sweepStaleStaging(fs, table)
-    var staging = newStaging(table)
-    rows.write.mode("overwrite").parquet(staging.toString)
-    def nextId(): Long = fs.listStatus(new org.apache.hadoop.fs.Path(table))
-      .map(_.getPath.getName).collect { case SegDir(n) => n.toLong }
-      .filter(_ < StreamSegBase)
-      .foldLeft(-1L)(math.max) + 1
-    var attempts = 0
-    var last = -1L
-    var published = false
-    while (!published) {
-      val next = nextId()
-      val seg = new org.apache.hadoop.fs.Path(s"$table/seg=$next")
+    val staged = newStaging(table)
+    rows.write.mode("overwrite").parquet(staged.toString)
+    def nextId(): Long = at.getOrElse(
+      fs.listStatus(new org.apache.hadoop.fs.Path(table))
+        .map(_.getPath.getName).collect { case SegDir(n) => n.toLong }
+        .filter(_ < StreamSegBase)
+        .foldLeft(-1L)(math.max) + 1)
+    @annotation.tailrec
+    def attempt(staging: org.apache.hadoop.fs.Path, n: Int, last: Long): Boolean = {
+      val id = nextId()
+      val seg = segOf(id)
       // exists-precheck before the rename: never attempt a rename
       // onto a KNOWN-occupied id; [[renameVerified]] catches the
       // race that lands inside the check-to-rename window
@@ -202,58 +232,19 @@ private[graft] object Segments {
         if (fs.exists(seg)) Some(staging)
         else renameVerified(fs, table, staging, seg)
       lost match {
-        case None => published = true
-        case Some(back) =>
-          staging = back
-          // same id twice means nothing raced us there (environmental
-          // failure, not a numbering race); either way the retry
-          // budget is bounded — the single failure exit self-cleans
-          // and fails loudly, live table unchanged
-          if (next == last || attempts == 7) {
-            fs.delete(staging, true)
-            throw new IllegalArgumentException(
-              s"Segments: could not publish segment $seg after ${attempts + 1} " +
-                "attempts — live table unchanged")
-          }
-          last = next
-          attempts += 1
+        case None => true
+        case Some(back) if at.isDefined && fs.exists(seg) =>
+          fs.delete(back, true) // a concurrent same-id publish won
+          false
+        case Some(back) if at.isDefined || id == last || n == 7 =>
+          fs.delete(back, true)
+          throw new IllegalArgumentException(
+            s"Segments: could not publish segment $seg after ${n + 1} " +
+              "attempts — live table unchanged")
+        case Some(back) => attempt(back, n + 1, id)
       }
     }
-  }
-
-  /** Write `rows` as the EXPLICITLY-NUMBERED `seg=<segId>` of a
-    * segmented table, idempotently: if that segment is already
-    * published, the call is a no-op (the staging is swept, nothing
-    * double-counts). This is the streaming-append discipline — a
-    * foreachBatch writer keyed by the micro-batch id can be REPLAYED
-    * after a restart inside the checkpoint window, and replaying a
-    * publish must not append the same rows twice (the `cmsStream`
-    * overwrite-by-path idempotence, carried to segment stores).
-    * Returns true when this call published the segment. */
-  def publishSegment(
-      spark: SparkSession, table: String, rows: DataFrame, segId: Long): Boolean = {
-    val fs = fsFor(spark, table)
-    val seg = new org.apache.hadoop.fs.Path(s"$table/seg=$segId")
-    if (fs.exists(seg)) return false // already published — replay no-op
-    sweepStaleStaging(fs, table)
-    val staging = newStaging(table)
-    rows.write.mode("overwrite").parquet(staging.toString)
-    // a concurrent publisher may have landed it while we staged; the
-    // precheck (and the rename failing) sweeps our staging — still
-    // exactly once. [[renameVerified]] catches the HDFS nesting race
-    // inside the check-to-rename window; a same-segId publish carries
-    // the same rows by contract, so the recovered copy just sweeps.
-    if (fs.exists(seg)) { fs.delete(staging, true); false }
-    else renameVerified(fs, table, staging, seg) match {
-      case None => true
-      case Some(back) if fs.exists(seg) => fs.delete(back, true); false
-      case Some(back) =>
-        // environmental failure: self-clean so a reader listing the
-        // table never depends on skipping our abandoned underscore dir
-        fs.delete(back, true)
-        throw new IllegalStateException(
-          s"Segments: could not publish segment $seg — live table unchanged")
-    }
+    attempt(staged, 0, -1L)
   }
 
   /** Tombstone DELETE: publish the ids as one new segment of the
@@ -263,7 +254,7 @@ private[graft] object Segments {
     * segments, including segments appended AFTER the delete;
     * re-ingesting a previously-deleted id requires a compaction
     * first. Concurrent deleteIds on one store both land (unique
-    * staging + segment-id retry in [[appendSegment]]).
+    * staging + segment-id retry in [[publishSegment]]).
     *
     * FLIP-VERIFIED — a right-to-be-forgotten delete must never be
     * silently lost to a concurrent full-tree publish, so this call
@@ -289,152 +280,78 @@ private[graft] object Segments {
     * accepted, same class as the append-vs-flip note above. */
   def deleteIds(
       spark: SparkSession, dir: String, ids: DataFrame, idCol: String): Unit =
-    appendToStore(spark, dir, "tombstones",
+    publishToStore(spark, dir, "tombstones",
       ids.select(col(idCol).cast("long").as("id")).distinct())
 
-  /** FLIP-VERIFIED append of MODEL-FREE rows into a pointer-published
-    * store: resolve the live tree, append into `<tree>/<table>`, then
-    * verify the pointer did not move while we published. The race
-    * ladder is [[deleteIds]]'s (which delegates here), for any rows
-    * valid under every tree of the store (tombstones, minhash/line
-    * signatures keyed only by store params):
+  /** FLIP-VERIFIED publish into a pointer-published store: publish
+    * `rows` as one segment of `<tree>/<table>` ([[publishSegment]],
+    * `at` as there), then verify the pointer did not move while we
+    * published. Returns true when this call published (false: the
+    * `at` segment was already there — a replay). What a moved
+    * pointer means depends on the rows:
     *
-    *   - publish landed, pointer unmoved → done (the fence in
-    *     [[publishVersionFenced]] guarantees any LATER compaction
-    *     reads through our segment or refuses);
-    *   - the tree vanished mid-publish (a flip's eventual GC) or the
-    *     pointer moved → the rows sit (at most) in a superseded,
-    *     never-resolved tree the grace-period GC owns; they are
-    *     REPUBLISHED into the new live tree, idempotently, because
-    *     the flipped tree cannot contain them (a fenced flip that had
-    *     seen the segment would have refused; an unfenced build reads
-    *     source data, not the store);
-    *   - any failure with the pointer UNMOVED is environmental and
-    *     rethrows.
+    *   - MODEL-FREE rows (`pinnedRoot = None`: tombstones,
+    *     minhash/line signatures keyed only by store params, release
+    *     state deltas) are valid under every tree of the store. The
+    *     call resolves the live tree itself; when that tree vanished
+    *     mid-publish (a flip's eventual GC) or the pointer moved, the
+    *     rows sit (at most) in a superseded, never-resolved tree the
+    *     grace-period GC owns, and they are REPUBLISHED into the new
+    *     live tree (bounded) — idempotent, because the flipped tree
+    *     cannot contain them (a fenced flip that had seen the segment
+    *     would have refused; an unfenced build reads source data, not
+    *     the store). The race ladder is [[deleteIds]]'s.
+    *   - MODEL-COUPLED rows (`pinnedRoot = Some(root)`: IVF cell
+    *     assignments, PQ codes, LSH buckets — encoded with the frozen
+    *     model of the tree the caller resolved and read) land only if
+    *     the pointer names `root` before AND after the segment
+    *     rename. Any move refuses with
+    *     [[ConcurrentStoreWriteException]]: the raced rows sit (at
+    *     most) in the superseded tree, and the caller re-encodes
+    *     against the new live tree and re-publishes. No verbatim
+    *     retry is possible — replaying old-model rows into a
+    *     retrained tree would corrupt it silently. A same-`at` replay
+    *     against the same root is the tolerated no-op, which is what
+    *     makes a crash-replayed micro-batch append exactly-once
+    *     ([[graft.plans.IncrementalRelease.runDeltas]]' ANN leg).
     *
-    * Rows ENCODED against a tree's frozen model go through
-    * [[appendToStoreAt]] instead — a verbatim replay under a new
-    * model would be wrong. Either way: raced rows land exactly once
-    * in the LIVE tree, or the caller hears about it typed — never a
-    * silent vanish. */
-  def appendToStore(
-      spark: SparkSession, dir: String, table: String,
-      rows: DataFrame): Unit = {
-    var attempts = 0
-    while (attempts < 8) {
-      val root = resolve(spark, dir)
-      try {
-        appendSegment(spark, s"$root/$table", rows)
-        if (resolve(spark, dir) == root) return
-        // pointer moved: republish into the live tree (idempotent —
-        // the raced copy sits in a doomed tree no reader resolves)
-      } catch {
-        // the tree vanished under the publish (a flip's GC) — retry
-        // against the new tree; any failure with the pointer UNMOVED
-        // is environmental and rethrows
-        case _: java.io.FileNotFoundException
-          if resolve(spark, dir) != root => ()
-        case _: IllegalArgumentException
-          if resolve(spark, dir) != root => ()
-        case _: IllegalStateException
-          if resolve(spark, dir) != root => ()
-      }
-      attempts += 1
-    }
-    throw new IllegalStateException(
-      s"Segments: could not land a verified publish on $dir/$table " +
-        "after 8 attempts — full-tree publishes kept racing the append")
-  }
-
-  /** FLIP-VERIFIED append of MODEL-COUPLED rows (IVF cell
-    * assignments, PQ codes, LSH buckets — encoded with the frozen
-    * model of the tree the caller resolved and read): the caller pins
-    * the `root` it encoded against, and the publish lands only if the
-    * pointer still names that root before AND after the segment
-    * rename. Any move refuses with [[ConcurrentStoreWriteException]]
-    * — the raced rows sit (at most) in the superseded, never-resolved
-    * tree (grace-period GC'd), and the caller re-encodes against the
-    * new live tree and re-appends. No verbatim retry is possible
-    * here: replaying old-model rows into a retrained tree would
-    * corrupt it silently. */
-  def appendToStoreAt(
-      spark: SparkSession, dir: String, root: String, table: String,
-      rows: DataFrame): Unit = {
-    def refuse(): Nothing = throw new ConcurrentStoreWriteException(
-      s"Segments: the append into $dir/$table raced a full-tree publish " +
-        s"— the live tree is no longer $root and the rows are encoded " +
-        "against its frozen model, so they cannot be replayed verbatim. " +
-        "Nothing is visible to readers; re-encode against the new live " +
-        "tree and re-append.")
-    if (resolve(spark, dir) != root) refuse()
-    try appendSegment(spark, s"$root/$table", rows)
-    catch {
-      case e @ (_: java.io.FileNotFoundException | _: IllegalArgumentException |
-        _: IllegalStateException) =>
-        if (resolve(spark, dir) != root) refuse() else throw e
-    }
-    if (resolve(spark, dir) != root) refuse()
-  }
-
-  /** [[appendToStoreAt]] for the replay-idempotent form
-    * ([[publishSegment]] — explicit micro-batch segment id) of
-    * MODEL-COUPLED rows: the caller pins the `root` whose frozen
-    * model encoded the rows, and the publish lands only if the
-    * pointer still names that root before AND after the segment
-    * rename — any move refuses typed (no verbatim replay of
-    * old-model rows into a retrained tree, exactly
-    * [[appendToStoreAt]]'s contract). A same-segId replay against
-    * the same root is the tolerated no-op, which is what makes a
-    * crash-replayed micro-batch append exactly-once
-    * ([[graft.plans.IncrementalRelease.runDeltas]]'s ANN-store leg).
-    * Returns true when THIS call published. */
-  def publishToStoreAt(
-      spark: SparkSession, dir: String, root: String, table: String,
-      rows: DataFrame, segId: Long): Boolean = {
-    def refuse(): Nothing = throw new ConcurrentStoreWriteException(
+    * Either way raced rows land exactly once in the LIVE tree (where
+    * the fence in [[publishVersionFenced]] guarantees any LATER
+    * compaction reads through them or refuses), or the caller hears
+    * about it typed — never a silent vanish. Any failure with the
+    * pointer UNMOVED is environmental and rethrows. */
+  def publishToStore(
+      spark: SparkSession, dir: String, table: String, rows: DataFrame,
+      at: Option[Long] = None, pinnedRoot: Option[String] = None): Boolean = {
+    def moved(root: String) = resolve(spark, dir) != root
+    def refuse(root: String): Nothing = throw new ConcurrentStoreWriteException(
       s"Segments: the publish into $dir/$table raced a full-tree publish " +
         s"— the live tree is no longer $root and the rows are encoded " +
         "against its frozen model, so they cannot be replayed verbatim. " +
         "Nothing is visible to readers; re-encode against the new live " +
         "tree and re-publish.")
-    if (resolve(spark, dir) != root) refuse()
-    val published =
-      try publishSegment(spark, s"$root/$table", rows, segId)
-      catch {
-        case e @ (_: java.io.FileNotFoundException |
-          _: IllegalStateException) =>
-          if (resolve(spark, dir) != root) refuse() else throw e
-      }
-    if (resolve(spark, dir) != root) refuse()
-    published
-  }
-
-  /** [[appendToStore]] for the streaming, replay-idempotent form
-    * ([[publishSegment]] — explicit micro-batch segment id; model-free
-    * rows only, like every streamed store in this engine). Returns
-    * true when THIS call published the segment into the live tree. */
-  def publishToStore(
-      spark: SparkSession, dir: String, table: String, rows: DataFrame,
-      segId: Long): Boolean = {
+    pinnedRoot.filter(moved).foreach(refuse)
     var attempts = 0
     while (attempts < 8) {
-      val root = resolve(spark, dir)
+      val root = pinnedRoot.getOrElse(resolve(spark, dir))
       try {
-        val published = publishSegment(spark, s"$root/$table", rows, segId)
-        if (resolve(spark, dir) == root || !published) return published
-        // landed in a doomed tree: republish into the live one (the
-        // exists-by-segId check there keeps the replay idempotent)
+        val published = publishSegment(spark, s"$root/$table", rows, at)
+        if (!moved(root) || (!published && pinnedRoot.isEmpty)) return published
       } catch {
-        case _: java.io.FileNotFoundException
-          if resolve(spark, dir) != root => ()
-        case _: IllegalStateException
-          if resolve(spark, dir) != root => ()
+        // the tree vanished under the publish (a flip's GC) — handled
+        // below; any failure with the pointer UNMOVED rethrows
+        case _: java.io.FileNotFoundException | _: IllegalArgumentException |
+          _: IllegalStateException if moved(root) => ()
       }
+      // the pointer moved: model-coupled rows refuse, model-free rows
+      // republish into the live tree (the raced copy sits in a doomed
+      // tree no reader resolves)
+      pinnedRoot.foreach(refuse)
       attempts += 1
     }
     throw new IllegalStateException(
-      s"Segments: could not land a verified segment publish on " +
-        s"$dir/$table after 8 attempts — full-tree publishes kept racing")
+      s"Segments: could not land a verified publish on $dir/$table " +
+        "after 8 attempts — full-tree publishes kept racing the append")
   }
 
   /** Subtract the index's tombstone set (if any) from its corpus
@@ -480,7 +397,7 @@ private[graft] object Segments {
   // grace-period GC'd (an hour after their last touch, at the next
   // flip's sweep), so an append racing a flip always completes its
   // write — into the doomed tree — and the flip-verified wrappers
-  // ([[appendToStore]] / [[publishToStore]] / [[deleteIds]])
+  // ([[publishToStore]] / [[deleteIds]])
   // re-resolve after publishing and retry into the live tree (or
   // refuse typed for model-coupled rows), so raced rows land exactly
   // once in the LIVE tree or the caller hears about it. Readers
@@ -532,13 +449,7 @@ private[graft] object Segments {
     else {
       val seq = ptrs.max
       val p = new org.apache.hadoop.fs.Path(s"$dir/ptr-$seq")
-      val in = fs.open(p)
-      val content =
-        try {
-          val buf = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-          new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8).trim
-        } finally in.close()
+      val content = readText(fs, p).trim
       require(content.nonEmpty, s"Segments: empty pointer file $p")
       (seq, Some(content))
     }
@@ -652,8 +563,7 @@ private[graft] object Segments {
     * the old tree and publishes inside the flip window now always
     * LANDS on disk (in the doomed tree) instead of dying on the
     * deleted parent at an arbitrary step, and the flip-verified
-    * publish wrappers ([[appendToStore]] / [[publishToStore]] /
-    * [[deleteIds]]) detect the moved pointer and retry/refuse TYPED.
+    * publish wrappers ([[publishToStore]] / [[deleteIds]]) detect the moved pointer and retry/refuse TYPED.
     * Cost: one superseded tree of transient disk per publish per
     * grace hour. The one-time legacy-layout upgrade still drops the
     * dead flat children at the flip (they have no pointer to race),

@@ -329,21 +329,16 @@ object StreamOps {
     query
   }
 
-  /** Segment ids used by the streaming store writers: `segBase +
-    * batchId`. batchId is deterministic from the checkpoint, so a
-    * replayed micro-batch republishes the SAME segment id and
-    * [[graft.sources.Segments.publishSegment]] makes that a no-op —
-    * exactly-once appends across restarts. Auto-numbered appends stay
-    * BELOW this floor by construction (Segments.appendSegment filters
-    * its max to < StreamSegBase), so the two ranges can never collide
-    * — in either direction. */
-  val StoreStreamSegBase: Long = graft.sources.Segments.StreamSegBase
-
   /** Continuous FORGETTABLE indexing — the streaming producer for the
     * persisted [[graft.sources.DedupIndexStore]] minhash index: each
     * micro-batch's banded signature rows publish as segment
-    * `segBase + batchId` (idempotent on replay — see
-    * [[StoreStreamSegBase]]), so the standing corpus index GROWS from
+    * `StreamSegBase + batchId`. batchId is deterministic from the
+    * checkpoint, so a replayed micro-batch republishes the SAME
+    * segment id and [[graft.sources.Segments.publishSegment]] makes
+    * that a no-op — exactly-once appends across restarts; manual
+    * auto-numbered appends stay BELOW
+    * [[graft.sources.Segments.StreamSegBase]] by construction, so the
+    * two ranges never collide. The standing corpus index GROWS from
     * the stream while keeping the full tombstone
     * right-to-be-forgotten contract (deleteIds works mid-stream; the
     * anti-join applies on every read). Versus [[lineIndexStream]]'s
@@ -356,49 +351,36 @@ object StreamOps {
       indexDir: String,
       idCol: String,
       textCol: String,
-      checkpointDir: String,
-      segBase: Long = StoreStreamSegBase): StreamingQuery = {
-    require(segBase >= StoreStreamSegBase,
-      s"segBase $segBase is below the reserved streaming floor " +
-        s"$StoreStreamSegBase — streamed segments would land in the " +
-        "manual-append auto-numbered range, where a later append " +
-        "collides or a replayed micro-batch publish silently no-ops " +
-        "against a manual segment (a dropped batch)")
+      checkpointDir: String): StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        graft.sources.DedupIndexStore.appendMinhashAt(
+        graft.sources.DedupIndexStore.appendMinhash(
           docs.sparkSession, indexDir, batch.toDF(), idCol, textCol,
-          segBase + batchId)
+          Some(graft.sources.Segments.StreamSegBase + batchId))
         ()
       }
       .start()
-  }
 
   /** [[minhashStoreStream]]'s line-index twin: per micro-batch
-    * (id, line_hash) provenance published at `segBase + batchId` —
-    * the forgettable streaming form of [[lineIndexStream]] (which
+    * (id, line_hash) provenance published at `StreamSegBase + batchId`
+    * — the forgettable streaming form of [[lineIndexStream]] (which
     * writes unforgettable df aggregates). */
   def lineStoreStream(
       docs: DataFrame,
       indexDir: String,
       idCol: String,
       textCol: String,
-      checkpointDir: String,
-      segBase: Long = StoreStreamSegBase): StreamingQuery = {
-    require(segBase >= StoreStreamSegBase,
-      s"segBase $segBase is below the reserved streaming floor " +
-        s"$StoreStreamSegBase — see minhashStoreStream")
+      checkpointDir: String): StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        graft.sources.DedupIndexStore.appendLinesAt(
+        graft.sources.DedupIndexStore.appendLines(
           docs.sparkSession, indexDir, batch.toDF(), idCol, textCol,
-          segBase + batchId)
+          Some(graft.sources.Segments.StreamSegBase + batchId))
         ()
       }
       .start()
-  }
 
   /** [[dedupAgainstStream]] against a PERSISTED
     * [[graft.sources.DedupIndexStore]] minhash index — the streaming

@@ -181,7 +181,8 @@ class AnnIndexSpec extends SparkSpec {
 
     val dirA = tmp("graft_annidx_app")
     AnnIndex.buildAndWriteIvf(spark, dirA, base, "vec_id", "embedding", cents)
-    val appended = AnnIndex.appendToIvf(spark, dirA, batch, "vec_id", "embedding")
+    AnnIndex.appendToIvf(spark, dirA, batch, "vec_id", "embedding")
+    val appended = AnnIndex.readIvf(spark, dirA)
     val viaAppend = r3(AnnIndex.queryBatchIvf(
       appended, queries, "vec_id", "embedding", k = 5, nprobe = 2))
 
@@ -321,7 +322,8 @@ class AnnIndexSpec extends SparkSpec {
     val dir = tmp("graft_annidx_compact")
     AnnIndex.buildAndWriteIvf(spark, dir, base, "vec_id", "embedding", cents)
     AnnIndex.appendToIvf(spark, dir, b1, "vec_id", "embedding")
-    val appended = AnnIndex.appendToIvf(spark, dir, b2, "vec_id", "embedding")
+    AnnIndex.appendToIvf(spark, dir, b2, "vec_id", "embedding")
+    val appended = AnnIndex.readIvf(spark, dir)
     val before = r3(AnnIndex.queryBatchIvf(
       appended, queries, "vec_id", "embedding", k = 5, nprobe = 2))
     val nBefore = appended.assigned.count() // pre-swap handle dies with the swap
@@ -476,8 +478,9 @@ class AnnIndexSpec extends SparkSpec {
       "compaction must GC the tombstone table")
     assert(compacted.assigned.count() ==
       base.count() + batch.count() - dead.size - deadBatch.size)
-    val reAdded = AnnIndex.appendToIvf(spark, dirA,
+    AnnIndex.appendToIvf(spark, dirA,
       emb.filter(col("vec_id") === dead.min), "vec_id", "embedding")
+    val reAdded = AnnIndex.readIvf(spark, dirA)
     assert(reAdded.assigned.filter(col("id") === dead.min).count() == 1,
       "post-compaction re-ingest of a once-deleted id must be visible")
   }
@@ -547,7 +550,7 @@ class AnnIndexSpec extends SparkSpec {
       queries, "vec_id", "embedding", 5, 2))
 
     // simulate the crash: the tombstones table dir exists but holds
-    // ONLY the underscore staging (appendSegment creates the dir, the
+    // ONLY the underscore staging (publishSegment creates the dir, the
     // publishing rename never ran) — Spark readers skip underscore
     // paths, so a bare fs.exists gate would throw 'Unable to infer
     // schema' on every subsequent read of the index

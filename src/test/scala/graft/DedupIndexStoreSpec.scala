@@ -36,7 +36,8 @@ class DedupIndexStoreSpec extends SparkSpec {
     val dir = tmp("graft_mhidx")
     DedupIndexStore.buildMinhash(spark, dir, seg0, "doc_id", "text",
       shingleN = 3, numHashes = 64, bands = 16)
-    val appended = DedupIndexStore.appendMinhash(spark, dir, seg1, "doc_id", "text")
+    DedupIndexStore.appendMinhash(spark, dir, seg1, "doc_id", "text")
+    val appended = DedupIndexStore.readMinhash(spark, dir)
     assert(DedupIndexStore.minhashParams(spark, dir) == ((3, 64, 16)))
     assert(new java.io.File(rootOf(dir) + "/bands/seg=1").isDirectory)
     assert(rows(appended) ==
@@ -90,8 +91,9 @@ class DedupIndexStoreSpec extends SparkSpec {
     assert(DedupIndexStore.minhashParams(spark, dir) == ((3, 64, 16)),
       "compaction must preserve the frozen params")
     assert(rows(compacted) == preCompact)
-    val reAdded = DedupIndexStore.appendMinhash(spark, dir,
+    DedupIndexStore.appendMinhash(spark, dir,
       corpus.filter(col("doc_id") === dead.min), "doc_id", "text")
+    val reAdded = DedupIndexStore.readMinhash(spark, dir)
     assert(reAdded.filter(col("id") === dead.min).count() > 0,
       "post-compaction re-ingest of a once-deleted id must be visible")
   }
@@ -108,7 +110,8 @@ class DedupIndexStoreSpec extends SparkSpec {
 
     val dir = tmp("graft_lnidx")
     DedupIndexStore.buildLines(spark, dir, seg0, "doc_id", "text")
-    val appended = DedupIndexStore.appendLines(spark, dir, seg1, "doc_id", "text")
+    DedupIndexStore.appendLines(spark, dir, seg1, "doc_id", "text")
+    val appended = DedupIndexStore.readLines(spark, dir)
     assert(DedupIndexStore.lineParams(spark, dir) == "\n")
     // pre-delete: merged segments ≡ the one-shot line index
     assert(rows(appended) == rows(Dedup.lineIndex(corpus, "doc_id", "text")))
@@ -133,8 +136,9 @@ class DedupIndexStoreSpec extends SparkSpec {
     val compacted = DedupIndexStore.compactLines(spark, dir)
     assert(!new java.io.File(rootOf(dir) + "/tombstones").exists)
     assert(rows(compacted) == preCompact)
-    val reAdded = DedupIndexStore.appendLines(spark, dir,
+    DedupIndexStore.appendLines(spark, dir,
       corpus.filter(col("doc_id") === dead.min), "doc_id", "text")
+    val reAdded = DedupIndexStore.readLines(spark, dir)
     assert(rows(reAdded) == rows(Dedup.lineIndex(
       retained.unionByName(corpus.filter(col("doc_id") === dead.min)),
       "doc_id", "text")))
@@ -270,8 +274,8 @@ class DedupIndexStoreSpec extends SparkSpec {
       // watermark + read) triggers it
       FaultyRenameFs.hookDeleteName = Some("_temporary")
       FaultyRenameFs.hook = () =>
-        DedupIndexStore.appendMinhashAt(spark, dir, partC, "doc_id", "text",
-          segId = graft.sources.Segments.StreamSegBase)
+        DedupIndexStore.appendMinhash(spark, dir, partC, "doc_id", "text",
+          at = Some(graft.sources.Segments.StreamSegBase))
       val e = intercept[graft.sources.ConcurrentStoreWriteException] {
         DedupIndexStore.compactMinhash(spark, dir)
       }

@@ -187,6 +187,28 @@ class IncrementalReleaseSpec extends SparkSpec {
         "to an uninterrupted run — no double-appends, no lost deltas")
   }
 
+  test("a re-run bootstrap into the same state dir no-ops on every " +
+    "state table that already landed and lands the missing one") {
+    val state = freshState()
+    def counts = IncrementalRelease.StateTables.map { t =>
+      t -> spark.read.parquet(
+        s"${graft.sources.Segments.resolve(spark, s"$state/$t")}/rows").count()
+    }.toMap
+    val first = counts
+    // a partially failed bootstrap: one state table never landed
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) f.listFiles().foreach(rm)
+      f.delete(); ()
+    }
+    rm(new java.io.File(s"$state/ledger"))
+    IncrementalRelease.bootstrap(spark, day0Dir, state)
+    assert(counts == first,
+      "a retried bootstrap must not append any state table twice")
+    // twice more, with nothing missing: still no table grows
+    IncrementalRelease.bootstrap(spark, day0Dir, state)
+    assert(counts == first)
+  }
+
   test("inParallel surfaces every failure: the first throws, each " +
     "sibling failure rides on it as suppressed") {
     val e = intercept[IllegalStateException] {

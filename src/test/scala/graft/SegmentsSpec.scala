@@ -33,13 +33,13 @@ class SegmentsSpec extends SparkSpec {
     // has published ABOVE the reserved floor, so the table's max id
     // is already huge
     Segments.publishSegment(spark, t,
-      Seq((1L, "a")).toDF("id", "v"), Segments.StreamSegBase + 5)
+      Seq((1L, "a")).toDF("id", "v"), Some(Segments.StreamSegBase + 5))
     val watermark = Segments.segmentWatermark(spark, dir)
     assert(watermark.segs("t").contains(Segments.StreamSegBase + 5))
     // mid-compaction, a manual append lands at seg=0 — far BELOW the
     // table's max id; a max-only watermark would wave the publish
     // through
-    Segments.appendSegment(spark, t, Seq((2L, "b")).toDF("id", "v"))
+    Segments.publishSegment(spark, t, Seq((2L, "b")).toDF("id", "v"), None)
     val v1 = Segments.newVersionPath(dir)
     Seq((1L, "a")).toDF("id", "v").write.parquet(s"$v1/t/seg=0")
     intercept[ConcurrentStoreWriteException] {
@@ -64,7 +64,7 @@ class SegmentsSpec extends SparkSpec {
     val t = s"faulty://$local/store/t"
     FaultyRenameFs.reset()
     try {
-      Segments.appendSegment(spark, t, Seq((1L, 10L)).toDF("id", "x")) // seg=0
+      Segments.publishSegment(spark, t, Seq((1L, 10L)).toDF("id", "x"), None) // seg=0
       // the winner's rows, pre-staged under an invisible underscore
       // name; the hook publishes them at seg=1 INSIDE the loser's
       // check-to-rename window, and the armed rename then reproduces
@@ -80,7 +80,7 @@ class SegmentsSpec extends SparkSpec {
           new org.apache.hadoop.fs.Path(s"$local/store/t/_winner"),
           new org.apache.hadoop.fs.Path(s"$local/store/t/seg=1")))
       }
-      Segments.appendSegment(spark, t, Seq((3L, 30L)).toDF("id", "x"))
+      Segments.publishSegment(spark, t, Seq((3L, 30L)).toDF("id", "x"), None)
       FaultyRenameFs.reset()
       // BOTH writers' rows are published — the loser retried at seg=2
       assert(spark.read.parquet(t).select("id").as[Long].collect().toSet
@@ -97,7 +97,7 @@ class SegmentsSpec extends SparkSpec {
   test("stale-staging sweep spares a live writer's staging while any " +
     "file in its subtree is fresh, and sweeps it once fully stale") {
     val t = tmp("graft_seg_sweep") + "/t"
-    Segments.appendSegment(spark, t, Seq((1L, 1L)).toDF("id", "x"))
+    Segments.publishSegment(spark, t, Seq((1L, 1L)).toDF("id", "x"), None)
     val old = System.currentTimeMillis() - 2 * 3600 * 1000L
     // an in-flight staging: the DIR mtime is old (set at job start;
     // parquet never refreshes it) but a child is still being written
@@ -106,14 +106,14 @@ class SegmentsSpec extends SparkSpec {
     val child = new java.io.File(live, "part-00000.tmp")
     assert(child.createNewFile())
     assert(live.setLastModified(old))
-    Segments.appendSegment(spark, t, Seq((2L, 2L)).toDF("id", "x"))
+    Segments.publishSegment(spark, t, Seq((2L, 2L)).toDF("id", "x"), None)
     assert(live.isDirectory,
       "a staging with fresh files underneath is a LIVE writer — never swept")
     // once nothing in the subtree has been touched past the cutoff,
     // it is a crashed writer's orphan and sweeps
     assert(child.setLastModified(old))
     assert(live.setLastModified(old))
-    Segments.appendSegment(spark, t, Seq((3L, 3L)).toDF("id", "x"))
+    Segments.publishSegment(spark, t, Seq((3L, 3L)).toDF("id", "x"), None)
     assert(!live.exists, "a fully-stale staging must sweep")
     assert(spark.read.parquet(t).count() == 3)
   }
@@ -197,44 +197,56 @@ class SegmentsSpec extends SparkSpec {
     "never a silent vanish under the grace window") {
     spark.sparkContext.hadoopConfiguration
       .set("fs.faulty.impl", classOf[FaultyRenameFs].getName)
-    val local = java.nio.file.Files.createTempDirectory("graft_seg_race").toString
-    val dir = s"faulty://$local/store"
-    FaultyRenameFs.reset()
-    try {
-      val v1 = Segments.newVersionPath(dir)
-      Seq((1L, "a")).toDF("id", "v").write.parquet(s"$v1/t/seg=0")
-      Segments.publishVersion(spark, dir, v1)
-      val w = Segments.segmentWatermark(spark, dir)
-      val v2 = Segments.newVersionPath(dir)
-      Seq((1L, "a")).toDF("id", "v").write.parquet(s"$v2/t/seg=0")
-      // arm: the instant the append's segment publish rename targets
-      // seg=1 of the OLD tree, a compaction flips the pointer to v2
-      // first — the exact append-vs-flip interleaving the old
-      // immediate GC left as an accepted residual
-      FaultyRenameFs.hookRenameDstName = Some("seg=1")
-      FaultyRenameFs.hook = () => {
-        FaultyRenameFs.hookRenameDstName = None
-        Segments.publishVersionFenced(spark, dir, v2, w)
-      }
-      Segments.appendToStore(spark, dir, "t", Seq((9L, "z")).toDF("id", "v"))
+    // the auto-numbered publish and the explicit-id (replay-safe) one
+    // go through the same flip-verified wrapper
+    Seq(None, Some(Segments.StreamSegBase + 3)).foreach { at =>
+      val local = java.nio.file.Files.createTempDirectory("graft_seg_race").toString
+      val dir = s"faulty://$local/store"
       FaultyRenameFs.reset()
-      // the raced rows are visible in the LIVE tree, exactly once
-      assert(Segments.resolve(spark, dir) == v2)
-      val live = spark.read.parquet(s"$v2/t")
-      assert(live.filter(col("id") === 9L).count() == 1,
-        "the raced append must land exactly once in the live tree")
-      // the superseded tree survived the flip (grace GC) — the append
-      // never hit a deleted parent mid-write
-      assert(new java.io.File(v1.stripPrefix("faulty://")).exists)
-      // model-coupled rows pinned to a superseded root refuse TYPED
-      // (re-encode against the new tree), never land silently
-      val e = intercept[ConcurrentStoreWriteException] {
-        Segments.appendToStoreAt(spark, dir, v1, "t",
-          Seq((7L, "y")).toDF("id", "v"))
-      }
-      assert(e.getMessage.contains("re-encode"))
-      assert(spark.read.parquet(s"$v2/t").filter(col("id") === 7L).count() == 0)
-    } finally FaultyRenameFs.reset()
+      try {
+        val v1 = Segments.newVersionPath(dir)
+        Seq((1L, "a")).toDF("id", "v").write.parquet(s"$v1/t/seg=0")
+        Segments.publishVersion(spark, dir, v1)
+        val w = Segments.segmentWatermark(spark, dir)
+        val v2 = Segments.newVersionPath(dir)
+        Seq((1L, "a")).toDF("id", "v").write.parquet(s"$v2/t/seg=0")
+        // arm: the instant the append's segment publish rename targets
+        // its segment of the OLD tree, a compaction flips the pointer to
+        // v2 first — the exact append-vs-flip interleaving the old
+        // immediate GC left as an accepted residual
+        FaultyRenameFs.hookRenameDstName = Some(s"seg=${at.getOrElse(1L)}")
+        FaultyRenameFs.hook = () => {
+          FaultyRenameFs.hookRenameDstName = None
+          Segments.publishVersionFenced(spark, dir, v2, w)
+        }
+        assert(Segments.publishToStore(spark, dir, "t",
+          Seq((9L, "z")).toDF("id", "v"), at))
+        FaultyRenameFs.reset()
+        // the raced rows are visible in the LIVE tree, exactly once
+        assert(Segments.resolve(spark, dir) == v2)
+        val live = spark.read.parquet(s"$v2/t")
+        assert(live.filter(col("id") === 9L).count() == 1,
+          s"the raced append (at = $at) must land exactly once in the live tree")
+        // the superseded tree survived the flip (grace GC) — the append
+        // never hit a deleted parent mid-write
+        assert(new java.io.File(v1.stripPrefix("faulty://")).exists)
+        // model-coupled rows pinned to a superseded root refuse TYPED
+        // (re-encode against the new tree), never land silently
+        val e = intercept[ConcurrentStoreWriteException] {
+          Segments.publishToStore(spark, dir, "t",
+            Seq((7L, "y")).toDF("id", "v"), at, pinnedRoot = Some(v1))
+        }
+        assert(e.getMessage.contains("re-encode"))
+        assert(spark.read.parquet(s"$v2/t").filter(col("id") === 7L).count() == 0)
+        // an explicit id already in the live tree is a replay no-op
+        at.foreach { _ =>
+          assert(!Segments.publishToStore(spark, dir, "t",
+            Seq((9L, "z")).toDF("id", "v"), at))
+          assert(spark.read.parquet(s"$v2/t").filter(col("id") === 9L).count() == 1,
+            "a same-id replay must not publish the rows twice")
+        }
+      } finally FaultyRenameFs.reset()
+    }
   }
 
   test("pointer flip is a true compare-and-swap under HDFS rename " +
@@ -283,8 +295,8 @@ class SegmentsSpec extends SparkSpec {
     "watermark refuses the publish too") {
     val dir = tmp("graft_seg_exact") + "/store"
     val t = s"$dir/t"
-    Segments.appendSegment(spark, t, Seq((1L, "a")).toDF("id", "v")) // seg=0
-    Segments.appendSegment(spark, t, Seq((2L, "b")).toDF("id", "v")) // seg=1
+    Segments.publishSegment(spark, t, Seq((1L, "a")).toDF("id", "v"), None) // seg=0
+    Segments.publishSegment(spark, t, Seq((2L, "b")).toDF("id", "v"), None) // seg=1
     val w = Segments.segmentWatermark(spark, dir)
     // an out-of-band actor (a raced compactor outside the
     // single-maintenance-actor posture, a manual cleanup) removed a
@@ -312,8 +324,8 @@ class SegmentsSpec extends SparkSpec {
     assert(Segments.resolve(spark, dir) == dir)
     assert(spark.read.parquet(s"${Segments.resolve(spark, dir)}/t").count() == 1)
     // appends keep working against the legacy root
-    Segments.appendSegment(spark, s"${Segments.resolve(spark, dir)}/t",
-      Seq((2L, "b")).toDF("id", "v"))
+    Segments.publishSegment(spark, s"${Segments.resolve(spark, dir)}/t",
+      Seq((2L, "b")).toDF("id", "v"), None)
     assert(spark.read.parquet(s"${Segments.resolve(spark, dir)}/t").count() == 2)
     // the first full-tree publish (a compaction) upgrades the layout:
     // the legacy tables stay readable until the pointer exists, then

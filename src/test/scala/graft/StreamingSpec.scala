@@ -542,7 +542,7 @@ class StreamingSpec extends SparkSpec {
       writeBatch(lnSrc, b2); lq.processAllAvailable()
     } finally lq.stop()
     assert(new java.io.File(graft.sources.Segments.resolve(spark, lnDir) +
-      s"/lines/seg=${StreamOps.StoreStreamSegBase}").isDirectory)
+      s"/lines/seg=${graft.sources.Segments.StreamSegBase}").isDirectory)
     def lnRows = DedupIndexStore.readLines(spark, lnDir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val whole = Dedup.lineIndex(
@@ -550,9 +550,9 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(lnRows == whole, "streamed store == one-shot index over the union")
     // replaying a batch publish at the same segment id is a no-op
-    assert(!DedupIndexStore.appendLinesAt(spark, lnDir,
+    assert(!DedupIndexStore.appendLines(spark, lnDir,
       spark.createDataFrame(new java.util.ArrayList(java.util.Arrays.asList(b1: _*)), schema),
-      "doc_id", "text", StreamOps.StoreStreamSegBase))
+      "doc_id", "text", Some(graft.sources.Segments.StreamSegBase)))
     assert(lnRows == whole, "a replayed publish must not double-count")
     // and the streamed store still honors deletes
     DedupIndexStore.deleteIds(spark, lnDir,
@@ -579,9 +579,9 @@ class StreamingSpec extends SparkSpec {
     assert(mhRows == Dedup.corpusIndex(
       seed.unionByName(spark.read.parquet(mhSrc)), "doc_id", "text", 3, 64, 16)
       .collect().map(_.toString).toSet)
-    assert(!DedupIndexStore.appendMinhashAt(spark, mhDir,
+    assert(!DedupIndexStore.appendMinhash(spark, mhDir,
       spark.createDataFrame(new java.util.ArrayList(java.util.Arrays.asList(b2: _*)), schema),
-      "doc_id", "text", StreamOps.StoreStreamSegBase + 1))
+      "doc_id", "text", Some(graft.sources.Segments.StreamSegBase + 1)))
 
     // range separation: a manual append AFTER streamed segments exist
     // must auto-number BELOW the streamed floor (never inside it —
@@ -594,9 +594,9 @@ class StreamingSpec extends SparkSpec {
     assert(new java.io.File(graft.sources.Segments.resolve(spark, mhDir) +
       "/bands/seg=1").isDirectory,
       "manual append must land below the streamed range")
-    assert(DedupIndexStore.appendMinhashAt(spark, mhDir,
+    assert(DedupIndexStore.appendMinhash(spark, mhDir,
       spark.createDataFrame(new java.util.ArrayList(java.util.Arrays.asList(manual: _*)), schema),
-      "doc_id", "text", StreamOps.StoreStreamSegBase + 2),
+      "doc_id", "text", Some(graft.sources.Segments.StreamSegBase + 2)),
       "the next streamed batch id must still be publishable")
   }
 

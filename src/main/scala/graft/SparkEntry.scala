@@ -1,25 +1,27 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.queries.{ExtensionQueries, ParityQueries}
+import graft.queries.{CatalogEntry, ExtensionQueries, ParityQueries}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
+/** Driver contract (SURVEY.md §7).
+  * `queries` and `oracleSql` are two views of one catalog: each
+  * [[CatalogEntry]] carries its query and its oracle SQL together. */
 object SparkEntry {
+
+  private def catalog: Seq[CatalogEntry] = ParityQueries.entries ++ ExtensionQueries.entries
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * Runs a two-table transport plan (dim build + target-side lookup
     * join) through the engine. */
   def entry(spark: SparkSession): DataFrame =
-    ParityQueries.all("q_refer_target_dep")(spark, "/root/testdata/sf0.001")
+    queries("q_refer_target_dep")(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    ParityQueries.all ++ ExtensionQueries.all
+    catalog.map(e => e.name -> e.run).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops (those
-    * get the driver's weaker rows-only check; their correctness is
-    * instead covered in ScalaTest against brute-force ground truth). */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] =
-    ParityQueries.oracle ++ ExtensionQueries.oracle
+    catalog.map(e => e.name -> e.oracleSql).toMap
 }

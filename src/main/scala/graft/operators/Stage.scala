@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.storage.StorageLevel
 
 /** Control-flow signal: a [[Stage.Durable]] run reached its
@@ -47,7 +48,7 @@ object Stage {
     def remove(id: Int): Unit = cuts.remove(id)
     def close(): Unit = {
       open = false
-      cuts.values.forEach(r => r.unpersist(blocking = false))
+      cuts.values.forEach(r => ColumnBridge.unpersist(r))
       cuts.clear()
     }
   }
@@ -76,7 +77,7 @@ object Stage {
           .persist(StorageLevel.MEMORY_AND_DISK)
         track(name, rdd)
         if (eager) rdd.count()
-        org.apache.spark.sql.graftshim.ColumnBridge.dataFrameFromInternalRows(d, rdd)
+        ColumnBridge.dataFrameFromInternalRows(d, rdd)
       case d: Durable => d.cut(name, df)
     }
 
@@ -102,7 +103,7 @@ object Stage {
     val f = Option(current.get())
     def walk(r: RDD[_]): Unit = if (seen.add(r.id)) {
       if (r.getStorageLevel != StorageLevel.NONE) {
-        r.unpersist(blocking = false)
+        ColumnBridge.unpersist(r)
         f.foreach(_.remove(r.id))
       } else r.dependencies.foreach(d => walk(d.rdd))
     }

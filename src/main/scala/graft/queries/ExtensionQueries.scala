@@ -7,31 +7,24 @@ import graft.functions.TextFunctions
 import graft.multimodal.Multimodal
 import graft.operators.{Classifier, Dedup, Search, Similarity, Stage}
 import graft.operators.Stage.{Local, Persist}
+import Catalog.{Q, pq}
 
 /** The LLM-training-data-pipeline operators (north-star extensions,
   * SURVEY.md §7.5): dedup, similarity search, text analysis,
-  * multimodal plumbing — each a first-class `queries()` entry over
-  * the `documents`/`embeddings` fixtures. Everything SQL-expressible
-  * carries a DuckDB oracle — the vector queries' double-fold
-  * arithmetic and seeded LSH hyperplanes are mirrored bit-exactly in
-  * generated SQL, and the FNV/SplitMix64 near-dup queries
-  * (minhash/simhash/ngram) are replayed hash-for-hash via [[HashSql]].
-  * Only the multimodal decode (javax.imageio, not SQL-expressible)
-  * stays rows-only; it is covered by ScalaTest against ImageIO ground
-  * truth.
+  * multimodal plumbing — each a [[CatalogEntry]] over the
+  * `documents`/`embeddings` fixtures, carrying its DuckDB oracle — the
+  * vector queries' double-fold arithmetic and seeded LSH hyperplanes
+  * are mirrored bit-exactly in generated SQL, and the FNV/SplitMix64
+  * near-dup queries (minhash/simhash/ngram) are replayed hash-for-hash
+  * via [[HashSql]].
   */
 object ExtensionQueries {
-
-  private def pq(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
 
   /** events with `ts` normalized to a UTC-session TIMESTAMP regardless
     * of the generator's physical parquet type — see
     * [[ParityQueries.events]] for the nanos-vs-micros story. */
   private def events(spark: SparkSession, dir: String): DataFrame =
     ParityQueries.events(spark, dir)
-
-  type Q = (SparkSession, String) => DataFrame
 
   // ------------------------------------------------------------ text analysis
 
@@ -3941,210 +3934,6 @@ object ExtensionQueries {
   }
 
   // ------------------------------------------------------------------------
-
-  val all: Map[String, Q] = Map(
-    "q_text_stats" -> qTextStats,
-    "q_text_langid" -> qTextLangid,
-    "q_text_quality" -> qTextQuality,
-    "q_text_repetition" -> qTextRepetition,
-    "q_text_decontam" -> qTextDecontam,
-    "q_text_decontam_scrub" -> qTextDecontamScrub,
-    "q_dedup_scrub_spans" -> qDedupScrubSpans,
-    "q_quality_distill" -> qQualityDistill,
-    "q_quality_distill_score" -> qQualityDistillScore,
-    "q_quality_distill_warm" -> qQualityDistillWarm,
-    "q_quality_distill_eval" -> qQualityDistillEval,
-    "q_pack_chunks" -> qPackChunks,
-    "q_embed_outliers" -> qEmbedOutliers,
-    "q_pipeline_filter" -> qPipelineFilter,
-    "q_pipeline_clean" -> qPipelineClean,
-    "q_dedup_exact" -> qDedupExact,
-    "q_dedup_fingerprint" -> qDedupFingerprint,
-    "q_dedup_minhash" -> qDedupMinhash,
-    "q_dedup_minhash_capped" -> qDedupMinhashCapped,
-    "q_dedup_simhash" -> qDedupSimhash,
-    "q_dedup_ngram_jaccard" -> qDedupNgramJaccard,
-    "q_dedup_editdist" -> qDedupEditdist,
-    "q_dedup_cdc" -> qDedupCdc,
-    "q_dedup_cdc_incremental" -> qDedupCdcIncremental,
-    "q_dedup_containment" -> qDedupContainment,
-    "q_dedup_keep_one" -> qDedupKeepOne,
-    "q_dedup_incremental" -> qDedupIncremental,
-    "q_dedup_bloom" -> qDedupBloom,
-    "q_forget" -> qForget,
-    "q_span_dupes" -> qSpanDupes,
-    "q_quality_gate" -> qQualityGate,
-    "q_snapshot_diff" -> qSnapshotDiff,
-    "q_snapshot_rowdiff" -> qSnapshotRowdiff,
-    "q_check_suite" -> qCheckSuite,
-    "q_check_fk" -> qCheckFk,
-    "q_privacy_risk" -> qPrivacyRisk,
-    "q_agg_incremental" -> qAggIncremental,
-    "q_pseudonymize" -> qPseudonymize,
-    "q_cdc_compact" -> qCdcCompact,
-    "q_sample_split" -> qSampleSplit,
-    "q_split_decontam" -> qSplitDecontam,
-    "q_sample_cap" -> qSampleCap,
-    "q_sample_stratified" -> qSampleStratified,
-    "q_sample_mix" -> qSampleMix,
-    "q_sample_temperature" -> qSampleTemperature,
-    "q_sample_weighted" -> qSampleWeighted,
-    "q_pack_split" -> qPackSplit,
-    "q_events_anomaly" -> qEventsAnomaly,
-    "q_events_cooccur" -> qEventsCooccur,
-    "q_dedup_bucket_census" -> qDedupBucketCensus,
-    "q_ingest_orc" -> qIngestOrc,
-    "q_dedup_embedding" -> qDedupEmbedding,
-    "q_dedup_semantic" -> qDedupSemantic,
-    "q_dedup_semantic_capped" -> qDedupSemanticCapped,
-    "q_dedup_incremental_sem" -> qDedupIncrementalSem,
-    "q_dedup_incremental_emb" -> qDedupIncrementalEmb,
-    "q_dedup_components" -> qDedupComponents,
-    "q_sim_brute_topk" -> qSimBruteTopK,
-    "q_sim_pq_topk" -> qSimPqTopK,
-    "q_sim_ivfpq_batch" -> qSimIvfPqBatch,
-    "q_sim_pq_rerank" -> qSimPqRerank,
-    "q_sim_lsh_topk" -> qSimLshTopK,
-    "q_sim_ivf_topk" -> qSimIvfTopK,
-    "q_sim_ivf_distributed" -> qSimIvfDistributed,
-    "q_sim_batch_topk" -> qSimBatchTopK,
-    "q_sim_index_ivf" -> qSimIndexIvf,
-    "q_sim_index_append" -> qSimIndexAppend,
-    "q_sim_index_delete" -> qSimIndexDelete,
-    "q_sim_index_append_pq" -> qSimIndexAppendPq,
-    "q_sim_margin_pairs" -> qSimMarginPairs,
-    "q_sim_recall_audit" -> qSimRecallAudit,
-    "q_sim_recall_audit_lsh" -> qSimRecallAuditLsh,
-    "q_sim_lsh_batch" -> qSimLshBatch,
-    "q_sim_index_lsh" -> qSimIndexLsh,
-    "q_sim_index_drift" -> qSimIndexDrift,
-    "q_sim_index_drift_pq" -> qSimIndexDriftPq,
-    "q_sim_index_drift_lsh" -> qSimIndexDriftLsh,
-    "q_sim_index_retrain" -> qSimIndexRetrain,
-    "q_store_maintenance" -> qStoreMaintenance,
-    "q_sim_hard_negatives" -> qSimHardNegatives,
-    "q_embed_centroids" -> qEmbedCentroids,
-    "q_ingest_jsonl" -> qIngestJsonl,
-    "q_ingest_csv" -> qIngestCsv,
-    "q_text_subwords" -> qTextSubwords,
-    "q_text_bpe" -> qTextBpe,
-    "q_text_bpe_segment" -> qTextBpeSegment,
-    "q_profile_kmv_merge" -> qProfileKmvMerge,
-    "q_profile_cms" -> qProfileCms,
-    "q_profile_cms_merge" -> qProfileCmsMerge,
-    "q_profile_cms_hh" -> qProfileCmsHh,
-    "q_dedup_lines" -> qDedupLines,
-    "q_dedup_lines_incremental" -> qDedupLinesIncremental,
-    "q_dedup_report" -> qDedupReport,
-    "q_sample_dsir" -> qSampleDsir,
-    "q_pack_bins" -> qPackBins,
-    "q_pack_bins_stats" -> qPackBinsStats,
-    "q_pack_bins_bpe" -> qPackBinsBpe,
-    "q_text_feature_hash" -> qTextFeatureHash,
-    "q_multimodal_keep_one" -> qMultimodalKeepOne,
-    "q_dedup_multisignal" -> qDedupMultisignal,
-    "q_profile_kmv_overlap" -> qProfileKmvOverlap,
-    "q_text_vocab" -> qTextVocab,
-    "q_text_oov" -> qTextOov,
-    "q_url_canonical" -> qUrlCanonical,
-    "q_text_redact" -> qTextRedact,
-    "q_profile" -> qProfile,
-    "q_profile_quantiles" -> qProfileQuantiles,
-    "q_profile_histogram" -> qProfileHistogram,
-    "q_profile_outliers" -> qProfileOutliers,
-    "q_profile_buckets" -> qProfileBuckets,
-    "q_profile_corr" -> qProfileCorr,
-    "q_profile_kmv" -> qProfileKmv,
-    "q_zorder_value" -> qZorderValue,
-    "q_text_tfidf" -> qTextTfidf,
-    "q_text_bigrams" -> qTextBigrams,
-    "q_events_retention" -> qEventsRetention,
-    "q_graph_pagerank" -> qGraphPagerank,
-    "q_graph_ppr" -> qGraphPpr,
-    "q_graph_triangles" -> qGraphTriangles,
-    "q_events_transitions" -> qEventsTransitions,
-    "q_events_rolling" -> qEventsRolling,
-    "q_scd2" -> qScd2,
-    "q_layout_zonemaps" -> qLayoutZonemaps,
-    "q_layout_compaction" -> qLayoutCompaction,
-    "q_layout_prune" -> qLayoutPrune,
-    "q_events_gapfill" -> qEventsGapfill,
-    "q_fuzzy_join" -> qFuzzyJoin,
-    "q_fuzzy_lookup" -> qFuzzyLookup,
-    "q_fuzzy_jw" -> qFuzzyJw,
-    "q_refer_fuzzy" -> qReferFuzzy,
-    "q_entity_resolution" -> qEntityResolution,
-    "q_quality_calibrated" -> qQualityCalibrated,
-    "q_sample_budget" -> qSampleBudget,
-    "q_text_postings" -> qTextPostings,
-    "q_text_bm25" -> qTextBm25,
-    "q_text_entropy" -> qTextEntropy,
-    "q_embed_dimstats" -> qEmbedDimstats,
-    "q_embed_quantize" -> qEmbedQuantize,
-    "q_embed_gram" -> qEmbedGram,
-    "q_text_colloc" -> qTextColloc,
-    "q_embed_pca" -> qEmbedPca,
-    "q_dedup_keep_best" -> qDedupKeepBest,
-    "q_profile_drift" -> qProfileDrift,
-    "q_pack_shards" -> qPackShards,
-    "q_text_perplexity" -> qTextPerplexity,
-    "q_multimodal_meta" -> qMultimodalMeta,
-    "q_multimodal_decode" -> qMultimodalDecode,
-    "q_multimodal_audio" -> qMultimodalAudio,
-    "q_multimodal_video" -> qMultimodalVideo,
-    "q_multimodal_image_dups" -> qMultimodalImageDups,
-    "q_multimodal_audio_dups" -> qMultimodalAudioDups,
-    "q_multimodal_video_dups" -> qMultimodalVideoDups,
-    "q_chat_parse" -> qChatParse,
-    "q_chat_validate" -> qChatValidate,
-    "q_chat_pack" -> qChatPack,
-    "q_corpus_manifest" -> qCorpusManifest,
-    "q_sample_epochs" -> qSampleEpochs,
-    "q_pref_validate" -> qPrefValidate,
-    "q_pref_conflicts" -> qPrefConflicts,
-    "q_text_drift" -> qTextDrift,
-    "q_chat_tools" -> qChatTools,
-    "q_chat_gate" -> qChatGate,
-    "q_curriculum" -> qCurriculum,
-    "q_manifest_merge" -> qManifestMerge,
-    "q_text_encoding" -> qTextEncoding,
-    "q_sample_epochs_apply" -> qSampleEpochsApply,
-    "q_pipeline_ingest" -> qPipelineIngest,
-    "q_pipeline_sft" -> qPipelineSft,
-    "q_pipeline_sft_ledger" -> qPipelineSftLedger,
-    "q_pipeline_release" -> qPipelineRelease,
-    "q_pipeline_release_run" -> qPipelineReleaseRun,
-    "q_pipeline_release_incr" -> qPipelineReleaseIncr,
-    "q_release_forget" -> qReleaseForget,
-    "q_pipeline_pref" -> qPipelinePref,
-    "q_pipeline_pref_ledger" -> qPipelinePrefLedger,
-    "q_chat_dedup" -> qChatDedup,
-    "q_events_ewma" -> qEventsEwma,
-    "q_events_changepoint" -> qEventsChangepoint,
-    "q_events_attribution" -> qEventsAttribution,
-    "q_interval_overlap" -> qIntervalOverlap,
-    "q_events_trend" -> qEventsTrend,
-    "q_quality_benford" -> qQualityBenford,
-    "q_events_paths" -> qEventsPaths,
-    "q_profile_robust" -> qProfileRobust,
-    "q_profile_gini" -> qProfileGini,
-    "q_quality_quantile_map" -> qQualityQuantileMap,
-    "q_golden_record" -> qGoldenRecord,
-    "q_check_fd" -> qCheckFd,
-    "q_events_seasonal" -> qEventsSeasonal,
-    "q_embed_truncation" -> qEmbedTruncation,
-    "q_events_interarrival" -> qEventsInterarrival,
-    "q_events_growth" -> qEventsGrowth,
-    "q_text_lang_margin" -> qTextLangMargin,
-    "q_text_fertility" -> qTextFertility,
-    "q_union_evolved" -> qUnionEvolved,
-    "q_union_evolved_nested" -> qUnionEvolvedNested,
-    "q_events_conv_latency" -> qEventsConvLatency,
-    "q_graph_degrees" -> qGraphDegrees,
-    "q_dedup_cluster_sizes" -> qDedupClusterSizes,
-    "q_text_normalize" -> qTextNormalize,
-    "q_text_boilerplate" -> qTextBoilerplate,
-    "q_sim_index_topk" -> qSimIndexTopK)
 
   // DuckDB mirrors of the SQL-expressible subset. RE2 notes: DuckDB
   // regexp_replace needs the 'g' flag for replace-all (Spark default);
@@ -9172,73 +8961,75 @@ object ExtensionQueries {
        |    AS jaccard_permille
        |FROM m""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "q_text_bpe" -> textBpeSql(8),
-    "q_multimodal_audio" -> multimodalAudioSql,
-    "q_multimodal_video" -> multimodalVideoSql,
-    "q_multimodal_image_dups" -> multimodalImageDupsSql(),
-    "q_multimodal_audio_dups" -> multimodalAudioDupsSql,
-    "q_multimodal_video_dups" -> multimodalVideoDupsSql,
-    "q_chat_parse" -> chatTurnsSql,
-    "q_chat_validate" -> chatValidateSql,
-    "q_chat_pack" -> chatPackSql,
-    "q_corpus_manifest" -> corpusManifestSql,
-    "q_sample_epochs" -> sampleEpochsSql,
-    "q_pref_validate" -> prefValidateSql,
-    "q_pref_conflicts" -> prefConflictsSql,
-    "q_text_drift" -> textDriftSql,
-    "q_chat_tools" -> chatToolsSql,
-    "q_chat_gate" -> chatValidateSql,
-    "q_curriculum" -> curriculumSql,
-    "q_manifest_merge" -> manifestMergeSql,
-    "q_text_encoding" -> textEncodingSql,
-    "q_sample_epochs_apply" -> sampleEpochsApplySql,
-    "q_pipeline_ingest" -> pipelineIngestSql,
-    "q_pipeline_sft" -> pipelineSftSql,
-    "q_pipeline_sft_ledger" -> pipelineSftLedgerSql,
-    "q_pipeline_release" -> pipelineReleaseSql,
-    "q_pipeline_release_run" -> pipelineReleaseSql,
-    "q_pipeline_release_incr" -> pipelineReleaseIncrSql,
-    "q_release_forget" -> releaseForgetSql,
-    "q_pipeline_pref" -> pipelinePrefSql,
-    "q_pipeline_pref_ledger" -> pipelinePrefLedgerSql,
-    "q_chat_dedup" -> chatDedupSql,
-    "q_profile_kmv_overlap" -> profileKmvOverlapSql,
-    "q_dedup_simhash" -> dedupSimhashSql,
-    "q_dedup_minhash" -> minhashPairsSql(3, 64, 16, 0.5),
-    "q_dedup_minhash_capped" -> minhashPairsSql(3, 64, 16, 0.5, Some(2)),
-    "q_dedup_ngram_jaccard" -> minhashPairsSql(2, 64, 16, 0.4),
-    "q_dedup_editdist" -> dedupEditdistSql,
-    "q_dedup_keep_one" -> dedupKeepOneSql,
-    "q_dedup_incremental" -> dedupIncrementalSql,
-    "q_forget" -> forgetSql,
-    "q_dedup_bloom" -> dedupBloomSql,
-    "q_dedup_cdc" -> dedupCdcSql,
-    "q_dedup_cdc_incremental" -> dedupCdcIncrementalSql,
-    "q_dedup_containment" -> dedupContainmentSql,
-    "q_span_dupes" -> spanDupesSql,
-    "q_quality_gate" -> qualityGateSql,
-    "q_snapshot_diff" -> snapshotDiffSql,
-    "q_snapshot_rowdiff" -> snapshotRowdiffSql,
-    "q_check_suite" -> checkSuiteSql,
-    "q_check_fk" -> checkFkSql,
-    "q_privacy_risk" -> privacyRiskSql,
-    "q_agg_incremental" -> aggIncrementalSql,
-    "q_pseudonymize" -> pseudonymizeSql,
-    "q_cdc_compact" -> cdcCompactSql,
-    "q_sample_split" -> sampleSplitSql,
-    "q_split_decontam" -> splitDecontamSql,
-    "q_sample_cap" -> sampleCapSql,
-    "q_sample_stratified" -> sampleStratifiedSql,
-    "q_sample_mix" -> sampleMixSql,
-    "q_sample_temperature" -> sampleTemperatureSql,
-    "q_multimodal_decode" -> multimodalDecodeSql,
-    "q_dedup_components" -> dedupComponentsSql,
-    "q_graph_pagerank" -> graphPagerankSql,
-    "q_graph_ppr" -> graphRankSql(Some(pprSeeds)),
+  /** The catalog. Declared last: an object's vals initialize in
+    * textual order, and the entries read the oracle SQL vals above. */
+  val entries: Seq[CatalogEntry] = Seq(
+    CatalogEntry("q_text_bpe", qTextBpe, textBpeSql(8)),
+    CatalogEntry("q_multimodal_audio", qMultimodalAudio, multimodalAudioSql),
+    CatalogEntry("q_multimodal_video", qMultimodalVideo, multimodalVideoSql),
+    CatalogEntry("q_multimodal_image_dups", qMultimodalImageDups, multimodalImageDupsSql()),
+    CatalogEntry("q_multimodal_audio_dups", qMultimodalAudioDups, multimodalAudioDupsSql),
+    CatalogEntry("q_multimodal_video_dups", qMultimodalVideoDups, multimodalVideoDupsSql),
+    CatalogEntry("q_chat_parse", qChatParse, chatTurnsSql),
+    CatalogEntry("q_chat_validate", qChatValidate, chatValidateSql),
+    CatalogEntry("q_chat_pack", qChatPack, chatPackSql),
+    CatalogEntry("q_corpus_manifest", qCorpusManifest, corpusManifestSql),
+    CatalogEntry("q_sample_epochs", qSampleEpochs, sampleEpochsSql),
+    CatalogEntry("q_pref_validate", qPrefValidate, prefValidateSql),
+    CatalogEntry("q_pref_conflicts", qPrefConflicts, prefConflictsSql),
+    CatalogEntry("q_text_drift", qTextDrift, textDriftSql),
+    CatalogEntry("q_chat_tools", qChatTools, chatToolsSql),
+    CatalogEntry("q_chat_gate", qChatGate, chatValidateSql),
+    CatalogEntry("q_curriculum", qCurriculum, curriculumSql),
+    CatalogEntry("q_manifest_merge", qManifestMerge, manifestMergeSql),
+    CatalogEntry("q_text_encoding", qTextEncoding, textEncodingSql),
+    CatalogEntry("q_sample_epochs_apply", qSampleEpochsApply, sampleEpochsApplySql),
+    CatalogEntry("q_pipeline_ingest", qPipelineIngest, pipelineIngestSql),
+    CatalogEntry("q_pipeline_sft", qPipelineSft, pipelineSftSql),
+    CatalogEntry("q_pipeline_sft_ledger", qPipelineSftLedger, pipelineSftLedgerSql),
+    CatalogEntry("q_pipeline_release", qPipelineRelease, pipelineReleaseSql),
+    CatalogEntry("q_pipeline_release_run", qPipelineReleaseRun, pipelineReleaseSql),
+    CatalogEntry("q_pipeline_release_incr", qPipelineReleaseIncr, pipelineReleaseIncrSql),
+    CatalogEntry("q_release_forget", qReleaseForget, releaseForgetSql),
+    CatalogEntry("q_pipeline_pref", qPipelinePref, pipelinePrefSql),
+    CatalogEntry("q_pipeline_pref_ledger", qPipelinePrefLedger, pipelinePrefLedgerSql),
+    CatalogEntry("q_chat_dedup", qChatDedup, chatDedupSql),
+    CatalogEntry("q_profile_kmv_overlap", qProfileKmvOverlap, profileKmvOverlapSql),
+    CatalogEntry("q_dedup_simhash", qDedupSimhash, dedupSimhashSql),
+    CatalogEntry("q_dedup_minhash", qDedupMinhash, minhashPairsSql(3, 64, 16, 0.5)),
+    CatalogEntry("q_dedup_minhash_capped", qDedupMinhashCapped, minhashPairsSql(3, 64, 16, 0.5, Some(2))),
+    CatalogEntry("q_dedup_ngram_jaccard", qDedupNgramJaccard, minhashPairsSql(2, 64, 16, 0.4)),
+    CatalogEntry("q_dedup_editdist", qDedupEditdist, dedupEditdistSql),
+    CatalogEntry("q_dedup_keep_one", qDedupKeepOne, dedupKeepOneSql),
+    CatalogEntry("q_dedup_incremental", qDedupIncremental, dedupIncrementalSql),
+    CatalogEntry("q_forget", qForget, forgetSql),
+    CatalogEntry("q_dedup_bloom", qDedupBloom, dedupBloomSql),
+    CatalogEntry("q_dedup_cdc", qDedupCdc, dedupCdcSql),
+    CatalogEntry("q_dedup_cdc_incremental", qDedupCdcIncremental, dedupCdcIncrementalSql),
+    CatalogEntry("q_dedup_containment", qDedupContainment, dedupContainmentSql),
+    CatalogEntry("q_span_dupes", qSpanDupes, spanDupesSql),
+    CatalogEntry("q_quality_gate", qQualityGate, qualityGateSql),
+    CatalogEntry("q_snapshot_diff", qSnapshotDiff, snapshotDiffSql),
+    CatalogEntry("q_snapshot_rowdiff", qSnapshotRowdiff, snapshotRowdiffSql),
+    CatalogEntry("q_check_suite", qCheckSuite, checkSuiteSql),
+    CatalogEntry("q_check_fk", qCheckFk, checkFkSql),
+    CatalogEntry("q_privacy_risk", qPrivacyRisk, privacyRiskSql),
+    CatalogEntry("q_agg_incremental", qAggIncremental, aggIncrementalSql),
+    CatalogEntry("q_pseudonymize", qPseudonymize, pseudonymizeSql),
+    CatalogEntry("q_cdc_compact", qCdcCompact, cdcCompactSql),
+    CatalogEntry("q_sample_split", qSampleSplit, sampleSplitSql),
+    CatalogEntry("q_split_decontam", qSplitDecontam, splitDecontamSql),
+    CatalogEntry("q_sample_cap", qSampleCap, sampleCapSql),
+    CatalogEntry("q_sample_stratified", qSampleStratified, sampleStratifiedSql),
+    CatalogEntry("q_sample_mix", qSampleMix, sampleMixSql),
+    CatalogEntry("q_sample_temperature", qSampleTemperature, sampleTemperatureSql),
+    CatalogEntry("q_multimodal_decode", qMultimodalDecode, multimodalDecodeSql),
+    CatalogEntry("q_dedup_components", qDedupComponents, dedupComponentsSql),
+    CatalogEntry("q_graph_pagerank", qGraphPagerank, graphPagerankSql),
+    CatalogEntry("q_graph_ppr", qGraphPpr, graphRankSql(Some(pprSeeds))),
     // Mirrors qGraphTriangles: same canonical a<b<c enumeration over
     // the deduped undirected trade edges, exploded to per-node counts.
-    "q_graph_triangles" ->
+    CatalogEntry("q_graph_triangles", qGraphTriangles,
       """WITH e AS MATERIALIZED (
         |  SELECT c.c_nationkey AS s, su.s_nationkey AS d
         |  FROM lineitem l
@@ -9256,12 +9047,12 @@ object ExtensionQueries {
         |SELECT CAST(node AS BIGINT) AS node,
         |       CAST(count(*) AS BIGINT) AS n_triangles
         |FROM (SELECT unnest([a, b, c]) AS node FROM tri) t
-        |GROUP BY node""".stripMargin,
+        |GROUP BY node""".stripMargin),
     // Mirrors qEventsTransitions: identical lead window keyed
     // (user, ts, event_id) over TIMESTAMP_NS order == the engine's
     // raw-nanos long order; probability is the same exact-count
     // double division.
-    "q_events_transitions" ->
+    CatalogEntry("q_events_transitions", qEventsTransitions,
       """WITH nx AS (
         |  SELECT event_type AS cur,
         |    lead(event_type) OVER (PARTITION BY user_id
@@ -9273,129 +9064,129 @@ object ExtensionQueries {
         |      FROM p GROUP BY cur)
         |SELECT p.cur, p.next, p.n_transitions,
         |  CAST(p.n_transitions AS DOUBLE) / CAST(t.tot AS DOUBLE) AS prob
-        |FROM p JOIN t ON p.cur = t.cur""".stripMargin,
-    "q_pack_shards" ->
+        |FROM p JOIN t ON p.cur = t.cur""".stripMargin),
+    CatalogEntry("q_pack_shards", qPackShards,
       """SELECT doc_id AS id, lang, n_chars AS weight,
         |  CASE WHEN ((rn // 4) % 2) = 0 THEN rn % 4 ELSE 3 - (rn % 4) END AS shard
         |FROM (SELECT doc_id, lang, n_chars,
         |        row_number() OVER (PARTITION BY lang
         |          ORDER BY n_chars DESC, doc_id ASC) - 1 AS rn
-        |      FROM documents) t""".stripMargin,
-    "q_text_perplexity" -> textPerplexitySql,
-    "q_profile_corr" -> profileCorrSql,
-    "q_sample_weighted" -> sampleWeightedSql,
-    "q_pack_split" -> packSplitSql,
-    "q_events_anomaly" -> eventsAnomalySql,
-    "q_events_rolling" -> eventsRollingSql,
-    "q_scd2" -> scd2Sql,
-    "q_layout_zonemaps" -> layoutZonemapsSql,
-    "q_layout_compaction" -> layoutCompactionSql,
-    "q_layout_prune" -> layoutPruneSql,
-    "q_events_gapfill" -> eventsGapfillSql,
-    "q_events_ewma" -> eventsEwmaSql,
-    "q_events_changepoint" -> eventsChangepointSql,
-    "q_events_attribution" -> eventsAttributionSql,
-    "q_interval_overlap" -> intervalOverlapSql,
-    "q_events_trend" -> eventsTrendSql,
-    "q_quality_benford" -> qualityBenfordSql,
-    "q_events_paths" -> eventsPathsSql,
-    "q_profile_robust" -> profileRobustSql,
-    "q_profile_gini" -> profileGiniSql,
-    "q_quality_quantile_map" -> qualityQuantileMapSql,
-    "q_golden_record" -> goldenRecordSql,
-    "q_check_fd" -> checkFdSql,
-    "q_events_seasonal" -> eventsSeasonalSql,
-    "q_embed_truncation" -> embedTruncationSql,
-    "q_events_interarrival" -> eventsInterarrivalSql,
-    "q_events_growth" -> eventsGrowthSql,
-    "q_text_lang_margin" -> textLangMarginSql,
-    "q_text_fertility" -> textFertilitySql,
-    "q_union_evolved" -> unionEvolvedSql,
-    "q_union_evolved_nested" -> unionEvolvedNestedSql,
-    "q_events_conv_latency" -> eventsConvLatencySql,
-    "q_graph_degrees" -> graphDegreesSql,
-    "q_dedup_cluster_sizes" -> dedupClusterSizesSql,
-    "q_sim_index_topk" -> simIvfPqBatchSql,
-    "q_fuzzy_join" -> fuzzyPairsSql,
-    "q_fuzzy_lookup" -> fuzzyLookupSql,
-    "q_fuzzy_jw" -> fuzzyJwSql,
-    "q_refer_fuzzy" -> referFuzzySql,
-    "q_entity_resolution" -> entityResolutionSql,
-    "q_quality_calibrated" -> qualityCalibratedSql,
-    "q_sample_budget" -> sampleBudgetSql,
-    "q_text_postings" -> textPostingsSql,
-    "q_text_bm25" -> textBm25Sql,
-    "q_text_entropy" -> textEntropySql,
-    "q_embed_dimstats" -> embedDimstatsSql,
-    "q_embed_quantize" -> embedQuantizeSql,
-    "q_embed_gram" -> embedGramSql,
-    "q_text_colloc" -> textCollocSql,
-    "q_embed_pca" -> embedPcaSql,
-    "q_dedup_keep_best" -> dedupKeepBestSql,
-    "q_profile_drift" -> profileDriftSql,
-    "q_events_cooccur" -> eventsCooccurSql,
-    "q_dedup_bucket_census" -> dedupBucketCensusSql,
-    "q_ingest_orc" ->
-      "SELECT doc_id, source AS src_tag, n_chars + 1 AS n_chars_p1 FROM documents",
-    "q_text_subwords" ->
+        |      FROM documents) t""".stripMargin),
+    CatalogEntry("q_text_perplexity", qTextPerplexity, textPerplexitySql),
+    CatalogEntry("q_profile_corr", qProfileCorr, profileCorrSql),
+    CatalogEntry("q_sample_weighted", qSampleWeighted, sampleWeightedSql),
+    CatalogEntry("q_pack_split", qPackSplit, packSplitSql),
+    CatalogEntry("q_events_anomaly", qEventsAnomaly, eventsAnomalySql),
+    CatalogEntry("q_events_rolling", qEventsRolling, eventsRollingSql),
+    CatalogEntry("q_scd2", qScd2, scd2Sql),
+    CatalogEntry("q_layout_zonemaps", qLayoutZonemaps, layoutZonemapsSql),
+    CatalogEntry("q_layout_compaction", qLayoutCompaction, layoutCompactionSql),
+    CatalogEntry("q_layout_prune", qLayoutPrune, layoutPruneSql),
+    CatalogEntry("q_events_gapfill", qEventsGapfill, eventsGapfillSql),
+    CatalogEntry("q_events_ewma", qEventsEwma, eventsEwmaSql),
+    CatalogEntry("q_events_changepoint", qEventsChangepoint, eventsChangepointSql),
+    CatalogEntry("q_events_attribution", qEventsAttribution, eventsAttributionSql),
+    CatalogEntry("q_interval_overlap", qIntervalOverlap, intervalOverlapSql),
+    CatalogEntry("q_events_trend", qEventsTrend, eventsTrendSql),
+    CatalogEntry("q_quality_benford", qQualityBenford, qualityBenfordSql),
+    CatalogEntry("q_events_paths", qEventsPaths, eventsPathsSql),
+    CatalogEntry("q_profile_robust", qProfileRobust, profileRobustSql),
+    CatalogEntry("q_profile_gini", qProfileGini, profileGiniSql),
+    CatalogEntry("q_quality_quantile_map", qQualityQuantileMap, qualityQuantileMapSql),
+    CatalogEntry("q_golden_record", qGoldenRecord, goldenRecordSql),
+    CatalogEntry("q_check_fd", qCheckFd, checkFdSql),
+    CatalogEntry("q_events_seasonal", qEventsSeasonal, eventsSeasonalSql),
+    CatalogEntry("q_embed_truncation", qEmbedTruncation, embedTruncationSql),
+    CatalogEntry("q_events_interarrival", qEventsInterarrival, eventsInterarrivalSql),
+    CatalogEntry("q_events_growth", qEventsGrowth, eventsGrowthSql),
+    CatalogEntry("q_text_lang_margin", qTextLangMargin, textLangMarginSql),
+    CatalogEntry("q_text_fertility", qTextFertility, textFertilitySql),
+    CatalogEntry("q_union_evolved", qUnionEvolved, unionEvolvedSql),
+    CatalogEntry("q_union_evolved_nested", qUnionEvolvedNested, unionEvolvedNestedSql),
+    CatalogEntry("q_events_conv_latency", qEventsConvLatency, eventsConvLatencySql),
+    CatalogEntry("q_graph_degrees", qGraphDegrees, graphDegreesSql),
+    CatalogEntry("q_dedup_cluster_sizes", qDedupClusterSizes, dedupClusterSizesSql),
+    CatalogEntry("q_sim_index_topk", qSimIndexTopK, simIvfPqBatchSql),
+    CatalogEntry("q_fuzzy_join", qFuzzyJoin, fuzzyPairsSql),
+    CatalogEntry("q_fuzzy_lookup", qFuzzyLookup, fuzzyLookupSql),
+    CatalogEntry("q_fuzzy_jw", qFuzzyJw, fuzzyJwSql),
+    CatalogEntry("q_refer_fuzzy", qReferFuzzy, referFuzzySql),
+    CatalogEntry("q_entity_resolution", qEntityResolution, entityResolutionSql),
+    CatalogEntry("q_quality_calibrated", qQualityCalibrated, qualityCalibratedSql),
+    CatalogEntry("q_sample_budget", qSampleBudget, sampleBudgetSql),
+    CatalogEntry("q_text_postings", qTextPostings, textPostingsSql),
+    CatalogEntry("q_text_bm25", qTextBm25, textBm25Sql),
+    CatalogEntry("q_text_entropy", qTextEntropy, textEntropySql),
+    CatalogEntry("q_embed_dimstats", qEmbedDimstats, embedDimstatsSql),
+    CatalogEntry("q_embed_quantize", qEmbedQuantize, embedQuantizeSql),
+    CatalogEntry("q_embed_gram", qEmbedGram, embedGramSql),
+    CatalogEntry("q_text_colloc", qTextColloc, textCollocSql),
+    CatalogEntry("q_embed_pca", qEmbedPca, embedPcaSql),
+    CatalogEntry("q_dedup_keep_best", qDedupKeepBest, dedupKeepBestSql),
+    CatalogEntry("q_profile_drift", qProfileDrift, profileDriftSql),
+    CatalogEntry("q_events_cooccur", qEventsCooccur, eventsCooccurSql),
+    CatalogEntry("q_dedup_bucket_census", qDedupBucketCensus, dedupBucketCensusSql),
+    CatalogEntry("q_ingest_orc", qIngestOrc,
+      "SELECT doc_id, source AS src_tag, n_chars + 1 AS n_chars_p1 FROM documents"),
+    CatalogEntry("q_text_subwords", qTextSubwords,
       s"""SELECT doc_id,
          |  CAST(len(regexp_extract_all(text, '${TextFunctions.subwordPattern}')) AS BIGINT)
          |    AS n_subwords
-         |FROM documents""".stripMargin,
-    "q_sim_brute_topk" -> simBruteTopkSql,
-    "q_sim_lsh_topk" -> simLshTopkSql,
-    "q_sim_ivf_topk" -> simIvfTopkSql,
-    "q_sim_pq_topk" -> simPqTopkSql,
-    "q_sim_ivfpq_batch" -> simIvfPqBatchSql,
-    "q_sim_pq_rerank" -> simPqRerankSql,
-    "q_sim_ivf_distributed" -> simIvfDistributedSql,
-    "q_sim_batch_topk" -> simBatchTopkSql,
-    "q_sim_index_ivf" -> simBatchTopkSql,
-    "q_sim_index_append" -> simIndexAppendSql,
-    "q_sim_index_delete" -> simIndexDeleteSql,
-    "q_sim_index_append_pq" -> simIndexAppendPqSql,
-    "q_sim_margin_pairs" -> simMarginPairsSql,
-    "q_sim_recall_audit" -> simRecallAuditSql,
-    "q_sim_recall_audit_lsh" -> simRecallAuditLshSql,
-    "q_sim_lsh_batch" -> simLshBatchSql,
-    "q_sim_index_lsh" -> simLshBatchSql,
-    "q_sim_index_drift" -> simIndexDriftSql,
-    "q_sim_index_drift_pq" -> simIndexDriftPqSql,
-    "q_sim_index_drift_lsh" -> simIndexDriftLshSql,
-    "q_sim_index_retrain" -> simIndexRetrainSql,
-    "q_store_maintenance" -> storeMaintenanceSql,
-    "q_sim_hard_negatives" -> simHardNegativesSql,
-    "q_embed_centroids" -> embedCentroidsSql,
-    "q_ingest_jsonl" -> ingestJsonlSql,
-    "q_ingest_csv" ->
+         |FROM documents""".stripMargin),
+    CatalogEntry("q_sim_brute_topk", qSimBruteTopK, simBruteTopkSql),
+    CatalogEntry("q_sim_lsh_topk", qSimLshTopK, simLshTopkSql),
+    CatalogEntry("q_sim_ivf_topk", qSimIvfTopK, simIvfTopkSql),
+    CatalogEntry("q_sim_pq_topk", qSimPqTopK, simPqTopkSql),
+    CatalogEntry("q_sim_ivfpq_batch", qSimIvfPqBatch, simIvfPqBatchSql),
+    CatalogEntry("q_sim_pq_rerank", qSimPqRerank, simPqRerankSql),
+    CatalogEntry("q_sim_ivf_distributed", qSimIvfDistributed, simIvfDistributedSql),
+    CatalogEntry("q_sim_batch_topk", qSimBatchTopK, simBatchTopkSql),
+    CatalogEntry("q_sim_index_ivf", qSimIndexIvf, simBatchTopkSql),
+    CatalogEntry("q_sim_index_append", qSimIndexAppend, simIndexAppendSql),
+    CatalogEntry("q_sim_index_delete", qSimIndexDelete, simIndexDeleteSql),
+    CatalogEntry("q_sim_index_append_pq", qSimIndexAppendPq, simIndexAppendPqSql),
+    CatalogEntry("q_sim_margin_pairs", qSimMarginPairs, simMarginPairsSql),
+    CatalogEntry("q_sim_recall_audit", qSimRecallAudit, simRecallAuditSql),
+    CatalogEntry("q_sim_recall_audit_lsh", qSimRecallAuditLsh, simRecallAuditLshSql),
+    CatalogEntry("q_sim_lsh_batch", qSimLshBatch, simLshBatchSql),
+    CatalogEntry("q_sim_index_lsh", qSimIndexLsh, simLshBatchSql),
+    CatalogEntry("q_sim_index_drift", qSimIndexDrift, simIndexDriftSql),
+    CatalogEntry("q_sim_index_drift_pq", qSimIndexDriftPq, simIndexDriftPqSql),
+    CatalogEntry("q_sim_index_drift_lsh", qSimIndexDriftLsh, simIndexDriftLshSql),
+    CatalogEntry("q_sim_index_retrain", qSimIndexRetrain, simIndexRetrainSql),
+    CatalogEntry("q_store_maintenance", qStoreMaintenance, storeMaintenanceSql),
+    CatalogEntry("q_sim_hard_negatives", qSimHardNegatives, simHardNegativesSql),
+    CatalogEntry("q_embed_centroids", qEmbedCentroids, embedCentroidsSql),
+    CatalogEntry("q_ingest_jsonl", qIngestJsonl, ingestJsonlSql),
+    CatalogEntry("q_ingest_csv", qIngestCsv,
       s"""SELECT doc_id, lang AS lang_tag, n_chars * 2 AS n_chars_x2
-         |FROM read_csv_auto('$twinRoot/csvtwin/__SF_BASENAME__/documents.csv/*.csv', header = true)""".stripMargin,
-    "q_dedup_embedding" -> dedupEmbeddingSql,
-    "q_dedup_semantic" -> dedupSemanticSql,
-    "q_dedup_semantic_capped" -> dedupSemanticCappedSql,
-    "q_dedup_incremental_sem" -> dedupIncrementalSemSql,
-    "q_dedup_incremental_emb" -> dedupIncrementalEmbSql,
-    "q_text_stats" ->
+         |FROM read_csv_auto('$twinRoot/csvtwin/__SF_BASENAME__/documents.csv/*.csv', header = true)""".stripMargin),
+    CatalogEntry("q_dedup_embedding", qDedupEmbedding, dedupEmbeddingSql),
+    CatalogEntry("q_dedup_semantic", qDedupSemantic, dedupSemanticSql),
+    CatalogEntry("q_dedup_semantic_capped", qDedupSemanticCapped, dedupSemanticCappedSql),
+    CatalogEntry("q_dedup_incremental_sem", qDedupIncrementalSem, dedupIncrementalSemSql),
+    CatalogEntry("q_dedup_incremental_emb", qDedupIncrementalEmb, dedupIncrementalEmbSql),
+    CatalogEntry("q_text_stats", qTextStats,
       s"""SELECT doc_id, $nTokensSql AS n_tokens,
          |       (CAST(length(regexp_replace(text, '$ws+', '', 'g')) AS DOUBLE)
          |        / CAST(greatest($nTokensSql, 1) AS DOUBLE)) AS mean_token_len,
          |       md5(trim(regexp_replace(lower(text), '$ws+', ' ', 'g'))) AS fp
-         |FROM documents""".stripMargin,
-    "q_text_langid" -> langCaseSql,
-    "q_text_repetition" -> textRepetitionSql,
-    "q_text_decontam" -> textDecontamSql,
-    "q_text_decontam_scrub" -> textDecontamScrubSql,
-    "q_dedup_scrub_spans" -> dedupScrubSpansSql,
-    "q_quality_distill" -> qualityDistillSql,
-    "q_quality_distill_score" -> qualityDistillScoreSql,
-    "q_quality_distill_warm" -> qualityDistillWarmSql,
-    "q_quality_distill_eval" -> qualityDistillEvalSql,
-    "q_pack_chunks" -> packChunksSql,
-    "q_embed_outliers" -> embedOutliersSql,
+         |FROM documents""".stripMargin),
+    CatalogEntry("q_text_langid", qTextLangid, langCaseSql),
+    CatalogEntry("q_text_repetition", qTextRepetition, textRepetitionSql),
+    CatalogEntry("q_text_decontam", qTextDecontam, textDecontamSql),
+    CatalogEntry("q_text_decontam_scrub", qTextDecontamScrub, textDecontamScrubSql),
+    CatalogEntry("q_dedup_scrub_spans", qDedupScrubSpans, dedupScrubSpansSql),
+    CatalogEntry("q_quality_distill", qQualityDistill, qualityDistillSql),
+    CatalogEntry("q_quality_distill_score", qQualityDistillScore, qualityDistillScoreSql),
+    CatalogEntry("q_quality_distill_warm", qQualityDistillWarm, qualityDistillWarmSql),
+    CatalogEntry("q_quality_distill_eval", qQualityDistillEval, qualityDistillEvalSql),
+    CatalogEntry("q_pack_chunks", qPackChunks, packChunksSql),
+    CatalogEntry("q_embed_outliers", qEmbedOutliers, embedOutliersSql),
     // Same built PII payload as the query (lpad/concat replay), then
     // the shared redact chain via TextFunctions.redactSql — pattern
     // constants and application order come from ONE place.
-    "q_text_redact" -> {
+    CatalogEntry("q_text_redact", qTextRedact, {
       val last4 = "lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')"
       val pii = "text || ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com'" +
         s" || ' tel +1 (555) 010-' || $last4" +
@@ -9407,32 +9198,32 @@ object ExtensionQueries {
       s"""SELECT doc_id,
          |  ${TextFunctions.redactSql(s"($pii)")} AS clean_text
          |FROM documents""".stripMargin
-    },
+    }),
     // Codepoint-identical payload (text || chr()-built probe), then
     // the shared strip+NFC chain — TextFunctions.normalizeTextSql
     // fixes the same order (controls first, then nfc_normalize).
-    "q_text_normalize" -> {
+    CatalogEntry("q_text_normalize", qTextNormalize, {
       val payload = s"(text || $normProbeSql)"
       val norm = TextFunctions.normalizeTextSql(payload)
       s"""SELECT doc_id, clean_text,
          |  CAST(length(clean_text) AS BIGINT) AS n_clean
          |FROM (SELECT doc_id, $norm AS clean_text FROM documents)""".stripMargin
-    },
+    }),
     // Same built page as the query, then the shared boilerplate
     // chain from TextFunctions.boilerplateSteps — one constant list,
     // two engines.
-    "q_text_boilerplate" -> {
+    CatalogEntry("q_text_boilerplate", qTextBoilerplate, {
       val payload = s"('$htmlPrefix' || text || '$htmlSuffix')"
       val stripped = TextFunctions.stripBoilerplateSql(payload)
       s"""SELECT doc_id, clean_text,
          |  CAST(length(clean_text) AS BIGINT) AS n_clean
          |FROM (SELECT doc_id, $stripped AS clean_text FROM documents)""".stripMargin
-    },
+    }),
     // Mirrors [[qTextOov]]: the same top-20 (freq desc, token asc)
     // vocabulary cut, then a per-row membership sweep — the oov count
     // is an exact integer over the token count, both engines dividing
     // the identical numerator/denominator.
-    "q_text_oov" ->
+    CatalogEntry("q_text_oov", qTextOov,
       s"""WITH v AS (SELECT token FROM (
          |  SELECT token, count(*) AS freq
          |  FROM (SELECT unnest($tokensLowerSql) AS token FROM documents) t
@@ -9441,22 +9232,22 @@ object ExtensionQueries {
          |SELECT doc_id, $nTokensSql AS n_tokens,
          |  CAST(len(list_filter($tokensLowerSql, t -> NOT list_contains(vl.vs, t))) AS DOUBLE)
          |    / CAST(greatest($nTokensSql, 1) AS DOUBLE) AS oov_rate
-         |FROM documents, vl""".stripMargin,
-    "q_text_vocab" ->
+         |FROM documents, vl""".stripMargin),
+    CatalogEntry("q_text_vocab", qTextVocab,
       s"""SELECT token, freq, df FROM (
          |  SELECT token, count(*) AS freq, count(DISTINCT doc_id) AS df
          |  FROM (SELECT doc_id, unnest($tokensLowerSql) AS token FROM documents) t
          |  GROUP BY token)
-         |ORDER BY freq DESC, token ASC LIMIT 50""".stripMargin,
-    "q_text_quality" ->
+         |ORDER BY freq DESC, token ASC LIMIT 50""".stripMargin),
+    CatalogEntry("q_text_quality", qTextQuality,
       s"""SELECT doc_id,
          |  $alphaRatioSql AS alpha_ratio,
          |  $stopRatioSql AS stopword_ratio,
          |  $alphaRatioSql * 0.4 + $stopRatioSql * 0.3
          |    + least(CAST($nTokensSql AS DOUBLE) / 100.0, 1.0) * 0.2
          |    + (1.0 - $punctRatioSql) * 0.1 AS quality
-         |FROM documents""".stripMargin,
-    "q_pipeline_filter" ->
+         |FROM documents""".stripMargin),
+    CatalogEntry("q_pipeline_filter", qPipelineFilter,
       s"""SELECT doc_id, lang_pred, quality, n_tokens FROM (
          |  SELECT doc_id,
          |    $langPredCaseSql AS lang_pred,
@@ -9465,24 +9256,24 @@ object ExtensionQueries {
          |      + (1.0 - $punctRatioSql) * 0.1 AS quality,
          |    $nTokensSql AS n_tokens
          |  FROM (SELECT doc_id, text, $langBestSql AS __best FROM documents) t) w
-         |WHERE lang_pred = 'en' AND quality >= 0.5 AND n_tokens BETWEEN 5 AND 1000""".stripMargin,
-    "q_pipeline_clean" -> pipelineCleanSql,
-    "q_dedup_exact" ->
-      "SELECT text, MIN(doc_id) AS keep_id, COUNT(*) AS n_copies FROM documents GROUP BY text",
-    "q_dedup_fingerprint" ->
+         |WHERE lang_pred = 'en' AND quality >= 0.5 AND n_tokens BETWEEN 5 AND 1000""".stripMargin),
+    CatalogEntry("q_pipeline_clean", qPipelineClean, pipelineCleanSql),
+    CatalogEntry("q_dedup_exact", qDedupExact,
+      "SELECT text, MIN(doc_id) AS keep_id, COUNT(*) AS n_copies FROM documents GROUP BY text"),
+    CatalogEntry("q_dedup_fingerprint", qDedupFingerprint,
       s"""SELECT doc_id, fp FROM (
         |  SELECT doc_id, md5(trim(regexp_replace(lower(text), '$ws+', ' ', 'g'))) AS fp,
         |         row_number() OVER (PARTITION BY md5(trim(regexp_replace(lower(text), '$ws+', ' ', 'g')))
         |                            ORDER BY doc_id) AS rn
         |  FROM documents) t
-        |WHERE rn = 1""".stripMargin,
-    "q_multimodal_meta" ->
-      "SELECT doc_id, 'image/stub' AS media_type, CAST(strlen(text) AS BIGINT) AS byte_len FROM documents",
+        |WHERE rn = 1""".stripMargin),
+    CatalogEntry("q_multimodal_meta", qMultimodalMeta,
+      "SELECT doc_id, 'image/stub' AS media_type, CAST(strlen(text) AS BIGINT) AS byte_len FROM documents"),
     // Mirrors Profile.histogram(bins=10): min/max/width derived in
     // the same double op order ((mx-mn)/10, then least(9, floor((x -
     // mn)/w))), so the bucket cuts and bounds match bit for bit; the
     // width=0 degenerate collapses to bucket 0 in both engines.
-    "q_profile_histogram" ->
+    CatalogEntry("q_profile_histogram", qProfileHistogram,
       s"""WITH mm AS (SELECT min(CAST(o_totalprice AS DOUBLE)) AS mn,
          |                   max(CAST(o_totalprice AS DOUBLE)) AS mx FROM orders),
          |p AS (SELECT mn, (mx - mn) / 10 AS w FROM mm),
@@ -9494,7 +9285,7 @@ object ExtensionQueries {
          |       p.mn + (b.bucket + 1) * p.w AS hi,
          |       count(*) AS n
          |FROM b, p
-         |GROUP BY b.bucket, p.mn, p.w""".stripMargin,
+         |GROUP BY b.bucket, p.mn, p.w""".stripMargin),
     // Mirrors [[qProfileKmv]] (Profile.kmvSketch k=16): same canonical
     // text -> FNV-1a -> SplitMix64 hash chain as the Spark side
     // (textFnvU + mixCtes), then the KMV sketch IS plain SQL — the k
@@ -9503,30 +9294,30 @@ object ExtensionQueries {
     // surfaced in signed-bits form, and the estimator exact HUGEINT
     // floor-division (the Spark side's remainder-subtracted DECIMAL
     // division computes the identical integer).
-    "q_profile_kmv" -> profileKmvSql,
+    CatalogEntry("q_profile_kmv", qProfileKmv, profileKmvSql),
     // Same SQL ON PURPOSE: the merge query unions per-(source, batch)
     // sketches back per source, and KMV's closure property says that
     // must equal the direct whole-source sketch — the oracle holds
     // the merge path to exactly that.
-    "q_profile_kmv_merge" -> profileKmvSql,
-    "q_profile_cms" -> profileCmsSql,
-    "q_profile_cms_merge" -> profileCmsSql,
-    "q_profile_cms_hh" -> profileCmsHhSql,
-    "q_dedup_lines" -> dedupLinesSql,
-    "q_dedup_lines_incremental" -> dedupLinesIncrementalSql,
-    "q_dedup_report" -> dedupReportSql,
-    "q_sample_dsir" -> sampleDsirSql,
-    "q_pack_bins" -> packBinsSql,
-    "q_pack_bins_stats" -> packBinsStatsSql,
-    "q_pack_bins_bpe" -> packBinsBpeSql,
-    "q_text_feature_hash" -> textFeatureHashSql,
-    "q_multimodal_keep_one" -> multimodalKeepOneSql,
-    "q_dedup_multisignal" -> dedupMultisignalSql,
-    "q_text_bpe_segment" -> textBpeSql(8, segment = true),
+    CatalogEntry("q_profile_kmv_merge", qProfileKmvMerge, profileKmvSql),
+    CatalogEntry("q_profile_cms", qProfileCms, profileCmsSql),
+    CatalogEntry("q_profile_cms_merge", qProfileCmsMerge, profileCmsSql),
+    CatalogEntry("q_profile_cms_hh", qProfileCmsHh, profileCmsHhSql),
+    CatalogEntry("q_dedup_lines", qDedupLines, dedupLinesSql),
+    CatalogEntry("q_dedup_lines_incremental", qDedupLinesIncremental, dedupLinesIncrementalSql),
+    CatalogEntry("q_dedup_report", qDedupReport, dedupReportSql),
+    CatalogEntry("q_sample_dsir", qSampleDsir, sampleDsirSql),
+    CatalogEntry("q_pack_bins", qPackBins, packBinsSql),
+    CatalogEntry("q_pack_bins_stats", qPackBinsStats, packBinsStatsSql),
+    CatalogEntry("q_pack_bins_bpe", qPackBinsBpe, packBinsBpeSql),
+    CatalogEntry("q_text_feature_hash", qTextFeatureHash, textFeatureHashSql),
+    CatalogEntry("q_multimodal_keep_one", qMultimodalKeepOne, multimodalKeepOneSql),
+    CatalogEntry("q_dedup_multisignal", qDedupMultisignal, dedupMultisignalSql),
+    CatalogEntry("q_text_bpe_segment", qTextBpeSegment, textBpeSql(8, segment = true)),
     // Mirrors [[qTextBigrams]] (vocabularyNgrams n=2 k=40): shingles'
     // two branches (windows when len >= n, whole-doc gram otherwise),
     // same (freq desc, gram asc) cut.
-    "q_text_bigrams" ->
+    CatalogEntry("q_text_bigrams", qTextBigrams,
       s"""WITH toks AS (SELECT doc_id,
          |  list_filter(regexp_split_to_array(lower(text), '$ws+'), x -> x <> '') AS t
          |  FROM documents),
@@ -9539,11 +9330,11 @@ object ExtensionQueries {
          |SELECT gram, freq, df FROM (
          |  SELECT gram, count(*) AS freq, count(DISTINCT doc_id) AS df
          |  FROM grams GROUP BY gram)
-         |ORDER BY freq DESC, gram ASC LIMIT 40""".stripMargin,
+         |ORDER BY freq DESC, gram ASC LIMIT 40""".stripMargin),
     // Mirrors [[qEventsRetention]] (Funnel.cohortRetention, weekly):
     // integer period arithmetic (`div` == `//` on epoch micros),
     // per-(user, period) distinct, min-period cohort join, count.
-    "q_events_retention" ->
+    CatalogEntry("q_events_retention", qEventsRetention,
       """WITH up AS (SELECT DISTINCT user_id,
         |    epoch_us(ts) // 604800000000 AS p FROM events),
         |c AS (SELECT user_id, min(p) AS cohort FROM up GROUP BY user_id)
@@ -9551,21 +9342,21 @@ object ExtensionQueries {
         |       CAST(up.p - c.cohort AS BIGINT) AS period_offset,
         |       CAST(count(*) AS BIGINT) AS n_users
         |FROM up JOIN c ON up.user_id = c.user_id
-        |GROUP BY c.cohort, up.p - c.cohort""".stripMargin,
+        |GROUP BY c.cohort, up.p - c.cohort""".stripMargin),
     // Mirrors [[qZorderValue]] (Layout.zValue, 16 bits): identical
     // shift/mask interleave on BIGINT — integer-exact in both engines.
-    "q_zorder_value" -> {
+    CatalogEntry("q_zorder_value", qZorderValue, {
       val terms = (0 until 16).flatMap { i =>
         Seq(s"((((o_custkey & 65535) >> $i) & 1) << ${2 * i})",
           s"((((o_orderkey & 65535) >> $i) & 1) << ${2 * i + 1})")
       }.mkString(" | ")
       s"SELECT o_orderkey, CAST($terms AS BIGINT) AS zval FROM orders"
-    },
+    }),
     // Mirrors [[qUrlCanonical]] (TextFunctions.canonicalizeUrl): the
     // identical RE2-safe step chain; only the capture-replacement
     // token differs (Java $1, RE2 \1 — single-quoted SQL passes the
     // backslash through verbatim).
-    "q_url_canonical" -> {
+    CatalogEntry("q_url_canonical", qUrlCanonical, {
       val raw = "'https://' || upper(source) || '.Example.COM:443/Docs/' || " +
         "CAST(doc_id AS VARCHAR) || '/?utm_source=feed&id=' || " +
         "CAST(doc_id AS VARCHAR) || '&utm_campaign=x&fbclid=abc#frag'"
@@ -9582,10 +9373,10 @@ object ExtensionQueries {
          |    || substr(u, length(sh) + 1, 1000000) AS u
          |  FROM sp)
          |SELECT doc_id, regexp_replace(u, '/$$', '') AS url FROM cn""".stripMargin
-    },
+    }),
     // Mirrors Profile.quantileBuckets(n=4): the same quantile_cont
     // cut points, the same strict-> comparison chain (ties land low).
-    "q_profile_buckets" ->
+    CatalogEntry("q_profile_buckets", qProfileBuckets,
       """WITH q AS (SELECT quantile_cont(n_chars, 0.25) AS t1,
         |                  quantile_cont(n_chars, 0.5) AS t2,
         |                  quantile_cont(n_chars, 0.75) AS t3 FROM documents)
@@ -9594,21 +9385,21 @@ object ExtensionQueries {
         |         + (CASE WHEN CAST(n_chars AS DOUBLE) > q.t2 THEN 1 ELSE 0 END)
         |         + (CASE WHEN CAST(n_chars AS DOUBLE) > q.t3 THEN 1 ELSE 0 END)
         |       AS BIGINT) AS bucket
-        |FROM documents, q""".stripMargin,
+        |FROM documents, q""".stripMargin),
     // Mirrors Profile.madOutliers(k=1.9): quantile_cont medians (the
     // established percentile bit-parity), |x-med| > 1.9*mad in the
     // identical double op order, med/mad attached as the same values.
-    "q_profile_outliers" ->
+    CatalogEntry("q_profile_outliers", qProfileOutliers,
       """WITH m AS (SELECT quantile_cont(CAST(o_totalprice AS DOUBLE), 0.5) AS med FROM orders),
         |d AS (SELECT quantile_cont(abs(CAST(o_totalprice AS DOUBLE) - m.med), 0.5) AS mad,
         |             m.med AS med
         |      FROM orders, m GROUP BY m.med)
         |SELECT o_orderkey, CAST(o_totalprice AS DOUBLE) AS value, d.med, d.mad
         |FROM orders, d
-        |WHERE abs(CAST(o_totalprice AS DOUBLE) - d.med) > 1.9 * d.mad""".stripMargin,
+        |WHERE abs(CAST(o_totalprice AS DOUBLE) - d.med) > 1.9 * d.mad""".stripMargin),
     // Mirrors TextFunctions.topTfidfTerms(k=3): same tf/df counts,
     // same (tf·N)/df double order, same (tfidf desc, token asc) cut.
-    "q_text_tfidf" ->
+    CatalogEntry("q_text_tfidf", qTextTfidf,
       s"""WITH tf AS MATERIALIZED (
          |  SELECT doc_id, token, count(*) AS tf FROM
          |    (SELECT doc_id, unnest($tokensLowerSql) AS token FROM documents) x
@@ -9622,20 +9413,22 @@ object ExtensionQueries {
          |      ORDER BY CAST(tf.tf AS DOUBLE) * n.nd / CAST(d.df AS DOUBLE) DESC,
          |               tf.token ASC) AS rn
          |  FROM tf JOIN dfreq d ON tf.token = d.token, n) t
-         |WHERE rn <= 3""".stripMargin,
-    "q_profile_quantiles" -> Seq("o_totalprice", "o_custkey").map { c =>
-      s"""SELECT '$c' AS "column",
-         |  quantile_cont($c, 0.25) AS q25,
-         |  quantile_cont($c, 0.5) AS q50,
-         |  quantile_cont($c, 0.75) AS q75
-         |FROM orders""".stripMargin
-    }.mkString("\nUNION ALL\n"),
-    "q_profile" -> Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice").map { c =>
-      s"""SELECT '$c' AS "column", count(*) AS n_rows,
-         |  count(*) - count($c) AS n_nulls,
-         |  count(DISTINCT $c) AS n_distinct,
-         |  CAST(min($c) AS VARCHAR) AS min_value,
-         |  CAST(max($c) AS VARCHAR) AS max_value
-         |FROM orders""".stripMargin
-    }.mkString("\nUNION ALL\n"))
+         |WHERE rn <= 3""".stripMargin),
+    CatalogEntry("q_profile_quantiles", qProfileQuantiles,
+      Seq("o_totalprice", "o_custkey").map { c =>
+        s"""SELECT '$c' AS "column",
+           |  quantile_cont($c, 0.25) AS q25,
+           |  quantile_cont($c, 0.5) AS q50,
+           |  quantile_cont($c, 0.75) AS q75
+           |FROM orders""".stripMargin
+      }.mkString("\nUNION ALL\n")),
+    CatalogEntry("q_profile", qProfile,
+      Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice").map { c =>
+        s"""SELECT '$c' AS "column", count(*) AS n_rows,
+           |  count(*) - count($c) AS n_nulls,
+           |  count(DISTINCT $c) AS n_distinct,
+           |  CAST(min($c) AS VARCHAR) AS min_value,
+           |  CAST(max($c) AS VARCHAR) AS max_value
+           |FROM orders""".stripMargin
+      }.mkString("\nUNION ALL\n")))
 }

@@ -39,10 +39,6 @@ private[queries] object HashSql {
   def toS(x: String): String =
     s"CAST((CASE WHEN ($x) >= $HALF THEN ($x) - $M64 ELSE ($x) END) AS BIGINT)"
 
-  /** signed BIGINT -> unsigned [0,2^64). */
-  def toU(x: String): String =
-    s"(CASE WHEN ($x) < 0 THEN CAST(($x) AS HUGEINT) + $M64 ELSE CAST(($x) AS HUGEINT) END)"
-
   /** Bitwise XOR in the unsigned domain. DuckDB's `xor` operates on
     * HUGEINT directly, and for operands in [0, 2^64) the 128-bit
     * result equals the 64-bit unsigned xor — no signed round-trip

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.StringType
 import graft.operators.Transportor
 import graft.plans._
 import graft.sources.{OverlayIO, ParquetDirIO}
+import Catalog.{Q, pq}
 
 /** One named query per reference operator (SURVEY.md §2 inventory),
   * exercised THROUGH the graft engine over the driver's TPC-H-ish
@@ -20,8 +21,6 @@ import graft.sources.{OverlayIO, ParquetDirIO}
 object ParityQueries {
 
   private def io(spark: SparkSession, dir: String) = new ParquetDirIO(spark, dir, dir)
-  private def pq(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
 
   /** events.parquet's `ts` physical type varies across generator
     * versions: TIMESTAMP(NANOS) (which Spark's vectorized reader
@@ -44,8 +43,6 @@ object ParityQueries {
       case _ => raw
     }
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   // ------------------------------------------------------------------
   // S1/S2: chunked + filtered scan (filters pushed down by Catalyst,
@@ -571,117 +568,79 @@ object ParityQueries {
 
   // ------------------------------------------------------------------
 
-  val all: Map[String, Q] = Map(
-    "q_filter_scan" -> qFilterScan,
-    "q_predicate_set" -> qPredicateSet,
-    "q_ordered_scan" -> qOrderedScan,
-    "q_rename" -> qRename,
-    "q_inject" -> qInject,
-    "q_null_default" -> qNullDefault,
-    "q_row_udf" -> qRowUdf,
-    "q_affection" -> qAffection,
-    "q_temp_drop" -> qTempDrop,
-    "q_refer_single" -> qReferSingle,
-    "q_refer_salted" -> qReferSalted,
-    "q_refer_formatted" -> qReferFormatted,
-    "q_refer_composite" -> qReferComposite,
-    "q_refers_agg" -> qRefersAgg,
-    "q_middle_bridge" -> qMiddleBridge,
-    "q_refer_target_dep" -> qReferTargetDep,
-    "q_json_plan" -> qJsonPlan,
-    "q_union_append" -> qUnionAppend,
-    "q_agg_group" -> qAggGroup,
-    "q_distinct" -> qDistinct,
-    "q_topk" -> qTopK,
-    "q_window_rank" -> qWindowRank,
-    "q_events_hourly" -> qEventsHourly,
-    "q_events_hopping" -> qEventsHopping,
-    "q_events_sessionize" -> qEventsSessionize,
-    "q_events_session_stats" -> qEventsSessionStats,
-    "q_events_funnel" -> qEventsFunnel,
-    "q_asof_join" -> qAsofJoin,
-    "q_range_join" -> qRangeJoin,
-    "q_rollup" -> qRollup,
-    "q_cube" -> qCube,
-    "q_pivot" -> qPivot,
-    "q_unpivot" -> qUnpivot,
-    "q_json_extract" -> qJsonExtract,
-    "q_scalar_funcs" -> qScalarFuncs,
-    "q_semi_join" -> qSemiJoin,
-    "q_anti_join" -> qAntiJoin)
-
-  val oracle: Map[String, String] = Map(
-    "q_filter_scan" ->
+  /** The catalog: each query beside its DuckDB oracle. */
+  val entries: Seq[CatalogEntry] = Seq(
+    CatalogEntry("q_filter_scan", qFilterScan,
       """SELECT * FROM orders
         |WHERE o_orderstatus = 'F' AND o_totalprice > 50000.0
         |  AND o_orderpriority IS NOT NULL
-        |  AND o_orderdate < TIMESTAMP '2001-01-01 00:00:00'""".stripMargin,
-    "q_predicate_set" ->
+        |  AND o_orderdate < TIMESTAMP '2001-01-01 00:00:00'""".stripMargin),
+    CatalogEntry("q_predicate_set", qPredicateSet,
       """SELECT * FROM part
         |WHERE p_type LIKE '%ECO%' AND p_name NOT LIKE '%green%'
         |  AND p_size IN (1,5,9,15,23,24)
         |  AND p_brand NOT IN ('Brand#11','Brand#12')
         |  AND p_retailprice BETWEEN 900.0 AND 1600.0
         |  AND p_size NOT BETWEEN 10 AND 14
-        |  AND p_partkey % 2 = 0""".stripMargin,
-    "q_ordered_scan" ->
-      "SELECT o_orderkey, o_totalprice FROM orders WHERE o_totalprice > 150000.0 ORDER BY o_totalprice DESC",
-    "q_rename" ->
-      "SELECT c_custkey AS id, c_name AS username, c_nationkey AS nation_id, c_acctbal AS balance FROM customer",
-    "q_inject" ->
-      "SELECT c_custkey AS id, 'migrated' AS status, 1 AS batch_no FROM customer",
-    "q_null_default" ->
-      "SELECT c_custkey AS id, COALESCE(NULLIF(c_mktsegment, 'BUILDING'), 'REPLACED') AS seg FROM customer",
-    "q_row_udf" ->
-      "SELECT c_custkey AS id, c_name || '-' || CAST(c_custkey AS VARCHAR) AS tagged FROM customer",
-    "q_affection" ->
+        |  AND p_partkey % 2 = 0""".stripMargin),
+    CatalogEntry("q_ordered_scan", qOrderedScan,
+      "SELECT o_orderkey, o_totalprice FROM orders WHERE o_totalprice > 150000.0 ORDER BY o_totalprice DESC"),
+    CatalogEntry("q_rename", qRename,
+      "SELECT c_custkey AS id, c_name AS username, c_nationkey AS nation_id, c_acctbal AS balance FROM customer"),
+    CatalogEntry("q_inject", qInject,
+      "SELECT c_custkey AS id, 'migrated' AS status, 1 AS batch_no FROM customer"),
+    CatalogEntry("q_null_default", qNullDefault,
+      "SELECT c_custkey AS id, COALESCE(NULLIF(c_mktsegment, 'BUILDING'), 'REPLACED') AS seg FROM customer"),
+    CatalogEntry("q_row_udf", qRowUdf,
+      "SELECT c_custkey AS id, c_name || '-' || CAST(c_custkey AS VARCHAR) AS tagged FROM customer"),
+    CatalogEntry("q_affection", qAffection,
       """SELECT c_custkey AS id, str_split(c_name, '#')[1] AS name_prefix,
         |       CAST(str_split(c_name, '#')[2] AS BIGINT) AS name_num
-        |FROM customer""".stripMargin,
-    "q_temp_drop" ->
-      "SELECT c_custkey AS id, c_mktsegment || ':' || c_name AS seg_tag FROM customer",
-    "q_refer_single" ->
+        |FROM customer""".stripMargin),
+    CatalogEntry("q_temp_drop", qTempDrop,
+      "SELECT c_custkey AS id, c_mktsegment || ':' || c_name AS seg_tag FROM customer"),
+    CatalogEntry("q_refer_single", qReferSingle,
       """SELECT o.o_orderkey, o.o_custkey, COALESCE(l.c_name, 'UNKNOWN') AS cust_name
         |FROM orders o
         |LEFT JOIN (SELECT c_custkey, MIN(c_name) AS c_name FROM customer
         |           WHERE c_acctbal > 2000.0 GROUP BY c_custkey) l
-        |ON o.o_custkey = l.c_custkey""".stripMargin,
+        |ON o.o_custkey = l.c_custkey""".stripMargin),
     // identical SQL on purpose: salting is result-invariant
-    "q_refer_salted" ->
+    CatalogEntry("q_refer_salted", qReferSalted,
       """SELECT o.o_orderkey, o.o_custkey, COALESCE(l.c_name, 'UNKNOWN') AS cust_name
         |FROM orders o
         |LEFT JOIN (SELECT c_custkey, MIN(c_name) AS c_name FROM customer
         |           WHERE c_acctbal > 2000.0 GROUP BY c_custkey) l
-        |ON o.o_custkey = l.c_custkey""".stripMargin,
-    "q_refer_formatted" ->
+        |ON o.o_custkey = l.c_custkey""".stripMargin),
+    CatalogEntry("q_refer_formatted", qReferFormatted,
       """SELECT s.s_suppkey,
         |       CASE WHEN l.n_name IS NOT NULL THEN lower(l.n_name) ELSE 'NONE' END AS nation_tag
         |FROM supplier s
         |LEFT JOIN (SELECT n_nationkey, MIN(n_name) AS n_name FROM nation GROUP BY n_nationkey) l
-        |ON s.s_nationkey + 0 = l.n_nationkey""".stripMargin,
-    "q_refer_composite" ->
+        |ON s.s_nationkey + 0 = l.n_nationkey""".stripMargin),
+    CatalogEntry("q_refer_composite", qReferComposite,
       """SELECT li.l_orderkey, li.l_linenumber, b.w AS big_qty
         |FROM lineitem li
         |LEFT JOIN (SELECT l_orderkey AS k1, l_linenumber AS k2, MIN(l_quantity) AS w
         |           FROM lineitem WHERE l_quantity > 25.0 GROUP BY 1, 2) b
-        |ON li.l_orderkey = b.k1 AND li.l_linenumber = b.k2""".stripMargin,
-    "q_refers_agg" ->
+        |ON li.l_orderkey = b.k1 AND li.l_linenumber = b.k2""".stripMargin),
+    CatalogEntry("q_refers_agg", qRefersAgg,
       """SELECT o.o_orderkey, COALESCE(l.s, 0.0) AS total_spend
         |FROM orders o
         |LEFT JOIN (SELECT l_orderkey,
         |                  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS s
         |           FROM lineitem WHERE l_quantity > 10.0 GROUP BY l_orderkey) l
-        |ON o.o_orderkey = l.l_orderkey""".stripMargin,
-    "q_middle_bridge" ->
+        |ON o.o_orderkey = l.l_orderkey""".stripMargin),
+    CatalogEntry("q_middle_bridge", qMiddleBridge,
       """SELECT l_orderkey AS order_id, l_partkey AS part_id FROM lineitem
-        |WHERE l_partkey IN (SELECT p_partkey FROM part)""".stripMargin,
-    "q_refer_target_dep" ->
+        |WHERE l_partkey IN (SELECT p_partkey FROM part)""".stripMargin),
+    CatalogEntry("q_refer_target_dep", qReferTargetDep,
       """SELECT c.c_custkey AS id, COALESCE(l.nation_name, 'NONE') AS nation_name
         |FROM customer c
         |LEFT JOIN (SELECT n_nationkey AS nation_id, MIN(n_name) AS nation_name
         |           FROM nation GROUP BY 1) l
-        |ON c.c_nationkey = l.nation_id""".stripMargin,
-    "q_json_plan" ->
+        |ON c.c_nationkey = l.nation_id""".stripMargin),
+    CatalogEntry("q_json_plan", qJsonPlan,
       """SELECT s.s_suppkey, upper(s.s_name) AS sname,
         |       COALESCE(n.n_name, 'NONE') AS origin,
         |       COALESCE(l.c, 0) AS li_count
@@ -690,15 +649,15 @@ object ParityQueries {
         |  ON s.s_nationkey = n.n_nationkey
         |LEFT JOIN (SELECT l_suppkey, count(1) AS c FROM lineitem GROUP BY 1) l
         |  ON s.s_suppkey = l.l_suppkey
-        |WHERE s.s_acctbal > 0.0""".stripMargin,
-    "q_union_append" ->
+        |WHERE s.s_acctbal > 0.0""".stripMargin),
+    CatalogEntry("q_union_append", qUnionAppend,
       """SELECT c_custkey AS id, c_mktsegment AS segment FROM customer WHERE c_mktsegment = 'AUTOMOBILE'
         |UNION ALL
-        |SELECT c_custkey AS id, c_mktsegment AS segment FROM customer WHERE c_mktsegment = 'BUILDING'""".stripMargin,
+        |SELECT c_custkey AS id, c_mktsegment AS segment FROM customer WHERE c_mktsegment = 'BUILDING'""".stripMargin),
     // money sums mirror moneySum: round to integer cents, exact
     // integer accumulate (DuckDB BIGINT sum promotes to HUGEINT —
     // never overflows), cast the exact integer to DOUBLE, divide
-    "q_agg_group" ->
+    CatalogEntry("q_agg_group", qAggGroup,
       """SELECT l_returnflag, l_linestatus,
         |  CAST(SUM(CAST(round(l_quantity * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS sum_qty,
         |  CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS sum_base_price,
@@ -706,60 +665,60 @@ object ParityQueries {
         |  count(*) AS count_order
         |FROM lineitem
         |WHERE l_shipdate <= TIMESTAMP '2000-12-01 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus""".stripMargin,
-    "q_distinct" ->
-      "SELECT DISTINCT c_mktsegment FROM customer",
-    "q_topk" ->
-      "SELECT o_orderkey, o_totalprice FROM orders ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10",
-    "q_window_rank" ->
+        |GROUP BY l_returnflag, l_linestatus""".stripMargin),
+    CatalogEntry("q_distinct", qDistinct,
+      "SELECT DISTINCT c_mktsegment FROM customer"),
+    CatalogEntry("q_topk", qTopK,
+      "SELECT o_orderkey, o_totalprice FROM orders ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10"),
+    CatalogEntry("q_window_rank", qWindowRank,
       """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
         |  SELECT o_custkey, o_orderkey, o_totalprice,
         |         row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
         |  FROM orders) t
-        |WHERE rn <= 3""".stripMargin,
-    "q_events_hourly" ->
+        |WHERE rn <= 3""".stripMargin),
+    CatalogEntry("q_events_hourly", qEventsHourly,
       """SELECT date_trunc('hour', ts) AS h, event_type, count(*) AS n,
         |       CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS total_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
-    "q_events_hopping" ->
+        |FROM events GROUP BY 1, 2""".stripMargin),
+    CatalogEntry("q_events_hopping", qEventsHopping,
       """SELECT ws, event_type, count(*) AS n,
         |       CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS total_value
         |FROM (SELECT time_bucket(INTERVAL '30 minutes', ts)
         |               - (o.k * INTERVAL '30 minutes') AS ws,
         |             event_type, value
         |      FROM events CROSS JOIN (VALUES (0), (1)) o(k)) t
-        |GROUP BY 1, 2""".stripMargin,
-    "q_semi_join" ->
+        |GROUP BY 1, 2""".stripMargin),
+    CatalogEntry("q_semi_join", qSemiJoin,
       """SELECT c_custkey, c_name FROM customer
         |WHERE EXISTS (SELECT 1 FROM orders
-        |              WHERE o_custkey = c_custkey AND o_orderstatus = 'O')""".stripMargin,
-    "q_anti_join" ->
+        |              WHERE o_custkey = c_custkey AND o_orderstatus = 'O')""".stripMargin),
+    CatalogEntry("q_anti_join", qAntiJoin,
       """SELECT c_custkey, c_name FROM customer
         |WHERE NOT EXISTS (SELECT 1 FROM orders
-        |                  WHERE o_custkey = c_custkey AND o_orderstatus = 'O')""".stripMargin,
-    "q_rollup" ->
+        |                  WHERE o_custkey = c_custkey AND o_orderstatus = 'O')""".stripMargin),
+    CatalogEntry("q_rollup", qRollup,
       """SELECT l_returnflag, l_linestatus, count(*) AS n,
         |  CAST(SUM(CAST(round(l_quantity * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS qty
-        |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)""".stripMargin,
-    "q_cube" ->
+        |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)""".stripMargin),
+    CatalogEntry("q_cube", qCube,
       """SELECT l_returnflag, l_linestatus, count(*) AS n,
         |  CAST(SUM(CAST(round(l_quantity * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS qty
-        |FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)""".stripMargin,
-    "q_pivot" ->
+        |FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)""".stripMargin),
+    CatalogEntry("q_pivot", qPivot,
       """SELECT o_orderpriority,
         |  CAST(sum(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS "O",
         |  CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS "F",
         |  CAST(sum(CASE WHEN o_orderstatus = 'P' THEN 1 ELSE 0 END) AS BIGINT) AS "P"
-        |FROM orders GROUP BY 1""".stripMargin,
-    "q_unpivot" ->
+        |FROM orders GROUP BY 1""".stripMargin),
+    CatalogEntry("q_unpivot", qUnpivot,
       """SELECT l_orderkey, l_linenumber, 'l_quantity' AS measure, l_quantity AS value FROM lineitem
         |UNION ALL SELECT l_orderkey, l_linenumber, 'l_extendedprice', l_extendedprice FROM lineitem
         |UNION ALL SELECT l_orderkey, l_linenumber, 'l_discount', l_discount FROM lineitem
-        |UNION ALL SELECT l_orderkey, l_linenumber, 'l_tax', l_tax FROM lineitem""".stripMargin,
-    "q_json_extract" ->
+        |UNION ALL SELECT l_orderkey, l_linenumber, 'l_tax', l_tax FROM lineitem""".stripMargin),
+    CatalogEntry("q_json_extract", qJsonExtract,
       """SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_value
-        |FROM events""".stripMargin,
-    "q_scalar_funcs" ->
+        |FROM events""".stripMargin),
+    CatalogEntry("q_scalar_funcs", qScalarFuncs,
       """SELECT o_orderkey,
         |  upper(substring(o_orderpriority, 1, 3)) AS prio3,
         |  CAST(length(o_orderstatus) AS BIGINT) AS status_len,
@@ -770,19 +729,19 @@ object ParityQueries {
         |  CAST(floor(o_totalprice / 1000.0) AS BIGINT) AS price_k,
         |  CAST(o_orderkey % 7 AS BIGINT) AS k_mod,
         |  concat_ws('|', o_orderstatus, o_orderpriority) AS joined
-        |FROM orders""".stripMargin,
-    "q_range_join" ->
+        |FROM orders""".stripMargin),
+    CatalogEntry("q_range_join", qRangeJoin,
       """SELECT l.event_id AS click_id, r.event_id AS purchase_id
         |FROM (SELECT * FROM events WHERE event_type = 'click') l
         |JOIN (SELECT * FROM events WHERE event_type = 'purchase') r
         |  ON l.user_id = r.user_id
-        | AND epoch_us(l.ts) BETWEEN epoch_us(r.ts) - 1800000000 AND epoch_us(r.ts) + 1800000000""".stripMargin,
-    "q_asof_join" ->
+        | AND epoch_us(l.ts) BETWEEN epoch_us(r.ts) - 1800000000 AND epoch_us(r.ts) + 1800000000""".stripMargin),
+    CatalogEntry("q_asof_join", qAsofJoin,
       """SELECT l.event_id, l.user_id, r.value AS last_purchase_value
         |FROM (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click') l
         |ASOF LEFT JOIN (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase') r
-        |  ON l.user_id = r.user_id AND r.ts <= l.ts""".stripMargin,
-    "q_events_sessionize" ->
+        |  ON l.user_id = r.user_id AND r.ts <= l.ts""".stripMargin),
+    CatalogEntry("q_events_sessionize", qEventsSessionize,
       """WITH t AS (
         |  SELECT user_id, event_id, ts,
         |         LAG(ts) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC) AS prev_ts
@@ -792,11 +751,11 @@ object ParityQueries {
         |                      OR epoch_us(ts) - epoch_us(prev_ts) > 1800000000 THEN 1 ELSE 0 END)
         |            OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
         |                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq
-        |FROM t""".stripMargin,
+        |FROM t""".stripMargin),
     // per-session rollup over the identical session assignment; the
     // value mass is a cents-quantized integer sum (order-independent,
     // DuckDB's HUGEINT sum cast back to BIGINT = Spark's long sum)
-    "q_events_session_stats" ->
+    CatalogEntry("q_events_session_stats", qEventsSessionStats,
       """WITH t AS (
         |  SELECT user_id, event_id, ts, value,
         |         LAG(ts) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC) AS prev_ts
@@ -812,11 +771,11 @@ object ParityQueries {
         |       CAST(count(*) AS BIGINT) AS n_events,
         |       epoch_us(max(ts)) - epoch_us(min(ts)) AS duration_us,
         |       CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sum_cents
-        |FROM s GROUP BY user_id, session_seq""".stripMargin,
+        |FROM s GROUP BY user_id, session_seq""".stripMargin),
     // greedy first-completion funnel: t1 = earliest 'view', then the
     // earliest 'click' strictly after t1, then the earliest
     // 'purchase' strictly after t2; completion iff t3 - t1 <= 24h
-    "q_events_funnel" ->
+    CatalogEntry("q_events_funnel", qEventsFunnel,
       """WITH f1 AS (SELECT user_id, min(ts) AS t1
         |            FROM events WHERE event_type = 'view' GROUP BY user_id),
         |f2 AS (SELECT e.user_id, f1.t1, min(e.ts) AS t2
@@ -827,5 +786,5 @@ object ParityQueries {
         |       WHERE e.event_type = 'purchase' GROUP BY e.user_id, f2.t1)
         |SELECT user_id, epoch_us(t1) AS started_us, epoch_us(t3) AS completed_us,
         |       epoch_us(t3) - epoch_us(t1) AS duration_us
-        |FROM f3 WHERE epoch_us(t3) - epoch_us(t1) <= 86400000000""".stripMargin)
+        |FROM f3 WHERE epoch_us(t3) - epoch_us(t1) <= 86400000000""".stripMargin))
 }

@@ -58,6 +58,18 @@ object ColumnBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(cds.sparkSession, lr)
   }
 
+  /** Release `rdd`'s cached blocks. A local checkpoint goes straight
+    * to `SparkContext.unpersistRDD`: `RDD.unpersist` would first WARN,
+    * once per RDD, that its truncated lineage cannot be recomputed,
+    * and a freed cut is never read again. Any other RDD takes
+    * `RDD.unpersist`, which also resets its storage level so a later
+    * read recomputes it uncached. */
+  def unpersist(rdd: org.apache.spark.rdd.RDD[_]): Unit = rdd.checkpointData match {
+    case Some(_: org.apache.spark.rdd.LocalRDDCheckpointData[_]) =>
+      rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+    case _ => rdd.unpersist(blocking = false)
+  }
+
   /** Register a function builder into an existing session's registry
     * (sessionState is private[sql]; the extensions hook only applies
     * at session build time). */

@@ -1,31 +1,21 @@
 package graft
 
+import graft.queries.{ExtensionQueries, ParityQueries}
+
 /** Guards on the driver contract so future edits can't silently drift:
-  * every query either carries oracle SQL or sits on the documented
-  * rows-only allowlist. Only operators built on murmur/FNV hashes
-  * (minhash/simhash band buckets, the multimodal stub decoder) remain
-  * rows-only — those hashes have no DuckDB mirror; each is covered by
-  * ground-truth ScalaTests instead. The vector/cosine queries are
-  * fully oracled via bit-exact double-fold SQL mirrors. */
+  * each catalog entry carries its query and its oracle SQL together,
+  * so the checks left are that names are unique, every oracle SQL is
+  * real text, and the two driver views cover the same names. */
 class ContractSpec extends SparkSpec {
 
-  // Round 7 closed the last waiver: the catalog's distinct-sketch row
-  // is now the KMV sketch (q_profile_kmv — k smallest distinct mix64
-  // hashes, exact-integer estimator), fully SQL-replayable. The
-  // DataSketches HLL variant stays in the library (Profile.
-  // distinctSketch) covered by ExtensionSpec's estimate band + merge
-  // identity; its estimator is library-specific, so it never rides
-  // the driver catalog. Every catalog query carries oracle SQL.
-  private val rowsOnlyAllowlist = Set.empty[String]
-
-  test("every query has oracle SQL or a documented rows-only waiver") {
-    val queries = SparkEntry.queries.keySet
-    val oracled = SparkEntry.oracleSql.keySet
-    val unoracled = queries -- oracled
-    assert(unoracled == rowsOnlyAllowlist,
-      s"drift: unexpected rows-only=${(unoracled -- rowsOnlyAllowlist).toSeq.sorted} " +
-        s"missing=${(rowsOnlyAllowlist -- unoracled).toSeq.sorted}")
-    assert((oracled -- queries).isEmpty, s"orphan oracle SQL: ${oracled -- queries}")
+  test("every catalog entry has a unique name and non-blank oracle SQL") {
+    val entries = ParityQueries.entries ++ ExtensionQueries.entries
+    val dups = entries.groupBy(_.name).collect { case (n, es) if es.size > 1 => n }
+    assert(dups.isEmpty, s"duplicate catalog names: ${dups.toSeq.sorted}")
+    // a null here is an entry list that reads an oracle val declared below it
+    val blank = entries.filter(e => e.oracleSql == null || e.oracleSql.trim.isEmpty).map(_.name)
+    assert(blank.isEmpty, s"null or blank oracle SQL: $blank")
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
   }
 
   // also: a query built inside a Stage.scope leaves no persisted RDD behind

@@ -2466,9 +2466,9 @@ class ExtensionSpec extends SparkSpec {
     "packed survivor / contract / tool / dedup reject") {
     val sf = "/root/testdata/sf0.001"
     val input = spark.read.parquet(s"$sf/documents.parquet").count()
-    val packed = graft.queries.ExtensionQueries.all("q_pipeline_sft")(spark, sf)
+    val packed = SparkEntry.queries("q_pipeline_sft")(spark, sf)
       .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
-    val ledger = graft.queries.ExtensionQueries.all("q_pipeline_sft_ledger")(spark, sf)
+    val ledger = SparkEntry.queries("q_pipeline_sft_ledger")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
     val ledgerIds = ledger.map(_._1).toSet
     assert(ledger.length == ledgerIds.size, "one ledger row per rejected doc")
@@ -2503,7 +2503,7 @@ class ExtensionSpec extends SparkSpec {
     emb.join(testIds, Seq("vec_id"), "left_semi")
       .write.parquet(s"$fixture/embeddings.parquet")
 
-    val got = graft.queries.ExtensionQueries.all("q_split_decontam")(spark, fixture)
+    val got = SparkEntry.queries("q_split_decontam")(spark, fixture)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     // lexical-only expectation, computed from the operators directly
     val test = split.filter(col("split") === "test")
@@ -2521,9 +2521,9 @@ class ExtensionSpec extends SparkSpec {
   test("preference reject ledger ties out against the packed DPO corpus") {
     val sf = "/root/testdata/sf0.001"
     val input = spark.read.parquet(s"$sf/documents.parquet").count()
-    val packed = graft.queries.ExtensionQueries.all("q_pipeline_pref")(spark, sf)
+    val packed = SparkEntry.queries("q_pipeline_pref")(spark, sf)
       .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
-    val ledger = graft.queries.ExtensionQueries.all("q_pipeline_pref_ledger")(spark, sf)
+    val ledger = SparkEntry.queries("q_pipeline_pref_ledger")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
     val ledgerIds = ledger.map(_._1).toSet
     assert(ledger.length == ledgerIds.size)

@@ -5,7 +5,10 @@ Usage: python3 tools/oracle_check.py <sfDir> <verifyOutDir>
 
 For each query dumped by graft.Verify: run the oracle SQL in DuckDB
 over the same parquet tables, then compare against the Spark result
-parquet — columns sorted by name, rows sorted, values hashed.
+parquet — columns sorted by name, rows sorted, values hashed. A query
+named in oracle_sql.json with no dump directory (Verify logs a failed
+query and writes nothing) is a MISSING failure. The last line reads
+`ALL OK: N/M OK` or `F FAILURES: N/M OK`.
 """
 import sys, json, glob, os
 import duckdb
@@ -36,10 +39,14 @@ def main(sf_dir: str, out_dir: str) -> int:
         if os.path.exists(p):
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    dumped = {n for n in os.listdir(out_dir) if os.path.isdir(os.path.join(out_dir, n))}
+    names = sorted(dumped | set(oracle))
     failures = 0
-    for name in sorted(os.listdir(out_dir)):
+    for name in names:
         d = os.path.join(out_dir, name)
-        if not os.path.isdir(d):
+        if name not in dumped:
+            print(f"  {name}: MISSING (no dump directory)")
+            failures += 1
             continue
         files = glob.glob(f"{d}/*.parquet")
         got = pd.concat([pd.read_parquet(f) for f in files], ignore_index=True)
@@ -79,7 +86,8 @@ def main(sf_dir: str, out_dir: str) -> int:
         else:
             note = "" if dtypes_ok else f"  (dtype diff: {list(map(str, g.dtypes))} vs {list(map(str, w.dtypes))})"
             print(f"  {name}: OK ({len(g)} rows){note}")
-    print(("ALL OK" if failures == 0 else f"{failures} FAILURES"))
+    verdict = "ALL OK" if failures == 0 else f"{failures} FAILURES"
+    print(f"{verdict}: {len(names) - failures}/{len(names)} OK")
     return 1 if failures else 0
 
 if __name__ == "__main__":

@@ -132,8 +132,7 @@ object Bench {
         // pollute the block manager — and the timings — of every
         // query that runs after it. The bench owns this session and
         // caches nothing across queries, so a blanket sweep is safe.
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        graft.operators.Stage.sweep(spark)
       }
     }
 

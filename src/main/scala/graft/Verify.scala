@@ -24,8 +24,7 @@ object Verify {
       } finally {
         // drop any state an iterative operator persisted during
         // construction (see the same sweep in Bench)
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        graft.operators.Stage.sweep(spark)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

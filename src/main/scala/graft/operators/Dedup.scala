@@ -942,8 +942,9 @@ object Dedup {
   /** The corpus-side projection [[embeddingDedupAgainst]] probes:
     * (cid, cvec, cnrm, bucket). Build ONCE and persist (or write to
     * parquet bucketed by `bucket`) when the same corpus serves many
-    * batches — e.g. [[graft.streaming.StreamOps.embeddingDedupStream]]
-    * — so the corpus is never re-projected per batch. */
+    * batches — e.g. as a frozen side of
+    * [[graft.streaming.StreamOps.eachBatch]] — so the corpus is never
+    * re-projected per batch. */
   def embeddingCorpusIndex(
       corpusDf: DataFrame,
       idCol: String,
@@ -1471,8 +1472,8 @@ object Dedup {
     * whole-corpus [[lineIndex]] exactly when every document appears
     * in exactly one batch (the append-only ingest contract; the same
     * counter-addition closure as `Profile.cmsMerge`, and the closure
-    * [[graft.streaming.StreamOps.lineIndexStream]]'s parity spec
-    * gates). */
+    * StreamingSpec's per-batch [[graft.streaming.StreamOps.publishBatch]]
+    * parity case gates). */
   def lineIndexMerge(parts: DataFrame): DataFrame =
     parts.groupBy(col("line_hash"))
       .agg(sum(col("line_df")).as("line_df"))

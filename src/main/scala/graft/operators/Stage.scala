@@ -113,6 +113,14 @@ object Stage {
     }
   }
 
+  /** Free every persisted RDD of the session: the per-query sweep of
+    * a harness that caches nothing across queries (Verify, Bench,
+    * ProfileQuery). Goes through [[ColumnBridge.unpersist]], so a
+    * local cut left behind a query's returned frame frees without
+    * Spark's per-RDD "cannot be recomputed" WARN. */
+  def sweep(spark: SparkSession): Unit =
+    spark.sparkContext.getPersistentRDDs.values.foreach(r => ColumnBridge.unpersist(r))
+
   /** Every job `body` spawns — including broadcast-exchange child
     * jobs, which capture the submitting thread's locals — carries
     * `desc`. */

@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery,
+  StreamingQueryListener}
+import org.apache.spark.storage.StorageLevel
 import graft.operators.{Stage, Transportor}
 import graft.plans.TransportPlan
 import graft.sources.{OverlayIO, TableIO}
@@ -16,7 +18,9 @@ import graft.sources.{OverlayIO, TableIO}
   * watermarked state) and on a batch read (backfill) — the
   * batch-equivalent parity queries in
   * [[graft.queries.ParityQueries]] (q_events_hourly,
-  * q_events_sessionize) are the oracle-checked twins.
+  * q_events_sessionize) are the oracle-checked twins. Per-micro-batch
+  * work — any batch operator run on each micro-batch — goes through
+  * [[eachBatch]], the one place a `foreachBatch` query starts.
   */
 object StreamOps {
 
@@ -34,16 +38,13 @@ object StreamOps {
   private type SessionBuffer = (List[Event], Long, Long)
 
   /** Tumbling-window hourly aggregate with a 2h watermark: the
-    * streaming form of q_events_hourly. State is bounded by the
-    * watermark horizon — at 100 TB/day ingest the state store holds
-    * only ~2h × |event_type| windows per partition. */
+    * streaming form of q_events_hourly — [[hoppingCounts]] with
+    * size = slide = 1 hour, which Spark plans as a tumbling window.
+    * State is bounded by the watermark horizon — at 100 TB/day ingest
+    * the state store holds only ~2h × |event_type| windows per
+    * partition. */
   def hourlyCounts(events: DataFrame, watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        graft.functions.ExactAgg.moneySum(col("value"), 100).as("total_value"))
-      .select(col("window.start").as("h"), col("event_type"), col("n"), col("total_value"))
+    hoppingCounts(events, "1 hour", "1 hour", watermark).withColumnRenamed("ws", "h")
 
   /** Hopping (sliding) window aggregate — 1 h windows every 30 min by
     * default, each event in size/slide overlapping windows: the
@@ -61,17 +62,88 @@ object StreamOps {
         graft.functions.ExactAgg.moneySum(col("value"), 100).as("total_value"))
       .select(col("window.start").as("ws"), col("event_type"), col("n"), col("total_value"))
 
+  /** The one micro-batch loop: start a query over `stream`,
+    * checkpointed under `checkpointDir`, that runs `f(batch, batchId)`
+    * on every micro-batch. batchId is deterministic from the
+    * checkpoint, so a replayed micro-batch sees the id it had before
+    * the restart; an `f` that publishes idempotently by id (see
+    * [[publishBatch]], or `Segments.publishSegment` at
+    * `StreamSegBase + batchId`) is exactly-once.
+    *
+    * `frozen` are the query's static sides — a dedup corpus index
+    * (`Dedup.corpusIndex`, `embeddingCorpusIndex`,
+    * `semanticCorpusIndex`, `DedupIndexStore.readMinhash`), an eval
+    * shingle set (`Dedup.evalShingleSet`), a frozen weight table.
+    * Each is persisted before the query starts, so every micro-batch
+    * pays only its own side of the probe (pass it to the batch
+    * operator's `index`/`evalShingles` argument), never a rebuild of
+    * the static one. `Dataset.persist` returns the same instance, so
+    * `f` reads the caller's own handle. A frozen side is FIXED at
+    * query start: refreshing it is a query restart, which the
+    * checkpoint makes safe.
+    *
+    * These are the one cache kept outside [[graft.operators.Stage]]:
+    * they outlive any scope. A listener keyed to this query's id
+    * unpersists them when the query terminates — stopped or failed —
+    * and removes itself, so a retrain-and-restart cadence never
+    * accumulates stale caches. unpersist is idempotent, so the benign
+    * race — a query that dies before the listener registers — is
+    * closed by checking once after registration. */
+  def eachBatch(stream: DataFrame, checkpointDir: String, frozen: DataFrame*)(
+      f: (DataFrame, Long) => Unit): StreamingQuery = {
+    val spark = stream.sparkSession
+    def release(): Unit = frozen.foreach(_.unpersist())
+    frozen.foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
+    val query =
+      try stream.writeStream.option("checkpointLocation", checkpointDir).foreachBatch(f).start()
+      catch { case e: Throwable => release(); throw e }
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        if (e.id == query.id) {
+          release()
+          spark.streams.removeListener(this)
+        }
+    }
+    spark.streams.addListener(listener)
+    // the query may have died BEFORE registration — its termination
+    // event was posted to the bus pre-registration and will never
+    // reach this listener, so release AND deregister here (both
+    // idempotent; a double removeListener is a no-op)
+    if (!query.isActive) {
+      release()
+      spark.streams.removeListener(listener)
+    }
+    query
+  }
+
+  /** Publish one micro-batch's result as `dir/batch=<batchId>` (one
+    * file). Each batch OVERWRITES its own partition, so a replayed
+    * micro-batch (restart inside the checkpoint window) republishes
+    * identical rows instead of double counting — idempotence via
+    * path, the same discipline as the AnnIndex staged swap. A reader
+    * merges the partitions on read (`Profile.cmsMerge`,
+    * `Dedup.lineIndexMerge`, [[ingestManifest]]): each is a counter
+    * addition or sketch union, so merge-on-read IS the corpus-wide
+    * result, exact as long as every row lands in exactly one batch. */
+  def publishBatch(df: DataFrame, dir: String, batchId: Long): Unit =
+    df.coalesce(1).write.mode("overwrite").parquet(s"$dir/batch=$batchId")
+
   /** Continuous transport: run one table's declarative TableMap over a
     * STREAMING source. Each micro-batch overlays the batch DataFrame
     * as the map's original table and executes the same Transportor
     * compilation (renames, defaults, derived columns, refer lookup
-    * joins against static/pre-seeded tables), appending the result to
-    * the target — incremental micro-batch ETL the reference's
-    * chunk loop could never restart safely (exactly-once via the
-    * checkpoint + idempotent sink contract).
+    * joins against static tables), appending the result to the
+    * target — incremental micro-batch ETL the reference's chunk loop
+    * could never restart safely (exactly-once via the checkpoint +
+    * idempotent sink contract).
     *
-    * The map must not depend on target-side tables produced by the
-    * same plan (cross-stream joins need their own watermark design). */
+    * The plan is checked before the query starts: it must pass
+    * `Transportor.validate()`, and the map must not look up a
+    * target-side table the same plan fills (per batch that table
+    * would be rebuilt from the static IO; cross-stream joins need
+    * their own watermark design). */
   def transportStream(
       stream: DataFrame,
       plan: TransportPlan,
@@ -81,14 +153,16 @@ object StreamOps {
     val map = plan.byKey(tableKey)
     val sourceName = map.originalTable.getOrElse(
       throw new IllegalArgumentException("streaming transport needs original_table"))
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val overlay = new OverlayIO(io, Map(sourceName -> batch.toDF()))
-        val frame = new Transportor(overlay, plan).frame(tableKey)
-        io.writeTarget(plan.targetName(tableKey), frame)
-      }
-      .start()
+    new Transportor(io, plan).validate()
+    val samePlan = TransportPlan.targetLookups(map).filter(plan.keyFor(_).nonEmpty)
+    if (samePlan.nonEmpty)
+      throw new IllegalArgumentException(
+        s"streaming transport of '$tableKey' looks up target table(s) " +
+          s"${samePlan.distinct.mkString(", ")} filled by the same plan")
+    eachBatch(stream, checkpointDir) { (batch, _) =>
+      val overlay = new OverlayIO(io, Map(sourceName -> batch))
+      io.writeTarget(plan.targetName(tableKey), new Transportor(overlay, plan).frame(tableKey))
+    }
   }
 
   /** Streaming exact dedup on a key expression with watermark-bounded
@@ -112,7 +186,9 @@ object StreamOps {
     * the watermark passes its first-seen event time, so state is
     * bounded by the horizon even though the signature itself is not an
     * event-time column (plain dropDuplicates on a non-event-time key
-    * would never evict and grow without bound). */
+    * would never evict and grow without bound). Versus a static
+    * corpus, run `Dedup.dedupAgainst` per batch through [[eachBatch]];
+    * compose the two for "new vs corpus, then new vs itself". */
   def nearDupDropStream(docs: DataFrame, textCol: String, tsCol: String = "ts",
       watermark: String = "2 hours", shingleN: Int = 3): DataFrame =
     docs
@@ -123,266 +199,51 @@ object StreamOps {
       .dropDuplicatesWithinWatermark("__sig")
       .drop("__sig")
 
-  /** Continuous incremental dedup — the streaming form of
-    * [[graft.operators.Dedup.dedupAgainst]]: every micro-batch is
-    * deduped AGAINST a static corpus before `sink` handles the
-    * survivors. The corpus [[graft.operators.Dedup.corpusIndex]] is
-    * built ONCE here and persisted, so each micro-batch pays only its
-    * own signatures plus the bucket probe — the corpus is never
-    * re-signatured per batch (exactly the property the batch path's
-    * plan test pins).
-    *
-    * Scope: the corpus is FIXED at query start (refreshing it is a
-    * query restart — the checkpoint makes that safe). Within-stream
-    * repeats are [[nearDupDropStream]]'s job; compose the two for
-    * "new vs corpus, then new vs itself". */
-  def dedupAgainstStream(
-      docs: DataFrame,
-      corpus: DataFrame,
-      idCol: String,
-      textCol: String,
-      checkpointDir: String,
-      jaccardThreshold: Double = 0.5)(
-      sink: DataFrame => Unit): StreamingQuery = {
-    val idx = graft.operators.Dedup
-      .corpusIndex(corpus, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val query = docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        sink(graft.operators.Dedup.dedupAgainst(
-          batch.toDF(), corpus, idCol, textCol,
-          jaccardThreshold = jaccardThreshold, index = Some(idx)))
-      }
-      .start()
-    unpersistOnTermination(docs.sparkSession, query, idx)
-    query
-  }
-
-  /** Continuous EMBEDDING-modality incremental dedup — the streaming
-    * form of [[graft.operators.Dedup.embeddingDedupAgainst]] (sign-LSH
-    * buckets) or, when `centroids` are supplied, of
-    * [[graft.operators.Dedup.semanticDedupAgainst]] (frozen k-means
-    * cells — the SemDeDup shape): every micro-batch of vectors is
-    * deduped against the static corpus before `sink` sees the
-    * survivors. The corpus-side projection (bucket/cell + norm) is
-    * built ONCE and persisted, so each micro-batch pays only its own
-    * assignment plus the equi-join probe — the same
-    * never-re-signature property [[dedupAgainstStream]] pins for the
-    * text modality. Corpus fixed at query start; restart to refresh
-    * (checkpointed, so safe). */
-  def embeddingDedupStream(
-      vecs: DataFrame,
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      checkpointDir: String,
-      threshold: Double = 0.9,
-      centroids: Option[Array[Array[Double]]] = None,
-      maxBucketSize: Option[Int] = None)(
-      sink: DataFrame => Unit): StreamingQuery = {
-    val idx = (centroids match {
-      case Some(c) =>
-        graft.operators.Dedup.semanticCorpusIndex(corpus, idCol, vecCol, c)
-      case None =>
-        graft.operators.Dedup.embeddingCorpusIndex(corpus, idCol, vecCol)
-    }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val query = vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        sink(centroids match {
-          case Some(c) => graft.operators.Dedup.semanticDedupAgainst(
-            batch.toDF(), corpus, idCol, vecCol, c, threshold,
-            maxClusterSize = maxBucketSize, index = Some(idx))
-          case None => graft.operators.Dedup.embeddingDedupAgainst(
-            batch.toDF(), corpus, idCol, vecCol, threshold,
-            maxBucketSize = maxBucketSize, index = Some(idx))
-        })
-      }
-      .start()
-    unpersistOnTermination(vecs.sparkSession, query, idx)
-    query
-  }
-
-  /** Continuous Count-Min frequency sketching — the streaming form of
-    * [[graft.operators.Profile.cmsCells]]: every micro-batch of
-    * documents is sketched into its own cell table (≤ depth·width
-    * rows) and published under `cellsDir/batch=<id>`; the live
-    * corpus-wide sketch at any moment is
-    * `Profile.cmsMerge(spark.read.parquet(cellsDir))` — counter
-    * addition is the closure the batch merge query gates, so
-    * merge-on-read IS the sketch (compact with one rewrite whenever
-    * the batch-dir count annoys you; addition is associative, any
-    * regrouping is safe).
-    *
-    * Exactly-once without sinks-side dedup: each batch OVERWRITES its
-    * own `batch=<id>` partition, so a replayed micro-batch (restart
-    * inside the checkpoint window) republishes identical cells
-    * instead of double counting — idempotence via path, the same
-    * discipline as the AnnIndex staged swap. */
-  def cmsStream(
-      docs: DataFrame,
-      textCol: String,
-      cellsDir: String,
-      checkpointDir: String,
-      depth: Int = 4,
-      width: Int = 1024,
-      seed: Long = 42L): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        graft.operators.Profile.cmsCells(
-          batch.toDF().select(explode(
-            graft.functions.HashExpressions.tokenHashes(col(textCol))).as("__h")),
-          col("__h"), depth, width, seed)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$cellsDir/batch=$batchId")
-      }
-      .start()
-
-  /** Continuous line-frequency indexing — the streaming producer for
-    * [[graft.operators.Dedup.stripRepeatedLinesAgainst]]: each
-    * micro-batch of documents writes its own per-batch
-    * [[graft.operators.Dedup.lineIndex]] table under
-    * `indexDir/batch=N`; [[graft.operators.Dedup.lineIndexMerge]]
-    * folds them into the corpus index by df addition, exact as long
-    * as every document appears in exactly ONE batch (the append-only
-    * ingest contract — the same per-batch-sketch + counter-addition
-    * shape as [[cmsStream]], parity-pinned by StreamingSpec). */
-  def lineIndexStream(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      indexDir: String,
-      checkpointDir: String,
-      delim: String = "\n"): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        graft.operators.Dedup.lineIndex(batch.toDF(), idCol, textCol, delim)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
-      }
-      .start()
-
-  /** Continuous exact incremental dedup — the streaming form of
-    * [[graft.operators.Dedup.bloomDedupAgainst]] and the cheapest
-    * possible continuous ingest gate: the corpus fingerprint bloom is
-    * built ONCE at query start ([[graft.operators.Dedup.corpusBloom]]),
-    * so each micro-batch pays one fingerprint projection, a broadcast
-    * bit probe, and a broadcast confirm join against the corpus —
-    * never a corpus shuffle, never a corpus re-scan for the filter.
-    * Scope mirrors [[dedupAgainstStream]]: the corpus is FIXED at
-    * query start; folding each day's survivors into the bloom is a
-    * checkpointed query restart with a rebuilt filter. */
-  def bloomDedupStream(
-      docs: DataFrame,
-      corpus: DataFrame,
-      idCol: String,
-      textCol: String,
-      checkpointDir: String,
-      expectedItems: Long = 1L << 20,
-      fpp: Double = 0.01)(
-      sink: DataFrame => Unit): StreamingQuery = {
-    val bloom = graft.operators.Dedup.corpusBloom(corpus, textCol, expectedItems, fpp)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        sink(graft.operators.Dedup.bloomDedupAgainst(
-          batch.toDF(), corpus, idCol, textCol, bloom = Some(bloom)))
-      }
-      .start()
-  }
-
-  /** Continuous benchmark decontamination — the streaming form of
-    * [[graft.operators.Dedup.contaminationMatches]]: every
-    * micro-batch drops its documents that share any word
-    * `shingleN`-gram with the static eval set before `sink` sees the
-    * survivors. The eval set's distinct shingle hashes are computed
-    * ONCE here and persisted ([[graft.operators.Dedup.evalShingleSet]]),
-    * so each micro-batch pays only its own shingling plus a broadcast
-    * probe — the eval set is never re-shingled per batch.
-    *
-    * Scope mirrors [[dedupAgainstStream]]: the eval set is FIXED at
-    * query start; refreshing it is a checkpointed query restart. */
-  def decontaminateStream(
-      docs: DataFrame,
-      evalDf: DataFrame,
-      idCol: String,
-      textCol: String,
-      checkpointDir: String,
-      shingleN: Int = 5)(
-      sink: DataFrame => Unit): StreamingQuery = {
-    val evalSh = graft.operators.Dedup
-      .evalShingleSet(evalDf, textCol, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val query = docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val b = batch.toDF()
-        val hits = graft.operators.Dedup.contaminationMatches(
-          b, evalDf, idCol, textCol, shingleN, evalShingles = Some(evalSh))
-        sink(b.join(hits, b(idCol) === hits("doc_id"), "left_anti"))
-      }
-      .start()
-    unpersistOnTermination(docs.sparkSession, query, evalSh)
-    query
-  }
-
   /** Continuous FORGETTABLE indexing — the streaming producer for the
     * persisted [[graft.sources.DedupIndexStore]] minhash index: each
     * micro-batch's banded signature rows publish as segment
-    * `StreamSegBase + batchId`. batchId is deterministic from the
-    * checkpoint, so a replayed micro-batch republishes the SAME
-    * segment id and [[graft.sources.Segments.publishSegment]] makes
-    * that a no-op — exactly-once appends across restarts; manual
-    * auto-numbered appends stay BELOW
+    * `StreamSegBase + batchId`. A replayed micro-batch republishes the
+    * SAME segment id and [[graft.sources.Segments.publishSegment]]
+    * makes that a no-op — exactly-once appends across restarts;
+    * manual auto-numbered appends stay BELOW
     * [[graft.sources.Segments.StreamSegBase]] by construction, so the
     * two ranges never collide. The standing corpus index GROWS from
     * the stream while keeping the full tombstone
     * right-to-be-forgotten contract (deleteIds works mid-stream; the
-    * anti-join applies on every read). Versus [[lineIndexStream]]'s
-    * per-batch df tables, this writes the FORGETTABLE granularity.
-    * The store must exist (build it first, over the seed corpus or
-    * empty) — the frozen banding params are read from it, never from
-    * the caller. */
+    * anti-join applies on every read). Versus per-batch
+    * `Dedup.lineIndex` tables under [[publishBatch]], this writes the
+    * FORGETTABLE granularity. The store must exist (build it first,
+    * over the seed corpus or empty) — the frozen banding params are
+    * read from it, never from the caller. */
   def minhashStoreStream(
       docs: DataFrame,
       indexDir: String,
       idCol: String,
       textCol: String,
       checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        graft.sources.DedupIndexStore.appendMinhash(
-          docs.sparkSession, indexDir, batch.toDF(), idCol, textCol,
-          Some(graft.sources.Segments.StreamSegBase + batchId))
-        ()
-      }
-      .start()
+    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      graft.sources.DedupIndexStore.appendMinhash(docs.sparkSession, indexDir, batch,
+        idCol, textCol, Some(graft.sources.Segments.StreamSegBase + batchId))
+      ()
+    }
 
   /** [[minhashStoreStream]]'s line-index twin: per micro-batch
     * (id, line_hash) provenance published at `StreamSegBase + batchId`
-    * — the forgettable streaming form of [[lineIndexStream]] (which
-    * writes unforgettable df aggregates). */
+    * — the forgettable streaming form of per-batch `Dedup.lineIndex`
+    * tables (which hold unforgettable df aggregates). */
   def lineStoreStream(
       docs: DataFrame,
       indexDir: String,
       idCol: String,
       textCol: String,
       checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        graft.sources.DedupIndexStore.appendLines(
-          docs.sparkSession, indexDir, batch.toDF(), idCol, textCol,
-          Some(graft.sources.Segments.StreamSegBase + batchId))
-        ()
-      }
-      .start()
+    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      graft.sources.DedupIndexStore.appendLines(docs.sparkSession, indexDir, batch,
+        idCol, textCol, Some(graft.sources.Segments.StreamSegBase + batchId))
+      ()
+    }
 
-  /** [[dedupAgainstStream]] against a PERSISTED
+  /** Continuous incremental dedup against a PERSISTED
     * [[graft.sources.DedupIndexStore]] minhash index — the streaming
     * path of corpus-wide right-to-be-forgotten: the index loads at
     * query start THROUGH the tombstone anti-join, so a document
@@ -392,12 +253,12 @@ object StreamOps {
     * scan + a deletion-sized anti-join). `corpusTexts` supplies the
     * rescore side; candidates can only reference retained index rows,
     * so a deleted doc's text row is inert (and doubles as the leak
-    * canary, exactly as in q_forget). Corpus fixed at query start,
-    * same restart contract as [[dedupAgainstStream]]. The banding
-    * parameters come from the STORE's frozen params table, never
-    * from the caller — a probe banded differently from the index
-    * would silently never collide (the exact hazard the params table
-    * exists to prevent, and why appendMinhash re-reads it too). */
+    * canary, exactly as in q_forget). The index is [[eachBatch]]'s
+    * frozen side. The banding parameters come from the STORE's frozen
+    * params table, never from the caller — a probe banded differently
+    * from the index would silently never collide (the exact hazard
+    * the params table exists to prevent, and why appendMinhash
+    * re-reads it too). */
   def dedupAgainstStoreStream(
       docs: DataFrame,
       corpusTexts: DataFrame,
@@ -409,20 +270,13 @@ object StreamOps {
       sink: DataFrame => Unit): StreamingQuery = {
     val (shingleN, numHashes, bands) = graft.sources.DedupIndexStore
       .minhashParams(docs.sparkSession, indexDir)
-    val idx = graft.sources.DedupIndexStore
-      .readMinhash(docs.sparkSession, indexDir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val query = docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        sink(graft.operators.Dedup.dedupAgainst(
-          batch.toDF(), corpusTexts, idCol, textCol,
-          shingleN = shingleN, numHashes = numHashes, bands = bands,
-          jaccardThreshold = jaccardThreshold, index = Some(idx)))
-      }
-      .start()
-    unpersistOnTermination(docs.sparkSession, query, idx)
-    query
+    val idx = graft.sources.DedupIndexStore.readMinhash(docs.sparkSession, indexDir)
+    eachBatch(docs, checkpointDir, idx) { (batch, _) =>
+      sink(graft.operators.Dedup.dedupAgainst(
+        batch, corpusTexts, idCol, textCol,
+        shingleN = shingleN, numHashes = numHashes, bands = bands,
+        jaccardThreshold = jaccardThreshold, index = Some(idx)))
+    }
   }
 
   /** One micro-batch of the composed INGEST chain — the shared batch
@@ -471,29 +325,25 @@ object StreamOps {
 
   /** The COMPOSED streaming ingest pipeline — encoding/quality gates →
     * incremental dedup against a standing corpus → per-batch manifest
-    * STATE publish, all in one foreachBatch chain: the streaming form
+    * STATE publish, all in one micro-batch chain: the streaming form
     * of the q_pipeline_ingest endgame. Per micro-batch,
-    * [[ingestBatch]] gates and dedups (the corpus index is built ONCE
-    * at query start and persisted — each batch pays only its own
+    * [[ingestBatch]] gates and dedups (the corpus index is
+    * [[eachBatch]]'s frozen side — each batch pays only its own
     * signatures), then the survivors' mergeable manifest state
-    * ([[graft.operators.Profile.manifestStates]]) publishes under
-    * `statesDir/batch=<id>` — the [[cmsStream]] idempotence
-    * discipline: a replayed micro-batch OVERWRITES its own partition,
-    * so restarts never double-count. The live corpus manifest at any
-    * moment is [[ingestManifest]] (merge-on-read — KMV/counter
-    * closure, exactly what the parity spec pins against the batch
-    * chain on the union). The curried `sink` receives each batch's
-    * SURVIVORS (the pipeline's actual product — write them to the
-    * training corpus); survivors persist for the batch so the
+    * ([[graft.operators.Profile.manifestStates]]) publishes through
+    * [[publishBatch]], so restarts never double-count. The live corpus
+    * manifest at any moment is [[ingestManifest]] (merge-on-read —
+    * KMV/counter closure, exactly what the parity spec pins against
+    * the batch chain on the union). The curried `sink` receives each
+    * batch's SURVIVORS (the pipeline's actual product — write them to
+    * the training corpus); survivors persist for the batch so the
     * gate/dedup chain runs once for sink + states, and a sink that
     * writes idempotently by batch id keeps the whole chain
     * exactly-once.
     *
-    * Scope mirrors [[dedupAgainstStream]]: the dedup corpus is FIXED
-    * at query start; folding survivors into it is a checkpointed
-    * restart. Composition drift — a gate reordered, dedup run before
-    * the quality gate, states built pre-dedup — breaks the
-    * stream ≡ batch parity StreamingSpec replays across 3 batches. */
+    * Composition drift — a gate reordered, dedup run before the
+    * quality gate, states built pre-dedup — breaks the stream ≡ batch
+    * parity StreamingSpec replays across 3 batches. */
   def ingestStream(
       docs: DataFrame,
       corpus: DataFrame,
@@ -509,29 +359,20 @@ object StreamOps {
       jaccardThreshold: Double = 0.5,
       k: Int = 16)(
       sink: DataFrame => Unit = _ => ()): StreamingQuery = {
-    val idx = graft.operators.Dedup
-      .corpusIndex(corpus, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val query = docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        // survivors feed BOTH the caller's sink and the state publish;
-        // persist for the batch's lifetime so the gate/dedup chain
-        // runs once, not once per consumer
-        Stage.scope {
-          val survivors = Stage("ingest survivors", Stage.Persist())(
-            ingestBatch(batch.toDF(), corpus, idCol, sourceCol,
-              textCol, Some(idx), lang, minQuality, minTokens, maxTokens,
-              jaccardThreshold))
-          sink(survivors)
-          graft.operators.Profile.manifestStates(survivors, sourceCol, textCol, k)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$statesDir/batch=$batchId")
-        }
+    val idx = graft.operators.Dedup.corpusIndex(corpus, idCol, textCol)
+    eachBatch(docs, checkpointDir, idx) { (batch, batchId) =>
+      // survivors feed BOTH the caller's sink and the state publish;
+      // persist for the batch's lifetime so the gate/dedup chain
+      // runs once, not once per consumer
+      Stage.scope {
+        val survivors = Stage("ingest survivors", Stage.Persist())(
+          ingestBatch(batch, corpus, idCol, sourceCol, textCol, Some(idx),
+            lang, minQuality, minTokens, maxTokens, jaccardThreshold))
+        sink(survivors)
+        publishBatch(graft.operators.Profile.manifestStates(survivors, sourceCol, textCol, k),
+          statesDir, batchId)
       }
-      .start()
-    unpersistOnTermination(docs.sparkSession, query, idx)
-    query
+    }
   }
 
   /** STREAMED incremental release — the continuous composition of
@@ -570,30 +411,27 @@ object StreamOps {
       stateDir: String,
       checkpointDir: String,
       cfg: graft.plans.ReleaseConfig = graft.plans.ReleaseConfig()): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI(stateDir), spark.sparkContext.hadoopConfiguration)
-        val marker = new org.apache.hadoop.fs.Path(
-          s"$stateDir/_released/batch=$batchId")
-        if (!fs.exists(marker)) {
-          graft.plans.IncrementalRelease.runDeltas(spark, batch.toDF(),
-            embeddings, transcriptsOf, merges, stateDir, cfg,
-            batchId = Some(batchId))
-          // completion marker: tmp + one atomic rename (the segment
-          // publish discipline), written only after every delta landed
-          val tmp = new org.apache.hadoop.fs.Path(
-            s"$stateDir/_released/_batch.tmp-${java.util.UUID.randomUUID()}")
-          fs.mkdirs(marker.getParent)
-          val out = fs.create(tmp, true)
-          try out.write(Array.emptyByteArray) finally out.close()
-          require(fs.rename(tmp, marker) || fs.exists(marker),
-            s"releaseStream: could not publish completion marker $marker")
-        }
+    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val fs = org.apache.hadoop.fs.FileSystem.get(
+        new java.net.URI(stateDir), spark.sparkContext.hadoopConfiguration)
+      val marker = new org.apache.hadoop.fs.Path(
+        s"$stateDir/_released/batch=$batchId")
+      if (!fs.exists(marker)) {
+        graft.plans.IncrementalRelease.runDeltas(spark, batch,
+          embeddings, transcriptsOf, merges, stateDir, cfg,
+          batchId = Some(batchId))
+        // completion marker: tmp + one atomic rename (the segment
+        // publish discipline), written only after every delta landed
+        val tmp = new org.apache.hadoop.fs.Path(
+          s"$stateDir/_released/_batch.tmp-${java.util.UUID.randomUUID()}")
+        fs.mkdirs(marker.getParent)
+        val out = fs.create(tmp, true)
+        try out.write(Array.emptyByteArray) finally out.close()
+        require(fs.rename(tmp, marker) || fs.exists(marker),
+          s"releaseStream: could not publish completion marker $marker")
       }
-      .start()
+    }
 
   /** The live corpus manifest over an [[ingestStream]] states
     * directory: merge-on-read of the published per-batch states
@@ -605,85 +443,55 @@ object StreamOps {
       k: Int = 16): DataFrame =
     graft.operators.Profile.manifestMerge(spark.read.parquet(statesDir), k)
 
-  /** Stream-side serving of a BATCH-trained distilled quality model —
-    * closing the train-batch / score-stream loop: every micro-batch
-    * is featurized with the SAME hashing trick
-    * ([[graft.operators.Search.hashedFeatures]], a zero-shuffle
-    * projection + per-batch fold) and scored under the FROZEN weight
-    * table via [[graft.operators.Classifier.scoreFx]] — the dims-row
-    * weights persist once and broadcast into each micro-batch (the
-    * PlanGuard-pinned scoring shape), so a batch pays only its own
-    * featurization.
-    *
-    * A document's score depends ONLY on its own tokens and the frozen
-    * weights, so scoring a corpus in micro-batches is EXACTLY the
-    * batch [[graft.operators.Classifier.scoreFx]] answer on the union
-    * (StreamingSpec's parity case gates it). No state store, no
-    * watermark. Weights are fixed at query start — retrain
-    * (warm-start [[graft.operators.Classifier.trainLogisticFx]]) and
-    * restart to roll the model; the checkpoint makes that safe: the
-    * cached weight table unpersists itself when the query terminates
-    * (a QueryTerminated listener keyed to this query's id), so the
-    * retrain-and-restart cadence never accumulates stale cached
-    * weight tables across restarts. */
-  def scoreStream(
-      docs: DataFrame,
-      weights: DataFrame,
-      idCol: String,
-      textCol: String,
-      checkpointDir: String,
-      dims: Int = 256,
-      seed: Long = 11L,
-      scaleBits: Int = 20)(
-      sink: DataFrame => Unit): StreamingQuery = {
-    val w = weights.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val query = docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val b = batch.toDF()
-        sink(graft.operators.Classifier.scoreFx(
-          b, idCol,
-          graft.operators.Search.hashedFeatures(b, idCol, textCol, dims, seed),
-          w, scaleBits))
-      }
-      .start()
-    unpersistOnTermination(docs.sparkSession, query, w)
-    query
+  /** The session gap rule shared by both sessionizers: walk `events` in
+    * event-time order from the chain's (lastTs, seq); no prior event,
+    * or a gap above `gapMicros`, opens the next session. Returns the
+    * assignments and the chain's new (lastTs, seq). */
+  private def chainSessions(
+      userId: Long,
+      events: List[Event],
+      lastTs: Long,
+      seq: Long,
+      gapMicros: Long): (List[SessionAssign], Long, Long) = {
+    var last = lastTs
+    var s = seq
+    val out = events.sortBy(e => (e.tsMicros, e.event_id)).map { e =>
+      if (last == Long.MinValue || e.tsMicros - last > gapMicros) s += 1
+      last = e.tsMicros
+      SessionAssign(userId, e.event_id, s)
+    }
+    (out, last, s)
   }
 
-  /** Release a DataFrame cached for the lifetime of one streaming
-    * query (the one cache kept outside [[graft.operators.Stage]]: it
-    * outlives any scope): unpersist when THAT query terminates (listener removes
-    * itself after firing). unpersist is idempotent, so the benign
-    * race — a query that dies before the listener registers — costs
-    * nothing beyond the cache living until session end, exactly the
-    * pre-listener behavior. */
-  private def unpersistOnTermination(
-      spark: org.apache.spark.sql.SparkSession,
-      query: StreamingQuery,
-      cached: DataFrame): Unit = {
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit =
-        if (e.id == query.id) {
-          cached.unpersist()
-          spark.streams.removeListener(this)
-        }
+  /** The settle step shared by the event-time folds
+    * ([[sessionizeEventTime]], [[ewmaEventTime]]) once a group has
+    * emitted what the watermark passed. With events still pending,
+    * keep `next` and fire again when the watermark reaches the
+    * earliest of `pendingMicros`. With nothing pending, keep `next`
+    * (arming the idle timeout when `idleStateTimeoutMs` is set), or
+    * evict the key when that idle timeout fired and nothing arrived
+    * or was emitted (`quiet`). */
+  private def settle[S](
+      state: GroupState[S],
+      next: S,
+      pendingMicros: List[Long],
+      quiet: Boolean,
+      idleStateTimeoutMs: Option[Long]): Unit =
+    if (pendingMicros.nonEmpty) {
+      state.update(next)
+      // +1ms: the timeout must sit strictly beyond the current watermark
+      state.setTimeoutTimestamp(
+        math.max(pendingMicros.min / 1000L, state.getCurrentWatermarkMs() + 1L))
+    } else idleStateTimeoutMs match {
+      case Some(_) if state.hasTimedOut && quiet =>
+        // silent for the idle window: evict (the key restarts cold)
+        state.remove()
+      case Some(idle) =>
+        state.update(next)
+        state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + math.max(idle, 1L))
+      case None =>
+        state.update(next)
     }
-    spark.streams.addListener(listener)
-    // the query may have died BEFORE registration — its termination
-    // event was posted to the bus pre-registration and will never
-    // reach this listener, so release the cache AND deregister here
-    // (both idempotent; a double removeListener is a no-op)
-    if (!query.isActive) {
-      cached.unpersist()
-      spark.streams.removeListener(listener)
-    }
-  }
 
   /** Stateful sessionization via flatMapGroupsWithState: 30-minute
     * inactivity gap starts a new session; state per user is one
@@ -711,9 +519,9 @@ object StreamOps {
     * trigger interval (shouldRunAnotherBatch is unconditionally true
     * under processing-time timeouts — see [[ewmaStream]]'s NoTimeout
     * rationale); that is wasteful-but-correct for a real trigger
-    * interval and an infinite loop under processAllAvailable. In
-    * batch (the intended path) timeouts never fire and none of this
-    * applies. */
+    * interval, and `processAllAvailable` on such a query never
+    * returns. In batch (the intended path) timeouts never fire and
+    * none of this applies. */
   def sessionize(events: Dataset[Event],
       gapMicros: Long = 30L * 60 * 1000 * 1000): Dataset[SessionAssign] = {
     import events.sparkSession.implicits._
@@ -725,39 +533,14 @@ object StreamOps {
             state.remove()
             Iterator.empty
           } else {
-            var st = state.getOption.getOrElse(SessionState(Long.MinValue, 0L))
-            val out = it.toArray.sortBy(e => (e.tsMicros, e.event_id)).map { e =>
-              val newSession = st.lastTsMicros == Long.MinValue ||
-                e.tsMicros - st.lastTsMicros > gapMicros
-              st = SessionState(e.tsMicros, if (newSession) st.seq + 1 else st.seq)
-              SessionAssign(userId, e.event_id, st.seq)
-            }
-            state.update(st)
+            val st = state.getOption.getOrElse(SessionState(Long.MinValue, 0L))
+            val (out, last, seq) =
+              chainSessions(userId, it.toList, st.lastTsMicros, st.seq, gapMicros)
+            state.update(SessionState(last, seq))
             state.setTimeoutDuration("1 hour")
             out.iterator
           }
         })
-  }
-
-  /** Emit every buffered event whose time the watermark has passed
-    * (no further in-horizon arrival can precede it), in event-time
-    * order, extending the session chain; keep the rest pending. */
-  private def flushReady(
-      userId: Long,
-      st: SessionBuffer,
-      wmMicros: Long,
-      gapMicros: Long): (List[SessionAssign], SessionBuffer) = {
-    val (pending, lastTs, seq0) = st
-    val (ready, rest) = pending.partition(_.tsMicros <= wmMicros)
-    var last = lastTs
-    var seq = seq0
-    val out = ready.sortBy(e => (e.tsMicros, e.event_id)).map { e =>
-      val newSession = last == Long.MinValue || e.tsMicros - last > gapMicros
-      seq = if (newSession) seq + 1 else seq
-      last = e.tsMicros
-      SessionAssign(userId, e.event_id, seq)
-    }
-    (out, (rest, last, seq))
   }
 
   /** Event-time sessionization for out-of-order STREAMS: incoming
@@ -801,29 +584,15 @@ object StreamOps {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
         (userId: Long, it: Iterator[Event], state: GroupState[SessionBuffer]) => {
           val wmMicros = state.getCurrentWatermarkMs() * 1000L
-          val st0 = state.getOption.getOrElse((Nil: List[Event], Long.MinValue, 0L))
+          val (pending, lastTs, seq0) =
+            state.getOption.getOrElse((Nil: List[Event], Long.MinValue, 0L))
           val arrived = if (state.hasTimedOut) Nil else it.toList
-          val st1 = st0.copy(_1 = st0._1 ++ arrived)
-          val (out, st2) = flushReady(userId, st1, wmMicros, gapMicros)
-          if (st2._1.nonEmpty) {
-            state.update(st2)
-            // fire again once the watermark reaches the earliest
-            // pending event (+1ms: the timeout must sit strictly
-            // beyond the current watermark)
-            val earliestMs = st2._1.map(_.tsMicros).min / 1000L
-            state.setTimeoutTimestamp(math.max(earliestMs, state.getCurrentWatermarkMs() + 1L))
-          } else idleStateTimeoutMs match {
-            case Some(_) if state.hasTimedOut && arrived.isEmpty && out.isEmpty =>
-              // idle timeout fired with nothing buffered, arrived, or
-              // flushed: this user has been silent for the idle window
-              // — evict (seq restarts if they return)
-              state.remove()
-            case Some(idle) =>
-              state.update(st2)
-              state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + math.max(idle, 1L))
-            case None =>
-              state.update(st2)
-          }
+          // emit every event the watermark has passed (no in-horizon
+          // arrival can precede it); keep the rest pending
+          val (ready, rest) = (pending ++ arrived).partition(_.tsMicros <= wmMicros)
+          val (out, last, seq) = chainSessions(userId, ready, lastTs, seq0, gapMicros)
+          settle(state, (rest, last, seq), rest.map(_.tsMicros),
+            arrived.isEmpty && out.isEmpty, idleStateTimeoutMs)
           out.iterator
         })
   }
@@ -832,28 +601,31 @@ object StreamOps {
   final case class EwmaPoint(key: String, tick: Long, value: Long,
       ewma_num: Long, ewma_den: Long, ewma: Double)
 
-  /** Streaming twin of [[graft.operators.Resample.ewmaSmooth]]: the
-    * same integer weight ladder (`Resample.ewmaWeights`) folded
-    * through per-key state instead of window lags — state is just
-    * the last `window − 1` (tick, value) pairs, newest first, so a
-    * key's smoothed series continues seamlessly across micro-batches
-    * without rescanning history. Rows inside a micro-batch sort by
-    * tick; ACROSS batches ticks must arrive non-decreasing per key
-    * (the processing-time contract, same as [[sessionize]] — feed it
-    * from an upstream windowed aggregate, which emits in watermark
-    * order). StreamingSpec proves 1-batch vs split-batch replay
-    * yields byte-identical output to the batch operator.
-    *
-    * Scale posture: state per key is `window − 1` long pairs —
-    * constant per key, no watermark horizon needed. Deliberately
-    * NoTimeout: a processing-time timeout would force Spark to run
-    * an empty micro-batch on EVERY trigger just in case a timeout
-    * fired (FlatMapGroupsWithStateExec.shouldRunAnotherBatch is
-    * unconditionally true under ProcessingTimeTimeout — the query
-    * never idles and processAllAvailable never returns). The cost is
-    * one tiny state row per key EVER seen — fine for bounded key
-    * domains (event types, sources); an unbounded-cardinality stream
-    * should sessionize its keys upstream instead. */
+  /** The EWMA weight-ladder step shared by [[ewmaStream]] and
+    * [[ewmaEventTime]]: fold `ticks`, in the given order, through the
+    * integer ladder `weights` (`Resample.ewmaWeights`) over the last
+    * `window − 1` (tick, value) pairs, newest first. Returns the
+    * points and the new tail. */
+  private def ewmaFold(
+      key: String,
+      ticks: List[TickValue],
+      recent0: List[(Long, Long)],
+      weights: Seq[Long],
+      window: Int): (List[EwmaPoint], List[(Long, Long)]) = {
+    var recent = recent0
+    val out = ticks.map { tv =>
+      var num = tv.value * weights.head
+      var den = weights.head
+      recent.take(window - 1).zipWithIndex.foreach { case ((_, v), i) =>
+        num += v * weights(i + 1)
+        den += weights(i + 1)
+      }
+      recent = ((tv.tick, tv.value) :: recent).take(window - 1)
+      EwmaPoint(key, tv.tick, tv.value, num, den, num.toDouble / den.toDouble)
+    }
+    (out, recent)
+  }
+
   /** State for [[ewmaEventTime]]: ticks still inside the reorder
     * horizon + the last `window − 1` FINALIZED (tick, value) pairs,
     * newest first. */
@@ -894,42 +666,40 @@ object StreamOps {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
         (key: String, it: Iterator[TickValue], state: GroupState[EwmaBuffer]) => {
           val wmMicros = state.getCurrentWatermarkMs() * 1000L
-          val st0 = state.getOption.getOrElse((Nil: List[TickValue], Nil: List[(Long, Long)]))
+          val (pending, recent0) =
+            state.getOption.getOrElse((Nil: List[TickValue], Nil: List[(Long, Long)]))
           val arrived = if (state.hasTimedOut) Nil else it.toList
-          val pending = st0._1 ++ arrived
-          val (ready, rest) = pending.partition(_.tick <= wmMicros)
-          var recent = st0._2
-          val out = ready.sortBy(t => (t.tick, t.value)).map { tv =>
-            val tail = recent.take(window - 1)
-            var num = tv.value * weights.head
-            var den = weights.head
-            tail.zipWithIndex.foreach { case ((_, v), i) =>
-              num += v * weights(i + 1)
-              den += weights(i + 1)
-            }
-            recent = ((tv.tick, tv.value) :: recent).take(window - 1)
-            EwmaPoint(key, tv.tick, tv.value, num, den,
-              num.toDouble / den.toDouble)
-          }
-          val st2 = (rest, recent)
-          if (rest.nonEmpty) {
-            state.update(st2)
-            val earliestMs = rest.map(_.tick).min / 1000L
-            state.setTimeoutTimestamp(
-              math.max(earliestMs, state.getCurrentWatermarkMs() + 1L))
-          } else idleStateTimeoutMs match {
-            case Some(_) if state.hasTimedOut && arrived.isEmpty && out.isEmpty =>
-              state.remove()
-            case Some(idle) =>
-              state.update(st2)
-              state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + math.max(idle, 1L))
-            case None =>
-              state.update(st2)
-          }
+          val (ready, rest) = (pending ++ arrived).partition(_.tick <= wmMicros)
+          val (out, recent) =
+            ewmaFold(key, ready.sortBy(t => (t.tick, t.value)), recent0, weights, window)
+          settle(state, (rest, recent), rest.map(_.tick),
+            arrived.isEmpty && out.isEmpty, idleStateTimeoutMs)
           out.iterator
         })
   }
 
+  /** Streaming twin of [[graft.operators.Resample.ewmaSmooth]]: the
+    * same integer weight ladder (`Resample.ewmaWeights`) folded
+    * through per-key state instead of window lags — state is just
+    * the last `window − 1` (tick, value) pairs, newest first, so a
+    * key's smoothed series continues seamlessly across micro-batches
+    * without rescanning history. Rows inside a micro-batch sort by
+    * tick; ACROSS batches ticks must arrive non-decreasing per key
+    * (the processing-time contract, same as [[sessionize]] — feed it
+    * from an upstream windowed aggregate, which emits in watermark
+    * order). StreamingSpec proves 1-batch vs split-batch replay
+    * yields byte-identical output to the batch operator.
+    *
+    * Scale posture: state per key is `window − 1` long pairs —
+    * constant per key, no watermark horizon needed. Deliberately
+    * NoTimeout: a processing-time timeout would force Spark to run
+    * an empty micro-batch on EVERY trigger just in case a timeout
+    * fired (FlatMapGroupsWithStateExec.shouldRunAnotherBatch is
+    * unconditionally true under ProcessingTimeTimeout — the query
+    * never idles and processAllAvailable never returns). The cost is
+    * one tiny state row per key EVER seen — fine for bounded key
+    * domains (event types, sources); an unbounded-cardinality stream
+    * should sessionize its keys upstream instead. */
   def ewmaStream(
       ticks: Dataset[TickValue],
       decayNum: Int,
@@ -941,19 +711,8 @@ object StreamOps {
       .groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         (key: String, it: Iterator[TickValue], state: GroupState[List[(Long, Long)]]) => {
-          var recent = state.getOption.getOrElse(Nil) // newest first, ≤ window-1
-          val out = it.toArray.sortBy(_.tick).map { tv =>
-            val tail = recent.take(window - 1)
-            var num = tv.value * weights.head
-            var den = weights.head
-            tail.zipWithIndex.foreach { case ((_, v), i) =>
-              num += v * weights(i + 1)
-              den += weights(i + 1)
-            }
-            recent = ((tv.tick, tv.value) :: recent).take(window - 1)
-            EwmaPoint(key, tv.tick, tv.value, num, den,
-              num.toDouble / den.toDouble)
-          }
+          val (out, recent) = ewmaFold(key, it.toList.sortBy(_.tick),
+            state.getOption.getOrElse(Nil), weights, window)
           state.update(recent)
           out.iterator
         })

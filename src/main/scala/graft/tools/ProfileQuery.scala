@@ -62,8 +62,7 @@ object ProfileQuery {
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      graft.operators.Stage.sweep(spark)
       Thread.sleep(300) // let listener drain
       import scala.jdk.CollectionConverters._
       val recs = jobs.values.asScala.toSeq.sortBy(_.id)

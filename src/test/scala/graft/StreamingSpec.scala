@@ -123,6 +123,38 @@ class StreamingSpec extends SparkSpec {
       Seq(Row(1L, 10.0), Row(2L, 20.0), Row(3L, -1.0)))
   }
 
+  test("continuous transport refuses, before starting, a plan it cannot run per micro-batch") {
+    import org.apache.spark.sql.Row
+    import graft.plans._
+    val dir = java.nio.file.Files.createTempDirectory("graft_rejstream").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_rejstream_ck").toString
+    eventsDf.coalesce(1).write.mode("overwrite").parquet(dir)
+    val dim = df("etype STRING, code BIGINT", Row("click", 1L), Row("view", 5L))
+    val io = new graft.sources.InMemoryIO(Map("event_types" -> dim))
+    def lookup(table: String) = Refer("type_code", Seq("event_type"), SearchSource.Target,
+      table, Seq("etype"), "code", default = Some(-1L))
+    // a target-side lookup into a table the same plan fills: per batch
+    // it would be rebuilt from the static IO, not from the stream
+    val samePlan = TransportPlan.of(
+      "dim_out" -> TableMap(Some("event_types"), Seq(Rename("etype", "etype"),
+        Rename("code", "code"))),
+      "fact_events" -> TableMap(Some("events_stream"), Seq(
+        Rename("eid", "event_id"), lookup("dim_out"))))
+    // a target-side lookup into a table neither in the plan nor pre-seeded
+    val unfilled = TransportPlan.of(
+      "fact_events" -> TableMap(Some("events_stream"), Seq(
+        Rename("eid", "event_id"), lookup("missing_dim"))))
+    val active0 = spark.streams.active.map(_.id).toSet
+    val stream = spark.readStream.schema(eventsDf.schema).parquet(dir)
+    val e1 = intercept[IllegalArgumentException](
+      StreamOps.transportStream(stream, samePlan, "fact_events", io, ckpt))
+    assert(e1.getMessage.contains("dim_out"))
+    val e2 = intercept[NoSuchElementException](
+      StreamOps.transportStream(stream, unfilled, "fact_events", io, ckpt))
+    assert(e2.getMessage.contains("missing_dim"))
+    assert(spark.streams.active.map(_.id).toSet == active0, "no query may be left running")
+  }
+
   test("streaming near-dup drop suppresses signature-identical texts") {
     val dir = java.nio.file.Files.createTempDirectory("graft_neardup").toString
     import org.apache.spark.sql.Row
@@ -280,10 +312,12 @@ class StreamingSpec extends SparkSpec {
       Row(101L, "completely different content about spark query engines and shuffles"))
     val schema = corpus.schema
     val survivors = scala.collection.mutable.Set.empty[Long]
-    val q = StreamOps.dedupAgainstStream(
-      spark.readStream.schema(schema).parquet(srcDir),
-      corpus, "doc_id", "text", ckpt)(out =>
-      survivors ++= out.select("doc_id").collect().map(_.getLong(0)))
+    val idx = graft.operators.Dedup.corpusIndex(corpus, "doc_id", "text")
+    val q = StreamOps.eachBatch(spark.readStream.schema(schema).parquet(srcDir), ckpt, idx) {
+      (b, _) => survivors ++= graft.operators.Dedup.dedupAgainst(
+        b, corpus, "doc_id", "text", index = Some(idx))
+        .select("doc_id").collect().map(_.getLong(0))
+    }
     try {
       df("doc_id BIGINT, text STRING",
         Row(1L, "the quick brown fox jumps over the lazy dog near the river bend"), // near-dup of 100
@@ -319,11 +353,18 @@ class StreamingSpec extends SparkSpec {
       val srcDir = java.nio.file.Files.createTempDirectory("graft_eds_src").toString
       val ckpt = java.nio.file.Files.createTempDirectory("graft_eds_ckpt").toString
       val survivors = scala.collection.mutable.Set.empty[Long]
-      val q = StreamOps.embeddingDedupStream(
-        spark.readStream.schema(schema).parquet(srcDir),
-        corpus, "vec_id", "embedding", ckpt, threshold = 0.9,
-        centroids = mode)(out =>
-        survivors ++= out.select("vec_id").collect().map(_.getLong(0)))
+      val idx = mode match {
+        case Some(c) => Dedup.semanticCorpusIndex(corpus, "vec_id", "embedding", c)
+        case None => Dedup.embeddingCorpusIndex(corpus, "vec_id", "embedding")
+      }
+      val q = StreamOps.eachBatch(spark.readStream.schema(schema).parquet(srcDir), ckpt, idx) {
+        (b, _) => survivors ++= (mode match {
+          case Some(c) => Dedup.semanticDedupAgainst(
+            b, corpus, "vec_id", "embedding", c, threshold = 0.9, index = Some(idx))
+          case None => Dedup.embeddingDedupAgainst(
+            b, corpus, "vec_id", "embedding", threshold = 0.9, index = Some(idx))
+        }).select("vec_id").collect().map(_.getLong(0))
+      }
       try {
         b1.toDF("vec_id", "embedding").coalesce(1).write.mode("append").parquet(srcDir)
         q.processAllAvailable()
@@ -355,9 +396,11 @@ class StreamingSpec extends SparkSpec {
     def writeBatch(rows: Seq[Row]): Unit =
       spark.createDataFrame(new java.util.ArrayList(java.util.Arrays.asList(rows: _*)), schema)
         .coalesce(1).write.mode("append").parquet(srcDir)
-    val q = StreamOps.cmsStream(
-      spark.readStream.schema(schema).parquet(srcDir),
-      "text", cellsDir, ckpt, depth = 4, width = 64, seed = 5L)
+    val q = StreamOps.eachBatch(spark.readStream.schema(schema).parquet(srcDir), ckpt) {
+      (b, id) => StreamOps.publishBatch(graft.operators.Profile.cmsCells(
+        b.select(explode(HashExpressions.tokenHashes(col("text"))).as("__h")),
+        col("__h"), depth = 4, width = 64, seed = 5L), cellsDir, id)
+    }
     try {
       writeBatch(b1); q.processAllAvailable()
       writeBatch(b2); q.processAllAvailable()
@@ -386,9 +429,10 @@ class StreamingSpec extends SparkSpec {
     def writeBatch(rows: Seq[Row]): Unit =
       spark.createDataFrame(new java.util.ArrayList(java.util.Arrays.asList(rows: _*)), schema)
         .coalesce(1).write.mode("append").parquet(srcDir)
-    val q = StreamOps.lineIndexStream(
-      spark.readStream.schema(schema).parquet(srcDir),
-      "doc_id", "text", idxDir, ckpt)
+    val q = StreamOps.eachBatch(spark.readStream.schema(schema).parquet(srcDir), ckpt) {
+      (b, id) => StreamOps.publishBatch(
+        graft.operators.Dedup.lineIndex(b, "doc_id", "text"), idxDir, id)
+    }
     try {
       writeBatch(b1); q.processAllAvailable()
       writeBatch(b2); q.processAllAvailable()
@@ -615,10 +659,12 @@ class StreamingSpec extends SparkSpec {
       Row(3L, "completely different content about spark query engines and shuffles"), // exact dup of 101
       Row(4L, "a second novel document mentioning sessionization and state"))
     val survivors = scala.collection.mutable.Set.empty[Long]
-    val q = StreamOps.bloomDedupStream(
-      spark.readStream.schema(schema).parquet(srcDir),
-      corpus, "doc_id", "text", ckpt)(out =>
-      survivors ++= out.select("doc_id").collect().map(_.getLong(0)))
+    val bloom = graft.operators.Dedup.corpusBloom(corpus, "text")
+    val q = StreamOps.eachBatch(spark.readStream.schema(schema).parquet(srcDir), ckpt) {
+      (b, _) => survivors ++= graft.operators.Dedup.bloomDedupAgainst(
+        b, corpus, "doc_id", "text", bloom = Some(bloom))
+        .select("doc_id").collect().map(_.getLong(0))
+    }
     try {
       b1.coalesce(1).write.mode("append").parquet(srcDir)
       q.processAllAvailable()
@@ -647,10 +693,14 @@ class StreamingSpec extends SparkSpec {
       Row(3L, "we saw the quick brown fox jumps high again"), // shares -> dropped
       Row(4L, "a second novel document mentioning sessionization and state"))
     val survivors = scala.collection.mutable.Set.empty[Long]
-    val q = StreamOps.decontaminateStream(
-      spark.readStream.schema(schema).parquet(srcDir),
-      evalSet, "doc_id", "text", ckpt, shingleN = 4)(out =>
-      survivors ++= out.select("doc_id").collect().map(_.getLong(0)))
+    val evalSh = graft.operators.Dedup.evalShingleSet(evalSet, "text", shingleN = 4)
+    val q = StreamOps.eachBatch(spark.readStream.schema(schema).parquet(srcDir), ckpt, evalSh) {
+      (b, _) =>
+        val hits = graft.operators.Dedup.contaminationMatches(
+          b, evalSet, "doc_id", "text", shingleN = 4, evalShingles = Some(evalSh))
+        survivors ++= b.join(hits, b("doc_id") === hits("doc_id"), "left_anti")
+          .select("doc_id").collect().map(_.getLong(0))
+    }
     try {
       b1.coalesce(1).write.mode("append").parquet(srcDir)
       q.processAllAvailable()
@@ -933,7 +983,7 @@ class StreamingSpec extends SparkSpec {
       Row(4L, "tokenizer vocabularies grow with corpus entropy"),
       Row(5L, "the quick brown fox naps under the lazy dog"),
       Row(6L, "watermarks close reorder windows in event time"))
-    // batch-side training: the model scoreStream will serve frozen
+    // batch-side training: the model the stream will serve frozen
     val feats = Search.hashedFeatures(corpus, "doc_id", "text", dims = 64, seed = 11L)
     val labels = corpus.select(col("doc_id"),
       (col("doc_id") % 2).cast("long").as("label"))
@@ -943,10 +993,11 @@ class StreamingSpec extends SparkSpec {
     val srcDir = java.nio.file.Files.createTempDirectory("graft_score_src").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_score_ckpt").toString
     val got = scala.collection.mutable.Set.empty[Seq[Any]]
-    val q = StreamOps.scoreStream(
-      spark.readStream.schema(corpus.schema).parquet(srcDir),
-      w, "doc_id", "text", ckpt, dims = 64, seed = 11L)(out =>
-      got ++= out.collect().map(_.toSeq))
+    val q = StreamOps.eachBatch(spark.readStream.schema(corpus.schema).parquet(srcDir), ckpt, w) {
+      (b, _) => got ++= Classifier.scoreFx(b, "doc_id",
+        Search.hashedFeatures(b, "doc_id", "text", dims = 64, seed = 11L), w)
+        .collect().map(_.toSeq)
+    }
     try {
       // two micro-batches — per-doc scores must not depend on the split
       corpus.filter(col("doc_id") <= 3).coalesce(1)
@@ -965,6 +1016,35 @@ class StreamingSpec extends SparkSpec {
     while (w.storageLevel != org.apache.spark.storage.StorageLevel.NONE &&
            System.nanoTime() < deadline) Thread.sleep(100)
     assert(w.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
-      "scoreStream must unpersist its weights on query termination")
+      "eachBatch must unpersist its frozen weights on query termination")
+  }
+
+  test("eachBatch frees its frozen frames and its listener when a batch fails") {
+    import org.apache.spark.storage.StorageLevel
+    val srcDir = java.nio.file.Files.createTempDirectory("graft_eb_fail_src").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_eb_fail_ckpt").toString
+    val frozenA = spark.range(10).toDF("k")
+    val frozenB = spark.range(5).toDF("k")
+    val listeners0 = spark.streams.listListeners().length
+    val q = StreamOps.eachBatch(spark.readStream.schema("k BIGINT").parquet(srcDir), ckpt,
+      frozenA, frozenB) { (_, _) => throw new IllegalStateException("batch function failed") }
+    try {
+      assert(frozenA.storageLevel != StorageLevel.NONE &&
+        frozenB.storageLevel != StorageLevel.NONE, "frozen frames persist at query start")
+      spark.range(3).toDF("k").coalesce(1).write.mode("append").parquet(srcDir)
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        q.processAllAvailable())
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      assert(causes.exists(_.getMessage == "batch function failed"), e.toString)
+    } finally q.stop()
+    // the listener bus is async; poll briefly
+    def released = Seq(frozenA, frozenB).forall(_.storageLevel == StorageLevel.NONE) &&
+      spark.streams.listListeners().length == listeners0
+    val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
+    while (!released && System.nanoTime() < deadline) Thread.sleep(100)
+    assert(frozenA.storageLevel == StorageLevel.NONE && frozenB.storageLevel == StorageLevel.NONE,
+      "a failed query must unpersist every frozen frame")
+    assert(spark.streams.listListeners().length == listeners0,
+      "a failed query must remove its termination listener")
   }
 }

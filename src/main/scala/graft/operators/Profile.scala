@@ -5,23 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 
-/** The typed refusal behind every sketch's right-to-be-forgotten
-  * path: KMV sketches, CMS cells, and manifest states are one-way
-  * folds — a KMV buffer cannot prove a removed hash wasn't also
-  * contributed by a retained row it evicted, and a CMS cell is a sum
-  * of collided contributions — so "subtract these ids" CANNOT be
-  * answered from the state alone. Silently under-deleting (returning
-  * the state unchanged, or decrementing what can be decremented)
-  * would leave the forgotten documents' mass in published estimates;
-  * the contract is therefore an ERROR, and the documented path is
-  * rebuild-from-retained ([[Profile.kmvRebuild]] /
-  * [[Profile.cmsRebuild]] / [[Profile.manifestStatesRebuild]]):
-  * recompute the sketch over the corpus minus the tombstoned ids —
-  * one scan, the same cost as the original build, bit-identical to a
-  * never-ingested build (the closure the forget oracle gates). */
-final class SketchCannotSubtract(msg: String)
-  extends UnsupportedOperationException(msg)
-
 /** Table profiling — the pre-migration sanity pass every ETL needs:
   * per-column null counts, distinct cardinality, min/max.
   *
@@ -1130,49 +1113,25 @@ object Profile {
         (col("q_sum").cast("double") / col("n_docs")).as("mean_quality"))
   }
 
-  // -------------------------------------------- sketch forget / rebuild
+  // ------------------------------------------------- sketch rebuild
   //
   // The counter half of corpus-wide right-to-be-forgotten: the
   // standing INDEXES (ANN, minhash bands, line provenance) take
   // tombstones ([[graft.sources.Segments]]), but the SKETCHES cannot
-  // subtract — these entry points make that refusal typed and loud
-  // (never a silent under-delete) and name the rebuild path next to
-  // it. `retainExcept` is that path's one shared step.
+  // subtract — a KMV buffer cannot prove a removed hash wasn't also
+  // contributed by a retained row it evicted, a CMS cell is a sum of
+  // collided contributions, and a manifest state embeds a KMV sketch.
+  // Forgetting is therefore rebuild-from-retained ([[kmvRebuild]] /
+  // [[cmsRebuild]] / [[manifestStatesRebuild]]): one scan over the
+  // corpus minus the tombstoned ids, the same cost as the original
+  // build, bit-identical to a never-ingested build (the closure the
+  // forget oracle gates). `retainExcept` is that path's one shared
+  // step.
 
   /** The corpus minus the forgotten ids — the input every
     * rebuild-from-retained call takes. `ids` must carry `idCol`. */
   def retainExcept(df: DataFrame, idCol: String, ids: DataFrame): DataFrame =
     df.join(ids.select(col(idCol)), Seq(idCol), "left_anti")
-
-  /** REFUSED: a KMV sketch cannot subtract — an evicted retained hash
-    * is indistinguishable from a never-seen one. Throws
-    * [[SketchCannotSubtract]]; use [[kmvRebuild]]. */
-  def kmvForget(sketches: DataFrame, ids: DataFrame): Nothing =
-    throw new SketchCannotSubtract(
-      "KMV sketches cannot subtract documents: the k-slot buffer may " +
-        "have evicted retained hashes that the removed ones displaced. " +
-        "Rebuild from the retained corpus instead (Profile.kmvRebuild — " +
-        "one scan, bit-identical to a never-ingested build).")
-
-  /** REFUSED: CMS cells are sums of collided contributions — a
-    * per-document decrement cannot be reconstructed from the state.
-    * Throws [[SketchCannotSubtract]]; use [[cmsRebuild]]. */
-  def cmsForget(cells: DataFrame, ids: DataFrame): Nothing =
-    throw new SketchCannotSubtract(
-      "CMS cells cannot subtract documents: each cell is a sum over " +
-        "colliding items with no per-document provenance. Rebuild from " +
-        "the retained corpus instead (Profile.cmsRebuild).")
-
-  /** REFUSED: manifest states embed a KMV sketch, so the whole state
-    * row inherits [[kmvForget]]'s impossibility (the counters alone
-    * could subtract, but publishing decremented counters next to an
-    * unsubtractable sketch IS the silent under-delete this error
-    * exists to prevent). Use [[manifestStatesRebuild]]. */
-  def manifestForget(states: DataFrame, ids: DataFrame): Nothing =
-    throw new SketchCannotSubtract(
-      "Manifest states cannot subtract documents: the embedded KMV " +
-        "distinct sketch has no per-document provenance. Rebuild from " +
-        "the retained corpus instead (Profile.manifestStatesRebuild).")
 
   /** Rebuild-from-retained for [[kmvSketch]]: the sketch of the
     * corpus minus `ids` — bit-identical to a build over a corpus that

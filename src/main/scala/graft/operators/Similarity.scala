@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.SimilarityFunctions
 
@@ -283,14 +283,23 @@ object Similarity {
       explode(probeCellsUdf(centroids, np)(col(queryVecCol))).as("__cell"))
     val cSide = assigned.select(
       col("id"), col("vec").as("__vec"), col("cell").as("__cell"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cosine").desc, col("id").asc)
-    qSide.join(cSide, "__cell")
+    topKPerQuery(qSide.join(cSide, "__cell")
       .select(col("query_id"), col("id"),
-        SimilarityFunctions.cosine(col("__vec"), col("__qvec")).as("cosine"))
+        SimilarityFunctions.cosine(col("__vec"), col("__qvec")).as("cosine")),
+      "cosine", k)
+  }
+
+  /** The per-query top-k tail every batch ANN scorer ends in: rank
+    * each query's scored candidates (query_id, id, `score`) by score
+    * descending, id ascending — the tie-break that makes the answer
+    * deterministic — and keep the first `k`. */
+  private def topKPerQuery(scored: DataFrame, score: String, k: Int): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("query_id").orderBy(col(score).desc, col("id").asc)
+    scored
       .withColumn("__rnk", row_number().over(w))
       .filter(col("__rnk") <= k)
-      .select("query_id", "id", "cosine")
+      .select("query_id", "id", score)
   }
 
   /** Distributed Lloyd refinement over the FULL corpus — the scale
@@ -479,9 +488,11 @@ object Similarity {
       numPlanes: Int = 10,
       dim: Int = 64,
       probeHamming: Int = 2,
-      seed: Long = 42L): DataFrame =
-    lshBatchCore(queries, corpus, queryIdCol, queryVecCol, idCol, vecCol,
-      k, numPlanes, dim, probeHamming, seed, labelPair = None)
+      seed: Long = 42L): DataFrame = {
+    val planes = SimilarityFunctions.hyperplanes(numPlanes, dim, seed)
+    lshBatchCore(queries, lshBucketed(corpus, idCol, vecCol, planes),
+      queryIdCol, queryVecCol, k, planes, probeHamming)
+  }
 
   /** Hard-negative mining for contrastive training: for each query
     * vector, the `k` most-similar corpus vectors carrying a DIFFERENT
@@ -504,81 +515,64 @@ object Similarity {
       numPlanes: Int = 10,
       dim: Int = 64,
       probeHamming: Int = 2,
-      seed: Long = 42L): DataFrame =
-    lshBatchCore(queries, corpus, queryIdCol, queryVecCol, idCol, vecCol,
-      k, numPlanes, dim, probeHamming, seed,
-      labelPair = Some((queryLabelCol, labelCol)))
-
-  private def lshBatchCore(
-      queries: DataFrame,
-      corpus: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      numPlanes: Int,
-      dim: Int,
-      probeHamming: Int,
-      seed: Long,
-      labelPair: Option[(String, String)]): DataFrame = {
+      seed: Long = 42L): DataFrame = {
     val planes = SimilarityFunctions.hyperplanes(numPlanes, dim, seed)
-    val ball = udf((b: Long) => hammingBall(b, numPlanes, probeHamming))
-    val qSide = queries.select(
-      Seq(col(queryIdCol).as("query_id"), col(queryVecCol).as("__qvec")) ++
-        labelPair.map(p => col(p._1).as("__qlabel")) :+
-        explode(ball(SimilarityFunctions.lshBucket(col(queryVecCol), planes)))
-          .as("bucket"): _*)
-    val cSide = corpus.select(
-      Seq(col(idCol).as("id"), col(vecCol).as("__vec"),
-        SimilarityFunctions.lshBucket(col(vecCol), planes).as("bucket")) ++
-        labelPair.map(p => col(p._2).as("__clabel")): _*)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cosine").desc, col("id").asc)
-    // ball buckets are distinct, so a corpus row appears at most once
-    // per query — no candidate dedup needed before the window
-    val joined = qSide.join(cSide, "bucket")
-    val filtered = labelPair
-      .map(_ => joined.filter(col("__qlabel") =!= col("__clabel")))
-      .getOrElse(joined)
-    filtered
-      .select(col("query_id"), col("id"),
-        SimilarityFunctions.cosine(col("__vec"), col("__qvec")).as("cosine"))
-      .withColumn("__rnk", row_number().over(w))
-      .filter(col("__rnk") <= k)
-      .select("query_id", "id", "cosine")
+    lshBatchCore(queries,
+      lshBucketed(corpus, idCol, vecCol, planes, col(labelCol).as("__clabel")),
+      queryIdCol, queryVecCol, k, planes, probeHamming,
+      queryLabelCol = Some(queryLabelCol))
   }
 
-  /** [[lshTopKBatch]] over a PRE-BUCKETED corpus (id, bucket, vec) —
-    * the read path of the persisted LSH index
-    * ([[graft.sources.AnnIndex.buildAndWriteLsh]]): the corpus-side
-    * bucket computation is already on disk, so a query batch pays
-    * only its own Hamming-ball explode + the bucket equi-join.
-    * Bit-identical to the inline path under the same planes (the
-    * bucket fold and cosine are the same expressions). */
-  def lshTopKBatchBucketed(
+  /** Sign-LSH-bucket a corpus under `planes`: (id, bucket, vec), plus
+    * any `carry` columns — the shape [[lshBatchCore]] probes and the
+    * persisted LSH index ([[graft.sources.AnnIndex.buildAndWriteLsh]])
+    * stores. */
+  private[graft] def lshBucketed(
+      corpus: DataFrame, idCol: String, vecCol: String,
+      planes: Array[Array[Double]], carry: Column*): DataFrame =
+    corpus.select(Seq(col(idCol).as("id"),
+      SimilarityFunctions.lshBucket(col(vecCol), planes).as("bucket"),
+      col(vecCol).as("vec")) ++ carry: _*)
+
+  /** The one batch-LSH read path, over a BUCKETED corpus (id, bucket,
+    * vec): each query explodes to its Hamming-ball probe buckets under
+    * `planes`, candidates come from the bucket equi-join, exact cosine
+    * + [[topKPerQuery]] pick the top k. [[lshTopKBatch]] and
+    * [[hardNegatives]] bucket their corpus inline ([[lshBucketed]]);
+    * the persisted LSH index ([[graft.sources.AnnIndex.queryBatchLsh]])
+    * passes its stored `bucketed` table, so a query batch pays only
+    * its own explode + the join — bit-identical to the inline path
+    * under the same planes (the bucket fold and cosine are the same
+    * expressions). With `queryLabelCol`, the corpus also carries
+    * `__clabel` and same-label candidates drop before the window. */
+  private[graft] def lshBatchCore(
       queries: DataFrame,
       bucketed: DataFrame,
       queryIdCol: String,
       queryVecCol: String,
       k: Int,
       planes: Array[Array[Double]],
-      probeHamming: Int = 2): DataFrame = {
-    val numPlanes = planes.length
-    val ball = udf((b: Long) => hammingBall(b, numPlanes, probeHamming))
+      probeHamming: Int,
+      queryLabelCol: Option[String] = None): DataFrame = {
+    val ball = udf((b: Long) => hammingBall(b, planes.length, probeHamming))
     val qSide = queries.select(
-      col(queryIdCol).as("query_id"), col(queryVecCol).as("__qvec"),
-      explode(ball(SimilarityFunctions.lshBucket(col(queryVecCol), planes)))
-        .as("bucket"))
-    val cSide = bucketed.select(col("id"), col("vec").as("__vec"), col("bucket"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cosine").desc, col("id").asc)
-    qSide.join(cSide, "bucket")
+      Seq(col(queryIdCol).as("query_id"), col(queryVecCol).as("__qvec")) ++
+        queryLabelCol.map(c => col(c).as("__qlabel")) :+
+        explode(ball(SimilarityFunctions.lshBucket(col(queryVecCol), planes)))
+          .as("bucket"): _*)
+    val cSide = bucketed.select(
+      Seq(col("id"), col("vec").as("__vec"), col("bucket")) ++
+        queryLabelCol.map(_ => col("__clabel")): _*)
+    // ball buckets are distinct, so a corpus row appears at most once
+    // per query — no candidate dedup needed before the window
+    val joined = qSide.join(cSide, "bucket")
+    val candidates = queryLabelCol
+      .map(_ => joined.filter(col("__qlabel") =!= col("__clabel")))
+      .getOrElse(joined)
+    topKPerQuery(candidates
       .select(col("query_id"), col("id"),
-        SimilarityFunctions.cosine(col("__vec"), col("__qvec")).as("cosine"))
-      .withColumn("__rnk", row_number().over(w))
-      .filter(col("__rnk") <= k)
-      .select("query_id", "id", "cosine")
+        SimilarityFunctions.cosine(col("__vec"), col("__qvec")).as("cosine")),
+      "cosine", k)
   }
 
   /** Margin-based embedding pair mining — the RATIO margin of
@@ -1002,13 +996,9 @@ object Similarity {
       }
       if (nx > 0.0) dot / (math.sqrt(qn2) * math.sqrt(nx)) else 0.0
     }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("approx_cos").desc, col("id").asc)
-    qSide.join(cSide, "__cell")
+    topKPerQuery(qSide.join(cSide, "__cell")
       .select(col("query_id"), col("id"),
-        score(col("__qvec"), col("__code")).as("approx_cos"))
-      .withColumn("__rnk", row_number().over(w))
-      .filter(col("__rnk") <= k)
-      .select("query_id", "id", "approx_cos")
+        score(col("__qvec"), col("__code")).as("approx_cos")),
+      "approx_cos", k)
   }
 }

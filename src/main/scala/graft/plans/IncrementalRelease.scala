@@ -766,54 +766,37 @@ object IncrementalRelease {
     // manifest: rebuild-from-retained (tombstones already in force on
     // both reads), published as a NEW pointer version — atomic, and
     // the superseded states never resurface
-    val retained = seg(spark, stateDir, "corpus_texts",
-        "doc_id", "source", "text")
-      .join(seg(spark, stateDir, "packed", "doc_id").distinct(), "doc_id")
-    replaceState(spark, stateDir, "manifest_states",
-      Profile.manifestStates(retained, "source", "text"))
+    replaceState(spark, stateDir, "manifest_states") {
+      val retained = seg(spark, stateDir, "corpus_texts",
+          "doc_id", "source", "text")
+        .join(seg(spark, stateDir, "packed", "doc_id").distinct(), "doc_id")
+      Profile.manifestStates(retained, "source", "text")
+    }
   }
 
-  /** Compact one state table: read through the tombstone filter,
-    * rewrite as a single segment in a fresh pointer-published version
-    * tree (one atomic flip — [[Segments.publishVersionFenced]], so a
+  /** Compact one state table ([[Segments.compact]]): read through
+    * the tombstone filter, rewrite as a single segment in a fresh
+    * pointer-published version tree (one fenced atomic flip, so a
     * concurrent batch's append refuses rather than vanishing), which
     * physically drops forgotten rows AND clears the tombstone table.
-    * The per-batch segment accumulation (one segment per table per
-    * batch — 365/yr × 10 tables) is bounded by scheduling this off
+    * Tombstones key on `doc_id`: only the [[DocKeyed]] tables ever
+    * carry them ([[forget]]). The per-batch segment accumulation
+    * (one segment per table per batch — 365/yr × 10 tables) is
+    * bounded by scheduling this off
     * [[DedupIndexStore.maintenanceAudit]]'s compaction-due trigger,
     * exactly like the minhash/ANN stores. */
   def compactState(
-      spark: SparkSession, stateDir: String, name: String): Unit = Stage.scope {
-    val dir = s"$stateDir/$name"
-    val watermark = Segments.segmentWatermark(spark, dir)
-    val root = Segments.resolve(spark, dir)
-    val raw = spark.read.parquet(s"$root/rows").drop("seg")
-    val rows =
-      if (DocKeyed(name)) Segments.minusTombstones(spark, root, raw, "doc_id")
-      else raw
-    publishStateVersion(spark, dir, rows, Some(watermark))
-  }
+      spark: SparkSession, stateDir: String, name: String): Unit =
+    Segments.compact(spark, s"$stateDir/$name", "doc_id")
 
   /** Replace a state table's contents wholesale (the manifest-rebuild
-    * path) — same pointer-flip publication as [[compactState]]. */
+    * path): one fenced [[Segments.publishTree]] of `rows`, evaluated
+    * after the watermark. */
   private def replaceState(
-      spark: SparkSession, stateDir: String, name: String,
-      rows: DataFrame): Unit = {
-    val dir = s"$stateDir/$name"
-    val watermark = Segments.segmentWatermark(spark, dir)
-    publishStateVersion(spark, dir, rows, Some(watermark))
-  }
-
-  private def publishStateVersion(
-      spark: SparkSession, dir: String, rows: DataFrame,
-      watermark: Option[Segments.StoreWatermark]): Unit = {
-    val staging = Segments.newVersionPath(dir)
-    rows.write.mode("overwrite").parquet(s"$staging/rows/seg=0")
-    watermark match {
-      case Some(w) => Segments.publishVersionFenced(spark, dir, staging, w)
-      case None => Segments.publishVersion(spark, dir, staging)
-    }
-  }
+      spark: SparkSession, stateDir: String, name: String)(
+      rows: => DataFrame): Unit =
+    Segments.publishTree(spark, s"$stateDir/$name", fenced = true)(
+      Segments.Tree(Nil, "rows", rows))
 
   /** The union artifact in [[Release.pipeline]]'s (part, k, v) shape,
     * assembled from the standing state: pack and ledger rows read

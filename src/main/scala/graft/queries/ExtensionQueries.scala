@@ -1093,10 +1093,9 @@ object ExtensionQueries {
     val idxDir = s"$twinRoot/annidx_append_pq/${new java.io.File(dir).getName}"
     graft.sources.AnnIndex.buildAndWrite(
       s, idxDir, base, "vec_id", "embedding", nlist = 8, m = 8)
-    val idx = graft.sources.AnnIndex.append(
-      s, idxDir, batch, "vec_id", "embedding")
-    graft.sources.AnnIndex.queryBatch(
-      idx, queries, "vec_id", "embedding", k = 5, nprobe = 2)
+    graft.sources.AnnIndex.append(s, idxDir, batch, "vec_id", "embedding")
+    graft.sources.AnnIndex.queryBatch(graft.sources.AnnIndex.read(s, idxDir),
+      queries, "vec_id", "embedding", k = 5, nprobe = 2)
   }
 
   /** Tombstone DELETE on a persisted index
@@ -1715,12 +1714,13 @@ object ExtensionQueries {
     *   - `line`: the df-histogram of the post-delete line index
     *     (df → n_lines) over the multi-line fixture — deleting 10%+
     *     of the corpus cools hot lines below the boilerplate cut.
-    *   - `manifest`: counters/sketches CANNOT subtract
-    *     ([[graft.operators.SketchCannotSubtract]] — spec-pinned
-    *     refusal), so this leg runs the documented
-    *     rebuild-from-retained path: per-segment states rebuilt minus
-    *     the tombstone set, merged — per-source
-    *     n_docs:total_tokens:uniq_est:dup_permille.
+    *   - `manifest`: counters/sketches CANNOT subtract, so this leg
+    *     runs the documented rebuild-from-retained path
+    *     ([[graft.operators.Profile.kmvRebuild]] /
+    *     [[graft.operators.Profile.cmsRebuild]] /
+    *     [[graft.operators.Profile.manifestStatesRebuild]]):
+    *     per-segment states rebuilt minus the tombstone set, merged
+    *     — per-source n_docs:total_tokens:uniq_est:dup_permille.
     *
     * The oracle computes all three parts from a corpus that NEVER
     * ingested the deleted docs — hash-green means delete ≡ never

@@ -23,7 +23,7 @@ import graft.operators.{Similarity, Stage}
   *
   * Write discipline: tables land in a fresh versioned tree under the
   * index dir and ONE small pointer-file flip publishes it
-  * ([[Segments.publishVersion]] — object-store safe: no directory is
+  * ([[Segments.publishTree]] — object-store safe: no directory is
   * ever renamed), so a crash mid-build never leaves a half-index a
   * reader could load, and a rebuild over an existing index keeps the
   * previous tree live until the instant the pointer flips — no crash
@@ -76,92 +76,59 @@ object AnnIndex {
     val centroids = Similarity.refineCentroids(sample, nlist, refineIters)
     val codebooks = Similarity.pqCodebooks(corpus, idCol, vecCol, m, ksub,
       refineIters, sampleSize)
-    val coded = Similarity.encodeForIndex(corpus, idCol, vecCol, centroids, codebooks)
-
-    val staging = Segments.newVersionPath(dir)
-    import spark.implicits._
-    centroids.zipWithIndex
-      .map { case (v, i) => (i, v.toSeq) }.toSeq
-      .toDF("cell", "vec")
-      .write.mode("overwrite").parquet(s"$staging/centroids")
-    codebooks.zipWithIndex.flatMap { case (book, j) =>
-      book.zipWithIndex.map { case (v, c) => (j, c, v.toSeq) }
-    }.toSeq.toDF("subspace", "code", "vec")
-      .write.mode("overwrite").parquet(s"$staging/codebooks")
-    coded.write.mode("overwrite").parquet(s"$staging/coded/seg=0")
-    Segments.publishVersion(spark, dir, staging)
+    Segments.publishTree(spark, dir, fenced = false)(pqTree(spark,
+      centroids, codebooks,
+      Similarity.encodeForIndex(corpus, idCol, vecCol, centroids, codebooks)))
     read(spark, dir)
   }
+
+  private def pqTree(
+      spark: SparkSession,
+      centroids: Array[Array[Double]],
+      codebooks: Array[Array[Array[Double]]],
+      coded: DataFrame): Segments.Tree =
+    Segments.Tree(
+      Seq("centroids" -> vectorsTable(spark, "cell", centroids),
+        "codebooks" -> codebooksTable(spark, codebooks)),
+      "coded", coded)
 
   /** Append a batch to a persisted IVF-PQ index WITHOUT retraining
     * or re-coding the corpus: encode against the index's frozen
     * centroids/codebooks, publish as one new `coded` segment (see
-    * the class doc for the crash discipline). Query results over the
-    * appended index are bit-identical to a from-scratch
+    * the class doc for the crash discipline), pinned to the tree
+    * whose model encoded it ([[appendToIvf]]). Query results over
+    * the appended index are bit-identical to a from-scratch
     * [[buildAndWrite]]-shaped encode over corpus∪batch with the SAME
-    * model — the closure property `q_sim_index_append` oracles. */
+    * model — the closure property `q_sim_index_append` oracles.
+    * Returns true when this call published; [[read]] loads the grown
+    * index. */
   def append(
       spark: SparkSession,
       dir: String,
       batch: DataFrame,
       idCol: String,
-      vecCol: String): Loaded = {
+      vecCol: String): Boolean = {
     val root = Segments.resolve(spark, dir)
-    val idx = read(spark, dir)
     Segments.publishToStore(spark, dir, "coded",
-      Similarity.encodeForIndex(batch, idCol, vecCol, idx.centroids, idx.codebooks),
+      Similarity.encodeForIndex(batch, idCol, vecCol,
+        readVectors(spark, root, "centroids"), readCodebooks(spark, root)),
       pinnedRoot = Some(root))
-    read(spark, dir)
   }
 
-  /** Compact an appended IVF-PQ index back to one segment: rewrite
-    * the coded table (frozen model untouched — compaction is a FILE
-    * operation, no re-encode beyond reading coded rows back) through
-    * the whole-index staged swap, so readers see either the
-    * multi-segment index or the compacted one, never an intermediate.
-    * Run after many appends to restore big-file scan behavior; query
-    * answers are identical before and after (pinned by AnnIndexSpec).
-    * NB: [[Loaded]]/[[LoadedIvf]] handles obtained BEFORE a compaction
-    * hold the pre-swap file listing and die with the swap (standard
-    * Spark file-source behavior on overwrite) — re-[[read]] after.
-    * Fenced against concurrent writers: the segment watermark is
-    * captured BEFORE the snapshot read and the swap refuses (typed
-    * [[ConcurrentStoreWriteException]], staging preserved) if any
-    * segment published since — re-run to pick it up. */
-  def compact(spark: SparkSession, dir: String): Loaded = {
-    val watermark = Segments.segmentWatermark(spark, dir)
-    val idx = read(spark, dir)
-    val staging = Segments.newVersionPath(dir)
-    import spark.implicits._
-    idx.centroids.zipWithIndex
-      .map { case (v, i) => (i, v.toSeq) }.toSeq
-      .toDF("cell", "vec")
-      .write.mode("overwrite").parquet(s"$staging/centroids")
-    idx.codebooks.zipWithIndex.flatMap { case (book, j) =>
-      book.zipWithIndex.map { case (v, c) => (j, c, v.toSeq) }
-    }.toSeq.toDF("subspace", "code", "vec")
-      .write.mode("overwrite").parquet(s"$staging/codebooks")
-    // the staging write scans the CURRENT coded files (still in place
-    // — the previous tree stays live until the pointer flips)
-    idx.coded.write.mode("overwrite").parquet(s"$staging/coded/seg=0")
-    Segments.publishVersionFenced(spark, dir, staging, watermark)
-    read(spark, dir)
-  }
-
-  /** [[compact]]'s plain-IVF twin (fenced — see [[compact]]). */
-  def compactIvf(spark: SparkSession, dir: String): LoadedIvf = {
-    val watermark = Segments.segmentWatermark(spark, dir)
-    val idx = readIvf(spark, dir)
-    val staging = Segments.newVersionPath(dir)
-    import spark.implicits._
-    idx.centroids.zipWithIndex
-      .map { case (v, i) => (i, v.toSeq) }.toSeq
-      .toDF("cell", "vec")
-      .write.mode("overwrite").parquet(s"$staging/centroids")
-    idx.assigned.write.mode("overwrite").parquet(s"$staging/assigned/seg=0")
-    Segments.publishVersionFenced(spark, dir, staging, watermark)
-    readIvf(spark, dir)
-  }
+  /** Compact an appended index of any of the three families back to
+    * one segment ([[Segments.compact]]): the frozen model tables are
+    * copied verbatim, the corpus table is rewritten through the
+    * tombstone filter, and one fenced pointer flip publishes the
+    * result — readers see either the multi-segment index or the
+    * compacted one, never an intermediate. Run after many appends to
+    * restore big-file scan behavior; query answers are identical
+    * before and after (pinned by AnnIndexSpec). Handles loaded
+    * BEFORE a compaction hold the pre-flip file listing — re-read
+    * with [[read]] / [[readIvf]] / [[readLsh]] after. A segment
+    * published after the compaction's read refuses the flip (typed
+    * [[ConcurrentStoreWriteException]]) — re-run to pick it up. */
+  def compact(spark: SparkSession, dir: String): Unit =
+    Segments.compact(spark, dir, "id")
 
   /** Tombstone DELETE for any of the three index families — the
     * right-to-be-forgotten path: publish the ids as one new segment
@@ -171,11 +138,10 @@ object AnnIndex {
     * until the rename and never rewritten). Readers ([[read]] /
     * [[readIvf]] / [[readLsh]]) subtract the tombstone set with a
     * left-anti join before anything sees the corpus table, so a
-    * query can never surface a deleted id; [[compact]] /
-    * [[compactIvf]] / [[compactLsh]] read THROUGH the filtered view
-    * and rewrite, so compaction physically drops the rows AND clears
-    * the tombstone table in the same atomic swap (the staging tree
-    * never carries tombstones).
+    * query can never surface a deleted id; [[compact]] reads THROUGH
+    * the filtered view and rewrites, so compaction physically drops
+    * the rows AND clears the tombstone table in the same atomic flip
+    * (the new tree never carries tombstones).
     *
     * Contract (spec-pinned): a tombstone suppresses its id across
     * ALL segments, including segments appended AFTER the delete —
@@ -190,49 +156,64 @@ object AnnIndex {
       idCol: String): Unit =
     Segments.deleteIds(spark, dir, ids, idCol)
 
-  /** Subtract the index's tombstone set (if any) from its corpus
-    * table — [[Segments.minusTombstones]] over the RESOLVED live
-    * tree, the single filter every load path applies (tombstones
-    * count as present only once a published seg exists; see Segments
-    * for the crash rationale). */
-  private def minusTombstones(
-      spark: SparkSession, root: String, table: DataFrame): DataFrame =
-    Segments.minusTombstones(spark, root, table)
+  // ------------------------------------------------------ tables
+  //
+  // One writer and one reader per model table: `centroids` (cell INT,
+  // vec ARRAY<DOUBLE>) and `planes` (plane INT, vec ARRAY<DOUBLE>)
+  // share the indexed-vector shape; `codebooks` is (subspace INT,
+  // code INT, vec ARRAY<DOUBLE>). Model tables are bounded (nlist,
+  // m·ksub, numPlanes rows) and load back to driver arrays.
 
-  /** [[compact]]'s LSH twin — also the tombstone GC for the LSH
-    * family (fenced — see [[compact]]). */
-  def compactLsh(spark: SparkSession, dir: String): LoadedLsh = {
-    val watermark = Segments.segmentWatermark(spark, dir)
-    val idx = readLsh(spark, dir)
-    val staging = Segments.newVersionPath(dir)
+  private def vectorsTable(
+      spark: SparkSession, key: String, vs: Array[Array[Double]]): DataFrame = {
     import spark.implicits._
-    idx.planes.zipWithIndex
-      .map { case (v, i) => (i, v.toSeq) }.toSeq
-      .toDF("plane", "vec")
-      .write.mode("overwrite").parquet(s"$staging/planes")
-    idx.bucketed.write.mode("overwrite").parquet(s"$staging/bucketed/seg=0")
-    Segments.publishVersionFenced(spark, dir, staging, watermark)
-    readLsh(spark, dir)
+    vs.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq.toDF(key, "vec")
   }
+
+  private def readVectors(
+      spark: SparkSession, root: String, table: String): Array[Array[Double]] = {
+    val vs = spark.read.parquet(s"$root/$table")
+      .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
+      .sortBy(_._1).map(_._2)
+    require(vs.nonEmpty, s"AnnIndex: no $table under $root")
+    vs
+  }
+
+  private def codebooksTable(
+      spark: SparkSession, codebooks: Array[Array[Array[Double]]]): DataFrame = {
+    import spark.implicits._
+    codebooks.zipWithIndex.flatMap { case (book, j) =>
+      book.zipWithIndex.map { case (v, c) => (j, c, v.toSeq) }
+    }.toSeq.toDF("subspace", "code", "vec")
+  }
+
+  private def readCodebooks(
+      spark: SparkSession, root: String): Array[Array[Array[Double]]] = {
+    val cb = spark.read.parquet(s"$root/codebooks")
+      .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
+      .groupBy(_._1).toArray.sortBy(_._1)
+      .map { case (_, rows) => rows.sortBy(_._2).map(_._3) }
+    require(cb.nonEmpty, s"AnnIndex: no codebooks under $root")
+    cb
+  }
+
+  /** A family's corpus table in the live tree at `root`, projected to
+    * `cols` (the `seg` partition column drops unless asked for) and
+    * minus the tombstone set: the single filter every load path
+    * applies ([[Segments.minusTombstones]]). */
+  private def corpusTable(
+      spark: SparkSession, root: String, table: String,
+      cols: org.apache.spark.sql.Column*): DataFrame =
+    Segments.minusTombstones(spark, root,
+      spark.read.parquet(s"$root/$table").select(cols: _*))
 
   /** Load an index directory: model tables collect to driver arrays
     * (bounded — nlist and m·ksub rows), the coded table stays a
     * DataFrame. */
   def read(spark: SparkSession, dir: String): Loaded = {
     val root = Segments.resolve(spark, dir)
-    val cents = spark.read.parquet(s"$root/centroids")
-      .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
-      .sortBy(_._1).map(_._2)
-    require(cents.nonEmpty, s"AnnIndex: no centroids under $dir")
-    val cbRows = spark.read.parquet(s"$root/codebooks")
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-    val codebooks = cbRows.groupBy(_._1).toArray.sortBy(_._1)
-      .map { case (_, rows) => rows.sortBy(_._2).map(_._3) }
-    // project away the seg partition column (and read pre-segment
-    // flat layouts, which simply lack it)
-    Loaded(cents, codebooks,
-      minusTombstones(spark, root,
-        spark.read.parquet(s"$root/coded").select("id", "cell", "code")))
+    Loaded(readVectors(spark, root, "centroids"), readCodebooks(spark, root),
+      corpusTable(spark, root, "coded", col("id"), col("cell"), col("code")))
   }
 
   /** Batch ANN over a loaded index — delegates to the coded-input
@@ -275,20 +256,26 @@ object AnnIndex {
       vecCol: String,
       centroids: Array[Array[Double]]): LoadedIvf = {
     require(centroids.nonEmpty, "no centroids")
-    val assigned = corpus.select(
+    Segments.publishTree(spark, dir, fenced = false)(
+      ivfTree(spark, centroids, corpus, idCol, vecCol))
+    readIvf(spark, dir)
+  }
+
+  /** Cell-assign `rows` under `centroids`: the `assigned` table's
+    * (id, cell, vec) rows, for the build, an append and a retrain. */
+  private def ivfAssigned(
+      rows: DataFrame, idCol: String, vecCol: String,
+      centroids: Array[Array[Double]]): DataFrame =
+    rows.select(
       col(idCol).as("id"),
       Similarity.assignCellUdf(centroids)(col(vecCol)).as("cell"),
       col(vecCol).as("vec"))
-    val staging = Segments.newVersionPath(dir)
-    import spark.implicits._
-    centroids.zipWithIndex
-      .map { case (v, i) => (i, v.toSeq) }.toSeq
-      .toDF("cell", "vec")
-      .write.mode("overwrite").parquet(s"$staging/centroids")
-    assigned.write.mode("overwrite").parquet(s"$staging/assigned/seg=0")
-    Segments.publishVersion(spark, dir, staging)
-    readIvf(spark, dir)
-  }
+
+  private def ivfTree(
+      spark: SparkSession, centroids: Array[Array[Double]],
+      rows: DataFrame, idCol: String, vecCol: String): Segments.Tree =
+    Segments.Tree(Seq("centroids" -> vectorsTable(spark, "cell", centroids)),
+      "assigned", ivfAssigned(rows, idCol, vecCol, centroids))
 
   /** [[append]]'s plain-IVF twin: cell-assign the batch against the
     * index's FROZEN centroids, publish as one new `assigned` segment.
@@ -311,12 +298,8 @@ object AnnIndex {
       vecCol: String,
       at: Option[Long] = None): Boolean = {
     val root = Segments.resolve(spark, dir)
-    val idx = readIvf(spark, dir)
     Segments.publishToStore(spark, dir, "assigned",
-      batch.select(
-        col(idCol).as("id"),
-        Similarity.assignCellUdf(idx.centroids)(col(vecCol)).as("cell"),
-        col(vecCol).as("vec")),
+      ivfAssigned(batch, idCol, vecCol, readVectors(spark, root, "centroids")),
       at, pinnedRoot = Some(root))
   }
 
@@ -324,13 +307,8 @@ object AnnIndex {
     * (nlist-bounded), the assigned table stays a DataFrame. */
   def readIvf(spark: SparkSession, dir: String): LoadedIvf = {
     val root = Segments.resolve(spark, dir)
-    val cents = spark.read.parquet(s"$root/centroids")
-      .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
-      .sortBy(_._1).map(_._2)
-    require(cents.nonEmpty, s"AnnIndex: no centroids under $dir")
-    LoadedIvf(cents,
-      minusTombstones(spark, root,
-        spark.read.parquet(s"$root/assigned").select("id", "cell", "vec")))
+    LoadedIvf(readVectors(spark, root, "centroids"),
+      corpusTable(spark, root, "assigned", col("id"), col("cell"), col("vec")))
   }
 
   /** WRITE-SIDE staleness monitor for an appended plain-IVF index —
@@ -376,10 +354,7 @@ object AnnIndex {
       nearCut: Double = 0.12,
       driftFactor: Int = 2): DataFrame = {
     val root = Segments.resolve(spark, dir)
-    val cents = spark.read.parquet(s"$root/centroids")
-      .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
-      .sortBy(_._1).map(_._2)
-    require(cents.nonEmpty, s"AnnIndex: no centroids under $dir")
+    val cents = readVectors(spark, root, "centroids")
     // expression path while the nested centroid literal stays inside
     // the janino comfort zone (the lshExprMaxPlanes budget argument:
     // ~1k literal nodes); the UDF twin is the same ascending-index
@@ -396,17 +371,26 @@ object AnnIndex {
         }
         f(col("vec"), col("cell"))
       }
-    val assigned = Segments.minusTombstones(spark, root,
-      spark.read.parquet(s"$root/assigned")
-        .select(col("seg").cast("int").as("seg"),
-          col("id"), col("cell"), col("vec")))
-    val perSeg = assigned
-      .select(col("seg"), (assignCos < nearCut).cast("long").as("__far"))
+    farPpmDrift(
+      corpusTable(spark, root, "assigned", col("seg").cast("int").as("seg"),
+        col("id"), col("cell"), col("vec"))
+        .select(col("seg"), (assignCos < nearCut).cast("long").as("__far")),
+      driftFactor)
+  }
+
+  /** The per-segment tail [[driftAudit]] and [[driftAuditPq]] share,
+    * over (seg, `__far` 0/1) rows: per segment the row count, the far
+    * count and exact-integer far ppm, then `drift_flag` = far ppm
+    * above `driftFactor` × the seg-0 baseline's. The baseline scalar
+    * attaches through an empty-partition window, never a literal-key
+    * join (which would constant-fold to the BNLJ the catalog plan
+    * gate bans). */
+  private def farPpmDrift(flagged: DataFrame, driftFactor: Int): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window.partitionBy()
+    flagged
       .groupBy("seg")
       .agg(count(lit(1)).as("n_rows"), sum(col("__far")).as("n_far"))
       .withColumn("far_ppm", expr("n_far * 1000000 div n_rows"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy()
-    perSeg
       .withColumn("base_ppm",
         max(when(col("seg") === 0, col("far_ppm"))).over(w))
       // missing baseline → NULL comparison → coalesce fires the flag
@@ -433,32 +417,20 @@ object AnnIndex {
     * pins ≡, assigned table and query answers both), and the
     * post-retrain [[driftAudit]] baseline re-establishes: one seg 0
     * carrying the NEW build-time distribution, flag off. Tombstones
-    * are GC'd by the swap like [[compactIvf]]; fenced the same way —
-    * a segment published after the survivor read refuses the swap
-    * (typed [[ConcurrentStoreWriteException]], staging preserved). */
+    * are GC'd by the flip like [[compact]]; fenced the same way —
+    * a segment published after the survivor read refuses the flip
+    * (typed [[ConcurrentStoreWriteException]], built tree preserved). */
   def retrainIvf(
       spark: SparkSession,
       dir: String,
       nlist: Int,
       iters: Int = 2): LoadedIvf = {
-    val watermark = Segments.segmentWatermark(spark, dir)
-    val survivors = readIvf(spark, dir).assigned.select(col("id"), col("vec"))
-    val cents = Similarity.kmeansCentroidsDistributed(
-      survivors, "id", "vec", nlist, iters)
-    val staging = Segments.newVersionPath(dir)
-    import spark.implicits._
-    cents.zipWithIndex
-      .map { case (v, i) => (i, v.toSeq) }.toSeq
-      .toDF("cell", "vec")
-      .write.mode("overwrite").parquet(s"$staging/centroids")
-    // the staging write scans the CURRENT assigned files (still in
-    // place — the previous tree stays live until the pointer flips)
-    survivors.select(
-        col("id"),
-        Similarity.assignCellUdf(cents)(col("vec")).as("cell"),
-        col("vec"))
-      .write.mode("overwrite").parquet(s"$staging/assigned/seg=0")
-    Segments.publishVersionFenced(spark, dir, staging, watermark)
+    Segments.publishTree(spark, dir, fenced = true) {
+      val survivors = readIvf(spark, dir).assigned.select(col("id"), col("vec"))
+      ivfTree(spark,
+        Similarity.kmeansCentroidsDistributed(survivors, "id", "vec", nlist, iters),
+        survivors, "id", "vec")
+    }
     readIvf(spark, dir)
   }
 
@@ -475,7 +447,7 @@ object AnnIndex {
     * so the result is answer-equivalent to a fresh build on the
     * retained corpus — `q_sim_index_retrain` oracles the whole
     * build→append→delete→retrain chain under the training-replay
-    * oracle. Fenced staged swap; tombstones GC'd like [[compact]]. */
+    * oracle. Fenced flip; tombstones GC'd like [[compact]]. */
   def retrainPq(
       spark: SparkSession,
       dir: String,
@@ -487,7 +459,6 @@ object AnnIndex {
       ksub: Int = 16,
       refineIters: Int = 2,
       sampleSize: Int = 256): Loaded = {
-    val watermark = Segments.segmentWatermark(spark, dir)
     // persisted for the retrain window: the retained-corpus frame
     // (tombstone anti-join over every live segment) is scanned THREE
     // times below — the centroid sample, the codebook sample (an
@@ -496,28 +467,18 @@ object AnnIndex {
     // (guide §5: persist an iteratively re-read working frame, drop it
     // when the loop ends)
     Stage.scope {
-      val survivors = Stage("retrain survivors", Stage.Persist())(
-        minusTombstones(spark, Segments.resolve(spark, dir),
-          corpus.select(col(idCol).as("id"), col(vecCol).as("vec"))))
-      val sample = Similarity.hashOrderedSample(survivors, "id", "vec", sampleSize)
-      require(sample.nonEmpty, "empty retained corpus")
-      val centroids = Similarity.refineCentroids(sample, nlist, refineIters)
-      val codebooks = Similarity.pqCodebooks(survivors, "id", "vec", m, ksub,
-        refineIters, sampleSize)
-      val coded = Similarity.encodeForIndex(survivors, "id", "vec",
-        centroids, codebooks)
-      val staging = Segments.newVersionPath(dir)
-      import spark.implicits._
-      centroids.zipWithIndex
-        .map { case (v, i) => (i, v.toSeq) }.toSeq
-        .toDF("cell", "vec")
-        .write.mode("overwrite").parquet(s"$staging/centroids")
-      codebooks.zipWithIndex.flatMap { case (book, j) =>
-        book.zipWithIndex.map { case (v, c) => (j, c, v.toSeq) }
-      }.toSeq.toDF("subspace", "code", "vec")
-        .write.mode("overwrite").parquet(s"$staging/codebooks")
-      coded.write.mode("overwrite").parquet(s"$staging/coded/seg=0")
-      Segments.publishVersionFenced(spark, dir, staging, watermark)
+      Segments.publishTree(spark, dir, fenced = true) {
+        val survivors = Stage("retrain survivors", Stage.Persist())(
+          Segments.minusTombstones(spark, Segments.resolve(spark, dir),
+            corpus.select(col(idCol).as("id"), col(vecCol).as("vec"))))
+        val sample = Similarity.hashOrderedSample(survivors, "id", "vec", sampleSize)
+        require(sample.nonEmpty, "empty retained corpus")
+        val centroids = Similarity.refineCentroids(sample, nlist, refineIters)
+        val codebooks = Similarity.pqCodebooks(survivors, "id", "vec", m, ksub,
+          refineIters, sampleSize)
+        pqTree(spark, centroids, codebooks,
+          Similarity.encodeForIndex(survivors, "id", "vec", centroids, codebooks))
+      }
     }
     read(spark, dir)
   }
@@ -551,15 +512,8 @@ object AnnIndex {
       nearCut: Double = 0.5,
       driftFactor: Int = 2): DataFrame = {
     val root = Segments.resolve(spark, dir)
-    val cents = spark.read.parquet(s"$root/centroids")
-      .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
-      .sortBy(_._1).map(_._2)
-    require(cents.nonEmpty, s"AnnIndex: no centroids under $dir")
-    val cbRows = spark.read.parquet(s"$root/codebooks")
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-    val cb = cbRows.groupBy(_._1).toArray.sortBy(_._1)
-      .map { case (_, rows) => rows.sortBy(_._2).map(_._3) }
-    require(cb.nonEmpty, s"AnnIndex: no codebooks under $dir")
+    val cents = readVectors(spark, root, "centroids")
+    val cb = readCodebooks(spark, root)
     val ds = cb(0)(0).length
     val reconCos = udf { (cell: Int, code: Seq[Int]) =>
       val cv = cents(cell)
@@ -580,25 +534,12 @@ object AnnIndex {
       // — the oracle carries the identical two-sided guard
       if (nx > 0.0 && qn2 > 0.0) dot / (math.sqrt(qn2) * math.sqrt(nx)) else 0.0
     }
-    val coded = Segments.minusTombstones(spark, root,
-      spark.read.parquet(s"$root/coded")
-        .select(col("seg").cast("int").as("seg"),
-          col("id"), col("cell"), col("code")))
-    val perSeg = coded
-      .select(col("seg"),
-        (reconCos(col("cell"), col("code")) < nearCut).cast("long").as("__far"))
-      .groupBy("seg")
-      .agg(count(lit(1)).as("n_rows"), sum(col("__far")).as("n_far"))
-      .withColumn("far_ppm", expr("n_far * 1000000 div n_rows"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy()
-    perSeg
-      .withColumn("base_ppm",
-        max(when(col("seg") === 0, col("far_ppm"))).over(w))
-      .withColumn("drift_flag",
-        coalesce(col("far_ppm") > lit(driftFactor.toLong) * col("base_ppm"),
-          lit(true)))
-      .select(col("seg").cast("bigint").as("seg"), col("n_rows"),
-        col("n_far"), col("far_ppm"), col("drift_flag"))
+    farPpmDrift(
+      corpusTable(spark, root, "coded", col("seg").cast("int").as("seg"),
+        col("id"), col("cell"), col("code"))
+        .select(col("seg"),
+          (reconCos(col("cell"), col("code")) < nearCut).cast("long").as("__far")),
+      driftFactor)
   }
 
   /** Batch ANN over a loaded plain-IVF index — delegates to the
@@ -635,52 +576,40 @@ object AnnIndex {
       numPlanes: Int,
       dim: Int = 64,
       seed: Long = 42L): LoadedLsh = {
-    val planes = graft.functions.SimilarityFunctions.hyperplanes(numPlanes, dim, seed)
-    val bucketed = corpus.select(
-      col(idCol).as("id"),
-      graft.functions.SimilarityFunctions.lshBucket(col(vecCol), planes).as("bucket"),
-      col(vecCol).as("vec"))
-    val staging = Segments.newVersionPath(dir)
-    import spark.implicits._
-    planes.zipWithIndex
-      .map { case (v, i) => (i, v.toSeq) }.toSeq
-      .toDF("plane", "vec")
-      .write.mode("overwrite").parquet(s"$staging/planes")
-    bucketed.write.mode("overwrite").parquet(s"$staging/bucketed/seg=0")
-    Segments.publishVersion(spark, dir, staging)
+    Segments.publishTree(spark, dir, fenced = false)(lshTree(spark,
+      graft.functions.SimilarityFunctions.hyperplanes(numPlanes, dim, seed),
+      corpus, idCol, vecCol))
     readLsh(spark, dir)
   }
 
+  private def lshTree(
+      spark: SparkSession, planes: Array[Array[Double]],
+      rows: DataFrame, idCol: String, vecCol: String): Segments.Tree =
+    Segments.Tree(Seq("planes" -> vectorsTable(spark, "plane", planes)),
+      "bucketed", Similarity.lshBucketed(rows, idCol, vecCol, planes))
+
   /** [[append]]'s LSH twin: bucket the batch against the index's
-    * FROZEN planes, publish as one new `bucketed` segment. O(batch). */
+    * FROZEN planes, publish as one new `bucketed` segment (pinned to
+    * the tree whose planes bucketed it). O(batch). Returns true when
+    * this call published; [[readLsh]] loads the grown index. */
   def appendToLsh(
       spark: SparkSession,
       dir: String,
       batch: DataFrame,
       idCol: String,
-      vecCol: String): LoadedLsh = {
+      vecCol: String): Boolean = {
     val root = Segments.resolve(spark, dir)
-    val idx = readLsh(spark, dir)
     Segments.publishToStore(spark, dir, "bucketed",
-      batch.select(
-        col(idCol).as("id"),
-        graft.functions.SimilarityFunctions.lshBucket(col(vecCol), idx.planes).as("bucket"),
-        col(vecCol).as("vec")),
+      Similarity.lshBucketed(batch, idCol, vecCol, readVectors(spark, root, "planes")),
       pinnedRoot = Some(root))
-    readLsh(spark, dir)
   }
 
   /** Load an LSH index directory: planes to a driver array
     * (numPlanes-bounded), the bucketed table stays a DataFrame. */
   def readLsh(spark: SparkSession, dir: String): LoadedLsh = {
     val root = Segments.resolve(spark, dir)
-    val planes = spark.read.parquet(s"$root/planes")
-      .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
-      .sortBy(_._1).map(_._2)
-    require(planes.nonEmpty, s"AnnIndex: no planes under $dir")
-    LoadedLsh(planes,
-      minusTombstones(spark, root,
-        spark.read.parquet(s"$root/bucketed").select("id", "bucket", "vec")))
+    LoadedLsh(readVectors(spark, root, "planes"),
+      corpusTable(spark, root, "bucketed", col("id"), col("bucket"), col("vec")))
   }
 
   /** [[driftAudit]]'s sign-LSH twin — the write-side staleness
@@ -726,10 +655,8 @@ object AnnIndex {
     require(maxL1Ppm > 0L && maxL1Ppm < 1000000L,
       s"maxL1Ppm must sit in (0, 1e6) so a missing baseline always " +
         s"flags: $maxL1Ppm")
-    val root = Segments.resolve(spark, dir)
-    val bucketed = Segments.minusTombstones(spark, root,
-      spark.read.parquet(s"$root/bucketed")
-        .select(col("seg").cast("int").as("seg"), col("id"), col("bucket")))
+    val bucketed = corpusTable(spark, Segments.resolve(spark, dir), "bucketed",
+      col("seg").cast("int").as("seg"), col("id"), col("bucket"))
     val counts = bucketed.groupBy("seg", "bucket")
       .agg(count(lit(1)).as("cnt"))
     val wSeg = org.apache.spark.sql.expressions.Window.partitionBy("seg")
@@ -766,7 +693,7 @@ object AnnIndex {
     * [[buildAndWriteLsh]] over the retained corpus with the same
     * (numPlanes, dim, seed) — AnnIndexSpec pins ≡ — and the
     * post-retrain [[driftAuditLsh]] baseline re-establishes: one
-    * seg 0, l1 = 0, flag off. Tombstones GC with the swap; a segment
+    * seg 0, l1 = 0, flag off. Tombstones GC with the flip; a segment
     * published after the survivor read refuses the publish (typed
     * [[ConcurrentStoreWriteException]], built tree preserved). */
   def retrainLsh(
@@ -775,23 +702,9 @@ object AnnIndex {
       numPlanes: Int,
       dim: Int = 64,
       seed: Long = 42L): LoadedLsh = {
-    val watermark = Segments.segmentWatermark(spark, dir)
-    val survivors = readLsh(spark, dir).bucketed.select(col("id"), col("vec"))
-    val planes = graft.functions.SimilarityFunctions.hyperplanes(numPlanes, dim, seed)
-    val staging = Segments.newVersionPath(dir)
-    import spark.implicits._
-    planes.zipWithIndex
-      .map { case (v, i) => (i, v.toSeq) }.toSeq
-      .toDF("plane", "vec")
-      .write.mode("overwrite").parquet(s"$staging/planes")
-    // the staging write scans the CURRENT bucketed files (still in
-    // place — the previous tree stays live until the pointer flips)
-    survivors.select(
-        col("id"),
-        graft.functions.SimilarityFunctions.lshBucket(col("vec"), planes).as("bucket"),
-        col("vec"))
-      .write.mode("overwrite").parquet(s"$staging/bucketed/seg=0")
-    Segments.publishVersionFenced(spark, dir, staging, watermark)
+    Segments.publishTree(spark, dir, fenced = true)(lshTree(spark,
+      graft.functions.SimilarityFunctions.hyperplanes(numPlanes, dim, seed),
+      readLsh(spark, dir).bucketed, "id", "vec"))
     readLsh(spark, dir)
   }
 
@@ -804,6 +717,6 @@ object AnnIndex {
       queryVecCol: String,
       k: Int,
       probeHamming: Int = 2): DataFrame =
-    Similarity.lshTopKBatchBucketed(queries, index.bucketed,
+    Similarity.lshBatchCore(queries, index.bucketed,
       queryIdCol, queryVecCol, k, index.planes, probeHamming)
 }

@@ -12,7 +12,7 @@ import graft.operators.Dedup
   * under its own directory:
   *
   * MinHash corpus index (`buildMinhash` / `appendMinhash` /
-  * `readMinhash` / `compactMinhash`):
+  * `readMinhash`):
   *   - `params`        (shingle_n INT, num_hashes INT, bands INT) —
   *     one row, the frozen "model": an append or probe under different
   *     banding would silently never collide, so the parameters persist
@@ -24,7 +24,7 @@ import graft.operators.Dedup
   *   - `tombstones/seg=N` (id) — deletion-sized.
   *
   * Line document-frequency index (`buildLines` / `appendLines` /
-  * `readLines` / `compactLines`):
+  * `readLines`):
   *   - `params`        (delim STRING) — one row.
   *   - `lines/seg=N`   ([[graft.operators.Dedup.lineProvenance]]
   *     rows: id, line_hash — one row per distinct (document, line)).
@@ -32,18 +32,21 @@ import graft.operators.Dedup
   *     consume is recovered at read time AFTER the tombstone
   *     anti-join; storing the aggregate instead would make per-
   *     document subtraction impossible (counters cannot subtract —
-  *     the same reason the KMV/CMS sketches refuse
-  *     [[graft.operators.Profile.kmvForget]] and rebuild instead).
+  *     the same reason the KMV/CMS/manifest sketches forget by
+  *     rebuilding from the retained corpus:
+  *     [[graft.operators.Profile.kmvRebuild]] /
+  *     [[graft.operators.Profile.cmsRebuild]] /
+  *     [[graft.operators.Profile.manifestStatesRebuild]]).
   *   - `tombstones/seg=N` (id).
   *
   * Contract (DedupIndexStoreSpec pins it, generalizing the
   * AnnIndexSpec four-phase tombstone contract): a tombstone
   * suppresses its document across ALL segments including segments
   * appended AFTER the delete; post-delete reads answer exactly what a
-  * never-ingested corpus would answer; compaction physically drops
-  * the rows AND clears the tombstone table in one atomic swap (the
-  * staging tree never carries tombstones); re-ingesting a previously
-  * deleted id requires that compaction first.
+  * never-ingested corpus would answer; [[compact]] (either family)
+  * physically drops the rows AND clears the tombstone table in one
+  * atomic flip (the new tree never carries tombstones); re-ingesting
+  * a previously deleted id requires that compaction first.
   *
   * Scale posture: builds are one corpus scan (signature projection,
   * no join) + one write; appends cost O(batch); deletes cost
@@ -70,17 +73,20 @@ object DedupIndexStore {
       numHashes: Int = 64,
       bands: Int = 16): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
-    val staging = Segments.newVersionPath(dir)
     import spark.implicits._
-    Seq((shingleN, numHashes, bands))
-      .toDF("shingle_n", "num_hashes", "bands")
-      .write.mode("overwrite").parquet(s"$staging/params")
-    Dedup.corpusIndex(corpus, idCol, textCol, shingleN, numHashes, bands)
-      .withColumn("id", col("id").cast("long"))
-      .write.mode("overwrite").parquet(s"$staging/bands/seg=0")
-    Segments.publishVersion(spark, dir, staging)
+    Segments.publishTree(spark, dir, fenced = false)(Segments.Tree(
+      Seq("params" -> Seq((shingleN, numHashes, bands))
+        .toDF("shingle_n", "num_hashes", "bands")),
+      "bands", minhashRows(corpus, idCol, textCol, (shingleN, numHashes, bands))))
     readMinhash(spark, dir)
   }
+
+  /** The `bands` rows of `docs` under (shingle_n, num_hashes, bands). */
+  private def minhashRows(
+      docs: DataFrame, idCol: String, textCol: String,
+      params: (Int, Int, Int)): DataFrame =
+    Dedup.corpusIndex(docs, idCol, textCol, params._1, params._2, params._3)
+      .withColumn("id", col("id").cast("long"))
 
   /** The frozen banding parameters a minhash index was built with. */
   def minhashParams(spark: SparkSession, dir: String): (Int, Int, Int) = {
@@ -109,10 +115,8 @@ object DedupIndexStore {
       idCol: String,
       textCol: String,
       at: Option[Long] = None): Boolean = {
-    val (shingleN, numHashes, bands) = minhashParams(spark, dir)
     Segments.publishToStore(spark, dir, "bands",
-      Dedup.corpusIndex(batch, idCol, textCol, shingleN, numHashes, bands)
-        .withColumn("id", col("id").cast("long")), at)
+      minhashRows(batch, idCol, textCol, minhashParams(spark, dir)), at)
   }
 
   /** Load the minhash index: union of published segments minus the
@@ -145,26 +149,6 @@ object DedupIndexStore {
       kept.select("id", "fp", "band_idx", "band_hash"))
   }
 
-  /** Compact back to one segment, reading THROUGH the tombstone
-    * filter — physical drop + tombstone GC in one atomic swap. Fenced
-    * against concurrent writers: the segment watermark is captured
-    * BEFORE the snapshot read, and the swap refuses (typed
-    * [[ConcurrentStoreWriteException]], staging preserved, nothing
-    * lost) if any segment published since — re-run to pick it up. */
-  def compactMinhash(spark: SparkSession, dir: String): DataFrame = {
-    val watermark = Segments.segmentWatermark(spark, dir)
-    val rows = readMinhash(spark, dir)
-    val (shingleN, numHashes, bands) = minhashParams(spark, dir)
-    val staging = Segments.newVersionPath(dir)
-    import spark.implicits._
-    Seq((shingleN, numHashes, bands))
-      .toDF("shingle_n", "num_hashes", "bands")
-      .write.mode("overwrite").parquet(s"$staging/params")
-    rows.write.mode("overwrite").parquet(s"$staging/bands/seg=0")
-    Segments.publishVersionFenced(spark, dir, staging, watermark)
-    readMinhash(spark, dir)
-  }
-
   // ---------------------------------------------------------- lines
 
   /** Build and persist the line document-frequency index at the
@@ -176,13 +160,10 @@ object DedupIndexStore {
       idCol: String,
       textCol: String,
       delim: String = "\n"): DataFrame = {
-    val staging = Segments.newVersionPath(dir)
     import spark.implicits._
-    Seq(Tuple1(delim)).toDF("delim")
-      .write.mode("overwrite").parquet(s"$staging/params")
-    Dedup.lineProvenance(corpus, idCol, textCol, delim)
-      .write.mode("overwrite").parquet(s"$staging/lines/seg=0")
-    Segments.publishVersion(spark, dir, staging)
+    Segments.publishTree(spark, dir, fenced = false)(Segments.Tree(
+      Seq("params" -> Seq(Tuple1(delim)).toDF("delim")),
+      "lines", Dedup.lineProvenance(corpus, idCol, textCol, delim)))
     readLines(spark, dir)
   }
 
@@ -227,21 +208,18 @@ object DedupIndexStore {
       spark.read.parquet(s"$root/lines").select("id", "line_hash"))
   }
 
-  /** Compact the line index back to one segment (physical drop +
-    * tombstone GC in one atomic swap; fenced — see
-    * [[compactMinhash]]). */
-  def compactLines(spark: SparkSession, dir: String): DataFrame = {
-    val watermark = Segments.segmentWatermark(spark, dir)
-    val rows = readLineProvenance(spark, dir)
-    val delim = lineParams(spark, dir)
-    val staging = Segments.newVersionPath(dir)
-    import spark.implicits._
-    Seq(Tuple1(delim)).toDF("delim")
-      .write.mode("overwrite").parquet(s"$staging/params")
-    rows.write.mode("overwrite").parquet(s"$staging/lines/seg=0")
-    Segments.publishVersionFenced(spark, dir, staging, watermark)
-    readLines(spark, dir)
-  }
+  // ----------------------------------------------------- compaction
+
+  /** Compact either family back to one segment
+    * ([[Segments.compact]]): the corpus table is rewritten THROUGH the
+    * tombstone filter — physical drop + tombstone GC in one atomic
+    * flip — and the frozen `params` table is copied verbatim. Fenced
+    * against concurrent writers: a segment or tombstone published
+    * after the compaction's read refuses the flip (typed
+    * [[ConcurrentStoreWriteException]], nothing lost) — re-run to
+    * pick it up. Re-read with [[readMinhash]] / [[readLines]]. */
+  def compact(spark: SparkSession, dir: String): Unit =
+    Segments.compact(spark, dir, "id")
 
   /** Maintenance audit for a segmented store table — the
     * compaction-due trigger pairing [[AnnIndex.driftAudit]]'s model

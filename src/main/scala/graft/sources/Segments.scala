@@ -15,16 +15,26 @@ final class ConcurrentStoreWriteException(msg: String)
   extends RuntimeException(msg)
 
 /** The shared segmented-table discipline behind every persisted
-  * standing index ([[AnnIndex]], [[DedupIndexStore]]): corpus-sized
+  * standing store ([[AnnIndex]], [[DedupIndexStore]], the
+  * [[graft.plans.IncrementalRelease]] state tables): corpus-sized
   * tables live as `table/seg=N` children (Spark partition discovery;
   * the `seg` column is projected away on read), appends stage under
   * an underscore dir readers skip and publish with ONE atomic rename,
   * deletes are an id tombstone table under the same discipline, and
-  * full-tree publication (build/compact/retrain) goes through
-  * POINTER-FILE indirection (`ptr-<seq>` names the live `v-<uuid>`
-  * tree — see the pointer-publication section) so a complete
-  * readable copy exists at every crash point AND the contract
-  * survives object stores, where directory rename is a copy.
+  * full-tree publication goes through POINTER-FILE indirection
+  * (`ptr-<seq>` names the live `v-<uuid>` tree — see the
+  * pointer-publication section) so a complete readable copy exists
+  * at every crash point AND the contract survives object stores,
+  * where directory rename is a copy.
+  *
+  * A store tree is its model-sized tables (centroids, codebooks,
+  * planes, params — any number, possibly none) plus ONE segmented
+  * table. Exactly two entry points write a whole tree, and no store
+  * calls the pointer primitives itself: [[publishTree]] (every
+  * build, retrain and wholesale replace — fenced whenever the new
+  * tree is computed from the store it replaces) and [[compact]] (the
+  * one compaction: model tables copied verbatim, the segmented table
+  * folded to `seg=0` through the tombstone filter).
   *
   * Extracted from AnnIndex (reference semantics unchanged — the
   * `_append.staging*` path names and the pointer/version layout are
@@ -504,24 +514,37 @@ private[graft] object Segments {
     val fs = fsFor(spark, dir)
     val (seq, version) = pointer(fs, dir)
     val root = version.map(v => s"$dir/$v").getOrElse(dir)
-    val d = new org.apache.hadoop.fs.Path(root)
-    val segs =
-      if (!fs.exists(d)) Map.empty[String, Set[Long]]
-      else fs.listStatus(d).filter(_.isDirectory).flatMap { st =>
-        val name = st.getPath.getName
-        if (name.startsWith("_") || name.startsWith(".") ||
-          name.startsWith("v-")) None
-        else {
-          val children =
-            try fs.listStatus(st.getPath)
-            catch { case _: java.io.FileNotFoundException =>
-              Array.empty[org.apache.hadoop.fs.FileStatus] }
-          val ids = children
-            .map(_.getPath.getName).collect { case SegDir(n) => n.toLong }
-          if (ids.isEmpty) None else Some(name -> ids.toSet)
-        }
-      }.toMap
+    val segs = tablesOf(fs, root).flatMap { t =>
+      val ids = segIds(fs, t)
+      if (ids.isEmpty) None else Some(t.getName -> ids)
+    }.toMap
     StoreWatermark(seq, version, segs)
+  }
+
+  /** The table children of a store tree: every directory but the
+    * underscore/dot staging ones and `v-` trees (a legacy root holds
+    * its versions beside its tables). */
+  private def tablesOf(
+      fs: org.apache.hadoop.fs.FileSystem,
+      root: String): Array[org.apache.hadoop.fs.Path] = {
+    val d = new org.apache.hadoop.fs.Path(root)
+    if (!fs.exists(d)) Array.empty
+    else fs.listStatus(d).filter(_.isDirectory).map(_.getPath).filterNot { p =>
+      val n = p.getName
+      n.startsWith("_") || n.startsWith(".") || n.startsWith("v-")
+    }
+  }
+
+  /** The published `seg=N` ids of a table (empty for an unsegmented
+    * model table, or a table that vanished under a concurrent GC). */
+  private def segIds(
+      fs: org.apache.hadoop.fs.FileSystem,
+      table: org.apache.hadoop.fs.Path): Set[Long] = {
+    val children =
+      try fs.listStatus(table)
+      catch { case _: java.io.FileNotFoundException =>
+        Array.empty[org.apache.hadoop.fs.FileStatus] }
+    children.map(_.getPath.getName).collect { case SegDir(n) => n.toLong }.toSet
   }
 
   /** Flip the pointer to `versionName` by creating `ptr-<seq+1>` —
@@ -628,6 +651,79 @@ private[graft] object Segments {
     throw new IllegalStateException(
       s"Segments: could not publish $versionPath into $dir after 8 " +
         "pointer attempts — live table unchanged")
+  }
+
+  // ------------------------------------------------ full-tree writers
+
+  /** One complete store tree: its model-sized tables (name → rows,
+    * each written as a plain parquet table) and its one segmented
+    * table `table`, whose `rows` are written as `table/seg=0`. */
+  final case class Tree(
+      model: Seq[(String, DataFrame)], table: String, rows: DataFrame)
+
+  /** The one full-tree writer: evaluate `tree`, write it under a
+    * fresh version path, and publish it. Unfenced (`fenced = false`)
+    * for BUILDS, whose contract is "replace whatever is there"
+    * ([[publishVersion]]). Fenced for every writer whose tree is
+    * computed from the store it replaces (retrain, wholesale
+    * replace): the [[segmentWatermark]] is captured BEFORE `tree` is
+    * evaluated — so every read `tree` makes of the store comes after
+    * it — and the publish refuses ([[publishVersionFenced]]) if any
+    * segment or tombstone landed since. */
+  def publishTree(spark: SparkSession, dir: String, fenced: Boolean)(
+      tree: => Tree): Unit =
+    publishNewVersion(spark, dir, fenced) { staging =>
+      val t = tree
+      t.model.foreach { case (name, rows) =>
+        rows.write.mode("overwrite").parquet(s"$staging/$name")
+      }
+      t.rows.write.mode("overwrite").parquet(s"$staging/${t.table}/seg=0")
+    }
+
+  /** The one compaction, for every store family: fold the live
+    * tree's segmented table back to one `seg=0`, read THROUGH the
+    * tombstone filter (joined on `idCol`), so deleted ids are
+    * physically dropped and the tombstone table is cleared in the
+    * same flip. Every other child (the model tables) is copied byte
+    * for byte — compaction is a file operation that never decodes a
+    * model. Fenced like [[publishTree]]: a segment or tombstone
+    * published after the watermark refuses the flip with
+    * [[ConcurrentStoreWriteException]] (nothing lost — re-run).
+    * Handles read BEFORE a compaction hold the pre-flip file listing;
+    * re-read after. */
+  def compact(spark: SparkSession, dir: String, idCol: String): Unit = {
+    val fs = fsFor(spark, dir)
+    publishNewVersion(spark, dir, fenced = true) { staging =>
+      val root = resolve(spark, dir)
+      val (segmented, model) = tablesOf(fs, root)
+        .filter(_.getName != "tombstones").partition(segIds(fs, _).nonEmpty)
+      require(segmented.length == 1,
+        s"Segments: $root must hold exactly one segmented table besides " +
+          s"tombstones to compact, found ${segmented.map(_.getName).toSeq}")
+      model.foreach { p =>
+        org.apache.hadoop.fs.FileUtil.copy(fs, p, fs,
+          new org.apache.hadoop.fs.Path(s"$staging/${p.getName}"), false,
+          spark.sparkContext.hadoopConfiguration)
+      }
+      val table = segmented.head.getName
+      minusTombstones(spark, root,
+        spark.read.parquet(s"$root/$table").drop("seg"), idCol)
+        .write.mode("overwrite").parquet(s"$staging/$table/seg=0")
+    }
+  }
+
+  /** Capture the watermark (when fenced), `write` a complete tree at
+    * a fresh version path, publish it. */
+  private def publishNewVersion(
+      spark: SparkSession, dir: String, fenced: Boolean)(
+      write: String => Unit): Unit = {
+    val watermark = if (fenced) Some(segmentWatermark(spark, dir)) else None
+    val staging = newVersionPath(dir)
+    write(staging)
+    watermark match {
+      case Some(w) => publishVersionFenced(spark, dir, staging, w)
+      case None => publishVersion(spark, dir, staging)
+    }
   }
 
   /** [[publishVersion]] fenced against concurrent writers: refuses

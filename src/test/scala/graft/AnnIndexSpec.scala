@@ -208,7 +208,8 @@ class AnnIndexSpec extends SparkSpec {
 
     val dir = tmp("graft_annidx_pqapp")
     AnnIndex.buildAndWrite(spark, dir, base, "vec_id", "embedding", nlist = 4, m = 8)
-    val appended = AnnIndex.append(spark, dir, batch, "vec_id", "embedding")
+    assert(AnnIndex.append(spark, dir, batch, "vec_id", "embedding"))
+    val appended = AnnIndex.read(spark, dir)
     val viaAppend = r3(AnnIndex.queryBatch(
       appended, queries, "vec_id", "embedding", k = 5, nprobe = 2))
 
@@ -290,22 +291,23 @@ class AnnIndexSpec extends SparkSpec {
       val expected = base.count() + b1.count() + b2.count()
       // a daily-batch append lands between the compaction's snapshot
       // read and its publish — interposed at the compaction's FIRST
-      // staging-table commit (the _temporary cleanup of the centroids
-      // write, after the watermark+read, before the fence check); an
-      // unfenced publish would erase that batch
+      // staging-table commit (the _temporary cleanup of the assigned
+      // write — the centroids are a file copy — after the
+      // watermark+read, before the fence check); an unfenced publish
+      // would erase that batch
       FaultyRenameFs.hookDeleteName = Some("_temporary")
       FaultyRenameFs.hook = () => {
         AnnIndex.appendToIvf(spark, dir, b2, "vec_id", "embedding"); ()
       }
       val e = intercept[graft.sources.ConcurrentStoreWriteException] {
-        AnnIndex.compactIvf(spark, dir)
+        AnnIndex.compact(spark, dir)
       }
       FaultyRenameFs.reset()
       assert(e.getMessage.contains("segments changed since"))
       assert(AnnIndex.readIvf(spark, dir).assigned.count() == expected,
         "the raced append must still be live after the refusal")
-      val again = AnnIndex.compactIvf(spark, dir)
-      assert(again.assigned.count() == expected,
+      AnnIndex.compact(spark, dir)
+      assert(AnnIndex.readIvf(spark, dir).assigned.count() == expected,
         "the re-run compaction must fold the raced segment in")
       assert(new java.io.File(rootOf(dir) + "/assigned/seg=0").isDirectory)
       assert(!new java.io.File(rootOf(dir) + "/assigned/seg=2").exists)
@@ -329,7 +331,8 @@ class AnnIndexSpec extends SparkSpec {
     val nBefore = appended.assigned.count() // pre-swap handle dies with the swap
     assert(new java.io.File(rootOf(dir) + "/assigned/seg=2").isDirectory)
 
-    val compacted = AnnIndex.compactIvf(spark, dir)
+    AnnIndex.compact(spark, dir)
+    val compacted = AnnIndex.readIvf(spark, dir)
     val segs = new java.io.File(rootOf(dir) + "/assigned").listFiles()
       .filter(_.getName.startsWith("seg=")).map(_.getName).toSet
     assert(segs == Set("seg=0"), s"expected one segment, got $segs")
@@ -338,16 +341,33 @@ class AnnIndexSpec extends SparkSpec {
     assert(compacted.centroids.toSeq.map(_.toSeq) == cents.toSeq.map(_.toSeq),
       "compaction must not touch the frozen model")
     assert(compacted.assigned.count() == nBefore)
-    // PQ twin: append then compact, answers unchanged
+    // PQ twin: append, delete one id, then compact — answers
+    // unchanged, the id physically gone, the tombstones GC'd, and the
+    // model tables copied verbatim (never re-encoded)
     val dirPq = tmp("graft_annidx_compact_pq")
     AnnIndex.buildAndWrite(spark, dirPq, base, "vec_id", "embedding", nlist = 4, m = 8)
-    val appendedPq = AnnIndex.append(spark, dirPq, b1, "vec_id", "embedding")
+    AnnIndex.append(spark, dirPq, b1, "vec_id", "embedding")
+    val deadPq = b1.select("vec_id").head().getLong(0)
+    AnnIndex.deleteIds(spark, dirPq,
+      b1.filter(col("vec_id") === deadPq).select("vec_id"), "vec_id")
+    val appendedPq = AnnIndex.read(spark, dirPq)
     val beforePq = r3(AnnIndex.queryBatch(
       appendedPq, queries, "vec_id", "embedding", k = 5, nprobe = 2))
-    val compactedPq = AnnIndex.compact(spark, dirPq)
+    AnnIndex.compact(spark, dirPq)
+    val compactedPq = AnnIndex.read(spark, dirPq)
     assert(r3(AnnIndex.queryBatch(
       compactedPq, queries, "vec_id", "embedding", k = 5, nprobe = 2)) == beforePq)
     assert(!new java.io.File(rootOf(dirPq) + "/coded/seg=1").exists)
+    assert(!new java.io.File(rootOf(dirPq) + "/tombstones").exists,
+      "compaction must GC the tombstone table")
+    assert(compactedPq.coded.filter(col("id") === deadPq).count() == 0,
+      "compaction must physically drop the deleted id")
+    assert(compactedPq.centroids.toSeq.map(_.toSeq) ==
+      appendedPq.centroids.toSeq.map(_.toSeq),
+      "compaction must copy the centroids verbatim")
+    assert(compactedPq.codebooks.toSeq.map(_.toSeq.map(_.toSeq)) ==
+      appendedPq.codebooks.toSeq.map(_.toSeq.map(_.toSeq)),
+      "compaction must copy the codebooks verbatim")
   }
 
   // ----------------------------------------------------- crash posture
@@ -422,7 +442,8 @@ class AnnIndexSpec extends SparkSpec {
     // and deterministic from the seed, so the models coincide)
     val dirB = tmp("graft_annidx_lshapp")
     AnnIndex.buildAndWriteLsh(spark, dirB, base, "vec_id", "embedding", numPlanes = 8)
-    val appended = AnnIndex.appendToLsh(spark, dirB, batch, "vec_id", "embedding")
+    assert(AnnIndex.appendToLsh(spark, dirB, batch, "vec_id", "embedding"))
+    val appended = AnnIndex.readLsh(spark, dirB)
     val viaAppend = r3(AnnIndex.queryBatchLsh(
       appended, queries, "vec_id", "embedding", k = 5, probeHamming = 2))
     assert(viaAppend == inline)
@@ -473,7 +494,8 @@ class AnnIndexSpec extends SparkSpec {
     // compaction physically drops tombstoned rows AND clears the
     // tombstone table (the staging tree never carries it), so a
     // previously-deleted id can be re-ingested afterwards
-    val compacted = AnnIndex.compactIvf(spark, dirA)
+    AnnIndex.compact(spark, dirA)
+    val compacted = AnnIndex.readIvf(spark, dirA)
     assert(!new java.io.File(rootOf(dirA) + "/tombstones").exists,
       "compaction must GC the tombstone table")
     assert(compacted.assigned.count() ==
@@ -486,7 +508,7 @@ class AnnIndexSpec extends SparkSpec {
   }
 
   test("LSH tombstone delete: suppressed across later appends, " +
-    "compactLsh GCs the tombstones and preserves answers") {
+    "compaction GCs the tombstones and preserves answers") {
     val base = emb.filter(col("vec_id") >= 6 && col("vec_id") % 2 === 0)
     val batch = emb.filter(col("vec_id") >= 6 && col("vec_id") % 2 === 1)
     val queries = emb.filter(col("vec_id").between(1, 5))
@@ -523,15 +545,19 @@ class AnnIndexSpec extends SparkSpec {
     val preCompact = r3(AnnIndex.queryBatchLsh(
       twoSegs, queries, "vec_id", "embedding", 5, 2))
 
-    // compactLsh: staging carries plane column order + bucketed seg
-    // layout; tombstoned rows physically dropped, tombstone table GC'd
-    val compacted = AnnIndex.compactLsh(spark, dirA)
+    // compaction: the planes copy verbatim, the bucketed table folds
+    // to one seg; tombstoned rows physically dropped, tombstone table
+    // GC'd
+    AnnIndex.compact(spark, dirA)
+    val compacted = AnnIndex.readLsh(spark, dirA)
     assert(!new java.io.File(rootOf(dirA) + "/tombstones").exists,
-      "compactLsh must GC the tombstone table")
+      "compaction must GC the tombstone table")
     assert(new java.io.File(rootOf(dirA) + "/bucketed/seg=0").isDirectory)
     assert(!new java.io.File(rootOf(dirA) + "/bucketed/seg=1").exists,
       "compaction must fold segments into one")
-    assert(compacted.planes.length == 8)
+    assert(compacted.planes.toSeq.map(_.toSeq) ==
+      twoSegs.planes.toSeq.map(_.toSeq),
+      "compaction must copy the planes verbatim")
     assert(compacted.bucketed.count() ==
       base.count() + batch.count() - dead.size - deadBatch.size)
     assert(r3(AnnIndex.queryBatchLsh(compacted, queries, "vec_id", "embedding", 5, 2)) ==

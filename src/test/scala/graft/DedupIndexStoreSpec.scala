@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Profile, SketchCannotSubtract}
+import graft.operators.{Dedup, Profile}
 import graft.sources.DedupIndexStore
 
 /** The corpus-wide right-to-be-forgotten contract, generalizing the
@@ -11,8 +11,7 @@ import graft.sources.DedupIndexStore
   * (2) including segments appended AFTER the delete, (3) post-delete
   * answers equal a never-ingested corpus, (4) compaction physically
   * drops rows + GCs the tombstones and re-admits the id. Plus the
-  * sketch half: KMV/CMS/manifest forgetting REFUSES with the typed
-  * [[graft.operators.SketchCannotSubtract]] and the documented
+  * sketch half: KMV/CMS/manifest sketches cannot subtract, and their
   * rebuild-from-retained path is bit-identical to never-ingested. */
 class DedupIndexStoreSpec extends SparkSpec {
 
@@ -85,7 +84,8 @@ class DedupIndexStoreSpec extends SparkSpec {
     // (4) compaction: physical drop, tombstone GC, re-admission
     // (materialize first: handles die with the compaction swap)
     val preCompact = rows(loaded)
-    val compacted = DedupIndexStore.compactMinhash(spark, dir)
+    DedupIndexStore.compact(spark, dir)
+    val compacted = DedupIndexStore.readMinhash(spark, dir)
     assert(!new java.io.File(rootOf(dir) + "/tombstones").exists)
     assert(!new java.io.File(rootOf(dir) + "/bands/seg=1").exists)
     assert(DedupIndexStore.minhashParams(spark, dir) == ((3, 64, 16)),
@@ -133,8 +133,11 @@ class DedupIndexStoreSpec extends SparkSpec {
     // (4) compaction + re-admission (pre-swap answer materialized
     // first — handles die with the swap)
     val preCompact = rows(loaded)
-    val compacted = DedupIndexStore.compactLines(spark, dir)
+    DedupIndexStore.compact(spark, dir)
+    val compacted = DedupIndexStore.readLines(spark, dir)
     assert(!new java.io.File(rootOf(dir) + "/tombstones").exists)
+    assert(DedupIndexStore.lineParams(spark, dir) == "\n",
+      "compaction must preserve the frozen delimiter")
     assert(rows(compacted) == preCompact)
     DedupIndexStore.appendLines(spark, dir,
       corpus.filter(col("doc_id") === dead.min), "doc_id", "text")
@@ -170,7 +173,7 @@ class DedupIndexStoreSpec extends SparkSpec {
     assert(!audit(maxPpm = 500000L).getBoolean(4))
     assert(audit(maxSegments = 1, maxPpm = 500000L).getBoolean(4))
     // compaction clears both pressures
-    DedupIndexStore.compactMinhash(spark, dir)
+    DedupIndexStore.compact(spark, dir)
     val after = audit()
     assert(after.getLong(0) == 1L && after.getLong(2) == 0L &&
       after.getLong(3) == 0L && !after.getBoolean(4))
@@ -224,18 +227,10 @@ class DedupIndexStoreSpec extends SparkSpec {
     } finally FaultyRenameFs.reset()
   }
 
-  test("sketch forgetting refuses with the typed error; " +
-    "rebuild-from-retained ≡ never-ingested") {
+  test("sketches forget by rebuilding from retained rows ≡ never-ingested") {
     val dead = docs.filter(col("doc_id") % 7 === 3).select("doc_id")
     val h = graft.functions.HashExpressions.mix64(
       graft.functions.HashExpressions.textFnv64(col("text")))
-
-    val states = Profile.manifestStates(docs, "source", "text")
-    intercept[SketchCannotSubtract](Profile.manifestForget(states, dead))
-    intercept[SketchCannotSubtract](Profile.kmvForget(
-      Profile.kmvSketch(docs, "source", h), dead))
-    intercept[SketchCannotSubtract](Profile.cmsForget(
-      Profile.cmsCells(docs, h), dead))
 
     // the documented path: rebuilt-from-retained states MERGE to the
     // manifest of a corpus that never held the forgotten ids
@@ -270,14 +265,14 @@ class DedupIndexStoreSpec extends SparkSpec {
       DedupIndexStore.appendMinhash(spark, dir, partB, "doc_id", "text")
       // interpose a streaming-style publish between the compaction's
       // snapshot read and its publish: the first staging-table commit
-      // (the _temporary cleanup of the params write, after the
-      // watermark + read) triggers it
+      // (the _temporary cleanup of the bands write — params are a file
+      // copy — after the watermark + read) triggers it
       FaultyRenameFs.hookDeleteName = Some("_temporary")
       FaultyRenameFs.hook = () =>
         DedupIndexStore.appendMinhash(spark, dir, partC, "doc_id", "text",
           at = Some(graft.sources.Segments.StreamSegBase))
       val e = intercept[graft.sources.ConcurrentStoreWriteException] {
-        DedupIndexStore.compactMinhash(spark, dir)
+        DedupIndexStore.compact(spark, dir)
       }
       FaultyRenameFs.reset()
       assert(e.getMessage.contains("segments changed since"))
@@ -286,7 +281,7 @@ class DedupIndexStoreSpec extends SparkSpec {
       val all = rows(DedupIndexStore.readMinhash(spark, dir))
       assert(all == rows(Dedup.corpusIndex(docs, "doc_id", "text", 3, 64, 16)))
       // and the RE-RUN compaction folds everything, raced rows included
-      DedupIndexStore.compactMinhash(spark, dir)
+      DedupIndexStore.compact(spark, dir)
       assert(new java.io.File(rootOf(dir) + "/bands/seg=0").isDirectory)
       assert(!new java.io.File(rootOf(dir) +
         s"/bands/seg=${graft.sources.Segments.StreamSegBase}").exists)
@@ -315,7 +310,7 @@ class DedupIndexStoreSpec extends SparkSpec {
       FaultyRenameFs.hook = () =>
         DedupIndexStore.deleteIds(spark, dir, dead, "doc_id")
       intercept[graft.sources.ConcurrentStoreWriteException] {
-        DedupIndexStore.compactLines(spark, dir)
+        DedupIndexStore.compact(spark, dir)
       }
       FaultyRenameFs.reset()
       // the delete is live right now (tombstone anti-join)...
@@ -328,7 +323,7 @@ class DedupIndexStoreSpec extends SparkSpec {
         }))
       assert(rows(DedupIndexStore.readLines(spark, dir)) == wanted)
       // ...and survives the re-run compaction (physical drop + GC)
-      DedupIndexStore.compactLines(spark, dir)
+      DedupIndexStore.compact(spark, dir)
       assert(!new java.io.File(rootOf(dir) + "/tombstones").exists)
       assert(rows(DedupIndexStore.readLines(spark, dir)) == wanted)
     } finally FaultyRenameFs.reset()
@@ -352,9 +347,7 @@ class DedupIndexStoreSpec extends SparkSpec {
       // "success" with its tombstone in a deleted tree: a silent
       // un-delete, the worst GDPR failure mode.
       FaultyRenameFs.hookRenameDstName = Some("seg=0")
-      FaultyRenameFs.hook = () => {
-        DedupIndexStore.compactMinhash(spark, dir); ()
-      }
+      FaultyRenameFs.hook = () => DedupIndexStore.compact(spark, dir)
       DedupIndexStore.deleteIds(spark, dir, dead, "doc_id")
       FaultyRenameFs.reset()
       assert(rootOf(dir) != oldRoot,

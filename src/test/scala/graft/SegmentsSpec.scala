@@ -332,12 +332,10 @@ class SegmentsSpec extends SparkSpec {
     // readers resolve the versioned tree and the legacy children GC
     val w = Segments.segmentWatermark(spark, dir)
     assert(w.version.isEmpty && w.segs("t") == Set(0L, 1L))
-    val v = Segments.newVersionPath(dir)
-    spark.read.parquet(s"$dir/t").select("id", "v")
-      .write.parquet(s"$v/t/seg=0")
-    Segments.publishVersionFenced(spark, dir, v, w)
-    assert(Segments.resolve(spark, dir) == v)
-    assert(spark.read.parquet(s"${Segments.resolve(spark, dir)}/t").count() == 2)
+    Segments.compact(spark, dir, "id")
+    val v = Segments.resolve(spark, dir)
+    assert(v != dir && new java.io.File(s"$v/t/seg=0").isDirectory)
+    assert(spark.read.parquet(s"$v/t").count() == 2)
     assert(!new java.io.File(s"$dir/t").exists,
       "legacy table children must GC after the upgrade flip")
   }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 /** One-shot measurement main backing [[graft.operators.Bpe]]'s
   * "32k-merge production tokenizer in seconds of driver CPU" claim
   * (the round-8/9 evidence ask): train `SPARK_GRAFT_BPE_MERGES`
@@ -58,15 +56,13 @@ object BpeBench {
     // warmup: JVM + codegen on a tiny unrelated train
     graft.operators.Bpe.train(corpus.limit(100), "text", numMerges = 50).count()
 
-    var jobs = 0
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(s: SparkListenerJobStart): Unit = jobs += 1
-    })
+    val jc = graft.tools.JobCounter(spark)
     val t0 = System.nanoTime()
     val table = graft.operators.Bpe.train(corpus, "text", numMerges = merges)
     val learned = table.count() // materialize the local merge table
     val wallSec = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(1000) // listener delivery is async; let the bus drain
+    jc.close()
+    val jobs = jc.counts().jobs
 
     println(s"""{"metric":"bpe_train_wall_sec","value":${f"$wallSec%.2f"},""" +
       s""""unit":"sec","merges_requested":$merges,"merges_learned":$learned,""" +

@@ -28,7 +28,7 @@ trait TransportJob {
   * Usage:
   *   runMain graft.TransportorApp --class=my.pkg.MyJob \
   *     --original-dir=/data/src --target-dir=/data/out [--cpus=8]
-  *     [--write-parallelism=4]   # level-parallel writes (Toposort.levels)
+  *     [--write-parallelism=4]   # tables built+written at once (default: defaultParallelism)
   *     [--lineage=only]          # print column lineage, run nothing
   */
 object TransportorApp {
@@ -66,8 +66,8 @@ object TransportorApp {
         }
       } else {
         val t = new Transportor(job.io(spark, args), job.plan, job.preSeeded)
-        val frames = t.runAndWrite(
-          writeParallelism = args.getOrElse("write-parallelism", "1").toInt)
+        val frames = args.get("write-parallelism")
+          .fold(t.runAndWrite())(p => t.runAndWrite(writeParallelism = p.toInt))
         frames.foreach { case (name, df) =>
           println(s"[transport] wrote $name")
         }

@@ -1,11 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import java.util.concurrent.{ConcurrentHashMap, Executors, LinkedBlockingQueue}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.api.java.UDF1
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StringType}
 import graft.plans._
 import graft.sources.TableIO
+import scala.collection.immutable.SeqMap
 import scala.collection.mutable
 
 /** The plan interpreter — Spark-native `DBT::doTransport`
@@ -19,8 +21,10 @@ import scala.collection.mutable
   * hashes become hash joins (broadcast when small), N+1 correlated
   * probes become single equi joins, chunking becomes partitioning.
   *
-  * Execution order across tables comes from [[graft.plans.Toposort]];
-  * within a table everything is distributed.
+  * Across tables, [[runAndWrite]] builds and writes each target table
+  * as soon as the tables it depends on ([[graft.plans.Toposort]]) are
+  * written, independent tables concurrently; within a table everything
+  * is distributed.
   */
 final class Transportor(
     io: TableIO,
@@ -32,16 +36,40 @@ final class Transportor(
     * src/DBT.php:21-26, 71-78 — declared there but dead; here it
     * marks hot lookup tables reused across several refers so the scan
     * + dedup work happens once and later joins read the cached
-    * relation). */
-  private val preloaded = mutable.Map.empty[String, DataFrame]
+    * relation). Concurrent: tables build on [[runAndWrite]]'s pool
+    * threads, and `computeIfAbsent` gives each table exactly one
+    * `cache()`. */
+  private val preloaded = new ConcurrentHashMap[String, DataFrame]()
+
+  /** One plan key's frame, built at most once even when several pool
+    * threads ask for it (the lazy val's lock is per key; a build that
+    * recurses into its dependencies takes theirs, and the plan is
+    * acyclic, so no two builds wait on each other). */
+  private final class Built(key: String) {
+    lazy val df: DataFrame = buildFrame(plan.byKey(key))
+  }
 
   /** Memo of built frames by plan key, temp columns still present —
     * the reference's `finished[]` (src/DBT.php:54, 119-122). Lazy
     * DataFrames, so nothing executes until an action/write. */
-  private val built = mutable.LinkedHashMap.empty[String, DataFrame]
+  private val built = new ConcurrentHashMap[String, Built]()
 
   /** Execution order (dependencies first). */
-  def executionOrder: Seq[String] = Toposort(plan)
+  lazy val executionOrder: Seq[String] = Toposort(plan)
+
+  /** Per target table, the target tables it waits for: those filled
+    * by any key its alias keys depend on ([[Toposort.dependencies]]). */
+  private lazy val tableDeps: Map[String, Seq[String]] =
+    executionOrder.map(plan.targetName).distinct.map { name =>
+      name -> keysOf(name).flatMap(k => Toposort.dependencies(plan, plan.byKey(k)))
+        .map(plan.targetName).distinct.filter(_ != name)
+    }.toMap
+
+  /** Target table names in dependency order, each at its LAST alias
+    * key's position in [[executionOrder]] unless a table it waits for
+    * comes later. */
+  private lazy val targetOrder: Seq[String] =
+    Toposort.order(executionOrder.map(plan.targetName).reverse.distinct.reverse)(tableDeps)
 
   /** Upfront plan validation with named errors — misconfigurations
     * fail before any job runs, not mid-migration (the reference
@@ -68,93 +96,111 @@ final class Transportor(
               "in the plan nor pre-seeded")
       }
     }
-    Toposort(plan) // cycle check
+    targetOrder // cycle check, over plan keys and over target tables
     ()
   }
 
-  /** Build every table frame in dependency order and return the final
-    * per-TARGET-table frames (temp columns dropped, aliased entries
-    * targeting the same physical table unioned — README.md:59-63).
+  /** Build every table frame and return the final per-TARGET-table
+    * frames (temp columns dropped, aliased entries targeting the same
+    * physical table unioned — README.md:59-63), in dependency order.
     * Side-effect free; see [[runAndWrite]] for the writing variant. */
-  def run(): Map[String, DataFrame] = {
+  def run(): SeqMap[String, DataFrame] = {
     validate()
     validateSeeds()
-    executionOrder.foreach(resolveKey)
-    val out = mutable.LinkedHashMap.empty[String, DataFrame]
-    executionOrder.foreach { key =>
-      val df = dropTemps(plan.byKey(key), built(key))
-      val name = plan.targetName(key)
-      // allowMissingColumns: aliased entries appending into one
-      // physical table may fill different column subsets; the reference
-      // (a SQL INSERT per alias) null-fills the absent ones.
-      out(name) = out.get(name)
-        .map(_.unionByName(df, allowMissingColumns = true)).getOrElse(df)
-    }
-    out.toMap
+    targetFrames()
   }
 
-  /** Full migration: build, write each target table, then fire
+  /** Full migration: build and write each target table, then fire
     * `run_after_transport` hooks (reference destructor,
     * src/DBT.php:596-613 — hooks run after all transports; temp
-    * columns are never written because [[run]] already drops them,
+    * columns are never written because the written frame drops them,
     * replacing the reference's temp-column DDL + drop dance,
     * src/DBT.php:423-446, 604-613).
     *
-    * `writeParallelism > 1` submits write jobs concurrently ONE TOPO
-    * LEVEL AT A TIME ([[Toposort.levels]]): tables within a level are
-    * mutually independent by construction, so their jobs overlap and
-    * Spark's scheduler interleaves their stages — the cluster-scale
-    * replacement for the reference's strictly sequential table loop,
-    * which leaves a 1000-executor cluster idle between small tables.
-    * The level barrier keeps a dependent table's write (whose lazy
-    * lineage recomputes its parents, same as the sequential path)
-    * from racing the parents' own writes for cluster resources.
-    * Each table's write runs under its own scheduler pool
+    * One dependency-driven schedule replaces the reference's strictly
+    * sequential table loop (src/DBT.php:85-225): each target table is
+    * one task on a pool of `writeParallelism` threads that BUILDS its
+    * alias frames and writes them, and a task is submitted as soon as
+    * every table it depends on ([[Toposort.dependencies]], including
+    * `transport_after`) has been written. Independent tables' planning
+    * (schema reads, lookup dedups) and their many small Spark jobs
+    * overlap instead of leaving the cluster idle between small tables;
+    * a dependent's lazy lineage still recomputes its parents, but only
+    * after their writes have finished, so it never races them for
+    * slots. `writeParallelism = 1` runs the same schedule on one thread,
+    * in dependency order. Each task runs under its own scheduler pool
     * (`spark.scheduler.pool` = `graft-<table>`; with
-    * `spark.scheduler.mode=FAIR` the level's jobs share executors
-    * evenly — under default FIFO they still overlap, first-submitted
-    * first for slots) and its own job group (`graft-write-<table>`)
-    * so the Spark UI / event log attributes every stage to its
-    * table. A target name appended by aliases from several levels
-    * writes once, at its DEEPEST alias's level. */
-  def runAndWrite(writeParallelism: Int = 1): Map[String, DataFrame] = {
-    val frames = run()
-    if (writeParallelism <= 1) {
-      frames.foreach { case (name, df) => io.writeTarget(name, df) }
-    } else {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val keyLevel: Map[String, Int] = Toposort.levels(plan).zipWithIndex
-        .flatMap { case (ks, i) => ks.map(_ -> i) }.toMap
-      val nameLevel: Map[String, Int] = plan.keys.groupBy(plan.targetName)
-        .map { case (n, ks) => n -> ks.map(keyLevel).max }
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(writeParallelism)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try {
-        frames.toSeq.groupBy { case (name, _) => nameLevel(name) }
-          .toSeq.sortBy(_._1)
-          .foreach { case (_, wave) =>
-            Await.result(
-              Future.sequence(wave.map { case (name, df) =>
-                Future {
-                  val sc = df.sparkSession.sparkContext
-                  // thread-local properties: each pool thread tags its
-                  // own jobs, no cross-talk between concurrent writes
-                  sc.setLocalProperty("spark.scheduler.pool", s"graft-$name")
-                  sc.setJobGroup(s"graft-write-$name", s"transport write $name",
-                    interruptOnCancel = false)
-                  try io.writeTarget(name, df)
-                  finally {
-                    sc.clearJobGroup()
-                    sc.setLocalProperty("spark.scheduler.pool", null)
-                  }
-                }
-              }), Duration.Inf)
+    * `spark.scheduler.mode=FAIR` concurrent tables share executors
+    * evenly) and its own job group (`graft-write-<table>`), so the
+    * Spark UI / event log attributes every job, build jobs included,
+    * to its table. [[TableIO.writeTarget]] is therefore called
+    * concurrently for distinct tables.
+    *
+    * Failure: the first failed table stops the schedule — no further
+    * table starts, tables already running finish — and that failure is
+    * rethrown with any later ones attached via `addSuppressed`; the
+    * `run_after_transport` hooks do not run. Running siblings are not
+    * cancelled: a half-written target is only safe to abandon once
+    * every publish is one atomic step.
+    *
+    * Returns the written frames in dependency order, like [[run]]. */
+  def runAndWrite(
+      writeParallelism: Int = SparkSession.active.sparkContext.defaultParallelism)
+      : SeqMap[String, DataFrame] = {
+    require(writeParallelism >= 1, s"writeParallelism must be >= 1, got $writeParallelism")
+    validate()
+    validateSeeds()
+    val sc = SparkSession.active.sparkContext
+    val finished = new LinkedBlockingQueue[(String, Option[Throwable])]()
+    val written = mutable.Set.empty[String]
+    val failures = mutable.ArrayBuffer.empty[Throwable]
+    var pending = targetOrder
+    var running = 0
+    val pool = Executors.newFixedThreadPool(writeParallelism)
+    try {
+      do {
+        if (failures.isEmpty) {
+          val ready = pending.filter(tableDeps(_).forall(written)).take(writeParallelism - running)
+          pending = pending.diff(ready)
+          running += ready.size
+          ready.foreach { name =>
+            pool.execute { () =>
+              val failure =
+                try { writeTable(sc, name); None }
+                catch { case e: Throwable => Some(e) }
+              finished.put(name -> failure)
+            }
           }
-      } finally pool.shutdown()
+        }
+        if (running > 0) {
+          val (name, failure) = finished.take()
+          running -= 1
+          failure match {
+            case None    => written += name
+            case Some(e) => failures += e
+          }
+        }
+      } while (running > 0 || (failures.isEmpty && pending.nonEmpty))
+    } finally pool.shutdown()
+    failures.headOption.foreach { first =>
+      failures.tail.filterNot(_ eq first).foreach(first.addSuppressed)
+      throw first
     }
     plan.tables.foreach { case (_, m) => m.runAfterTransport.foreach(_.apply()) }
-    frames
+    targetFrames()
+  }
+
+  /** One schedule task: build target table `name` and write it, under
+    * its own scheduler pool and job group. The properties are
+    * thread-local, so concurrent tables never tag each other's jobs. */
+  private def writeTable(sc: org.apache.spark.SparkContext, name: String): Unit = {
+    sc.setLocalProperty("spark.scheduler.pool", s"graft-$name")
+    sc.setJobGroup(s"graft-write-$name", s"transport write $name", interruptOnCancel = false)
+    try io.writeTarget(name, targetFrame(name))
+    finally {
+      sc.clearJobGroup()
+      sc.setLocalProperty("spark.scheduler.pool", null)
+    }
   }
 
   /** Build a single table's final frame (dependencies resolved
@@ -165,7 +211,26 @@ final class Transportor(
   // ---------------------------------------------------------------- internals
 
   private def resolveKey(key: String): DataFrame =
-    built.getOrElseUpdate(key, buildFrame(plan.byKey(key)))
+    built.computeIfAbsent(key, new Built(_)).df
+
+  /** The plan keys appending into target table `name`, in execution order. */
+  private def keysOf(name: String): Seq[String] =
+    executionOrder.filter(plan.targetName(_) == name)
+
+  /** One target table's final frame. */
+  private def targetFrame(name: String): DataFrame = unionKeys(keysOf(name))
+
+  /** Every target table's final frame, in dependency order. */
+  private def targetFrames(): SeqMap[String, DataFrame] =
+    SeqMap.from(targetOrder.map(name => name -> targetFrame(name)))
+
+  /** The frames of plan keys appending into one physical table, temp
+    * columns dropped, unioned. allowMissingColumns: aliased entries
+    * may fill different column subsets; the reference (a SQL INSERT
+    * per alias) null-fills the absent ones. */
+  private def unionKeys(keys: Seq[String]): DataFrame =
+    keys.map(k => dropTemps(plan.byKey(k), resolveKey(k)))
+      .reduce(_.unionByName(_, allowMissingColumns = true))
 
   /** Reference checkSeed (src/DBT.php:512-518): pre-seeded lookup
     * tables must exist and be non-empty. */
@@ -187,11 +252,7 @@ final class Transportor(
             // every alias's rows in it, so union them all. Temp columns
             // are dropped first — aliases share only the final target
             // schema (temps stay visible through single-alias deps).
-            // allowMissingColumns: an append into one physical table
-            // null-fills columns an alias doesn't set (SQL INSERT
-            // semantics), so a partial-column alias must not throw.
-            ks.map(k => dropTemps(plan.byKey(k), resolveKey(k)))
-              .reduce(_.unionByName(_, allowMissingColumns = true))
+            unionKeys(ks)
           case _ if preSeeded.contains(table) => io.readTarget(table)
           case _ =>
             throw new NoSuchElementException(
@@ -200,7 +261,7 @@ final class Transportor(
     }
     // a Transportor-lifetime cache, not a Stage cut: reused across refers
     if (preload.contains(table))
-      preloaded.getOrElseUpdate(table, df.cache())
+      preloaded.computeIfAbsent(table, _ => df.cache())
     else df
   }
 

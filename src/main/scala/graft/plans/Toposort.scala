@@ -13,12 +13,13 @@ import scala.collection.mutable
   * (`safety = 100`, src/DBT.php:56, 114-118). Seed tables — no refer
   * and no middle — run first (src/DBT.php:102-105, 571-599).
   *
-  * Spark-first this collapses to one topological sort executed
-  * sequentially: each table's own plan parallelizes internally, and
-  * the recursion cap becomes a proper cycle check. Declaration order
-  * is the tie-break, which also reproduces the reference's seed-first
-  * behavior (a seed table has no outgoing dependency edges, so it is
-  * never delayed).
+  * Spark-first this collapses to one topological sort plus the
+  * dependency edges: each table's own plan parallelizes internally,
+  * [[graft.operators.Transportor.runAndWrite]] starts a table as soon
+  * as its [[dependencies]] are written, and the recursion cap becomes
+  * a proper cycle check. Declaration order is the tie-break, which
+  * also reproduces the reference's seed-first behavior (a seed table
+  * has no outgoing dependency edges, so it is never delayed).
   */
 object Toposort {
 
@@ -33,30 +34,16 @@ object Toposort {
       .distinct
   }
 
-  /** Execution order grouped into dependency LEVELS: level 0 holds
-    * tables with no in-plan dependencies, level i+1 tables whose
-    * deepest dependency sits at level i (longest-path layering).
-    * Tables within one level are mutually independent by
-    * construction — the unit of concurrent submission for
-    * [[graft.operators.Transportor.runAndWrite]]. Declaration order
-    * within each level; throws on cycles (delegates the check). */
-  def levels(plan: TransportPlan): Seq[Seq[String]] = {
-    apply(plan) // cycle check up front — the memoized recursion below must not see one
-    val lvl = mutable.Map.empty[String, Int]
-    def level(key: String): Int = lvl.getOrElseUpdate(key, {
-      val deps = dependencies(plan, plan.byKey(key))
-      if (deps.isEmpty) 0 else deps.map(level).max + 1
-    })
-    plan.keys.foreach(k => level(k))
-    (0 to plan.keys.map(lvl).maxOption.getOrElse(0))
-      .map(i => plan.keys.filter(k => lvl(k) == i))
-      .filter(_.nonEmpty)
-  }
-
   /** Full execution order (every plan key exactly once, dependencies
     * first, declaration order as tie-break). Throws on cycles. */
-  def apply(plan: TransportPlan): Seq[String] = {
-    val order = mutable.ArrayBuffer.empty[String]
+  def apply(plan: TransportPlan): Seq[String] =
+    order(plan.keys)(k => dependencies(plan, plan.byKey(k)))
+
+  /** Depth-first topological order of `nodes`: each node after every
+    * node `deps` names for it, the order of `nodes` as tie-break.
+    * Throws on cycles. */
+  def order(nodes: Seq[String])(deps: String => Seq[String]): Seq[String] = {
+    val out = mutable.ArrayBuffer.empty[String]
     val done = mutable.Set.empty[String]
     val inProgress = mutable.Set.empty[String]
 
@@ -67,13 +54,13 @@ object Toposort {
           s"dependency cycle: ${(key :: path).reverse.mkString(" -> ")} " +
             "(the reference would loop until safety=100, src/DBT.php:114-118)")
       inProgress += key
-      dependencies(plan, plan.byKey(key)).foreach(d => visit(d, key :: path))
+      deps(key).foreach(d => visit(d, key :: path))
       inProgress -= key
       done += key
-      order += key
+      out += key
     }
 
-    plan.keys.foreach(k => visit(k, Nil))
-    order.toSeq
+    nodes.foreach(k => visit(k, Nil))
+    out.toSeq
   }
 }

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.StructType
 import scala.collection.mutable
 
 /** The engine's two-connection abstraction. The reference holds two
@@ -16,6 +17,10 @@ trait TableIO {
   /** Read a pre-seeded table on the target side (reference
     * `setSeed` tables, src/DBT.php:560-562 — assumed populated). */
   def readTarget(table: String): DataFrame
+  /** Write one target table. [[graft.operators.Transportor.runAndWrite]]
+    * calls this (and the reads) concurrently from several threads, for
+    * DISTINCT tables: an implementation must be safe under that, while
+    * writes to one table never overlap. */
   def writeTarget(table: String, df: DataFrame): Unit
 }
 
@@ -33,8 +38,31 @@ final class ParquetDirIO(
     maxRecordsPerFile: Option[Long] = None,
     upsertKeys: Map[String, Seq[String]] = Map.empty,
     partitionCols: Map[String, Seq[String]] = Map.empty) extends TableIO {
-  def readOriginal(table: String): DataFrame =
-    spark.read.parquet(s"$originalDir/$table.parquet")
+
+  /** Source schemas already inferred, by path, with the modification
+    * time of the table directory they were inferred at. Inferring a
+    * parquet schema is a Spark job (a footer read); a plan reads one
+    * source table for many map entries and refers, so each table pays
+    * it once per IO and later reads pass the schema. A rewritten table
+    * has a new directory modification time and is inferred afresh. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (Long, StructType)]()
+
+  def readOriginal(table: String): DataFrame = {
+    val pathStr = s"$originalDir/$table.parquet"
+    val path = new org.apache.hadoop.fs.Path(pathStr)
+    // a missing table falls through to Spark's own error; a store that
+    // reports no directory modification time (0) is never memoized
+    val mtime = scala.util.Try(fs(path).getFileStatus(path).getModificationTime)
+      .toOption.filter(_ > 0)
+    mtime.flatMap(m => Option(schemas.get(pathStr)).filter(_._1 == m)) match {
+      case Some((_, schema)) => spark.read.schema(schema).parquet(pathStr)
+      case None =>
+        val df = spark.read.parquet(pathStr)
+        mtime.foreach(m => schemas.put(pathStr, (m, df.schema)))
+        df
+    }
+  }
   def readTarget(table: String): DataFrame =
     spark.read.parquet(s"$targetDir/$table.parquet")
 
@@ -175,7 +203,9 @@ final class FormatDirIO(
 
 /** In-memory IO for tests and for side-effect-free plan evaluation:
   * originals are fixed DataFrames, target writes land in a mutable
-  * registry readable back as pre-seeded tables. */
+  * registry readable back as pre-seeded tables. The registry is read
+  * and written under its own lock (concurrent writers, see
+  * [[TableIO.writeTarget]]). */
 final class InMemoryIO(
     original: Map[String, DataFrame],
     seededTarget: Map[String, DataFrame] = Map.empty,
@@ -184,10 +214,11 @@ final class InMemoryIO(
   def readOriginal(table: String): DataFrame =
     original.getOrElse(table,
       throw new NoSuchElementException(s"no original table '$table'"))
-  def readTarget(table: String): DataFrame =
+  def readTarget(table: String): DataFrame = written.synchronized {
     written.getOrElse(table, seededTarget.getOrElse(table,
       throw new NoSuchElementException(s"no target table '$table'")))
-  def writeTarget(table: String, df: DataFrame): Unit = {
+  }
+  def writeTarget(table: String, df: DataFrame): Unit = written.synchronized {
     written(table) = upsertKeys.get(table) match {
       case Some(keys) =>
         // keyed upsert: matching rows replaced, others kept; a

@@ -143,17 +143,20 @@ object StreamOps {
     * `Transportor.validate()`, and the map must not look up a
     * target-side table the same plan fills (per batch that table
     * would be rebuilt from the static IO; cross-stream joins need
-    * their own watermark design). */
+    * their own watermark design). A target-side lookup of a table in
+    * `preSeeded` reads the table `io` already holds, as in the batch
+    * [[Transportor]]. */
   def transportStream(
       stream: DataFrame,
       plan: TransportPlan,
       tableKey: String,
       io: TableIO,
-      checkpointDir: String): StreamingQuery = {
+      checkpointDir: String,
+      preSeeded: Set[String] = Set.empty): StreamingQuery = {
     val map = plan.byKey(tableKey)
     val sourceName = map.originalTable.getOrElse(
       throw new IllegalArgumentException("streaming transport needs original_table"))
-    new Transportor(io, plan).validate()
+    new Transportor(io, plan, preSeeded).validate()
     val samePlan = TransportPlan.targetLookups(map).filter(plan.keyFor(_).nonEmpty)
     if (samePlan.nonEmpty)
       throw new IllegalArgumentException(
@@ -161,7 +164,7 @@ object StreamOps {
           s"${samePlan.distinct.mkString(", ")} filled by the same plan")
     eachBatch(stream, checkpointDir) { (batch, _) =>
       val overlay = new OverlayIO(io, Map(sourceName -> batch))
-      io.writeTarget(plan.targetName(tableKey), new Transportor(overlay, plan).frame(tableKey))
+      io.writeTarget(plan.targetName(tableKey), new Transportor(overlay, plan, preSeeded).frame(tableKey))
     }
   }
 

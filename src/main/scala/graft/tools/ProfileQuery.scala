@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-
 /** Dev-only profiler (guide §1: measure first): run one or more
   * catalog queries exactly as [[graft.Bench]] does (same session
   * shape, same noop sink) with a listener that attributes wall time
@@ -21,27 +19,7 @@ object ProfileQuery {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = graft.LocalSession("graft-profile-query", s"local[$cpus]", cpus)
 
-    final case class JobRec(id: Int, site: String, start: Long,
-      var end: Long = 0L, var stages: Int = 0)
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRec]()
-    val taskTimeMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val desc = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-        val site = desc.getOrElse(
-          e.stageInfos.lastOption.map(_.name.takeWhile(_ != '+').trim)
-            .getOrElse("?"))
-        jobs.put(e.jobId, JobRec(e.jobId, site, e.time, stages = e.stageIds.size))
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-        Option(jobs.get(e.jobId)).foreach(_.end = e.time)
-      }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        taskTimeMs.addAndGet(e.stageInfo.taskMetrics.executorRunTime)
-        ()
-      }
-    })
+    val jc = JobCounter(spark)
 
     // same warmup block as Bench: session/codegen, Jackson plan-config
     // parsing, broadcast-join + aggregate codegen, and the noop write
@@ -58,20 +36,19 @@ object ProfileQuery {
 
     args.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
-      jobs.clear(); taskTimeMs.set(0L)
+      jc.reset()
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
       graft.operators.Stage.sweep(spark)
-      Thread.sleep(300) // let listener drain
-      import scala.jdk.CollectionConverters._
-      val recs = jobs.values.asScala.toSeq.sortBy(_.id)
-      val bySite = recs.groupBy(_.site).map { case (s, rs) =>
-        (s, rs.size, rs.map(r => math.max(0L, r.end - r.start)).sum)
+      val recs = jc.jobs
+      def dur(j: JobCounter.Job) = math.max(0L, j.endMs - j.startMs)
+      val bySite = recs.groupBy(_.site).map { case (s, js) =>
+        (s, js.size, js.map(dur).sum)
       }.toSeq.sortBy(-_._3)
       println(f"== $name%s wall=$wall%.2f s jobs=${recs.size}%d " +
-        f"jobTimeSum=${recs.map(r => math.max(0L, r.end - r.start)).sum / 1000.0}%.2f s " +
-        f"taskTime=${taskTimeMs.get() / 1000.0}%.2f s")
+        f"jobTimeSum=${recs.map(dur).sum / 1000.0}%.2f s " +
+        f"taskTime=${recs.map(_.taskRunMs).sum / 1000.0}%.2f s")
       bySite.take(40).foreach { case (site, n, ms) =>
         println(f"  ${ms / 1000.0}%8.2f s  n=$n%-4d $site%s")
       }

@@ -80,4 +80,11 @@ object ColumnBridge {
       builder: Seq[Expression] => Expression): Unit =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry.registerFunction(ident, info, builder)
+
+  /** Block until every listener has been handed every event posted so
+    * far (`SparkContext.listenerBus` is private[spark]): a job's end
+    * is posted before the action that ran it returns, so after this a
+    * listener has seen every job the caller ran. */
+  def waitForListeners(sc: org.apache.spark.SparkContext, timeoutMs: Long): Unit =
+    sc.listenerBus.waitUntilEmpty(timeoutMs)
 }

@@ -1855,26 +1855,11 @@ class ExtensionSpec extends SparkSpec {
       sb.toString
     }.distinct
     val t = df("doc_id BIGINT, text STRING", Row(1L, words.mkString(" ")))
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val jc = graft.tools.JobCounter(spark)
     val m =
       try graft.operators.Bpe.train(t, "text", numMerges = 1500).collect()
-      finally {
-        // drain the async listener bus by waiting until the job-start
-        // count stabilizes (a fixed sleep can undercount on a loaded
-        // box); late events only make the <=8 assert stricter, so
-        // waiting longer is always safe
-        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-        var last = -1
-        while (jobs != last && System.nanoTime() < deadline) {
-          last = jobs; Thread.sleep(200)
-        }
-        spark.sparkContext.removeSparkListener(listener)
-      }
+      finally jc.close()
+    val jobs = jc.counts().jobs
     assert(m.length == 1500, s"expected 1500 merges, got ${m.length}")
     // the pre-round-8 shape launched ~2 jobs PER MERGE (~3000 here);
     // driver-local training launches only the word-table collect plus

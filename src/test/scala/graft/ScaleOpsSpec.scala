@@ -59,9 +59,9 @@ class ScaleOpsSpec extends SparkSpec {
       "tb" -> TableMap(Some("base"), Seq(Rename("id", "id")),
         extraConditions = Seq(Condition.Eq("seg", "B"))))
     val seqIo = new InMemoryIO(Map("base" -> base))
-    new Transportor(seqIo, plan).runAndWrite()
+    new Transportor(seqIo, plan).runAndWrite(writeParallelism = 1)
     val parIo = new InMemoryIO(Map("base" -> base))
-    new Transportor(parIo, plan).runAndWrite(writeParallelism = 2)
+    new Transportor(parIo, plan).runAndWrite()
     assert(parIo.written.keySet == seqIo.written.keySet)
     parIo.written.keys.foreach { t =>
       assert(parIo.readTarget(t).collect().map(_.getLong(0)).sorted.toSeq ==

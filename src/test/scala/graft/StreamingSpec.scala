@@ -123,6 +123,29 @@ class StreamingSpec extends SparkSpec {
       Seq(Row(1L, 10.0), Row(2L, 20.0), Row(3L, -1.0)))
   }
 
+  test("continuous transport: a map looks up a pre-seeded target table") {
+    import org.apache.spark.sql.Row
+    import graft.plans._
+    val dir = java.nio.file.Files.createTempDirectory("graft_seedstream").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_seedstream_ck").toString
+    eventsDf.coalesce(1).write.mode("overwrite").parquet(dir)
+    val seeded = df("etype STRING, code BIGINT", Row("click", 1L), Row("view", 5L))
+    val io = new graft.sources.InMemoryIO(Map.empty, Map("event_codes" -> seeded))
+    val plan = TransportPlan.of(
+      "fact_events" -> TableMap(Some("events_stream"), Seq(
+        Rename("eid", "event_id"),
+        Refer("type_code", Seq("event_type"), SearchSource.Target, "event_codes",
+          Seq("etype"), "code", default = Some(-1L)))))
+    val stream = spark.readStream.schema(eventsDf.schema).parquet(dir)
+    val q = StreamOps.transportStream(stream, plan, "fact_events", io, ckpt,
+      preSeeded = Set("event_codes"))
+    try q.processAllAvailable() finally q.stop()
+    val codes = eventsDf.select(org.apache.spark.sql.functions.col("event_id").as("eid"),
+      org.apache.spark.sql.functions.expr(
+        "CASE event_type WHEN 'click' THEN 1L WHEN 'view' THEN 5L ELSE -1L END").as("type_code"))
+    assertRows(io.readTarget("fact_events"), codes.collect().toSeq)
+  }
+
   test("continuous transport refuses, before starting, a plan it cannot run per micro-batch") {
     import org.apache.spark.sql.Row
     import graft.plans._

@@ -230,6 +230,15 @@ class TransportorSpec extends SparkSpec {
       .validate())
     assertThrows[IllegalArgumentException](t(TransportPlan.of(
       "a" -> TableMap(None))).validate())
+    // acyclic over keys, cyclic over target tables: n reads alias key x
+    // of table y, and y's other alias w reads n
+    def lookup(tbl: String) = Refer(s"x_$tbl", Seq("k"), SearchSource.Target, tbl, Seq("k"), "k")
+    val e = intercept[IllegalStateException](t(TransportPlan.of(
+      "x" -> TableMap(Some("base"), Seq(Rename("k", "k")), targetTable = Some("y")),
+      "n" -> TableMap(Some("base"), Seq(Rename("k", "k"), lookup("x"))),
+      "w" -> TableMap(Some("base"), Seq(Rename("k", "k"), lookup("n")),
+        targetTable = Some("y")))).validate())
+    assert(e.getMessage.contains("dependency cycle"), e.getMessage)
   }
 
   test("validate(): a middle whose target-side refer_table is unfilled fails before any job") {
@@ -596,39 +605,120 @@ class TransportorSpec extends SparkSpec {
     assert(Lineage.toDf(spark, plan).count() == edges.length)
   }
 
-  test("Toposort.levels: diamond plan layers into independent waves") {
+  /** A TableIO whose write IS a Spark job (a noop-sink save), so each
+    * table's job-group window brackets its write. */
+  private def noopIO(base: org.apache.spark.sql.DataFrame): graft.sources.TableIO =
+    new graft.sources.TableIO {
+      def readOriginal(table: String) = base
+      def readTarget(table: String) = throw new NoSuchElementException(table)
+      def writeTarget(table: String, d: org.apache.spark.sql.DataFrame): Unit =
+        d.write.format("noop").mode("overwrite").save()
+    }
+
+  /** Per table, [first job start, last job end] of its
+    * `graft-write-<table>` job group. */
+  private def writeWindows(jc: graft.tools.JobCounter): Map[String, (Long, Long)] =
+    jc.jobs.filter(_.group.exists(_.startsWith("graft-write-")))
+      .groupBy(_.group.get.stripPrefix("graft-write-"))
+      .map { case (t, js) => t -> (js.map(_.startMs).min, js.map(_.endMs).max) }
+
+  test("runAndWrite schedule: a table starts after its dependencies' writes end") {
     def refTo(names: String*) = TableMap(Some("src"),
       Rename("k", "k") +: names.map(n =>
         Refer(s"x_$n", Seq("k"), SearchSource.Target, n, Seq("k"), "k")))
     val seed = TableMap(Some("src"), Seq(Rename("k", "k")))
-    // d -> {b, c} -> a; e independent    =>    [a, e], [b, c], [d]
+    // d -> {b, c} -> a; e independent
     val plan = TransportPlan.of(
       "d" -> refTo("b", "c"), "b" -> refTo("a"), "c" -> refTo("a"),
       "a" -> seed, "e" -> seed)
-    assert(Toposort.levels(plan) == Seq(Seq("a", "e"), Seq("b", "c"), Seq("d")))
-    // every level's tables are pairwise independent (no dep edge within)
-    Toposort.levels(plan).foreach { lvl =>
-      lvl.foreach { k =>
-        assert(Toposort.dependencies(plan, plan.byKey(k)).forall(!lvl.contains(_)))
+    val base = df("k BIGINT", (1L to 8L).map(Row(_)): _*)
+    val jc = graft.tools.JobCounter(spark)
+    val frames = try new Transportor(noopIO(base), plan).runAndWrite() finally jc.close()
+    assert(frames.keys.toSeq == Seq("a", "b", "c", "d", "e"))
+    val w = writeWindows(jc)
+    assert(w.keySet == plan.keys.toSet, w)
+    plan.keys.foreach { t =>
+      Toposort.dependencies(plan, plan.byKey(t)).foreach { d =>
+        assert(w(t)._1 >= w(d)._2, s"$t opened at ${w(t)._1} before $d closed at ${w(d)._2}")
       }
     }
   }
 
+  test("run() and runAndWrite() return target tables in dependency order") {
+    val base = df("k BIGINT", Row(1L))
+    def lookup(t: String) = Refer(s"x_$t", Seq("k"), SearchSource.Target, t, Seq("k"), "k")
+    // contacts = c1 (a seed) ++ c2 (reads dim), so contacts follows dim
+    val plan = TransportPlan.of(
+      "fact" -> TableMap(Some("base"), Seq(Rename("k", "k"), lookup("contacts"))),
+      "c1" -> TableMap(Some("base"), Seq(Rename("k", "k")), targetTable = Some("contacts")),
+      "c2" -> TableMap(Some("base"), Seq(Rename("k", "k"), lookup("dim")),
+        targetTable = Some("contacts")),
+      "dim" -> TableMap(Some("base"), Seq(Rename("k", "k"))),
+      "z" -> TableMap(Some("base"), Seq(Rename("k", "k"))))
+    val order = Seq("dim", "contacts", "fact", "z")
+    assert(new Transportor(new InMemoryIO(Map("base" -> base)), plan).run().keys.toSeq == order)
+    val io = new InMemoryIO(Map("base" -> base))
+    assert(new Transportor(io, plan).runAndWrite(writeParallelism = 1).keys.toSeq == order)
+    assert(io.written.keys.toSeq == order, "one thread writes in dependency order")
+    assert(new Transportor(new InMemoryIO(Map("base" -> base)), plan).runAndWrite()
+      .keys.toSeq == order)
+  }
+
+  test("runAndWrite failure: dependents never start, running siblings finish") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val base = df("k BIGINT", Row(1L))
+    val slowStarted = new CountDownLatch(1)
+    val badFailed = new CountDownLatch(2)
+    var hookRan = false
+    val seed = TableMap(Some("base"), Seq(Rename("k", "k")))
+    val plan = TransportPlan.of(
+      "bad" -> seed, "bad2" -> seed, "slow" -> seed.copy(runAfterTransport = Some(() => hookRan = true)),
+      "later" -> seed,
+      "dep" -> TableMap(Some("base"), Seq(Rename("k", "k"),
+        Refer("x", Seq("k"), SearchSource.Target, "bad", Seq("k"), "k"))))
+    val mem = new InMemoryIO(Map("base" -> base))
+    val io = new graft.sources.TableIO {
+      def readOriginal(table: String) = mem.readOriginal(table)
+      def readTarget(table: String) = mem.readTarget(table)
+      def writeTarget(table: String, d: org.apache.spark.sql.DataFrame): Unit = table match {
+        case "slow" =>
+          slowStarted.countDown()
+          assert(badFailed.await(20, TimeUnit.SECONDS))
+          Thread.sleep(300) // both failures reach the schedule before this write lands
+          mem.writeTarget(table, d)
+        case "bad" | "bad2" =>
+          assert(slowStarted.await(20, TimeUnit.SECONDS))
+          badFailed.countDown()
+          throw new IllegalStateException(s"$table write failed")
+        case _ => mem.writeTarget(table, d)
+      }
+    }
+    val e = intercept[IllegalStateException](new Transportor(io, plan).runAndWrite(writeParallelism = 3))
+    val all = (e +: e.getSuppressed.toSeq).map(_.getMessage).toSet
+    assert(all == Set("bad write failed", "bad2 write failed"), all)
+    assert(mem.written.keySet == Set("slow"), "only the running sibling lands")
+    assert(!hookRan, "run_after_transport hooks do not run after a failure")
+  }
+
+  test("ParquetDirIO infers a source schema once, and again after a rewrite") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_schema_memo").toString
+    df("k BIGINT", Row(1L), Row(2L)).write.parquet(s"$dir/t.parquet")
+    val io = new graft.sources.ParquetDirIO(spark, dir, s"$dir/out")
+    val sc = spark.sparkContext
+    val jc = graft.tools.JobCounter(spark)
+    sc.setJobGroup("schema-memo", "schema memo reads")
+    val second =
+      try { io.readOriginal("t"); io.readOriginal("t") }
+      finally { sc.clearJobGroup(); jc.close() }
+    assert(jc.counts("schema-memo").jobs == 1, jc.jobs)
+    assertRows(second, Seq(Row(1L), Row(2L)))
+    df("k BIGINT, v STRING", Row(3L, "x")).write.mode("overwrite").parquet(s"$dir/t.parquet")
+    assertRows(io.readOriginal("t"), Seq(Row(3L, "x")))
+  }
+
   test("parallel runAndWrite overlaps same-level writes (latch proof + job-group windows)") {
     import java.util.concurrent.{CountDownLatch, TimeUnit}
-    import scala.collection.concurrent.TrieMap
-    // listener: job-group -> [start, end] windows, from the event times
-    val starts = TrieMap.empty[Int, (String, Long)]
-    val windows = TrieMap.empty[String, (Long, Long)]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val g = Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull
-        if (g != null && g.startsWith("graft-write-")) starts(js.jobId) = (g, js.time)
-      }
-      override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-        starts.remove(je.jobId).foreach { case (g, t0) => windows(g) = (t0, je.time) }
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val jc = graft.tools.JobCounter(spark)
     try {
       TransportorSpec.overlapLatch = new CountDownLatch(2)
       TransportorSpec.overlapSeen = false
@@ -646,22 +736,13 @@ class TransportorSpec extends SparkSpec {
         "tb" -> TableMap(Some("base"), Seq(Derived("k", rendezvous(col("k"))))))
       // materializing IO: the write IS a Spark job (InMemoryIO's map
       // insert would stay lazy and never run the rendezvous UDF)
-      val io = new graft.sources.TableIO {
-        def readOriginal(table: String) = base
-        def readTarget(table: String) = throw new NoSuchElementException(table)
-        def writeTarget(table: String, d: org.apache.spark.sql.DataFrame): Unit =
-          d.write.format("noop").mode("overwrite").save()
-      }
-      new Transportor(io, plan).runAndWrite(writeParallelism = 2)
-      assert(TransportorSpec.overlapSeen, "same-level writes did not overlap")
-      // job-group windows recorded for both tables, and they intersect
-      var waited = 0
-      while (windows.size < 2 && waited < 100) { Thread.sleep(100); waited += 1 }
-      val Seq((s1, e1), (s2, e2)) =
-        Seq("graft-write-ta", "graft-write-tb").map(windows(_))
-      assert(s1 < e2 && s2 < e1,
-        s"job-group windows disjoint: [$s1,$e1] vs [$s2,$e2]")
-    } finally spark.sparkContext.removeSparkListener(listener)
+      new Transportor(noopIO(base), plan).runAndWrite(writeParallelism = 2)
+      assert(TransportorSpec.overlapSeen, "independent writes did not overlap")
+    } finally jc.close()
+    // job-group windows recorded for both tables, and they intersect
+    val w = writeWindows(jc)
+    val Seq((s1, e1), (s2, e2)) = Seq("ta", "tb").map(w(_))
+    assert(s1 < e2 && s2 < e1, s"job-group windows disjoint: [$s1,$e1] vs [$s2,$e2]")
   }
 }
 

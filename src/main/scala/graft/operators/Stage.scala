@@ -150,9 +150,10 @@ object Stage {
       if (halted) throw new ReleaseHalted
       val dir = new Path(s"$outDir/stages/$name")
       val f = FileSystem.get(new java.net.URI(outDir), spark.sparkContext.hadoopConfiguration)
-      // resume path: sweep any nested loser tree (see below) a crash
-      // left INSIDE the published table, where no _staging sweep
-      // reaches — a resumed read would see duplicate children
+      // resume path: sweep any loser tree a crash left nested INSIDE
+      // the published table (between a nesting rename and
+      // Publish.dir's move back), where no _staging sweep reaches — a
+      // resumed read would see duplicate children
       if (f.exists(dir)) {
         val loser = (java.util.regex.Pattern.quote(name) + "-[0-9a-fA-F-]{36}").r
         f.listStatus(dir).foreach { st =>
@@ -168,14 +169,7 @@ object Stage {
           df.write.mode("overwrite").parquet(staging.toString)
         })
         f.mkdirs(dir.getParent)
-        if (f.rename(staging, dir)) {
-          // HDFS rename onto a dir that appeared inside the
-          // exists-to-rename window NESTS src under it and returns
-          // true; stage tables are deterministic, so the nested loser
-          // tree is a pure duplicate of the winner: delete it
-          val nested = new Path(dir, staging.getName)
-          if (f.exists(nested)) f.delete(nested, true)
-        } else {
+        if (!graft.sources.Publish.dir(f, staging, dir)) {
           // a concurrent runner won the publish with the same rows
           require(f.exists(dir), s"ReleaseRun: could not publish stage table $dir")
           f.delete(staging, true)

@@ -93,17 +93,9 @@ object ReleaseRun {
       digest(embeddings, "vec_id",
         xxhash64(col("vec_id"), col("embedding"))) +
       s":${cfg.canonical}"
-    if (!fs.exists(p)) {
-      val tmp = new org.apache.hadoop.fs.Path(
-        s"$outDir/_fingerprint.tmp-${java.util.UUID.randomUUID()}")
-      val out = fs.create(tmp, true)
-      try out.write(now.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      if (!fs.rename(tmp, p)) { // a concurrent first run won — compare
-        fs.delete(tmp, false)
-        require(fs.exists(p), s"ReleaseRun: could not record fingerprint $p")
-      } else return
-    }
+    // the first run records; a concurrent first run that won is compared
+    if (graft.sources.Publish.marker(fs, p,
+      now.getBytes(java.nio.charset.StandardCharsets.UTF_8))) return
     val recorded = graft.sources.Segments.readText(fs, p).trim
     require(recorded == now,
       s"ReleaseRun: refusing to resume $outDir — the live input/config " +

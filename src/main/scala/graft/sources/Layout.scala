@@ -186,7 +186,7 @@ object Layout {
         .filter(_.getName.startsWith("part-"))
       require(written.length == 1,
         s"compact: group $g produced ${written.length} files, expected 1")
-      require(f.rename(written.head,
+      require(Publish.dir(f, written.head,
         new org.apache.hadoop.fs.Path(f"$outDir/part-$g%05d-compacted.parquet")),
         s"compact: rename failed for group $g")
       f.delete(staging, true)

@@ -107,42 +107,31 @@ private[graft] object Segments {
     }
   }
 
-  /** Sweep leftover append staging dirs a CRASHED writer abandoned:
-    * the legacy fixed name always goes; uuid-suffixed ones only when
-    * NOTHING in their subtree ([[newestMtime]]) has been touched for
-    * over an hour, so a live concurrent writer's in-flight staging —
-    * however long its write runs — is never swept from under it.
-    * Orphans are invisible to readers either way (underscore prefix)
-    * and any compaction swap drops them. */
-  private def sweepStaleStaging(
-      fs: org.apache.hadoop.fs.FileSystem, table: String): Unit = {
-    val t = new org.apache.hadoop.fs.Path(table)
-    if (fs.exists(t)) {
-      val cutoff = System.currentTimeMillis() - 3600L * 1000L
-      fs.listStatus(t).foreach { st =>
-        val name = st.getPath.getName
-        if (name == "_append.staging" ||
-          (name.startsWith("_append.staging-") &&
-            newestMtime(fs, st.getPath) < cutoff))
-          fs.delete(st.getPath, true)
-      }
-    }
-  }
+  /** How long nothing in a staging or superseded tree must have been
+    * touched before a sweep treats it as a crashed writer's orphan. */
+  private val StaleAfterMs = 3600L * 1000L
 
-  /** Sweep every child of `dir` whose SUBTREE ([[newestMtime]]) has
-    * been untouched past the one-hour staleness cutoff — the
-    * [[sweepStaleStaging]] discipline exposed for other staging
-    * parents (e.g. a release run's `_staging` dir, where repeated
-    * crash/resume cycles would otherwise accumulate orphan
-    * full-stage-size trees indefinitely). Live writers' in-flight
-    * trees always have a fresh file underneath and are never swept. */
+  /** Sweep every child of `dir` accepted by `named` whose SUBTREE
+    * ([[newestMtime]]) has been untouched past [[StaleAfterMs]] — the
+    * leftovers of CRASHED writers (append staging, a release run's
+    * `_staging` trees, which repeated crash/resume cycles would
+    * otherwise accumulate indefinitely). A live concurrent writer's
+    * in-flight tree always has a fresh file underneath, however long
+    * its write runs, and is never swept from under it. A child named
+    * `_append.staging` (the fixed staging name of writers before
+    * unique staging) always goes. Orphans are invisible to readers
+    * either way (underscore prefix). */
   private[graft] def sweepStaleChildren(
       fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Unit = {
+      dir: org.apache.hadoop.fs.Path,
+      named: String => Boolean = _ => true): Unit = {
     if (!fs.exists(dir)) return
-    val cutoff = System.currentTimeMillis() - 3600L * 1000L
+    val cutoff = System.currentTimeMillis() - StaleAfterMs
     fs.listStatus(dir).foreach { st =>
-      if (newestMtime(fs, st.getPath) < cutoff) fs.delete(st.getPath, true)
+      val name = st.getPath.getName
+      if (name == "_append.staging" ||
+        (named(name) && newestMtime(fs, st.getPath) < cutoff))
+        fs.delete(st.getPath, true)
     }
   }
 
@@ -159,43 +148,9 @@ private[graft] object Segments {
     } finally in.close()
   }
 
-  private def newStaging(table: String) =
-    new org.apache.hadoop.fs.Path(
-      s"$table/_append.staging-${java.util.UUID.randomUUID()}")
-
-  /** A rename that "succeeded" may still have lost a same-id race:
-    * HDFS rename onto a directory that appeared inside the
-    * exists-precheck-to-rename window NESTS src under it and returns
-    * TRUE (local fs returns false there — the benign branch). Verify
-    * our staging became the segment itself; when it was nested under
-    * the winner's segment instead, pull it back OUT to a fresh
-    * staging path (only OUR subtree moves — the winner's rows are
-    * untouched) and report the publish as lost so the caller
-    * retries. Without this check the loser's rows — possibly a
-    * deleteIds tombstone set — sit invisible under an underscore
-    * name inside the winner's segment forever. */
-  private def renameVerified(
-      fs: org.apache.hadoop.fs.FileSystem,
-      table: String,
-      staging: org.apache.hadoop.fs.Path,
-      seg: org.apache.hadoop.fs.Path): Option[org.apache.hadoop.fs.Path] = {
-    if (!fs.rename(staging, seg)) return Some(staging) // lost cleanly
-    val nested = new org.apache.hadoop.fs.Path(seg, staging.getName)
-    if (!fs.exists(nested)) return None // clean publish
-    val back = newStaging(table)
-    if (!fs.rename(nested, back)) {
-      // cannot recover the nested rows in place — fail loudly rather
-      // than leave them silently unpublished inside the winner's seg
-      throw new IllegalStateException(
-        s"Segments: rename raced and nested staging under $seg, and the " +
-          s"recovery rename failed — unpublished rows remain at $nested")
-    }
-    Some(back)
-  }
-
   /** Publish `rows` as one `seg=N` of a segmented table: stage under
     * a unique underscore dir readers skip, then ONE atomic rename
-    * ([[renameVerified]]). Returns true when this call published.
+    * ([[Publish.dir]]). Returns true when this call published.
     *
     *   - `at = Some(id)` — the idempotent, replay-safe form: if
     *     `seg=<id>` is already published the call is a no-op that
@@ -223,38 +178,35 @@ private[graft] object Segments {
     val fs = fsFor(spark, table)
     def segOf(id: Long) = new org.apache.hadoop.fs.Path(s"$table/seg=$id")
     if (at.exists(id => fs.exists(segOf(id)))) return false // replay no-op
-    sweepStaleStaging(fs, table)
-    val staged = newStaging(table)
-    rows.write.mode("overwrite").parquet(staged.toString)
+    val t = new org.apache.hadoop.fs.Path(table)
+    sweepStaleChildren(fs, t, _.startsWith("_append.staging-"))
+    val staging = new org.apache.hadoop.fs.Path(t,
+      s"_append.staging-${java.util.UUID.randomUUID()}")
+    rows.write.mode("overwrite").parquet(staging.toString)
     def nextId(): Long = at.getOrElse(
-      fs.listStatus(new org.apache.hadoop.fs.Path(table))
+      fs.listStatus(t)
         .map(_.getPath.getName).collect { case SegDir(n) => n.toLong }
         .filter(_ < StreamSegBase)
         .foldLeft(-1L)(math.max) + 1)
     @annotation.tailrec
-    def attempt(staging: org.apache.hadoop.fs.Path, n: Int, last: Long): Boolean = {
+    def attempt(n: Int, last: Long): Boolean = {
       val id = nextId()
       val seg = segOf(id)
       // exists-precheck before the rename: never attempt a rename
-      // onto a KNOWN-occupied id; [[renameVerified]] catches the
-      // race that lands inside the check-to-rename window
-      val lost =
-        if (fs.exists(seg)) Some(staging)
-        else renameVerified(fs, table, staging, seg)
-      lost match {
-        case None => true
-        case Some(back) if at.isDefined && fs.exists(seg) =>
-          fs.delete(back, true) // a concurrent same-id publish won
-          false
-        case Some(back) if at.isDefined || id == last || n == 7 =>
-          fs.delete(back, true)
-          throw new IllegalArgumentException(
-            s"Segments: could not publish segment $seg after ${n + 1} " +
-              "attempts — live table unchanged")
-        case Some(back) => attempt(back, n + 1, id)
-      }
+      // onto a KNOWN-occupied id; [[Publish.dir]] catches the race
+      // that lands inside the check-to-rename window
+      if (!fs.exists(seg) && Publish.dir(fs, staging, seg)) true
+      else if (at.isDefined && fs.exists(seg)) {
+        fs.delete(staging, true) // a concurrent same-id publish won
+        false
+      } else if (at.isDefined || id == last || n == 7) {
+        fs.delete(staging, true)
+        throw new IllegalArgumentException(
+          s"Segments: could not publish segment $seg after ${n + 1} " +
+            "attempts — live table unchanged")
+      } else attempt(n + 1, id)
     }
-    attempt(staged, 0, -1L)
+    attempt(0, -1L)
   }
 
   /** Tombstone DELETE: publish the ids as one new segment of the
@@ -397,12 +349,15 @@ private[graft] object Segments {
   // path ([[newVersionPath]] — no tree-level rename ever happens, so
   // "rename is a COPY on object stores" stops mattering), then flip
   // the pointer by creating `ptr-<seq+1>` — one small-file
-  // rename/PUT. The create-at-a-fixed-name IS the compare-and-swap:
+  // [[Publish.marker]]. The create-at-a-fixed-name IS the compare-and-swap:
   // two racing publishers both target `ptr-<seq+1>`, exactly one
   // rename lands, and the loser sees the occupied name and refuses
   // (typed) or retries — this closes the ms-scale publish-vs-publish
   // TOCTOU window the old directory-swap fence documented as residual
-  // (two fenced publishers can no longer both land). Append-vs-flip
+  // (two fenced publishers can no longer both land; where rename
+  // overwrites a file, see [[Publish]], the sub-ms residual is
+  // last-writer-wins — benign for fenced publishers, which passed the
+  // same watermark, and the contract of unfenced builds). Append-vs-flip
   // is closed STRUCTURALLY since round 15: superseded trees are
   // grace-period GC'd (an hour after their last touch, at the next
   // flip's sweep), so an append racing a flip always completes its
@@ -547,36 +502,6 @@ private[graft] object Segments {
     children.map(_.getPath.getName).collect { case SegDir(n) => n.toLong }.toSet
   }
 
-  /** Flip the pointer to `versionName` by creating `ptr-<seq+1>` —
-    * content written to an underscore tmp file first, then ONE atomic
-    * rename onto the fresh pointer name (rename-to-a-fresh-name is
-    * atomic on HDFS/POSIX; on an object store this is one small
-    * PUT). Returns false when the name was taken — the loser of the
-    * compare-and-swap. NB: HDFS rename-onto-existing refuses, so the
-    * CAS is airtight there; POSIX-local rename overwrites, leaving a
-    * sub-ms exists-to-rename window that degrades to
-    * last-writer-wins — benign for fenced publishers (both passed
-    * the same watermark check, so both trees carry identical data)
-    * and the documented contract for unfenced builds; on object
-    * stores implement the flip as an if-none-match conditional
-    * PUT. */
-  private def tryFlip(
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: String,
-      seq: Long,
-      versionName: String): Boolean = {
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"$dir/_ptr.tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(versionName.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val dst = new org.apache.hadoop.fs.Path(s"$dir/ptr-$seq")
-    if (fs.exists(dst)) { fs.delete(tmp, false); return false }
-    val ok = fs.rename(tmp, dst)
-    if (!ok) fs.delete(tmp, false)
-    ok
-  }
-
   /** After a successful flip from `prev`: retire stale pointers and
     * sweep crash/superseded orphans. Superseded `v-` trees are GRACE-
     * PERIOD GC'd, not deleted at the flip: they linger until nothing
@@ -611,7 +536,7 @@ private[graft] object Segments {
           if (!keep) fs.delete(st.getPath, true)
         }
     }
-    val cutoff = System.currentTimeMillis() - 3600L * 1000L
+    val cutoff = System.currentTimeMillis() - StaleAfterMs
     fs.listStatus(d).foreach { st =>
       val n = st.getPath.getName
       n match {
@@ -642,7 +567,8 @@ private[graft] object Segments {
     while (attempts < 8) {
       val prev = pointer(fs, dir)
       val next = prev._1 + 1
-      if (tryFlip(fs, dir, next, versionName)) {
+      if (Publish.marker(fs, new org.apache.hadoop.fs.Path(s"$dir/ptr-$next"),
+        versionName.getBytes(java.nio.charset.StandardCharsets.UTF_8))) {
         gcAfterFlip(fs, dir, next, versionName, prev)
         return
       }
@@ -768,7 +694,8 @@ private[graft] object Segments {
     }
     val versionName = new org.apache.hadoop.fs.Path(versionPath).getName
     val next = watermark.ptrSeq + 1
-    if (!tryFlip(fs, dir, next, versionName))
+    if (!Publish.marker(fs, new org.apache.hadoop.fs.Path(s"$dir/ptr-$next"),
+      versionName.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
       refuse(s"a concurrent publisher won the pointer compare-and-swap at " +
         s"ptr-$next")
     gcAfterFlip(fs, dir, next, versionName,

@@ -85,7 +85,7 @@ final class ParquetDirIO(
     // committed — discard it and redo the merge fresh.
     if (upsertKeys.contains(table) && f.exists(staging)) {
       if (!f.exists(path))
-        require(f.rename(staging, path), s"staging recovery failed for $pathStr")
+        require(Publish.dir(f, staging, path), s"staging recovery failed for $pathStr")
       else
         f.delete(staging, true)
     }
@@ -149,7 +149,7 @@ final class ParquetDirIO(
         maxRecordsPerFile.fold(w)(n => w.option("maxRecordsPerFile", n))
           .parquet(staging.toString)
         f.delete(path, true)
-        require(f.rename(staging, path), s"staging swap failed for $pathStr")
+        require(Publish.dir(f, staging, path), s"staging swap failed for $pathStr")
       case _ =>
         // file sizing: at scale, both tiny-file storms (per-task
         // dribbles) and monolithic files (no scan parallelism) hurt —

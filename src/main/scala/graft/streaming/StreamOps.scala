@@ -424,14 +424,10 @@ object StreamOps {
         graft.plans.IncrementalRelease.runDeltas(spark, batch,
           embeddings, transcriptsOf, merges, stateDir, cfg,
           batchId = Some(batchId))
-        // completion marker: tmp + one atomic rename (the segment
-        // publish discipline), written only after every delta landed
-        val tmp = new org.apache.hadoop.fs.Path(
-          s"$stateDir/_released/_batch.tmp-${java.util.UUID.randomUUID()}")
-        fs.mkdirs(marker.getParent)
-        val out = fs.create(tmp, true)
-        try out.write(Array.emptyByteArray) finally out.close()
-        require(fs.rename(tmp, marker) || fs.exists(marker),
+        // completion marker, written only after every delta landed; a
+        // concurrent replay that marked first is the same outcome
+        require(graft.sources.Publish.marker(fs, marker, Array.emptyByteArray) ||
+          fs.exists(marker),
           s"releaseStream: could not publish completion marker $marker")
       }
     }

@@ -5,15 +5,17 @@ import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 import graft.sources.AnnIndex
 
-/** Test-only FileSystem for the crash-posture cases: a local FS
-  * under the `faulty://` scheme whose rename can be told to FAIL
-  * (return false, as HDFS/local rename does on error) when the
-  * source or destination directory name matches — interposing a
-  * crash at an exact point inside [[AnnIndex]]'s staging swap. The
-  * match is on the path's LAST segment only, so the parquet
-  * committer's own `_temporary` renames inside a staging tree are
-  * untouched; only the swap-level rename of the flagged directory
-  * fails. */
+/** Test-only FileSystem for the crash-posture cases: the raw local
+  * FS under the `faulty://` scheme, whose rename can be told to FAIL
+  * (return false) when the source or destination name matches, run
+  * a concurrent writer's action at a named rename or delete, emulate
+  * a nesting rename, refuse a rename onto an existing file, or
+  * record every rename it performs — interposing a crash or a race
+  * at an exact publish boundary. The match is on the path's LAST
+  * segment only, so the parquet committer's own `_temporary` renames
+  * inside a staging tree are untouched. What a real `file://` / HDFS
+  * rename does onto an existing name is stated in
+  * [[graft.sources.Publish]]. */
 class FaultyRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getScheme: String = "faulty"
   override def getUri: java.net.URI = java.net.URI.create("faulty:///")
@@ -28,11 +30,10 @@ class FaultyRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
       FaultyRenameFs.hook()
       return false
     }
-    // HDFS-nesting emulation: on HDFS, rename onto a dst directory
-    // that EXISTS moves src UNDER dst and returns TRUE (local fs
-    // returns false there). When armed, run the hook first (the
-    // winner landing dst inside the caller's check-to-rename
-    // window), then reproduce the nesting semantics.
+    // nesting emulation: when armed, run the hook first (the winner
+    // landing dst inside the caller's check-to-rename window), then
+    // move src UNDER dst and return true — what a rename onto an
+    // existing non-empty directory does
     if (FaultyRenameFs.nestRenameDstName.contains(dst.getName) &&
         FaultyRenameFs.nestOnce.compareAndSet(false, true)) {
       FaultyRenameFs.hook()
@@ -46,9 +47,9 @@ class FaultyRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
       // real fs is logged so a spec can prove a publish path never
       // moves a directory outside write internals
       FaultyRenameFs.record.foreach(_.append((src.toString, dst.toString)))
-      // HDFS semantics emulation: rename onto an EXISTING plain file
-      // refuses (RawLocal/POSIX would overwrite) — the semantics the
-      // pointer compare-and-swap relies on
+      // no-overwrite emulation: rename onto an EXISTING plain file
+      // refuses, as on `file://` and HDFS (the raw local fs would
+      // overwrite) — the semantics the pointer compare-and-swap relies on
       if (FaultyRenameFs.hdfsNoOverwrite && exists(dst) &&
         getFileStatus(dst).isFile) false
       else super.rename(src, dst)

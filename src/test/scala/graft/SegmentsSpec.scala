@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.sources.{ConcurrentStoreWriteException, Segments}
+import graft.sources.{ConcurrentStoreWriteException, Publish, Segments}
 
 /** The segmented-store writer-fencing contracts at the [[Segments]]
   * level — the three holes the round-13 self-review found in the
@@ -11,10 +11,10 @@ import graft.sources.{ConcurrentStoreWriteException, Segments}
   *   1. a max-id watermark misses a raced manual append that lands
   *      BELOW an existing streamed segment id (the watermark is a
   *      SET now);
-  *   2. an exists-precheck-then-rename race where the loser's HDFS
+  *   2. an exists-precheck-then-rename race where the loser's
   *      rename NESTS its staging under the winner's segment and
-  *      reports success (renameVerified pulls it back out and
-  *      retries — no row, including a tombstone set, is lost);
+  *      reports success (Publish.dir pulls it back out and the
+  *      publish retries — no row, including a tombstone set, is lost);
   *   3. the stale-staging sweep keyed on the ROOT dir's mtime would
   *      sweep a live writer's staging once its write outruns the
   *      cutoff (it keys on the subtree's newest mtime now). */
@@ -116,6 +116,48 @@ class SegmentsSpec extends SparkSpec {
     Segments.publishSegment(spark, t, Seq((3L, 3L)).toDF("id", "x"), None)
     assert(!live.exists, "a fully-stale staging must sweep")
     assert(spark.read.parquet(t).count() == 3)
+  }
+
+  test("Publish on plain file:// reports a lost create or nesting " +
+    "rename as false and leaves the winner and the loser's tree intact") {
+    val root = new java.io.File(tmp("graft_publish"))
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      java.net.URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
+    def path(name: String) = new org.apache.hadoop.fs.Path(root.toURI.toString + name)
+    def utf8(s: String) = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    def tmps = root.list().filter(_.contains(".tmp-")).toSeq
+
+    assert(Publish.marker(fs, path("ptr-1"), utf8("v-a")))
+    assert(!Publish.marker(fs, path("ptr-1"), utf8("v-b")),
+      "a marker onto an existing file must lose")
+    assert(Segments.readText(fs, path("ptr-1")) == "v-a")
+    assert(tmps.isEmpty, s"a marker must leave no tmp file: $tmps")
+
+    val dst = new java.io.File(root, "seg=0")
+    assert(new java.io.File(dst, "winner").mkdirs())
+    val staging = new java.io.File(root, "_append.staging-x")
+    assert(new java.io.File(staging, "loser").mkdirs())
+    assert(!Publish.dir(fs, path("_append.staging-x"), path("seg=0")),
+      "a rename onto an existing non-empty directory must lose")
+    assert(dst.list().toSeq == Seq("winner"))
+    assert(staging.list().toSeq == Seq("loser"),
+      "the lost tree must be back at its staging path")
+    assert(Publish.dir(fs, path("_append.staging-x"), path("seg=1")))
+    assert(!staging.exists && new java.io.File(root, "seg=1/loser").isDirectory)
+  }
+
+  test("Publish is the only main source file that renames") {
+    val main = new java.io.File("src/main")
+    assert(main.isDirectory, s"run from the project root: no ${main.getAbsolutePath}")
+    def scalaFiles(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(scalaFiles)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val renaming = scalaFiles(main).filter { f =>
+      new String(java.nio.file.Files.readAllBytes(f.toPath),
+        java.nio.charset.StandardCharsets.UTF_8).contains(".rename(")
+    }.map(_.getPath.replace(java.io.File.separatorChar, '/'))
+    assert(renaming == Seq("src/main/scala/graft/sources/Publish.scala"),
+      s"publish through graft.sources.Publish instead: $renaming")
   }
 
   // ------------------------------------------- pointer publication

@@ -121,6 +121,73 @@ object Stage {
   def sweep(spark: SparkSession): Unit =
     spark.sparkContext.getPersistentRDDs.values.foreach(r => ColumnBridge.unpersist(r))
 
+  /** Run independent `tasks` side by side and return their results in
+    * order: the no-dependency case of the keyed [[parallel]], every
+    * task started at once. */
+  def parallel[T](tasks: (() => T)*): Seq[T] =
+    parallel(tasks.size max 1, tasks.indices.zip(tasks), (_: Int) => Nil)
+
+  /** The engine's one scheduler: run the keyed `tasks` at most `width`
+    * at a time, each started once every task `waitsFor` names has
+    * finished (ready tasks start in `tasks` order), and return the
+    * results in `tasks` order.
+    *
+    * Each task runs on a thread the caller starts when the task
+    * becomes ready, so it inherits the caller's Spark local properties
+    * (job description, job group, scheduler pool — cloned at thread
+    * creation) and its open [[scope]]. When at most one task can run at
+    * a time (`width` 1, or a single task) tasks run inline on the
+    * caller's thread instead, in the same order; a task that sets local
+    * properties restores them itself.
+    *
+    * Failure: after the first failure no further task starts, tasks
+    * already running finish, and the first failure is thrown with every
+    * later one attached via `addSuppressed`. Running tasks are not
+    * cancelled, so a replay after a failed group of publishes sees the
+    * same "some subset published" states a sequential run could leave. */
+  def parallel[K, T](width: Int, tasks: Seq[(K, () => T)], waitsFor: K => Iterable[K]): Seq[T] = {
+    require(width >= 1, s"width must be >= 1, got $width")
+    val (keys, bodies) = tasks.toIndexedSeq.unzip
+    val results = new Array[Any](tasks.size)
+    val finished = new java.util.concurrent.LinkedBlockingQueue[(Int, Option[Throwable])]
+    val inline = width == 1 || tasks.sizeIs == 1
+    def start(i: Int): Unit = {
+      val run: Runnable = () => {
+        val failure =
+          try { results(i) = bodies(i)(); None }
+          catch { case e: Throwable => Some(e) }
+        finished.put(i -> failure)
+      }
+      if (inline) run.run() else new Thread(run, s"graft-parallel-${keys(i)}").start()
+    }
+    val done = scala.collection.mutable.Set.empty[K]
+    val failures = scala.collection.mutable.ArrayBuffer.empty[Throwable]
+    var pending: Seq[Int] = tasks.indices
+    var running = 0
+    while (running > 0 || (failures.isEmpty && pending.nonEmpty)) {
+      if (failures.isEmpty) {
+        val ready = pending.filter(i => waitsFor(keys(i)).forall(done)).take(width - running)
+        if (ready.isEmpty && running == 0)
+          throw new IllegalArgumentException(
+            s"tasks wait on each other or on no task: ${pending.map(keys)}")
+        pending = pending.diff(ready)
+        running += ready.size
+        ready.foreach(start)
+      }
+      val (i, failure) = finished.take()
+      running -= 1
+      failure match {
+        case None    => done += keys(i)
+        case Some(e) => failures += e
+      }
+    }
+    failures.headOption.foreach { first =>
+      failures.tail.filterNot(_ eq first).foreach(first.addSuppressed)
+      throw first
+    }
+    results.toSeq.asInstanceOf[Seq[T]]
+  }
+
   /** Every job `body` spawns — including broadcast-exchange child
     * jobs, which capture the submitting thread's locals — carries
     * `desc`. */

@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.util.concurrent.{ConcurrentHashMap, Executors, LinkedBlockingQueue}
+import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.api.java.UDF1
 import org.apache.spark.sql.functions._
@@ -36,12 +36,12 @@ final class Transportor(
     * src/DBT.php:21-26, 71-78 — declared there but dead; here it
     * marks hot lookup tables reused across several refers so the scan
     * + dedup work happens once and later joins read the cached
-    * relation). Concurrent: tables build on [[runAndWrite]]'s pool
+    * relation). Concurrent: tables build on [[runAndWrite]]'s task
     * threads, and `computeIfAbsent` gives each table exactly one
     * `cache()`. */
   private val preloaded = new ConcurrentHashMap[String, DataFrame]()
 
-  /** One plan key's frame, built at most once even when several pool
+  /** One plan key's frame, built at most once even when several task
     * threads ask for it (the lazy val's lock is per key; a build that
     * recurses into its dependencies takes theirs, and the plan is
     * acyclic, so no two builds wait on each other). */
@@ -117,18 +117,19 @@ final class Transportor(
     * replacing the reference's temp-column DDL + drop dance,
     * src/DBT.php:423-446, 604-613).
     *
-    * One dependency-driven schedule replaces the reference's strictly
-    * sequential table loop (src/DBT.php:85-225): each target table is
-    * one task on a pool of `writeParallelism` threads that BUILDS its
-    * alias frames and writes them, and a task is submitted as soon as
-    * every table it depends on ([[Toposort.dependencies]], including
-    * `transport_after`) has been written. Independent tables' planning
-    * (schema reads, lookup dedups) and their many small Spark jobs
-    * overlap instead of leaving the cluster idle between small tables;
-    * a dependent's lazy lineage still recomputes its parents, but only
-    * after their writes have finished, so it never races them for
-    * slots. `writeParallelism = 1` runs the same schedule on one thread,
-    * in dependency order. Each task runs under its own scheduler pool
+    * One dependency-driven schedule ([[Stage.parallel]], at most
+    * `writeParallelism` tables at a time) replaces the reference's
+    * strictly sequential table loop (src/DBT.php:85-225): each target
+    * table is one task that BUILDS its alias frames and writes them,
+    * started as soon as every table it depends on
+    * ([[Toposort.dependencies]], including `transport_after`) has been
+    * written. Independent tables' planning (schema reads, lookup
+    * dedups) and their many small Spark jobs overlap instead of leaving
+    * the cluster idle between small tables; a dependent's lazy lineage
+    * still recomputes its parents, but only after their writes have
+    * finished, so it never races them for slots. `writeParallelism = 1`
+    * runs the same schedule on the caller's thread, in dependency
+    * order. Each task runs under its own scheduler pool
     * (`spark.scheduler.pool` = `graft-<table>`; with
     * `spark.scheduler.mode=FAIR` concurrent tables share executors
     * evenly) and its own job group (`graft-write-<table>`), so the
@@ -136,12 +137,12 @@ final class Transportor(
     * to its table. [[TableIO.writeTarget]] is therefore called
     * concurrently for distinct tables.
     *
-    * Failure: the first failed table stops the schedule — no further
-    * table starts, tables already running finish — and that failure is
-    * rethrown with any later ones attached via `addSuppressed`; the
-    * `run_after_transport` hooks do not run. Running siblings are not
-    * cancelled: a half-written target is only safe to abandon once
-    * every publish is one atomic step.
+    * Failure follows [[Stage.parallel]]: the first failed table stops
+    * the schedule — no further table starts, tables already running
+    * finish — and that failure is rethrown with any later ones attached
+    * via `addSuppressed`; the `run_after_transport` hooks do not run.
+    * Running siblings are not cancelled: a half-written target is only
+    * safe to abandon once every publish is one atomic step.
     *
     * Returns the written frames in dependency order, like [[run]]. */
   def runAndWrite(
@@ -151,56 +152,25 @@ final class Transportor(
     validate()
     validateSeeds()
     val sc = SparkSession.active.sparkContext
-    val finished = new LinkedBlockingQueue[(String, Option[Throwable])]()
-    val written = mutable.Set.empty[String]
-    val failures = mutable.ArrayBuffer.empty[Throwable]
-    var pending = targetOrder
-    var running = 0
-    val pool = Executors.newFixedThreadPool(writeParallelism)
-    try {
-      do {
-        if (failures.isEmpty) {
-          val ready = pending.filter(tableDeps(_).forall(written)).take(writeParallelism - running)
-          pending = pending.diff(ready)
-          running += ready.size
-          ready.foreach { name =>
-            pool.execute { () =>
-              val failure =
-                try { writeTable(sc, name); None }
-                catch { case e: Throwable => Some(e) }
-              finished.put(name -> failure)
-            }
-          }
-        }
-        if (running > 0) {
-          val (name, failure) = finished.take()
-          running -= 1
-          failure match {
-            case None    => written += name
-            case Some(e) => failures += e
-          }
-        }
-      } while (running > 0 || (failures.isEmpty && pending.nonEmpty))
-    } finally pool.shutdown()
-    failures.headOption.foreach { first =>
-      failures.tail.filterNot(_ eq first).foreach(first.addSuppressed)
-      throw first
-    }
+    Stage.parallel(writeParallelism,
+      targetOrder.map(name => name -> (() => writeTable(sc, name))), tableDeps)
     plan.tables.foreach { case (_, m) => m.runAfterTransport.foreach(_.apply()) }
     targetFrames()
   }
 
   /** One schedule task: build target table `name` and write it, under
     * its own scheduler pool and job group. The properties are
-    * thread-local, so concurrent tables never tag each other's jobs. */
+    * thread-local, so concurrent tables never tag each other's jobs;
+    * a task that [[Stage.parallel]] runs inline on the caller's thread
+    * gives the caller back its own group, pool and description. */
   private def writeTable(sc: org.apache.spark.SparkContext, name: String): Unit = {
+    val props = Seq("spark.scheduler.pool", "spark.jobGroup.id",
+      "spark.job.description", "spark.job.interruptOnCancel")
+    val prev = props.map(sc.getLocalProperty)
     sc.setLocalProperty("spark.scheduler.pool", s"graft-$name")
     sc.setJobGroup(s"graft-write-$name", s"transport write $name", interruptOnCancel = false)
     try io.writeTarget(name, targetFrame(name))
-    finally {
-      sc.clearJobGroup()
-      sc.setLocalProperty("spark.scheduler.pool", null)
-    }
+    finally props.zip(prev).foreach { case (k, v) => sc.setLocalProperty(k, v) }
   }
 
   /** Build a single table's final frame (dependencies resolved

@@ -118,35 +118,6 @@ object IncrementalRelease {
     * manual auto-numbered appends can never collide. */
   private def segIdOf(batchId: Long): Long = Segments.StreamSegBase + batchId
 
-  /** Run INDEPENDENT state/store writes concurrently (guide §2.6 —
-    * overlap independent jobs): each append/build is a small job over
-    * an already-materialized frame that leaves most task slots idle,
-    * so running them back-to-back serializes driver scheduling +
-    * commit latency that overlaps for free. Only ever called on
-    * writes to DISTINCT table directories with no read-after-write
-    * ordering inside the group (the append-then-read barriers in
-    * [[runDeltas]] stay sequential). Threads inherit the caller's job
-    * description (SparkContext local properties clone at thread
-    * creation) and [[Stage.scope]]. Failures rethrow after all tasks
-    * settle, so a crash replay sees the same "some subset published"
-    * states the sequential form could leave: the first failure is
-    * thrown and every sibling failure rides on it as suppressed. */
-  private[graft] def inParallel(tasks: (() => Unit)*): Unit = {
-    if (tasks.sizeIs <= 1) { tasks.foreach(_.apply()); return }
-    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
-    val threads = tasks.map { t =>
-      new Thread(() =>
-        try t() catch { case e: Throwable => failures.add(e); () })
-    }
-    threads.foreach(_.start())
-    threads.foreach(_.join())
-    val first = failures.peek()
-    if (first != null) {
-      failures.forEach(e => if (e ne first) first.addSuppressed(e))
-      throw first
-    }
-  }
-
   /** The eleven delta tables (everything except the three minhash
     * stores and the ANN store, which carry their own layout). */
   private[graft] val StateTables: Seq[String] = Seq(
@@ -205,18 +176,6 @@ object IncrementalRelease {
         Seq("fp"), "left_semi")
       .select(col("fp").as("__fp"), col("id").as("__keeper")).distinct()
 
-  /** Two independent materializations, overlapped ([[inParallel]]
-    * returning the results): the [[runDeltas]] stages where two
-    * sibling frames have no data dependency (lexical vs semantic
-    * decontam; cross-store vs within-batch pair generation) but were
-    * materialized back-to-back. */
-  private def par2[A, B](a: => A, b: => B): (A, B) = {
-    var ra: Option[A] = None
-    var rb: Option[B] = None
-    inParallel(() => { ra = Some(a); () }, () => { rb = Some(b); () })
-    (ra.get, rb.get)
-  }
-
   /** `dup_of_<id>` ledger reasons back to the rep id. */
   private def parseReps(rejects: DataFrame): DataFrame =
     rejects.select(col("doc_id"),
@@ -262,7 +221,7 @@ object IncrementalRelease {
     // (guide §2.6). Before this the 4 store builds + 11 table appends
     // ran as ~15 sequential small jobs; now the kmeans training (the
     // long pole) overlaps all of them.
-    inParallel(
+    Stage.parallel(
       () => Stage.labeled(spark, "bootstrap: corpus minhash store") {
         DedupIndexStore.buildMinhash(spark, s"$stateDir/corpus_minhash",
           s2, "doc_id", "text", cfg.dedup.shingleN, cfg.dedup.numHashes,
@@ -291,7 +250,7 @@ object IncrementalRelease {
         ()
       },
       () => Stage.labeled(spark, "bootstrap: state tables") {
-        inParallel(
+        Stage.parallel(
           () => put("corpus_texts", s2),
           () => put("holdout_texts", holdout),
           () => put("conv_texts", convs),
@@ -472,8 +431,8 @@ object IncrementalRelease {
     // the combined-edge CC below — materialize them CONCURRENTLY
     // (guide §2.6; the cross probe is the long pole and the
     // within-batch sweep hides under it)
-    val (crossNd, batchNdPairs) = par2(
-      Stage("incr nd cross", Local)(
+    val Seq(crossNd, batchNdPairs) = Stage.parallel(
+      () => Stage("incr nd cross", Local)(
         Dedup.dedupAgainstMatches(batchExact, corpusTexts,
             "doc_id", "text", cfg.dedup.shingleN, cfg.dedup.numHashes,
             cfg.dedup.bands, cfg.dedup.jaccardThreshold,
@@ -481,7 +440,7 @@ object IncrementalRelease {
             index = Some(storeBands), pruneIndexToProbe = true)
           .join(ndRepMap, Seq("cid"), "left")
           .select(col("id"), coalesce(col("rep"), col("cid")).as("rep"))),
-      Stage("incr nd pairs", Local)(
+      () => Stage("incr nd pairs", Local)(
         Dedup.minhashPairs(batchExact, "doc_id", "text",
             cfg.dedup.shingleN, cfg.dedup.numHashes, cfg.dedup.bands,
             cfg.dedup.jaccardThreshold,
@@ -507,7 +466,7 @@ object IncrementalRelease {
     // tomorrow's batch probes today's. Three independent writes to
     // three directories over checkpointed frames — overlapped
     // (guide §2.6); nothing below reads these tables this run.
-    inParallel(
+    Stage.parallel(
       () => appendMh(s"$stateDir/corpus_minhash", batchExact),
       () => appX("corpus_texts", batchExact),
       () => appX("nd_reps", ndCc.select(col("id").as("doc_id"), col("rep"))))
@@ -526,7 +485,7 @@ object IncrementalRelease {
     // both must land BEFORE the decontam reads below (append-then-read
     // order) — they are independent of each other, so overlap the two
     // and barrier here
-    inParallel(
+    Stage.parallel(
       () => appendMh(s"$stateDir/holdout_minhash", batchHold),
       () => appX("holdout_texts", batchHold))
 
@@ -542,15 +501,15 @@ object IncrementalRelease {
     // until semRejects/keep below — run the two materializations
     // concurrently (guide §2.6); the append-then-read order INSIDE
     // the semantic thread is preserved
-    val (lexOkIds, semHits) = par2(
-      Stage("incr lex ok", Local)(
+    val Seq(lexOkIds, semHits) = Stage.parallel(
+      () => Stage("incr lex ok", Local)(
         Dedup.dedupAgainst(batchTv, holdTexts, "doc_id", "text",
             cfg.dedup.shingleN, cfg.dedup.numHashes, cfg.decontam.bands,
             cfg.decontam.jaccardThreshold,
             index = Some(DedupIndexStore.readMinhash(spark, s"$stateDir/holdout_minhash")),
             pruneIndexToProbe = true)
           .select("doc_id")),
-      {
+      () => {
         val batchTestEmb = embeddings.join(
           batchHold.select(id.as("vec_id")), Seq("vec_id"), "left_semi")
         AnnIndex.appendToIvf(spark, s"$stateDir/holdout_ann",
@@ -588,8 +547,8 @@ object IncrementalRelease {
     val convRepMap = segX("conv_reps", "doc_id", "rep")
       .select(col("doc_id").as("cid"), col("rep"))
     // same concurrent pair-generation split as stage 3 (guide §2.6)
-    val (crossConv, convPairs) = par2(
-      Stage("incr conv cross", Local)(
+    val Seq(crossConv, convPairs) = Stage.parallel(
+      () => Stage("incr conv cross", Local)(
         Dedup.dedupAgainstMatches(convs, convTexts,
             "doc_id", "text", cfg.dedup.shingleN, cfg.dedup.numHashes,
             cfg.dedup.bands, cfg.dedup.jaccardThreshold,
@@ -599,7 +558,7 @@ object IncrementalRelease {
             pruneIndexToProbe = true)
           .join(convRepMap, Seq("cid"), "left")
           .select(col("id"), coalesce(col("rep"), col("cid")).as("rep"))),
-      Stage("incr conv pairs", Local)(
+      () => Stage("incr conv pairs", Local)(
         Dedup.minhashPairs(convs, "doc_id", "text",
             cfg.dedup.shingleN, cfg.dedup.numHashes, cfg.dedup.bands,
             cfg.dedup.jaccardThreshold,
@@ -617,26 +576,20 @@ object IncrementalRelease {
     // with the BPE costing (reads only the checkpointed aturns/convCc)
     // and the pack-state tail read (a table none of these writes
     // touch), the two expensive materializations that follow
-    var conv0: DataFrame = null
-    var tail0: DataFrame = null
-    inParallel(
-      () => appendMh(s"$stateDir/conv_minhash", convs),
-      () => appX("conv_texts", convs),
-      () => appX("conv_reps", convCc.select(col("id").as("doc_id"), col("rep"))),
-      () => {
-        conv0 = Stage("incr conv costed", Local)(Release.convCosted(aturns, merges(),
-            cfg.sft.turnOverhead, cfg.sft.groups)
-          .join(sftDupRejects.select("doc_id"), Seq("doc_id"), "left_anti"))
-        ()
-      },
-      () => { tail0 = Stage("incr pack tail", Local)(latestPackState(spark, stateDir, ownSeg)) })
-    val conv = conv0
+    val Seq(conv, tail) = Stage.parallel[Option[DataFrame]](
+      () => { appendMh(s"$stateDir/conv_minhash", convs); None },
+      () => { appX("conv_texts", convs); None },
+      () => { appX("conv_reps", convCc.select(col("id").as("doc_id"), col("rep"))); None },
+      () => Some(Stage("incr conv costed", Local)(Release.convCosted(aturns, merges(),
+          cfg.sft.turnOverhead, cfg.sft.groups)
+        .join(sftDupRejects.select("doc_id"), Seq("doc_id"), "left_anti"))),
+      () => Some(Stage("incr pack tail", Local)(latestPackState(spark, stateDir, ownSeg))))
+      .flatten
 
     mark("incr 7: pack")
     // append-only packing: today's conversations continue yesterday's
     // per-group tail bins — byte-identical to one from-scratch
     // next-fit over the union in id order
-    val tail = tail0
     val batchPacked = Stage("incr packed", Local)(
       Packing.packBinsByCountFrom(conv, "doc_id", "grp",
           "n_tokens", cfg.pack.capacity, tail.select("grp", "bin_id", "fill"))
@@ -671,7 +624,7 @@ object IncrementalRelease {
     // four independent table writes (ledger/manifest/watermark/
     // reconcile) over checkpointed frames — the terminal barrier,
     // overlapped like the other append groups
-    inParallel(
+    Stage.parallel(
       () => appX("ledger", ledgerDelta),
       () => appX("manifest_states", Profile.manifestStates(
         keep.join(batchPacked.select("doc_id").distinct(), "doc_id"),
@@ -761,7 +714,7 @@ object IncrementalRelease {
         Seq[() => Unit](() =>
           { AnnIndex.deleteIds(spark, s"$stateDir/holdout_ann", dead,
             "doc_id"); () })
-    inParallel(deleteTasks: _*)
+    Stage.parallel(deleteTasks: _*)
 
     // manifest: rebuild-from-retained (tombstones already in force on
     // both reads), published as a NEW pointer version — atomic, and

@@ -15,8 +15,9 @@ import scala.collection.mutable
   *
   * Spark-first this collapses to one topological sort plus the
   * dependency edges: each table's own plan parallelizes internally,
-  * [[graft.operators.Transportor.runAndWrite]] starts a table as soon
-  * as its [[dependencies]] are written, and the recursion cap becomes
+  * [[graft.operators.Transportor.runAndWrite]] hands the
+  * [[dependencies]] to [[graft.operators.Stage.parallel]], which starts
+  * a table as soon as they are written, and the recursion cap becomes
   * a proper cycle check. Declaration order is the tie-break, which
   * also reproduces the reference's seed-first behavior (a seed table
   * has no outgoing dependency edges, so it is never delayed).

@@ -1742,7 +1742,7 @@ object ExtensionQueries {
     // cross-reads — run the two build→append→delete chains
     // concurrently (guide §2.6); order WITHIN each chain is load-
     // bearing (auto-numbered segments in one store)
-    graft.plans.IncrementalRelease.inParallel(
+    Stage.parallel(
       () => {
         DedupIndexStore.buildMinhash(s, mhDir, corpus.filter(segA),
           "doc_id", "text")
@@ -1821,7 +1821,7 @@ object ExtensionQueries {
     // THREE independent store chains in three directories — run them
     // concurrently (guide §2.6); order WITHIN each chain is load-
     // bearing (auto-numbered segments in one store)
-    graft.plans.IncrementalRelease.inParallel(
+    Stage.parallel(
       () => {
         DedupIndexStore.buildMinhash(s, mhDir, docs.filter(d10 < 4), "doc_id", "text")
         DedupIndexStore.appendMinhash(s, mhDir, docs.filter(d10 >= 4 && d10 < 6), "doc_id", "text")

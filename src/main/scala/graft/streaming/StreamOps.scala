@@ -37,19 +37,13 @@ object StreamOps {
     * (pending events in the reorder horizon, last finalized ts, seq). */
   private type SessionBuffer = (List[Event], Long, Long)
 
-  /** Tumbling-window hourly aggregate with a 2h watermark: the
-    * streaming form of q_events_hourly — [[hoppingCounts]] with
-    * size = slide = 1 hour, which Spark plans as a tumbling window.
-    * State is bounded by the watermark horizon — at 100 TB/day ingest
-    * the state store holds only ~2h × |event_type| windows per
-    * partition. */
-  def hourlyCounts(events: DataFrame, watermark: String = "2 hours"): DataFrame =
-    hoppingCounts(events, "1 hour", "1 hour", watermark).withColumnRenamed("ws", "h")
-
-  /** Hopping (sliding) window aggregate — 1 h windows every 30 min by
-    * default, each event in size/slide overlapping windows: the
-    * streaming form of q_events_hopping. Same bounded-state argument
-    * as [[hourlyCounts]], ×(size/slide) live windows. */
+  /** Hopping (sliding) window aggregate with a 2h watermark — 1 h
+    * windows every 30 min by default, each event in size/slide
+    * overlapping windows: the streaming form of q_events_hopping, and
+    * with size = slide = 1 hour (which Spark plans as a tumbling
+    * window) of q_events_hourly. State is bounded by the watermark
+    * horizon: the state store holds only ~2h × |event_type| ×
+    * (size/slide) live windows per partition. */
   def hoppingCounts(
       events: DataFrame,
       size: String = "1 hour",

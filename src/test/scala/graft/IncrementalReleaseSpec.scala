@@ -2,7 +2,12 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Stage
+import graft.operators.Stage.Persist
 import graft.plans.{IncrementalRelease, ReleaseRun}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 
 /** The incremental release's composition contracts
   * ([[graft.plans.IncrementalRelease]] — the driver's oracle
@@ -209,16 +214,117 @@ class IncrementalReleaseSpec extends SparkSpec {
     assert(counts == first)
   }
 
-  test("inParallel surfaces every failure: the first throws, each " +
+  test("Stage.parallel surfaces every failure: the first throws, each " +
     "sibling failure rides on it as suppressed") {
     val e = intercept[IllegalStateException] {
-      IncrementalRelease.inParallel(
+      Stage.parallel(
         () => throw new IllegalStateException("a"),
         () => throw new IllegalStateException("b"),
         () => ())
     }
     assert(e.getSuppressed.length == 1)
     assert(Set(e.getMessage, e.getSuppressed.head.getMessage) == Set("a", "b"))
+  }
+
+  test("Stage.parallel runs at most width tasks at once") {
+    val active = new AtomicInteger
+    val peak = new AtomicInteger
+    val pairUp = new CountDownLatch(2)
+    val out = Stage.parallel(2, (1 to 5).map(i => i -> { () =>
+      peak.accumulateAndGet(active.incrementAndGet(), (a, b) => a max b)
+      // the first two tasks can only pass this together
+      pairUp.countDown()
+      val met = pairUp.await(20, TimeUnit.SECONDS)
+      active.decrementAndGet()
+      met
+    }), (_: Int) => Nil)
+    assert(out == Seq.fill(5)(true), "two tasks must run side by side")
+    assert(peak.get == 2, s"width 2, peak ${peak.get}")
+  }
+
+  test("Stage.parallel starts a task only after every task it waits for") {
+    val log = new ConcurrentLinkedQueue[String]
+    // d waits for b and c, which wait for a; e waits for nothing
+    val deps = Map("a" -> Nil, "b" -> Seq("a"), "c" -> Seq("a"),
+      "d" -> Seq("b", "c"), "e" -> Nil)
+    val out = Stage.parallel(4, Seq("d", "c", "b", "a", "e").map(k => k -> { () =>
+      log.add(s"+$k"); Thread.sleep(20); log.add(s"-$k"); k
+    }), deps)
+    assert(out == Seq("d", "c", "b", "a", "e"), "results come back in task order")
+    val at = log.asScala.toSeq.zipWithIndex.toMap
+    deps.foreach { case (k, ds) =>
+      ds.foreach(d => assert(at(s"-$d") < at(s"+$k"), s"$k started before $d ended: $log"))
+    }
+    val cycle = intercept[IllegalArgumentException](
+      Stage.parallel(2, Seq("x", "y").map(k => k -> (() => ())),
+        Map("x" -> Seq("y"), "y" -> Seq("x"))))
+    assert(cycle.getMessage.contains("wait on each other"))
+  }
+
+  test("Stage.parallel starts no task after a failure; running ones finish") {
+    val failing = new CountDownLatch(1)
+    val badThread = new java.util.concurrent.atomic.AtomicReference[Thread]
+    val started = new ConcurrentLinkedQueue[String]
+    def task(k: String)(body: => Unit): (String, () => Unit) =
+      k -> { () => started.add(k); body }
+    val e = intercept[IllegalStateException](Stage.parallel(2, Seq(
+      task("bad") {
+        badThread.set(Thread.currentThread)
+        failing.countDown()
+        throw new IllegalStateException("bad")
+      },
+      task("slow") {
+        assert(failing.await(20, TimeUnit.SECONDS))
+        // bad's thread ends after reporting, so the failure reaches the
+        // schedule before this slot frees
+        badThread.get.join(20000)
+        started.add("slow done")
+      },
+      task("later")(())), (_: String) => Nil))
+    assert(e.getMessage == "bad")
+    assert(started.asScala.toSet == Set("bad", "slow", "slow done"), started)
+    // one slot: the tasks run in order on the caller, the first failure ends it
+    started.clear()
+    intercept[IllegalStateException](Stage.parallel(1, Seq(
+      task("bad")(throw new IllegalStateException("bad")), task("later")(())),
+      (_: String) => Nil))
+    assert(started.asScala.toSeq == Seq("bad"))
+  }
+
+  test("Stage.parallel tasks inherit the caller's local properties and scope") {
+    val sc = spark.sparkContext
+    val caller = Thread.currentThread
+    def cuts = sc.getPersistentRDDs.values.flatMap(r => Option(r.name))
+      .filter(_.startsWith("parallel cut"))
+    sc.setLocalProperty("graft.test.label", "caller label")
+    try {
+      Stage.scope {
+        val seen = Stage.parallel((1 to 2).map(i => () => {
+          // Persist(eager = false) over a range runs no job
+          Stage(s"parallel cut $i", Persist())(spark.range(3).toDF())
+          (Thread.currentThread ne caller, sc.getLocalProperty("graft.test.label"))
+        }): _*)
+        assert(seen == Seq.fill(2)((true, "caller label")))
+        assert(cuts.toSet == Set("parallel cut 1", "parallel cut 2"))
+      }
+      assert(cuts.isEmpty, "closing the caller's scope frees the cuts its task threads made")
+      assert(sc.getLocalProperty("graft.test.label") == "caller label")
+    } finally sc.setLocalProperty("graft.test.label", null)
+  }
+
+  test("Stage is the only main source file that starts threads") {
+    val main = new java.io.File("src/main")
+    assert(main.isDirectory, s"run from the project root: no ${main.getAbsolutePath}")
+    def scalaFiles(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(scalaFiles)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val starting = scalaFiles(main).filter { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f.toPath),
+        java.nio.charset.StandardCharsets.UTF_8)
+      Seq("new Thread(", "Executors.", "ExecutorService", "ForkJoinPool").exists(src.contains)
+    }.map(_.getPath.replace(java.io.File.separatorChar, '/'))
+      .filter(_ != "src/main/scala/graft/operators/Stage.scala")
+    assert(starting.isEmpty, s"run concurrent work through Stage.parallel instead: $starting")
   }
 
   test("the monotone-id fence refuses a retroactive batch typed " +

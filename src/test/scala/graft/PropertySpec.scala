@@ -15,11 +15,7 @@ object PropertySpec extends Properties("graft") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(8) // each case spins Spark jobs — keep tight
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = LocalSession("graft-test", "local[4]", "4")
 
   private def mkDf(schema: String, rows: Seq[Row]) =
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),

@@ -3,41 +3,20 @@ package graft
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.functions.SimilarityFunctions
-import graft.operators.{Similarity, SkewJoin, Transportor}
+import graft.operators.{Similarity, Transportor}
 import graft.plans._
 import graft.sources.InMemoryIO
 
-/** Scale-path utilities: salted joins, parallel writes, IVF ANN. */
+/** Scale-path utilities: salted refers, parallel writes, IVF ANN. */
 class ScaleOpsSpec extends SparkSpec {
 
-  test("salted left join is row-identical to the plain join under heavy skew") {
-    // 900 rows on one hot key + a long tail
-    val leftRows = (0 until 900).map(i => Row(i.toLong, 1L)) ++
-      (0 until 100).map(i => Row((1000 + i).toLong, (i % 7 + 2).toLong))
-    val left = df("row_id BIGINT, k BIGINT", leftRows: _*)
-    val right = df("rk BIGINT, v STRING",
-      (1L to 8L).map(i => Row(i, s"v$i")): _*)
-
-    val plain = left.join(right, left("k") === right("rk"), "left")
-      .select(col("row_id"), col("k"), col("v"))
-      .collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
-    val salted = SkewJoin.saltedLeftJoin(left, right, "k", "rk", saltFactor = 8)
-      .select(col("row_id"), col("k"), col("v"))
-      .collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
-    assert(salted == plain)
-  }
-
-  test("salted join preserves left rows with unmatched keys (outer semantics)") {
-    val left = df("row_id BIGINT, k BIGINT", Row(1L, 99L))
-    val right = df("rk BIGINT, v STRING", Row(1L, "x"))
-    val got = SkewJoin.saltedLeftJoin(left, right, "k", "rk", 4).collect()
-    assert(got.length == 1 && got(0).isNullAt(2))
-  }
-
   test("Refer(saltFactor) is row-identical to the unsalted refer") {
+    // a hot key, a long tail, and one probe key (99) with no lookup row:
+    // the salted refer keeps it and fills the default (outer semantics)
     val base = df("row_id BIGINT, k BIGINT",
       ((0 until 500).map(i => Row(i.toLong, 1L)) ++
-        (0 until 50).map(i => Row((1000 + i).toLong, (i % 5 + 2).toLong))): _*)
+        (0 until 50).map(i => Row((1000 + i).toLong, (i % 5 + 2).toLong)) :+
+        Row(2000L, 99L)): _*)
     val lookup = df("sk BIGINT, v STRING", (1L to 6L).map(i => Row(i, s"v$i")): _*)
     def frame(salt: Int) = {
       val plan = TransportPlan.of("out" -> TableMap(Some("base"), Seq(
@@ -47,7 +26,9 @@ class ScaleOpsSpec extends SparkSpec {
       new Transportor(new InMemoryIO(Map("base" -> base, "lookup" -> lookup)), plan)
         .frame("out").collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
     }
-    assert(frame(8) == frame(1))
+    val salted = frame(8)
+    assert(salted == frame(1))
+    assert(salted.contains(Seq(2000L, "D")), "the unmatched probe row keeps its default")
   }
 
   test("parallel writes produce the same target tables as sequential") {

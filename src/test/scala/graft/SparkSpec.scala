@@ -4,15 +4,10 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for suites (one per JVM via getOrCreate). */
+/** Shared local SparkSession for suites: the production session
+  * ([[LocalSession]]) on `local[4]`, one per JVM via getOrCreate. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSession("graft-test", "local[4]", "4")
 
   def df(schema: String, rows: Row*): DataFrame = {
     val st = StructType.fromDDL(schema)

@@ -700,6 +700,42 @@ class TransportorSpec extends SparkSpec {
     assert(!hookRan, "run_after_transport hooks do not run after a failure")
   }
 
+  test("runAndWrite leaves the caller's job group, pool and description as they were") {
+    val sc = spark.sparkContext
+    val base = df("k BIGINT", Row(1L))
+    val mem = new InMemoryIO(Map("base" -> base))
+    val seen = new java.util.concurrent.ConcurrentHashMap[String, (String, String, String)]
+    val io = new graft.sources.TableIO {
+      def readOriginal(table: String) = mem.readOriginal(table)
+      def readTarget(table: String) = mem.readTarget(table)
+      def writeTarget(table: String, d: org.apache.spark.sql.DataFrame): Unit = {
+        seen.put(table, (sc.getLocalProperty("spark.jobGroup.id"),
+          sc.getLocalProperty("spark.scheduler.pool"),
+          sc.getLocalProperty("spark.job.description")))
+        mem.writeTarget(table, d)
+      }
+    }
+    val seed = TableMap(Some("base"), Seq(Rename("k", "k")))
+    def props = Seq("spark.jobGroup.id", "spark.scheduler.pool", "spark.job.description")
+      .map(sc.getLocalProperty)
+    sc.setJobGroup("caller-group", "caller description")
+    sc.setLocalProperty("spark.scheduler.pool", "caller-pool")
+    try {
+      val before = props
+      // one table (a lone task) and one slot both write on the caller's thread
+      new Transportor(io, TransportPlan.of("solo" -> seed)).runAndWrite()
+      new Transportor(io, TransportPlan.of("x" -> seed, "y" -> seed)).runAndWrite(writeParallelism = 1)
+      new Transportor(io, TransportPlan.of("p" -> seed, "q" -> seed)).runAndWrite(writeParallelism = 2)
+      assert(props == before)
+    } finally {
+      sc.clearJobGroup()
+      sc.setLocalProperty("spark.scheduler.pool", null)
+    }
+    Seq("solo", "x", "y", "p", "q").foreach { t =>
+      assert(seen.get(t) == ((s"graft-write-$t", s"graft-$t", s"transport write $t")), t)
+    }
+  }
+
   test("ParquetDirIO infers a source schema once, and again after a rewrite") {
     val dir = java.nio.file.Files.createTempDirectory("graft_schema_memo").toString
     df("k BIGINT", Row(1L), Row(2L)).write.parquet(s"$dir/t.parquet")

@@ -15,8 +15,8 @@ Usage: python3 tools/make_sf1_skew.py <sf0.1 dir> <out dir> [replicas=10]
 
 2. One hot refer key (orders.o_custkey): rows with o_orderkey % 10 < 3
    (30% of 1.5M orders) all point at the single minimum custkey —
-   the classic skewed-fact-vs-dim join hazard SkewJoin.saltedLeftJoin
-   and AQE skew handling exist for, and a ~450k-row hot group for the
+   the classic skewed-fact-vs-dim join hazard Refer(saltFactor) and
+   AQE skew handling exist for, and a ~450k-row hot group for the
    refers-aggregate family.
 
 Both rewrites are modulo-deterministic (no RNG — two runs produce
